@@ -141,19 +141,16 @@ class GeoJSONVT:
         rz: int,
         rx: int,
         ry: int,
-        cz: int = 0,
-        cx: int = 0,
-        cy: int = 0,
     ) -> "GeoJSONVT":
-        """Run the split recursion over already-converted/wrapped/clipped
-        features rooted at (rz,rx,ry) — used by the Spark pyramid to fuse
-        a whole small subtree into one task."""
+        """Run the first-pass split recursion over already-converted/
+        wrapped/clipped features rooted at (rz,rx,ry) — used by the Spark
+        pyramid to fuse a whole small subtree into one task."""
         vt = cls.__new__(cls)
         vt.options = options
         vt.stats = {}
         vt.total = 0
         vt.tiles = {}
-        vt._split(features, rz, rx, ry, cz, cx, cy)
+        vt._split(features, rz, rx, ry, 0, 0, 0)
         return vt
 
     # ------------------------------------------------------------------

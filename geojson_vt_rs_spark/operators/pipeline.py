@@ -949,9 +949,9 @@ def drill_descend_stage(
     pass 19.7 s -> see OPTIMIZATION_r06.md).  Rows of tiles already in
     ``existing`` are excluded in-kernel (the former broadcast
     anti-join); stats partials still count them, matching the Spark
-    path.  The staging dir must be a shared POSIX path — the same
-    contract CheckpointedPyramid's rename-based commits already
-    require."""
+    path.  The task-side ``os.replace`` needs the staging dir on one
+    shared POSIX path: the filesystem contract stated once in
+    plans/checkpoint.py's module docstring."""
     az, ax, ay = root
     cz, cx, cy = target
     max_zoom = options.max_zoom

@@ -4,7 +4,8 @@ Two write paths, both idempotent-resume via per-partition JSON manifests
 carrying lineage + row-count metrics (north_rule: "checkpoints per-tile-
 partition progress with lineage + row-count metrics for resumability"):
 
-* CheckpointedPyramid — the distributed tile pyramid writing tiles /
+* CheckpointedPyramid — the distributed tile pyramid (plans/pyramid.py's
+  run_levels, with the staged parquet store as its sink) writing tiles /
   leaf-features / next-level frontiers as parquet per level; a level's
   manifest is written only after all its outputs land, so a killed job
   resumes from the first level without a manifest, re-reading the last
@@ -15,6 +16,17 @@ partition progress with lineage + row-count metrics for resumability"):
 
 Everything is written with deterministic content, so a resumed run
 produces byte-identical outputs to an uninterrupted one.
+
+Filesystem contract.  Every commit is staged, then published by rename:
+Spark jobs write under ``<out_dir>/_staging``, the driver publishes a
+level or drill with one ``os.rename`` per table (``_Commit``) and writes
+each manifest to a temp file it ``os.replace``s into place; executor
+tasks of a drill pass write their tile files to dot-prefixed temp names
+and ``os.replace`` them onto deterministic final names
+(drill_descend_stage's ``tile_sink``).  So ``out_dir`` must be ONE
+shared POSIX path: the same directory for the driver and every
+executor, with atomic rename within it.  Local mode and a shared POSIX
+mount satisfy this; an object store without atomic rename does not.
 """
 
 from __future__ import annotations
@@ -23,6 +35,7 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 import pandas as pd
@@ -30,32 +43,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geojson_vt_rs_spark.config import Options
-from geojson_vt_rs_spark.operators.pipeline import convert_wrap_stage
-from geojson_vt_rs_spark.operators.schema import (
-    TILE_STORE_DDL,
-    TILED_FEATURE_SCHEMA,
+from geojson_vt_rs_spark.operators.pipeline import (
+    RS_CAGG,
+    RS_CHILD,
+    RS_LEAF,
+    RS_RENDER,
 )
+from geojson_vt_rs_spark.operators.schema import TILE_STORE_DDL
 from geojson_vt_rs_spark.plans.pyramid import (
+    CAGG_COLS,
     K_LEAF,
     K_STATS,
     K_TILE,
-    STEP_SCHEMA,
     TILED_COLS,
-    _level_kernel,
-    decisions_df,
+    drill_pass,
+    drill_tiles,
+    run_levels,
 )
-
-
-def _frontier_parts(n_rows: int, spark: SparkSession) -> int:
-    """Partition count for a level frontier of known size: enough to use
-    every core, capped so late (small) levels stop paying per-task
-    scheduling + Python-worker round-trip overhead for 100-row tasks.
-    Applied with coalesce() — a NARROW merge of cached partitions, no
-    shuffle — so the partition count tracks the data as the pyramid
-    thins out (measured: 32-core 1M build 90s -> 65s when tiny levels
-    stop running 128-task jobs)."""
-    cores = spark.sparkContext.defaultParallelism
-    return max(1, min(2 * cores, int(n_rows // 4000) + 1))
 
 
 def _cpu_ticks() -> tuple:
@@ -116,6 +120,173 @@ def _read_manifest(out_dir: str, name: str) -> Optional[dict]:
         return None
     with open(path) as fh:
         return json.load(fh)
+
+
+def _stats_row(z, x, y, tnp, ns, action) -> tuple:
+    """A tile's stats row (feature_idx -1) in TILE_STORE_DDL order."""
+    return (z, x, y, -1, None, None, None, None, None, None, None, tnp, ns,
+            action, None, None, None, None)
+
+
+class _Commit:
+    """One exactly-once commit unit of the store: tile and leaf rows are
+    staged in ``_staging/{tiles,leaves}_<stage>`` and published by one
+    directory rename each to ``{tiles,leaves}/level=<final>``.  Staging
+    and final dirs left by a crashed attempt (no commit record: safe to
+    discard and recompute) are removed up front.  Leaves publish first,
+    so a crash between the renames leaves only an orphan leaves dir."""
+
+    def __init__(self, out_dir: str, stage: str, final: str):
+        self.stg_tiles = os.path.join(out_dir, "_staging", f"tiles_{stage}")
+        self.stg_leaves = os.path.join(out_dir, "_staging", f"leaves_{stage}")
+        self.fin_tiles = os.path.join(out_dir, "tiles", f"level={final}")
+        self.fin_leaves = os.path.join(out_dir, "leaves", f"level={final}")
+        for p in (self.stg_tiles, self.stg_leaves, self.fin_tiles,
+                  self.fin_leaves):
+            shutil.rmtree(p, ignore_errors=True)
+
+    def publish(self) -> None:
+        for stg, fin in ((self.stg_leaves, self.fin_leaves),
+                         (self.stg_tiles, self.fin_tiles)):
+            if os.path.isdir(stg):
+                os.makedirs(os.path.dirname(fin), exist_ok=True)
+                os.rename(stg, fin)
+
+
+class _StoreSink:
+    """run_levels sink of CheckpointedPyramid: each level's rendered tile
+    rows, stats rows and leaf features go to a ``_Commit``, its children
+    to ``frontier/level_<N+1>`` (the resume point), and the level
+    manifest is written after the publish."""
+
+    def __init__(self, cp: "CheckpointedPyramid", out_dir: str):
+        self.cp = cp
+        self.out = out_dir
+
+    def begin(self, level):
+        self.t0, self.tick0 = time.time(), _cpu_ticks()
+        self.c = _Commit(self.out, f"level_{level}", f"L{level}")
+        self.ns: dict = {}
+
+    def _frontier_dir(self, level):
+        return os.path.join(self.out, "frontier", f"level_{level + 1}")
+
+    def level(self, level, step2=None, fuse=None, leaves=None,
+              children=False):
+        cagg = pd.DataFrame(columns=CAGG_COLS)
+        if step2 is not None:
+            rend = step2.filter(F.col("row_kind") == RS_RENDER)
+            # wave 1 — the heavy write; materializes step2 (and fr) so the
+            # follow-up actions scan cached data.  feature_idx is NOT
+            # ranked here: a Window.partitionBy(z,x,y) at z0 has ONE
+            # partition, serializing the whole dataset through a single
+            # task (54s of the 76s 1M build; 8->32 efficiency 0.236).
+            # The deterministic order-key columns are persisted instead
+            # and read_tile derives feature_idx per tile.
+            rend.filter(F.col("sub_idx") >= 0).select(
+                "z", "x", "y",
+                F.lit(None).cast("int").alias("feature_idx"),
+                "type", "kind", "geometry_json", "tags_json",
+                F.col("id_str").alias("tile_id_str"),
+                F.col("id_num").alias("tile_id_num"),
+                F.col("id_float").alias("tile_id_float"),
+                F.lit(None).cast("int").alias("tile_num_points"),
+                F.lit(None).cast("int").alias("tile_num_simplified"),
+                F.lit("feature").alias("action"),
+                "world_copy", "feature_seq", "slice_path", "sub_idx",
+            ).write.mode("append").partitionBy("z").parquet(self.c.stg_tiles)
+
+            # wave 2 — independent actions over the cached data run as
+            # concurrent jobs, each writing its own directory (concurrent
+            # appends to one directory would race in the committer):
+            # per-tile render counters, the next level's partials, the
+            # children frontier and the leaf features
+            jobs = [lambda: rend.groupBy("z", "x", "y").agg(
+                F.sum("n_emitted").alias("ns"),
+                F.sum((F.col("sub_idx") >= 0).cast("long")).alias("nf"),
+            ).toPandas()]
+            if children:
+                jobs.append(lambda: step2.filter(
+                    F.col("row_kind") == RS_CAGG
+                ).select(*CAGG_COLS).toPandas())
+                jobs.append(lambda: step2.filter(
+                    F.col("row_kind") == RS_CHILD
+                ).select(*TILED_COLS).write.mode("overwrite").parquet(
+                    self._frontier_dir(level)))
+            if leaves is not None:
+                jobs.append(lambda: self.leaves(level, leaves))
+            with ThreadPoolExecutor(len(jobs)) as ex:
+                res = [f.result() for f in [ex.submit(j) for j in jobs]]
+            self.ns = {
+                (int(r.z), int(r.x), int(r.y)): (int(r.ns), int(r.nf))
+                for r in res[0].itertuples(index=False)
+            }
+            if children:
+                cagg = res[1]
+        n_fused = 0
+        if fuse is not None:
+            # fused subtrees: tile + stats rows, then leaf rows, from one
+            # cached pass
+            step = fuse.persist()
+            is_tile = F.col("row_kind") == K_TILE
+            step.filter(F.col("row_kind").isin(K_TILE, K_STATS)).select(
+                "z", "x", "y",
+                # keep only the -1 stats marker; feature rows derive
+                # feature_idx at read time from synthesized order keys
+                # (0, kernel_idx, '', 0) — the read-time rank over
+                # (world_copy, feature_seq, slice_path, sub_idx)
+                # reproduces the kernel's order exactly
+                F.when(~is_tile, F.col("feature_idx")).alias("feature_idx"),
+                "type", "kind",
+                "geometry_json", "tags_json", "tile_id_str", "tile_id_num",
+                "tile_id_float",
+                "tile_num_points", "tile_num_simplified",
+                F.coalesce(F.col("action"), F.lit("feature")).alias("action"),
+                F.when(is_tile, F.lit(0)).alias("world_copy"),
+                F.when(is_tile, F.col("feature_idx").cast("long")).alias("feature_seq"),
+                F.when(is_tile, F.lit("")).alias("slice_path"),
+                F.when(is_tile, F.lit(0)).alias("sub_idx"),
+            ).write.mode("append").partitionBy("z").parquet(self.c.stg_tiles)
+            self.leaves(level, step.filter(F.col("row_kind") == K_LEAF)
+                        .select(*TILED_COLS))
+            n_fused = int(step.filter(F.col("row_kind") == K_STATS).count())
+            step.unpersist()
+        return cagg, n_fused
+
+    def leaves(self, level, df):
+        df.write.mode("append").partitionBy("z").parquet(self.c.stg_leaves)
+
+    def commit(self, level, tiles, pending, n_children, n_leaf, n_fused):
+        # per-tile stats rows: num_points from the decision partials,
+        # num_simplified from the render counters (fused tiles got theirs
+        # from the subtree kernel's K_STATS rows)
+        stats = [
+            _stats_row(z, x, y, tnp, self.ns.get((z, x, y), (0, 0))[0], a)
+            for z, x, y, a, tnp, _ in tiles
+        ]
+        if stats:
+            self.cp.spark.createDataFrame(stats, TILE_STORE_DDL).write.mode(
+                "append"
+            ).partitionBy("z").parquet(self.c.stg_tiles)
+        if not n_children:
+            shutil.rmtree(self._frontier_dir(level), ignore_errors=True)
+        self.c.publish()
+        self.cp._commit_manifest(
+            self.out,
+            f"level_{level}",
+            dict(
+                level=level,
+                n_tiles=len(stats) + n_fused,
+                n_tile_feature_rows=sum(nf for _, nf in self.ns.values()),
+                n_leaf_feature_rows=int(n_leaf),
+                n_children=n_children,
+                pending_children=pending,
+                wall_sec=round(time.time() - self.t0, 3),
+                steal_frac=_steal_frac(self.tick0, _cpu_ticks()),
+            ),
+            self.c.fin_tiles,
+            self.c.fin_leaves,
+        )
 
 
 class CheckpointedPyramid:
@@ -220,467 +391,33 @@ class CheckpointedPyramid:
         self, features_df: DataFrame, out_dir: str,
         raw_npts: Optional[int] = None,
     ) -> dict:
-        """``raw_npts`` (optional): the input's total RAW point count —
-        lets the fresh level-0 turn skip BOTH the raw gate agg and the
-        converted decision agg.  When absent it is computed with one
-        cheap JVM sum over ``features_df`` (no Python kernels).  The
-        gate mirrors SparkGeoJSONVT._run: raw <= fuse_bound fuses the
-        root outright; larger inputs render+split z0 OPTIMISTICALLY and
-        finish the decision from parent partials emitted inside the
-        same wave — the z0 ingest pass no longer materializes the whole
-        convert+wrap output once for the agg and again for the render."""
-        o = self.options
+        """Build the pyramid into ``out_dir`` with run_levels
+        (plans/pyramid.py), or resume it from the first level without a
+        manifest.  ``raw_npts`` (optional): the input's total RAW point
+        count — lets the fresh level-0 gate skip its one cheap JVM sum
+        over ``features_df``."""
         spark = self.spark
-        kernel = _level_kernel(o, 0, 0, 0, force_subtree=True)
         os.makedirs(out_dir, exist_ok=True)
         _sweep_drill_orphans(out_dir)
-
+        sink = _StoreSink(self, out_dir)
         level = 0
-        frontier = None
-        resumed_pending: list = []
-        # resume: find the first level without a manifest
         while self._get_manifest(out_dir, f"level_{level}") is not None:
             level += 1
-        if level > 0:
-            m = self._get_manifest(out_dir, f"level_{level - 1}")
-            resumed_pending = [tuple(c) for c in m.get("pending_children", [])]
-            if m["n_children"] == 0:
-                if not resumed_pending:
-                    return self.summary(out_dir)
-                # all children were empty: one recording turn remains
-                frontier = spark.createDataFrame([], TILED_FEATURE_SCHEMA)
-            else:
-                frontier = spark.read.parquet(
-                    os.path.join(out_dir, "frontier", f"level_{level}")
-                )
-        first_mode = None
-        first_wave = None
         if level == 0:
-            z2 = 1 << o.max_zoom
-            cw_args = (
-                (o.tile.tolerance / o.tile.extent) / z2,
-                o.generate_id,
-                o.tile.buffer / o.tile.extent,
-                o.tile.line_metrics,
-            )
-            wrapped = convert_wrap_stage(features_df, *cw_args)
-            frontier = wrapped.select(
-                F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
-            )
-            # lazy fused convert+wrap+render+split plan for the
-            # optimistic first turn (one Arrow pass instead of two);
-            # `frontier` stays the mispredicted-leaf recovery source
-            from geojson_vt_rs_spark.operators.pipeline import (
-                convert_wrap_render_split_stage,
-            )
+            run_levels(spark, self.options, sink, features_df=features_df,
+                       raw_npts=raw_npts)
+            return self.summary(out_dir)
+        m = self._get_manifest(out_dir, f"level_{level - 1}")
+        pending = [tuple(c) for c in m.get("pending_children", [])]
+        if m["n_children"] or pending:
+            # no children rows but pending ones: a turn records them
+            frontier = spark.read.parquet(
+                os.path.join(out_dir, "frontier", f"level_{level}")
+            ) if m["n_children"] else None
+            run_levels(spark, self.options, sink, frontier=frontier,
+                       pending=pending, level=level)
+        return self.summary(out_dir)
 
-            first_wave = convert_wrap_render_split_stage(
-                features_df, *cw_args, options=o
-            )
-            if raw_npts is None:
-                raw_npts = int(
-                    features_df.agg(F.sum("num_points")).collect()[0][0] or 0
-                )
-            first_mode = "gate"  # resolved to fuse/optimistic below
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        from geojson_vt_rs_spark.operators.pipeline import (
-            RS_CAGG,
-            RS_CHILD,
-            RS_RENDER,
-            render_split_stage,
-        )
-        from geojson_vt_rs_spark.plans.pyramid import fuse_bound
-
-        tiles_path = os.path.join(out_dir, "tiles")
-        leaves_path = os.path.join(out_dir, "leaves")
-        fuse_max = fuse_bound(o, 0)
-        if first_mode is not None:
-            # fresh level-0 gate (mirrors SparkGeoJSONVT._run): tiny
-            # inputs fuse outright, everything else splits optimistically
-            first_mode = "fuse" if raw_npts <= fuse_max else "optimistic"
-        pending_children: list = resumed_pending
-
-        def _level_dirs(lvl):
-            """(staging, final) dir pairs for one level's tile/leaf writes,
-            pre-cleaned of any un-committed leftovers from a crashed
-            attempt (no manifest => safe to discard and recompute)."""
-            stg_t = os.path.join(out_dir, "_staging", f"tiles_level_{lvl}")
-            stg_l = os.path.join(out_dir, "_staging", f"leaves_level_{lvl}")
-            fin_t = os.path.join(tiles_path, f"level=L{lvl}")
-            fin_l = os.path.join(leaves_path, f"level=L{lvl}")
-            for p in (stg_t, stg_l, fin_t, fin_l):
-                shutil.rmtree(p, ignore_errors=True)
-            return stg_t, stg_l, fin_t, fin_l
-
-        def _publish(stg, fin):
-            if os.path.exists(stg):
-                os.makedirs(os.path.dirname(fin), exist_ok=True)
-                os.rename(stg, fin)  # atomic commit of the level's rows
-
-        def _decide(z, x, y, tnp):
-            if z == o.index_max_zoom or tnp <= o.index_max_points:
-                return "leaf"
-            return "fuse" if tnp <= fuse_max else "split"
-
-        # next level's per-tile num_points from the render pass's RS_CAGG
-        # map-side partials (see plans/pyramid.py) — only the first level
-        # (and a resume entry) pays a separate Spark agg job
-        next_np = None
-        # previous level's checkpointed pass: the next frontier reads its
-        # cached RS_CHILD rows directly — the frontier parquet is written
-        # for DURABILITY (resume re-reads it) but not re-read in the hot
-        # loop (a full decode of every row per level otherwise)
-        prev_step2 = None
-        while True:
-            t0 = time.time()
-            tick0 = _cpu_ticks()
-            stg_tiles, stg_leaves, fin_tiles, fin_leaves = _level_dirs(level)
-            turn_mode = first_mode if level == 0 else None
-            first_mode = None
-            # The frontier is cached ONLY when two consumers exist (the
-            # decision agg on resume entries + the fr build).  Everywhere
-            # else it has exactly one reader — the wave on gated first
-            # turns, fr's cache build on steady-state levels (whose rows
-            # already live in prev_step2's checkpoint) — and caching it
-            # was pure peak-memory cost: a 4M-point build OOM'd an 8g
-            # heap carrying prev_step2 + frontier + fr + step2 copies of
-            # the same features at once.  The rare optimistic-leaf
-            # recovery recomputes the (small) frontier instead.
-            if turn_mode is not None:
-                np_pdf = None
-                if turn_mode == "fuse":
-                    decisions = [(0, 0, 0, "fuse", int(raw_npts))]
-                else:
-                    decisions = [(0, 0, 0, "split", None)]
-                observed = {(0, 0, 0)}
-            elif next_np is not None:
-                np_pdf = next_np
-                next_np = None
-            else:
-                frontier = frontier.persist()
-                np_pdf = (
-                    frontier.groupBy("z", "x", "y")
-                    .agg(F.sum("num_points").alias("tnp"))
-                    .toPandas()
-                )
-            if np_pdf is not None:
-                observed = {
-                    (int(r.z), int(r.x), int(r.y))
-                    for r in np_pdf.itertuples()
-                }
-                decisions = [
-                    (int(r.z), int(r.x), int(r.y),
-                     _decide(int(r.z), int(r.x), int(r.y), int(r.tnp)),
-                     int(r.tnp))
-                    for r in np_pdf.itertuples(index=False)
-                ]
-            tiles_schema = TILE_STORE_DDL
-            # empty children of the previous level's split parents
-            empty_rows = [
-                (z, x, y, -1, None, None, None, None, None, None, None,
-                 0, 0, "empty", None, None, None, None)
-                for z, x, y in pending_children
-                if (z, x, y) not in observed
-            ]
-            if np_pdf is not None and np_pdf.empty:
-                if prev_step2 is not None:
-                    prev_step2.unpersist()
-                    prev_step2 = None
-                if empty_rows:
-                    spark.createDataFrame(empty_rows, tiles_schema).write.mode(
-                        "append"
-                    ).partitionBy("z").parquet(stg_tiles)
-                _publish(stg_tiles, fin_tiles)
-                self._commit_manifest(
-                    out_dir,
-                    f"level_{level}",
-                    dict(level=level, n_tiles=len(empty_rows),
-                         n_tile_feature_rows=0, n_leaf_feature_rows=0,
-                         n_children=0, pending_children=[],
-                         wall_sec=round(time.time() - t0, 3),
-                         steal_frac=_steal_frac(tick0, _cpu_ticks())),
-                    fin_tiles,
-                )
-                frontier.unpersist()
-                return self.summary(out_dir)
-
-            ddf = decisions_df(
-                spark, [(z, x, y, a) for z, x, y, a, _ in decisions]
-            )
-            fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            if turn_mode != "optimistic":
-                # optimistic turns feed fr to exactly one consumer (the
-                # wave) — same no-cache reasoning as the frontier above
-                fr = fr.persist()
-
-            # ONE fused per-row pass renders non-fused tiles AND clips
-            # split children (see plans/pyramid.py).  feature_idx is NOT
-            # ranked here: a Window.partitionBy(z,x,y) at z0 has ONE
-            # partition, serializing the whole dataset through a single
-            # task (54s of the 76s 1M build; 8->32 efficiency 0.236).
-            # Instead the deterministic order-key columns are persisted
-            # and read_tile derives feature_idx per tile (trivial there —
-            # one tile's rows).
-            if turn_mode == "optimistic" and first_wave is not None:
-                # fused convert+wrap+render+split plan over the RAW input
-                # (one Arrow pass; fr is bypassed on this turn)
-                step2 = first_wave.localCheckpoint(eager=False)
-            else:
-                step2 = render_split_stage(
-                    fr.filter(F.col("action") != "fuse"), o,
-                    emit_parent_cagg=(turn_mode == "optimistic"),
-                ).localCheckpoint(eager=False)  # truncate cross-level lineage
-            rend = step2.filter(F.col("row_kind") == RS_RENDER)
-            split_parents = [
-                (z, x, y) for z, x, y, a, _ in decisions if a == "split"
-            ]
-            # wave 1 — the heavy write; materializes fr and step2 so the
-            # follow-up collections scan cached data
-            rend.filter(F.col("sub_idx") >= 0).select(
-                "z", "x", "y",
-                F.lit(None).cast("int").alias("feature_idx"),
-                "type", "kind", "geometry_json", "tags_json",
-                F.col("id_str").alias("tile_id_str"),
-                F.col("id_num").alias("tile_id_num"),
-                F.col("id_float").alias("tile_id_float"),
-                F.lit(None).cast("int").alias("tile_num_points"),
-                F.lit(None).cast("int").alias("tile_num_simplified"),
-                F.lit("feature").alias("action"),
-                "world_copy", "feature_seq", "slice_path", "sub_idx",
-            ).write.mode("append").partitionBy("z").parquet(stg_tiles)
-
-            # wave 2 — independent actions over the cached step2 run as
-            # concurrent jobs: per-tile render counters, the next level's
-            # decision partials, and the children frontier write (its own
-            # directory, so no committer interference with stg_tiles)
-            def _collect_ns():
-                return (
-                    rend.groupBy("z", "x", "y")
-                    .agg(
-                        F.sum("n_emitted").alias("ns"),
-                        F.sum((F.col("sub_idx") >= 0).cast("long")).alias("nf"),
-                    )
-                    .toPandas()
-                )
-
-            def _collect_cagg():
-                return (
-                    step2.filter(F.col("row_kind") == RS_CAGG)
-                    .select("z", "x", "y", "num_points", "n_emitted",
-                            "sub_idx")
-                    .toPandas()
-                )
-
-            def _write_children():
-                step2.filter(F.col("row_kind") == RS_CHILD).select(
-                    *TILED_COLS
-                ).write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "frontier", f"level_{level + 1}")
-                )
-
-            with ThreadPoolExecutor(3) as _ex:
-                ns_f = _ex.submit(_collect_ns)
-                cagg_f = _ex.submit(_collect_cagg) if split_parents else None
-                ch_f = _ex.submit(_write_children) if split_parents else None
-                agg = ns_f.result()
-                cagg = cagg_f.result() if cagg_f is not None else None
-                if ch_f is not None:
-                    ch_f.result()
-            if prev_step2 is not None:
-                # this level's outputs are materialized; the previous
-                # checkpointed pass is no longer referenced
-                prev_step2.unpersist()
-                prev_step2 = None
-            opt_leaf_src = None
-            if turn_mode == "optimistic":
-                # finish the deferred root decision from the wave's own
-                # parent partials (sub_idx == -1 RS_CAGG rows)
-                saw_root, tnp_root = False, 0
-                if cagg is not None and not cagg.empty:
-                    pm = cagg["sub_idx"] == -1
-                    saw_root = bool(pm.any())
-                    tnp_root = int(cagg.loc[pm, "num_points"].sum())
-                    cagg = cagg.loc[~pm]
-                if not saw_root:
-                    # empty / fully-dropped input: commit the empty level
-                    # exactly like the decision-first path (no tile dirs)
-                    for p in (
-                        stg_tiles, stg_leaves,
-                        os.path.join(out_dir, "frontier",
-                                     f"level_{level + 1}"),
-                    ):
-                        shutil.rmtree(p, ignore_errors=True)
-                    self._commit_manifest(
-                        out_dir, f"level_{level}",
-                        dict(level=level, n_tiles=0, n_tile_feature_rows=0,
-                             n_leaf_feature_rows=0, n_children=0,
-                             pending_children=[],
-                             wall_sec=round(time.time() - t0, 3),
-                         steal_frac=_steal_frac(tick0, _cpu_ticks())),
-                        fin_tiles,
-                    )
-                    frontier.unpersist()
-                    fr.unpersist()
-                    step2.unpersist()
-                    return self.summary(out_dir)
-                action = _decide(0, 0, 0, tnp_root)
-                if action == "fuse":
-                    # the wave already rendered+split; run the children as
-                    # a real level (they will fuse on the next turn)
-                    action = "split"
-                decisions = [(0, 0, 0, action, tnp_root)]
-                if action == "leaf":
-                    # mispredicted: the root is really a leaf — keep its
-                    # render rows, retain the source features from the
-                    # persisted frontier, drop the wasted child clips
-                    split_parents = []
-                    cagg = None
-                    opt_leaf_src = frontier.select(*TILED_COLS)
-                    shutil.rmtree(
-                        os.path.join(out_dir, "frontier",
-                                     f"level_{level + 1}"),
-                        ignore_errors=True,
-                    )
-            if opt_leaf_src is None:
-                frontier.unpersist()
-            n_children = 0
-            if cagg is not None and not cagg.empty:
-                # finish the map-side partials driver-side: decision table
-                # for the next level + the exact written child row count
-                n_children = int(cagg["n_emitted"].sum())
-                next_np = (
-                    cagg.groupby(["z", "x", "y"], as_index=False)["num_points"]
-                    .sum()
-                    .rename(columns={"num_points": "tnp"})
-                )
-            elif split_parents:
-                next_np = pd.DataFrame(columns=["z", "x", "y", "tnp"])
-            ns_map = {
-                (int(r.z), int(r.x), int(r.y)): (int(r.ns), int(r.nf))
-                for r in agg.itertuples(index=False)
-            }
-            n_tile_rows = sum(v[1] for v in ns_map.values())
-            # per-tile stats rows (num_points from the agg, num_simplified
-            # from the render counters); fused roots get theirs from the
-            # subtree kernel's K_STATS rows instead
-            stats_rows = empty_rows + [
-                (z, x, y, -1, None, None, None, None, None, None, None, tnp,
-                 ns_map.get((z, x, y), (0, 0))[0], a, None, None, None, None)
-                for z, x, y, a, tnp in decisions
-                if a != "fuse"
-            ]
-            n_tiles = len(stats_rows)
-            if stats_rows:
-                spark.createDataFrame(stats_rows, tiles_schema).write.mode(
-                    "append"
-                ).partitionBy("z").parquet(stg_tiles)
-
-            # fused subtrees (bounded groups)
-            has_fuse = any(a == "fuse" for _, _, _, a, _ in decisions)
-            if has_fuse:
-                step = (
-                    fr.filter(F.col("action") == "fuse")
-                    .drop("action")
-                    .groupBy("z", "x", "y")
-                    .applyInPandas(kernel, schema=STEP_SCHEMA)
-                    .persist()
-                )
-                is_tile = F.col("row_kind") == K_TILE
-                step.filter(F.col("row_kind").isin(K_TILE, K_STATS)).select(
-                    "z", "x", "y",
-                    # keep only the -1 stats marker; feature rows derive
-                    # feature_idx at read time from synthesized order keys
-                    # (0, kernel_idx, '', 0) — the read-time rank over
-                    # (world_copy, feature_seq, slice_path, sub_idx)
-                    # reproduces the kernel's order exactly
-                    F.when(~is_tile, F.col("feature_idx")).alias("feature_idx"),
-                    "type", "kind",
-                    "geometry_json", "tags_json", "tile_id_str", "tile_id_num",
-                    "tile_id_float",
-                    "tile_num_points", "tile_num_simplified",
-                    F.coalesce(F.col("action"), F.lit("feature")).alias("action"),
-                    F.when(is_tile, F.lit(0)).alias("world_copy"),
-                    F.when(is_tile, F.col("feature_idx").cast("long")).alias("feature_seq"),
-                    F.when(is_tile, F.lit("")).alias("slice_path"),
-                    F.when(is_tile, F.lit(0)).alias("sub_idx"),
-                ).write.mode("append").partitionBy("z").parquet(stg_tiles)
-                step.filter(F.col("row_kind") == K_LEAF).select(
-                    *TILED_COLS
-                ).write.mode("append").partitionBy("z").parquet(stg_leaves)
-                n_tiles += int(
-                    step.filter(F.col("row_kind") == K_STATS).count()
-                )
-                step.unpersist()
-
-            # leaf tiles retain source features (the optimistic-leaf
-            # recovery reads them from the persisted frontier — fr's
-            # action column says 'split' there)
-            n_leaf = 0
-            if any(a == "leaf" for _, _, _, a, _ in decisions):
-                leaf_df = (
-                    opt_leaf_src
-                    if opt_leaf_src is not None
-                    else fr.filter(F.col("action") == "leaf").select(*TILED_COLS)
-                )
-                leaf_df.write.mode("append").partitionBy("z").parquet(stg_leaves)
-                if opt_leaf_src is not None:
-                    # opt_leaf_src is deliberately UNPERSISTED (the 4M-OOM
-                    # fix): a second action would re-run the whole
-                    # convert+wrap recompute.  The optimistic wave ran the
-                    # root as 'split', so it emitted no K_LEAF rows — the
-                    # rows just staged are the only leaves this level, and
-                    # counting the parquet is a metadata-cheap re-read.
-                    n_leaf = int(spark.read.parquet(stg_leaves).count())
-                else:
-                    n_leaf = int(leaf_df.count())
-            if opt_leaf_src is not None:
-                frontier.unpersist()
-
-            pending_children = [
-                (z + 1, 2 * x + dx, 2 * y + dy)
-                for z, x, y in split_parents
-                for dx in (0, 1)
-                for dy in (0, 1)
-            ]
-            _publish(stg_tiles, fin_tiles)
-            _publish(stg_leaves, fin_leaves)
-            self._commit_manifest(
-                out_dir,
-                f"level_{level}",
-                dict(
-                    level=level,
-                    n_tiles=n_tiles,
-                    n_tile_feature_rows=int(n_tile_rows),
-                    n_leaf_feature_rows=n_leaf,
-                    n_children=int(n_children),
-                    pending_children=pending_children,
-                    wall_sec=round(time.time() - t0, 3),
-                    steal_frac=_steal_frac(tick0, _cpu_ticks()),
-                ),
-                fin_tiles,
-                fin_leaves,
-            )
-            fr.unpersist()
-            if not n_children and not pending_children:
-                step2.unpersist()
-                return self.summary(out_dir)
-            if not n_children:
-                # all children empty: one more loop turn records them
-                frontier = spark.createDataFrame([], frontier.schema)
-                step2.unpersist()
-            else:
-                # continue from the cached pass; the parquet twin of these
-                # rows is already durable for resume.  Coalesce to a
-                # size-aware partition count (row count known driver-side
-                # from the cagg partials) so shrinking levels run
-                # proportionally fewer tasks.
-                frontier = step2.filter(F.col("row_kind") == RS_CHILD).select(
-                    *TILED_COLS
-                ).coalesce(_frontier_parts(n_children, spark))
-                prev_step2 = step2
-            level += 1
 
     def summary(self, out_dir: str) -> dict:
         levels = []
@@ -730,9 +467,6 @@ class CheckpointedPyramid:
             self._tile_dfs.pop(old).unpersist()
         self._tile_dfs[key] = df
         return df
-
-    def _tile_exists(self, out_dir: str, z: int, x: int, y: int) -> bool:
-        return (z, x, y) in self._tile_keys(out_dir)
 
     def _tile_keys(self, out_dir: str) -> set:
         """All existing tile keys, from the per-tile stats rows
@@ -816,79 +550,42 @@ class CheckpointedPyramid:
         if leaf is None:
             return self.read_tile(out_dir, z, x, y)  # empty result
 
-        # drill DISTRIBUTED: the same decision-first level loop as run(),
-        # with target-aware decisions — tiles and leaves stream from the
-        # executors straight into the staging dirs.  (The previous
-        # in-memory drill collected every sibling leaf through the driver
-        # and shipped it back — a driver-memory ceiling at scale.)
-        drill_tag = f"drill_{z}_{x}_{y}"
-        stg_t = os.path.join(out_dir, "_staging", f"tiles_{drill_tag}")
-        stg_l = os.path.join(out_dir, "_staging", f"leaves_{drill_tag}")
-        fin_t = os.path.join(out_dir, "tiles", f"level={drill_tag}")
-        fin_l = os.path.join(leaves_path, f"level={drill_tag}")
-        for p in (stg_t, stg_l, fin_t, fin_l):
-            shutil.rmtree(p, ignore_errors=True)
-        self._drill_levels(
-            out_dir, leaf, (az, ax, ay), (z, x, y), stg_t, stg_l, tile_keys
-        )
-        # staged + renamed like run()'s level commits; leaves publish FIRST
-        # so the tiles rename is the commit point (a crash in between only
-        # leaves an orphan leaves dir the entry sweep removes)
-        if os.path.isdir(stg_l):
-            os.makedirs(leaves_path, exist_ok=True)
-            os.rename(stg_l, fin_l)
-        if os.path.isdir(stg_t):
-            os.makedirs(os.path.join(out_dir, "tiles"), exist_ok=True)
-            os.rename(stg_t, fin_t)
+        # drill DISTRIBUTED: tiles and leaves stream from the executors
+        # straight into the staging dirs, committed like a level
+        tag = f"drill_{z}_{x}_{y}"
+        commit = _Commit(out_dir, tag, tag)
+        self._drill(leaf, (az, ax, ay), (z, x, y), commit, tile_keys)
+        commit.publish()
         self._invalidate_memos(out_dir)  # new tiles published
         return self.read_tile(out_dir, z, x, y)
 
-    def _drill_levels(
-        self, out_dir: str, frontier: DataFrame, root: tuple, target: tuple,
-        stg_tiles: str, stg_leaves: str, existing: set,
+    def _drill(
+        self, leaf: DataFrame, root: tuple, target: tuple,
+        commit: _Commit, existing: set,
     ) -> None:
         """Target-directed descent from the ancestor's retained leaves:
         non-path tiles stop and retain (lib.rs:324-338), the path tile
-        splits until the target.  The WHOLE descent is ONE feature-
-        parallel pass (drill_descend_stage) — drill decisions are purely
-        structural, so no per-level driver round-trip exists and the
-        former 5-7 sequential level jobs collapse into a single wave;
-        stats rows are finished driver-side from the pass's per-tile
-        partials.  Tiles already in the store (the re-split ancestor;
-        cousins from prior drills) are excluded via a broadcast anti-join
-        on ``existing`` — the caller's index-sized tile-key set (one
-        stats-row scan, _tile_keys)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from geojson_vt_rs_spark.operators.pipeline import (
-            RS_CAGG,
-            RS_LEAF,
-            drill_descend_stage,
-        )
-        from geojson_vt_rs_spark.plans.pyramid import TILED_COLS
-
+        splits until the target — the whole descent is ONE feature-
+        parallel pass (plans/pyramid.py drill_pass), the one the
+        in-memory index's get_tile runs too.  The rendered tile features
+        (~85 % of the pass's output rows) sink to the staging parquet
+        IN-KERNEL (drill_descend_stage ``tile_sink``: idempotent per-task
+        files, existing-tile exclusion in-kernel) — they never cross the
+        Python->JVM boundary and need no write job.  Stats rows are
+        finished driver-side from the pass's per-tile partials.  Tiles
+        already in the store (the re-split ancestor; cousins from prior
+        drills) are excluded via ``existing``, the caller's index-sized
+        tile-key set (one stats-row scan, _tile_keys)."""
         spark = self.spark
-        o = self.options
-        az, ax, ay = root
-        cz, cx, cy = target
         exist_df = F.broadcast(
             spark.createDataFrame(
                 [(a, b, c) for a, b, c in existing] or [(-1, -1, -1)],
                 "z int, x int, y int",
             )
         )
-
-        # the ancestor's leaf rows may sit in one parquet file; spread
-        # them so the descent renders on every core.  The rendered tile
-        # features (~85 % of the pass's output rows) sink to the staging
-        # parquet IN-KERNEL (drill_descend_stage tile_sink: idempotent
-        # per-task files, existing-tile exclusion in-kernel) — they
-        # never cross the Python->JVM boundary and need no write job.
-        par = spark.sparkContext.defaultParallelism
-        step = drill_descend_stage(
-            frontier.select(*TILED_COLS).repartition(par), o,
-            (az, ax, ay), (cz, cx, cy),
-            tile_sink=dict(path=stg_tiles, existing=existing),
+        step = drill_pass(
+            spark, leaf, self.options, root, target,
+            tile_sink=dict(path=commit.stg_tiles, existing=existing),
         ).persist()
 
         # one wave: leaf write + partials collection run as concurrent
@@ -900,7 +597,7 @@ class CheckpointedPyramid:
                 exist_df, ["z", "x", "y"], "left_anti"
             ).select(*TILED_COLS).write.mode("append").partitionBy(
                 "z"
-            ).parquet(stg_leaves)
+            ).parquet(commit.stg_leaves)
 
         def _collect_stats():
             return (
@@ -915,38 +612,15 @@ class CheckpointedPyramid:
             lf.result()
             partials = sf.result()
         step.unpersist()
-
-        # finish the per-tile (tnp, ns) stats from the partials; then
-        # walk the path driver-side to find the memoized-empty children
-        # (split children that received no features), matching the level
-        # loop's pending_children semantics
-        agg: dict = {}
-        for r in partials.itertuples(index=False):
-            key = (int(r.z), int(r.x), int(r.y))
-            old = agg.get(key, (0, 0))
-            agg[key] = (old[0] + int(r.num_points), old[1] + int(r.n_emitted))
         stats_rows = [
-            (tz, tx, ty, -1, None, None, None, None, None, None, None,
-             tnp, ns, "drill", None, None, None, None)
-            for (tz, tx, ty), (tnp, ns) in agg.items()
-            if (tz, tx, ty) not in existing
+            _stats_row(tz, tx, ty, tnp, ns, "drill")
+            for tz, tx, ty, tnp, ns in drill_tiles(
+                partials, root, target, existing)
         ]
-        pz, px, py = az, ax, ay
-        while pz < cz and pz < o.max_zoom and agg.get((pz, px, py), (0,))[0] > 0:
-            for dx in (0, 1):
-                for dy in (0, 1):
-                    ch = (pz + 1, 2 * px + dx, 2 * py + dy)
-                    if ch not in agg and ch not in existing:
-                        stats_rows.append(
-                            ch + (-1, None, None, None, None, None, None,
-                                  None, 0, 0, "drill", None, None, None, None)
-                        )
-            m = 1 << (cz - (pz + 1))
-            pz, px, py = pz + 1, cx // m, cy // m
         if stats_rows:
             spark.createDataFrame(stats_rows, TILE_STORE_DDL).write.mode(
                 "append"
-            ).partitionBy("z").parquet(stg_tiles)
+            ).partitionBy("z").parquet(commit.stg_tiles)
 
 
 def checkpointed_mosaic(

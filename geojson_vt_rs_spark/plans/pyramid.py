@@ -1,52 +1,60 @@
 """Distributed tile pyramid: the reference's recursive split_tile
 (/root/reference/src/lib.rs:251-434) re-expressed as a breadth-first
-per-zoom DataFrame loop with a FUSED per-level kernel.
+per-zoom DataFrame loop, and drill-down get_tile (lib.rs:184-245) as the
+same recursion pruned to one root-to-target path.
 
 Equivalence: the recursion's stop conditions are per-tile, so a
 breadth-first traversal visits the same tile set and every tile sees the
-same feature multiset (clip bands are a function of (z,x,y) only).  The
-per-tile work — render (tile.rs:43-101), stop decision (lib.rs:305-338),
-and 4-way child clip (lib.rs:340-428) — is *group-local*, so one
-groupBy(z,x,y).applyInPandas per level does all three and tags each
-output row as tile-feature / stats / leaf-feature / child-feature.
-One shuffle per level, keyed by the same (z,x,y) as the tile-table
-partitioning; the driver sees only rendered-tile rows and stop metadata
-(index-sized), never the feature stream.
+same feature multiset (clip bands are a function of (z,x,y) only).
+
+``run_levels`` is the one level loop.  Each turn decides every frontier
+tile with the pure ``decide`` (lib.rs:305-313) from its point count,
+renders and child-clips the non-fused tiles in one per-row pass
+(render_split_stage), runs small split subtrees whole inside one task
+(``fuse``), and hands the level's outputs to a sink: ``_IndexSink`` (the
+in-memory tile registry of SparkGeoJSONVT) or the staged parquet store
+(plans/checkpoint.py).  The loop itself moves only index-sized rows
+through the driver (decisions, per-tile partials).
 
 "Retain source_features on leaves / clear on split parents"
-(lib.rs:311,324,335,430-433) becomes the leaf-features store; drill-down
-(get_tile miss) re-enters the loop from the nearest memoized ancestor's
-retained features (lib.rs:184-245).  Tiles created empty along the way
-count in stats/total — observable in tests.rs:430 (total == 37 after the
-z11 miss lookups), and every split parent spawns all four children
-(split_tile is called unconditionally), so feature-less children are
-memoized as empty tiles by the driver from the parents' key list.
+(lib.rs:311,324,335,430-433) becomes the leaf-features store; a get_tile
+miss runs ``drill_pass`` from the nearest ancestor's retained features —
+the recursion pruned to the target path, every level in one
+feature-parallel pass.  Tiles created empty along the way count in
+stats/total — observable in tests.rs:430 (total == 37 after the z11 miss
+lookups), and every split parent spawns all four children (split_tile is
+called unconditionally), so feature-less children become empty tiles.
 
 At 100 TB: the frontier shrinks geometrically (features are partitioned
 into disjoint children); hot tiles (dense metros) are bounded by
 index_max_points splitting them further down; AQE coalesces the tail.
-The in-memory tile store is for index-sized outputs; sources/tile_sink
-holds the partitioned-parquet variant with checkpoint manifests.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Dict, Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
-from geojson_vt_rs_spark.core.clip import clip_feature
-from geojson_vt_rs_spark.core.tile import TileEmitter
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
+    RS_CAGG,
+    RS_CHILD,
+    RS_LEAF,
+    RS_RENDER,
+    _convert_wrap_kernel,
     convert_wrap_render_split_stage,
     convert_wrap_stage,
+    drill_descend_stage,
+    render_split_stage,
 )
 from geojson_vt_rs_spark.operators.schema import (
     FEATURE_FIELDS,
@@ -58,11 +66,10 @@ from geojson_vt_rs_spark.operators.schema import (
 
 TILED_COLS = [f.name for f in TILED_FEATURE_SCHEMA.fields]
 
-# row_kind values in the fused per-level output
+# row_kind values in the fused-subtree kernel output
 K_TILE = 0  # rendered tile feature row
 K_STATS = 1  # per-tile stats row (always present)
 K_LEAF = 2  # retained source feature of a stopped tile
-K_CHILD = 3  # feature clipped into a child tile
 
 STEP_SCHEMA = T.StructType(
     [
@@ -87,20 +94,16 @@ STEP_SCHEMA = T.StructType(
 )
 
 STEP_COLS = [f.name for f in STEP_SCHEMA.fields]
-_FEATURE_NULLS = {f.name: None for f in FEATURE_FIELDS}
-_TILE_NULLS = dict(
-    feature_idx=None,
-    type=None,
-    kind=None,
-    geometry_json=None,
-    tags_json=None,
-    tile_id_str=None,
-    tile_id_num=None,
-    tile_id_float=None,
-    tile_num_points=None,
-    tile_num_simplified=None,
-    action=None,
-)
+_ROW_NULLS = dict.fromkeys(STEP_COLS)
+
+# render-pass columns the in-memory index collects, and the RS_CAGG
+# partial columns every sink hands back to the loop
+_REND_COLS = [
+    "row_kind", "z", "x", "y", "world_copy", "feature_seq", "slice_path",
+    "sub_idx", "type", "kind", "geometry_json", "tags_json", "id_str",
+    "id_num", "id_float", "n_emitted", "num_points",
+]
+CAGG_COLS = ["z", "x", "y", "num_points", "n_emitted", "sub_idx"]
 
 
 class SparkTile:
@@ -157,53 +160,75 @@ def decisions_df(spark: SparkSession, decisions) -> DataFrame:
     )
 
 
-def fuse_bound(options: Options, cz: int) -> int:
+def fuse_bound(options: Options) -> int:
     """Max num_points for which a split tile's WHOLE subtree runs in one
     task.  Serial subtree work ~ tnp * depth, and depth grows while
-    children stay above index_max_points, so first-pass tiling caps at
-    max(index_max_points, 8192); drill-down descends a single path and
-    gets the full budget.  (CheckpointedPyramid drills no longer fuse at
-    all — drill_descend_stage walks every level in one feature-parallel
-    pass; this bound still serves the in-memory index's drills.)"""
-    fm = getattr(options, "fuse_max_points", 0)
-    if cz == 0:
-        return min(fm, max(options.index_max_points, 8192))
-    return fm
+    children stay above index_max_points, so the bound caps at
+    max(index_max_points, 8192)."""
+    return min(options.fuse_max_points,
+               max(options.index_max_points, 8192))
 
 
-def _level_kernel(
-    options: Options, cz: int, cx: int, cy: int, force_subtree: bool = False
-):
-    """Group kernel: render + decide + (retain | split-or-subtree) one tile.
+def decide(options: Options, z: int, x: int, y: int, tnp: int) -> str:
+    """A frontier tile's build action from its point count (lib.rs:
+    305-313): 'leaf' (stop and retain), 'fuse' (split, with the whole
+    subtree small enough for one task) or 'split'.  The drill's 'stop'
+    (max_zoom) and off-path leaves belong to drill_descend_stage."""
+    if z == options.index_max_zoom or tnp <= options.index_max_points:
+        return "leaf"
+    return "fuse" if tnp <= fuse_bound(options) else "split"
 
-    With ``force_subtree`` (driver already routed this group as 'fuse'
-    and guaranteed boundedness) a split action always recurses locally —
-    the caller ignores K_CHILD rows in that mode."""
-    o = options
-    extent = o.tile.extent
-    tol = o.tile.tolerance
-    lm = o.tile.line_metrics
-    max_zoom = o.max_zoom
-    imz = o.index_max_zoom
-    imp = o.index_max_points
 
-    _bound = fuse_bound(o, cz)
+def _frontier_parts(n_rows: int, spark: SparkSession) -> int:
+    """Partition count for a level frontier of known size: enough to use
+    every core, capped so late (small) levels stop paying per-task
+    scheduling + Python-worker round-trip overhead for 100-row tasks.
+    Applied with coalesce() — a NARROW merge of cached partitions, no
+    shuffle — so the partition count tracks the data as the pyramid
+    thins out (measured: 32-core 1M build 90s -> 65s when tiny levels
+    stop running 128-task jobs)."""
+    cores = spark.sparkContext.defaultParallelism
+    return max(1, min(2 * cores, int(n_rows // 4000) + 1))
 
-    def _emitter_rows(rows, em, z, x, y, action):
-        def tile_row(row_kind, **kw):
-            r = dict(_TILE_NULLS)
-            r.update(_FEATURE_NULLS)
-            r.update(row_kind=row_kind, z=z, x=x, y=y, **kw)
-            return r
 
-        for idx, tf in enumerate(em.features):
-            rows.append(
-                tile_row(
-                    K_TILE,
+def _children(tiles) -> list:
+    return [
+        (z + 1, 2 * x + dx, 2 * y + dy)
+        for z, x, y in tiles
+        for dx in (0, 1)
+        for dy in (0, 1)
+    ]
+
+
+def _subtree_kernel(options: Options):
+    """Group kernel: the core tiler's whole split recursion under one
+    tile (a raw-gated root, or a 'fuse' split), as STEP_SCHEMA rows per
+    subtree tile — K_TILE features, one K_STATS row, K_LEAF retained
+    source features."""
+
+    def row(row_kind, em, **kw):
+        return _ROW_NULLS | dict(row_kind=row_kind, z=em.z, x=em.x, y=em.y,
+                                 **kw)
+
+    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
+
+        z, x, y = int(key[0]), int(key[1]), int(key[2])
+        ordered = pdf.sort_values(
+            ["world_copy", "feature_seq", "slice_path"], kind="stable"
+        )
+        feats = list(pdf_to_features(ordered[TILED_COLS[3:]]))
+        rows: list = []
+        for it in CoreTiler.subtree(feats, options, z, x, y).tiles.values():
+            em = it.emitter
+            for idx, tf in enumerate(em.features):
+                rows.append(row(
+                    K_TILE, em,
                     feature_idx=idx,
                     type=tf["type"],
                     kind=tf["kind"],
-                    geometry_json=json.dumps(tf["geometry"], separators=(",", ":")),
+                    geometry_json=json.dumps(tf["geometry"],
+                                             separators=(",", ":")),
                     tags_json=(
                         None
                         if tf["tags"] is None
@@ -212,98 +237,358 @@ def _level_kernel(
                     tile_id_str=tf["id_str"],
                     tile_id_num=tf["id_num"],
                     tile_id_float=tf["id_float"],
-                )
-            )
-        rows.append(
-            tile_row(
-                K_STATS,
+                ))
+            rows.append(row(
+                K_STATS, em,
                 feature_idx=-1,
                 tile_num_points=em.num_points,
                 tile_num_simplified=em.num_simplified,
-                action=action,
-            )
-        )
-
-    def _leaf_rows(rows, feats, z, x, y):
-        for f in feats:
-            r = dict(_TILE_NULLS)
-            r.update(feature_to_row(f))
-            r.update(row_kind=K_LEAF, z=z, x=x, y=y)
-            rows.append(r)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
-
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        tolerance = 0.0 if z == max_zoom else tol / (float(1 << z) * extent)
-        em = TileEmitter(z, x, y, extent, tolerance, lm)
-        ordered = pdf.sort_values(
-            ["world_copy", "feature_seq", "slice_path"], kind="stable"
-        )
-        feats = list(pdf_to_features(ordered[TILED_COLS[3:]]))
-        for f in feats:
-            em.add_feature(f)
-
-        rows: list = []
-
-        # decide (lib.rs:305-338)
-        if cz == 0:
-            action = "leaf" if (z == imz or em.num_points <= imp) else "split"
-        elif z == max_zoom:
-            action = "stop"
-        elif z == cz:
-            action = "leaf"
-        else:
-            m = 1 << (cz - z)
-            action = "split" if (x == cx // m and y == cy // m) else "leaf"
-
-        if action == "split" and (force_subtree or em.num_points <= _bound):
-            # adaptive subtree fusion: this tile's whole recursion fits in
-            # one task — run the core tiler here; identical results, no
-            # further driver round-trips for this subtree
-            sub = CoreTiler.subtree(feats, o, z, x, y, cz, cx, cy)
-            for it in sub.tiles.values():
-                sem = it.emitter
-                sub_action = "leaf" if it.source_features else "stop"
-                _emitter_rows(rows, sem, sem.z, sem.x, sem.y, sub_action)
-                if it.source_features:
-                    _leaf_rows(rows, it.source_features, sem.z, sem.x, sem.y)
-            return pd.DataFrame(rows, columns=STEP_COLS)
-
-        _emitter_rows(rows, em, z, x, y, action)
-
-        if action == "leaf":
-            _leaf_rows(rows, feats, z, x, y)
-        elif action == "split":
-            z2 = float(1 << z)
-            p = 0.5 * o.tile.buffer / extent
-            for f in feats:
-                left = clip_feature(f, 0, (x - p) / z2, (x + 0.5 + p) / z2, lm)
-                right = clip_feature(
-                    f, 0, (x + 0.5 - p) / z2, (x + 1.0 + p) / z2, lm
-                )
-                for dx, half in ((0, left), (1, right)):
-                    for lf in half:
-                        top = clip_feature(
-                            lf, 1, (y - p) / z2, (y + 0.5 + p) / z2, lm
-                        )
-                        bot = clip_feature(
-                            lf, 1, (y + 0.5 - p) / z2, (y + 1.0 + p) / z2, lm
-                        )
-                        for dy, quarter in ((0, top), (1, bot)):
-                            for qf in quarter:
-                                r = dict(_TILE_NULLS)
-                                r.update(feature_to_row(qf))
-                                r.update(
-                                    row_kind=K_CHILD,
-                                    z=z + 1,
-                                    x=x * 2 + dx,
-                                    y=y * 2 + dy,
-                                )
-                                rows.append(r)
+                action="leaf" if it.source_features else "stop",
+            ))
+            for f in it.source_features:
+                rows.append(row(K_LEAF, em) | feature_to_row(f))
         return pd.DataFrame(rows, columns=STEP_COLS)
 
     return run
+
+
+def run_levels(
+    spark: SparkSession,
+    options: Options,
+    sink,
+    features_df: Optional[DataFrame] = None,
+    raw_npts: Optional[int] = None,
+    frontier: Optional[DataFrame] = None,
+    pending=(),
+    level: int = 0,
+) -> None:
+    """The pyramid's level loop, decision-first, one level per turn:
+
+    1. per-tile (num_points, rows) — the ONLY per-tile state the stop
+       predicate needs (lib.rs:305-313) — finished driver-side from the
+       previous turn's RS_CAGG map-side partials, so a level is ONE job
+       wave; only a resumed ``frontier`` pays a Spark agg job;
+    2. ``decide`` per tile (index-sized, on the driver);
+    3. rendering and child clipping run per ROW (render_split_stage) —
+       a z0 root with millions of features stays fully parallel; only
+       bounded 'fuse' groups run whole subtrees (applyInPandas).
+
+    A fresh build passes the raw ``features_df``; the FIRST level then
+    skips the decision agg, which would materialize the whole
+    convert+wrap output before any rendering: raw points (``raw_npts``,
+    one JVM sum when absent) <= fuse_bound route the whole build into
+    one fused task (converted tnp <= 3*raw: wrap at most triples
+    dateline-straddling features); larger inputs render+split the root
+    OPTIMISTICALLY and finish its decision from parent partials emitted
+    in the same wave, recovering the leaf retention from the frontier in
+    the (rare) case the root was not really a split.  A resumed build
+    passes its persisted ``frontier`` (None when only empty children are
+    left), the previous level's ``pending`` children and ``level``.
+
+    ``sink`` receives each level in this order:
+      begin(level)
+      level(level, step2, fuse, leaves, children) -> (cagg, n_fused)
+          materialize the render pass ``step2`` (RS_SCHEMA, or None),
+          the fused-subtree rows ``fuse`` (STEP_SCHEMA, or None) and the
+          leaf tiles' source rows ``leaves`` (TILED_COLS, or None);
+          return the RS_CAGG partials (CAGG_COLS; child partials are
+          needed only when ``children``) and the fused tile count
+      leaves(level, df)  -- the mispredicted-root recovery only
+      commit(level, tiles, pending, n_children, n_leaf, n_fused)
+          ``tiles``: (z, x, y, action, num_points, rows) of every
+          non-fused tile, empty children first (action 'empty')."""
+    o = options
+    first_wave = None
+    next_np = None
+    if features_df is not None:
+        if raw_npts is None:
+            raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
+        z2 = 1 << o.max_zoom
+        cw_args = (
+            (o.tile.tolerance / o.tile.extent) / z2,
+            o.generate_id,
+            o.tile.buffer / o.tile.extent,
+            o.tile.line_metrics,
+        )
+        if int(raw_npts or 0) <= fuse_bound(o):
+            # raw-gated fuse: convert+wrap chained straight into the
+            # subtree kernel in ONE mapInPandas over ONE coalesced input
+            # partition (one Python runner invocation; a grouped path
+            # pays a decisions broadcast, a cache build and a shuffle,
+            # and frontier.coalesce(1) re-initialized the Python runner
+            # once per upstream partition: 4 s of overhead for a 0.15 s
+            # kernel on us-states)
+            sink.begin(level)
+            wave = features_df.coalesce(1).mapInPandas(
+                _fuse_wave_kernel(
+                    _convert_wrap_kernel(*cw_args), _subtree_kernel(o),
+                    (0, 0, 0),
+                ),
+                schema=STEP_SCHEMA,
+            )
+            n_fused = sink.level(level, fuse=wave)[1]
+            # an empty or fully-dropped input still creates the root
+            # (lib.rs:265-295: insert precedes the early return)
+            root = [] if n_fused else [(0, 0, 0, "empty", 0, 0)]
+            sink.commit(level, root, [], 0, 0, n_fused)
+            return
+        frontier = convert_wrap_stage(features_df, *cw_args).select(
+            F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
+        )
+        # lazy fused convert+wrap+render+split plan for the optimistic
+        # first turn (one Arrow pass instead of two); `frontier` stays
+        # the mispredicted-leaf recovery source
+        first_wave = convert_wrap_render_split_stage(
+            features_df, *cw_args, options=o
+        )
+    pending = list(pending)
+    prev = None  # previous turn's render pass: this turn's frontier
+    while True:
+        sink.begin(level)
+        t0 = time.time()
+        if first_wave is not None:
+            decisions = [(0, 0, 0, "split", None, None)]
+        else:
+            if next_np is None and frontier is not None:
+                # a resumed frontier is cached: the agg and fr read it
+                frontier = frontier.persist()
+                next_np = (
+                    frontier.groupBy("z", "x", "y")
+                    .agg(F.sum("num_points").alias("tnp"),
+                         F.count(F.lit(1)).alias("rows"))
+                    .toPandas()
+                )
+            decisions = [
+                (int(r.z), int(r.x), int(r.y),
+                 decide(o, int(r.z), int(r.x), int(r.y), int(r.tnp)),
+                 int(r.tnp), int(r.rows))
+                for r in (() if next_np is None
+                          else next_np.itertuples(index=False))
+            ]
+        seen = {d[:3] for d in decisions}
+        # children of the previous level's split parents that got no
+        # features -> empty tiles (lib.rs:344-428)
+        tiles = [
+            (z, x, y, "empty", 0, 0) for z, x, y in pending
+            if (z, x, y) not in seen
+        ]
+        if not decisions:
+            if frontier is not None:
+                frontier.unpersist()
+            sink.commit(level, tiles, [], 0, 0, 0)
+            return
+
+        acts = {d[3] for d in decisions}
+        fr = fuse = leaves = None
+        if first_wave is not None:
+            # the fused convert+wrap+render+split plan over the RAW input
+            # (one Arrow pass; no decision join on this turn)
+            step2 = first_wave.localCheckpoint(eager=False)
+        else:
+            ddf = decisions_df(spark, [d[:4] for d in decisions])
+            fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
+            if ("fuse" in acts) + ("leaf" in acts) + bool(acts - {"fuse"}) >= 2:
+                # cache only when >= 2 of the level's actions read fr
+                # (single-action levels have one consumer, and caching
+                # there is a wasted copy: a 4M-point build OOM'd an 8g
+                # heap holding prev + frontier + fr + step2 at once)
+                fr = fr.persist()
+            # localCheckpoint truncates the per-level lineage: without it
+            # each level's logical plan embeds every previous level's and
+            # analysis cost compounds (measured 4x wall blowup by z5 on a
+            # no-fuse us-states build)
+            step2 = (
+                render_split_stage(fr.filter(F.col("action") != "fuse"), o)
+                .localCheckpoint(eager=False)
+                if acts - {"fuse"}
+                else None
+            )
+            if "fuse" in acts:
+                fuse = (
+                    fr.filter(F.col("action") == "fuse")
+                    .drop("action")
+                    .groupBy("z", "x", "y")
+                    .applyInPandas(_subtree_kernel(o), schema=STEP_SCHEMA)
+                )
+            if "leaf" in acts:
+                leaves = fr.filter(F.col("action") == "leaf").select(
+                    *TILED_COLS
+                )
+        split = [d[:3] for d in decisions if d[3] == "split"]
+        cagg, n_fused = sink.level(level, step2, fuse, leaves, bool(split))
+        if prev is not None:
+            # this level's outputs are materialized; the previous pass
+            # is no longer referenced
+            prev.unpersist()
+            prev = None
+        if first_wave is not None:
+            first_wave = None
+            # finish the deferred root decision from the wave's own
+            # parent partials (sub_idx == -1 RS_CAGG rows)
+            pm = (cagg["sub_idx"] == -1).to_numpy()
+            root, cagg = cagg.loc[pm], cagg.loc[~pm]
+            if root.empty:
+                # empty (or fully-dropped) input: the root tile still
+                # exists (lib.rs:265-295)
+                step2.unpersist()
+                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], 0, 0, 0)
+                return
+            tnp = int(root["num_points"].sum())
+            # a 'fuse' root already rendered+split: its children run as a
+            # real level (and fuse there)
+            action = "leaf" if decide(o, 0, 0, 0, tnp) == "leaf" else "split"
+            decisions = [(0, 0, 0, action, tnp, int(root["n_emitted"].sum()))]
+            if action == "leaf":
+                # mispredicted: the root is really a leaf — keep its
+                # render rows, retain the source features from the
+                # frontier, drop the wasted child clips
+                split, cagg = [], cagg.iloc[:0]
+                sink.leaves(level, frontier.select(*TILED_COLS))
+        n_children = int(cagg["n_emitted"].sum())
+        pending = _children(split)
+        sink.commit(
+            level,
+            tiles + [d for d in decisions if d[3] != "fuse"],
+            pending,
+            n_children,
+            sum(d[5] for d in decisions if d[3] == "leaf"),
+            n_fused,
+        )
+        for df in (fr, frontier):
+            if df is not None:
+                df.unpersist()
+        if os.environ.get("SPARK_GRAFT_DEBUG_LEVELS") == "1":
+            print(f"[pyramid] level {level}: tiles={len(decisions)} "
+                  f"children={n_children} wall={time.time() - t0:.1f}s",
+                  flush=True)
+        if not split:
+            if step2 is not None:
+                step2.unpersist()
+            return
+        level += 1
+        if n_children:
+            next_np = cagg.groupby(["z", "x", "y"], as_index=False).agg(
+                tnp=("num_points", "sum"), rows=("n_emitted", "sum")
+            )
+            # continue from the cached pass, coalesced to a size-aware
+            # partition count (the row count is known from the partials)
+            frontier = step2.filter(F.col("row_kind") == RS_CHILD).select(
+                *TILED_COLS
+            ).coalesce(_frontier_parts(n_children, spark))
+            prev = step2
+        else:
+            # every child clipped empty: one more turn records them
+            next_np, frontier = None, None
+            step2.unpersist()
+
+
+class _IndexSink:
+    """run_levels sink of SparkGeoJSONVT: collects each level's render
+    rows, fused subtrees and leaf features to the driver (index-sized
+    outputs) and registers the tiles, their features parsed lazily."""
+
+    def __init__(self, index: "SparkGeoJSONVT"):
+        self.index = index
+        self.rend = self.fused = None
+
+    def begin(self, level):
+        pass
+
+    def level(self, level, step2=None, fuse=None, leaves=None,
+              children=False):
+        # the collections are INDEPENDENT Spark actions -> concurrent
+        # jobs, so the level pays one job latency, not three; the RS_CAGG
+        # partials ride along in the render collection (no extra job)
+        def rend():
+            return step2.filter(
+                F.col("row_kind").isin(RS_RENDER, RS_CAGG)
+            ).select(*_REND_COLS).toPandas()
+
+        def fused():
+            return fuse.filter(
+                F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
+            ).toPandas()
+
+        with ThreadPoolExecutor(3) as ex:
+            rf = ex.submit(rend) if step2 is not None else None
+            ff = ex.submit(fused) if fuse is not None else None
+            lf = ex.submit(self.leaves, level, leaves) if leaves is not None else None
+            merged = rf.result() if rf else pd.DataFrame(columns=_REND_COLS)
+            self.fused = ff.result() if ff else None
+            if lf:
+                lf.result()
+        is_cagg = (merged["row_kind"] == RS_CAGG).to_numpy()
+        self.rend = merged.loc[~is_cagg]
+        n_fused = 0
+        if self.fused is not None:
+            n_fused = int((self.fused["row_kind"] == K_STATS).sum())
+        return merged.loc[is_cagg, CAGG_COLS], n_fused
+
+    def leaves(self, level, df):
+        # leaf tiles retain their source features (lib.rs:311,324,335)
+        self.index._retain(df.toPandas())
+
+    def commit(self, level, tiles, pending, n_children, n_leaf, n_fused):
+        reg = self.index._register
+        rend = self.rend
+        groups = {} if rend is None or rend.empty else dict(
+            list(rend.groupby(["z", "x", "y"], sort=False)))
+        for z, x, y, _, tnp, _ in tiles:
+            grp = groups.get((z, x, y))
+            if grp is None:
+                reg(z, x, y, [], tnp, 0)
+            else:
+                # feature materialization (sort + JSON parse) is
+                # deferred to first .features access
+                reg(z, x, y, None, tnp, int(grp["n_emitted"].sum()),
+                    lazy=(grp, _render_group_to_features))
+        meta = self.fused
+        if meta is not None:
+            tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
+            for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
+                st = grp[grp.row_kind == K_STATS].iloc[0]
+                reg(int(z), int(x), int(y), None,
+                    int(st["tile_num_points"]), int(st["tile_num_simplified"]),
+                    lazy=(grp, _fused_group_to_features))
+            self.index._retain(meta[meta.row_kind == K_LEAF])
+        self.rend = self.fused = None
+
+
+def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
+               root: tuple, target: tuple, tile_sink: Optional[dict] = None
+               ) -> DataFrame:
+    """The cold get_tile pass of both SparkGeoJSONVT and
+    CheckpointedPyramid: drill_descend_stage from ``root``'s retained
+    leaf rows down to ``target``.  The rows may sit in one partition or
+    parquet file; they are spread so the descent renders on every core."""
+    par = spark.sparkContext.defaultParallelism
+    return drill_descend_stage(
+        leaf_df.select(*TILED_COLS).repartition(par), options, root,
+        target, tile_sink=tile_sink,
+    )
+
+
+def drill_tiles(partials: pd.DataFrame, root: tuple, target: tuple,
+                existing) -> list:
+    """The tiles a drill pass creates, as (z, x, y, num_points,
+    num_simplified): every tile the pass saw that is not in ``existing``,
+    finished from its RS_CAGG partials, plus the empty children of the
+    split path tiles (split_tile creates all four, lib.rs:344-428)."""
+    agg: dict = {}
+    for r in partials.itertuples(index=False):
+        key = (int(r.z), int(r.x), int(r.y))
+        tnp, ns = agg.get(key, (0, 0))
+        agg[key] = (tnp + int(r.num_points), ns + int(r.n_emitted))
+    out = [k + v for k, v in agg.items() if k not in existing]
+    (pz, px, py), (cz, cx, cy) = root, target
+    while pz < cz and agg.get((pz, px, py), (0,))[0] > 0:
+        out += [
+            ch + (0, 0) for ch in _children([(pz, px, py)])
+            if ch not in agg and ch not in existing
+        ]
+        m = 1 << (cz - pz - 1)
+        pz, px, py = pz + 1, cx // m, cy // m
+    return out
 
 
 class SparkGeoJSONVT:
@@ -327,18 +612,14 @@ class SparkGeoJSONVT:
     ):
         self.spark = spark
         self.options = options or Options()
-        o = self.options
         self.tiles: Dict[int, SparkTile] = {}
         self.leaf_features: Dict[int, pd.DataFrame] = {}
         self.stats: Dict[int, int] = {}
         self.total = 0
         self._local = None
 
-        # raw JVM sum over the input — cheap (no Python kernels) and it
-        # lets the first level skip the expensive CONVERTED decision agg:
-        # raw <= fuse_bound -> the root fuses outright; raw > fuse_bound
-        # -> optimistic split (decisions finish from in-wave partials).
-        # Skipped when the caller forced prefer_local=True (unused there).
+        # the raw JVM point sum picks local vs distributed and doubles as
+        # the loop's raw gate (skipped when prefer_local=True is forced)
         npts = None
         if prefer_local is None:
             npts = features_df.agg(F.sum("num_points")).collect()[0][0] or 0
@@ -346,52 +627,8 @@ class SparkGeoJSONVT:
         if prefer_local:
             self._init_local(features_df)
             return
-        if npts is None:
-            npts = features_df.agg(F.sum("num_points")).collect()[0][0] or 0
-
-        z2 = 1 << o.max_zoom
-        cw_args = (
-            (o.tile.tolerance / o.tile.extent) / z2,
-            o.generate_id,
-            o.tile.buffer / o.tile.extent,
-            o.tile.line_metrics,
-        )
-        if int(npts) <= fuse_bound(o, 0):
-            # raw-gated fuse: the WHOLE build is one bounded task —
-            # convert+wrap chained straight into the subtree kernel in a
-            # single mapInPandas over ONE coalesced input partition (one
-            # Python runner invocation; the former grouped path paid a
-            # decisions broadcast job, a cache build, and a shuffle, and
-            # a plain frontier.coalesce(1) re-initialized the Python
-            # runner once per upstream local partition: 4 s of overhead
-            # for a 0.15 s kernel on us-states)
-            from geojson_vt_rs_spark.operators.pipeline import (
-                _convert_wrap_kernel,
-            )
-
-            kernel = _level_kernel(o, 0, 0, 0, force_subtree=True)
-            fuse_wave = features_df.coalesce(1).mapInPandas(
-                _fuse_wave_kernel(
-                    _convert_wrap_kernel(*cw_args), kernel, (0, 0, 0)
-                ),
-                schema=STEP_SCHEMA,
-            )
-            self._collect_fused_root(fuse_wave, 0, 0, 0)
-            return
-        wrapped = convert_wrap_stage(features_df, *cw_args)
-        frontier = wrapped.select(
-            F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
-        )
-        # lazy fused convert+wrap+render+split plan for the optimistic
-        # first turn (one Arrow pass instead of two); `frontier` stays
-        # the recovery/mispredicted-leaf source
-        first_wave = convert_wrap_render_split_stage(
-            features_df, *cw_args, options=o
-        )
-        self._run(
-            frontier, 0, 0, 0, 0, 0, 0, raw_npts=int(npts),
-            first_wave=first_wave,
-        )
+        run_levels(spark, self.options, _IndexSink(self),
+                   features_df=features_df, raw_npts=npts)
 
     # ------------------------------------------------------------------
     def _init_local(self, features_df: DataFrame) -> None:
@@ -415,32 +652,6 @@ class SparkGeoJSONVT:
             )
 
     # ------------------------------------------------------------------
-    def _collect_fused_root(self, fuse_wave: DataFrame, rz, rx, ry) -> None:
-        """Collect the single fused-subtree wave (raw-gated small build):
-        one Spark job, then the same tile/leaf registration the grouped
-        fuse path used."""
-        meta = fuse_wave.filter(
-            F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
-        ).toPandas()
-        tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
-        for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
-            stats_row = grp[grp.row_kind == K_STATS].iloc[0]
-            self._register(
-                int(z), int(x), int(y), None,
-                int(stats_row["tile_num_points"]),
-                int(stats_row["tile_num_simplified"]),
-                lazy=(grp, _fused_group_to_features),
-            )
-        leaf_pdf = meta[meta.row_kind == K_LEAF]
-        for (z, x, y), grp in leaf_pdf.groupby(["z", "x", "y"], sort=False):
-            self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                TILED_COLS
-            ].reset_index(drop=True)
-        if to_id(rz, rx, ry) not in self.tiles:
-            # fused an empty/fully-dropped input: the root tile still
-            # exists (lib.rs:265-295)
-            self._register(rz, rx, ry, [], 0, 0)
-
     def _register(self, z: int, x: int, y: int, features, np_: int, ns: int,
                   lazy=None):
         tid = to_id(z, x, y)
@@ -450,343 +661,12 @@ class SparkGeoJSONVT:
         self.stats[z] = self.stats.get(z, 0) + 1
         self.total += 1
 
-    def _decide(self, z, x, y, num_points, cz, cx, cy) -> str:
-        """'leaf' (stop+retain) | 'stop' (no retain) | 'split'
-        (lib.rs:305-338)."""
-        o = self.options
-        if cz == 0:
-            if z == o.index_max_zoom or num_points <= o.index_max_points:
-                return "leaf"
-            return "split"
-        if z == o.max_zoom:
-            return "stop"
-        if z == cz:
-            return "leaf"
-        m = 1 << (cz - z)
-        if x != cx // m or y != cy // m:
-            return "leaf"
-        return "split"
-
-    def _run(self, frontier: DataFrame, rz, rx, ry, cz, cx, cy,
-             raw_npts=None, first_wave=None):
-        """One pyramid level per loop turn, decision-first:
-
-        1. per-tile num_points via a JVM partial+final agg (the ONLY
-           per-tile state the stop predicate needs, lib.rs:305-313);
-        2. driver decides leaf/stop/split per tile (index-sized), small
-           split tiles become 'fuse' (whole subtree in one task);
-        3. rendering and child-splitting run per-ROW (mapInPandas) —
-           a z0 root with millions of features stays fully parallel;
-           only bounded 'fuse' groups use applyInPandas.
-
-        With ``raw_npts`` (the RAW input point sum, build path only) the
-        FIRST level skips the converted decision agg — the one job that
-        materialized the whole convert+wrap output before any rendering:
-        raw <= fuse_bound routes the root straight into one fused
-        subtree task (converted tnp <= 3*raw: wrap at most triples
-        dateline-straddling features, so the task stays within ~3x the
-        soft fuse budget worst-case); larger inputs render+split the
-        root OPTIMISTICALLY and finish the leaf/split decision from
-        parent partials emitted inside the same wave, recovering the
-        leaf retention from the persisted frontier in the (rare) case
-        the root was not really a split."""
-        from geojson_vt_rs_spark.operators.pipeline import (
-            RS_CAGG,
-            RS_CHILD,
-            RS_RENDER,
-            render_split_stage,
-        )
-
-        o = self.options
-        spark = self.spark
-        # driver-routed fuse groups must always recurse locally
-        kernel = _level_kernel(o, cz, cx, cy, force_subtree=True)
-        fuse_max = fuse_bound(o, cz)
-        import os
-        import time as _time
-
-        debug = os.environ.get("SPARK_GRAFT_DEBUG_LEVELS") == "1"
-        first = True
-        # the raw gate's fuse case is handled in __init__ (one fused
-        # task); a raw-gated entry here is always the optimistic split
-        first_mode = None
-        if cz == 0 and raw_npts is not None:
-            first_mode = "optimistic"
-        pending_children: list = []  # expected child keys of split parents
-        prev = None
-        # next level's per-tile num_points, pre-assembled from the render
-        # pass's RS_CAGG map-side partials — only the FIRST level pays a
-        # separate Spark agg job; afterwards each level is ONE job wave
-        next_np: Optional[pd.DataFrame] = None
-        while True:
-            _t0 = _time.time()
-            turn_mode = first_mode if first else None
-            # The frontier is cached ONLY when the decision agg makes a
-            # second consumer (first turns without a gate, drill entry);
-            # gated first turns and steady-state levels have exactly one
-            # reader (the wave / fr's cache build over prev's checkpoint)
-            # — see plans/checkpoint.py for the 4M OOM this avoids
-            if turn_mode is not None:
-                np_pdf = None
-                decisions = [(rz, rx, ry, "split", None)]
-                first = False
-            elif next_np is not None:
-                np_pdf = next_np
-                next_np = None
-            else:
-                frontier = frontier.persist()
-                np_pdf = (
-                    frontier.groupBy("z", "x", "y")
-                    .agg(F.sum("num_points").alias("tnp"))
-                    .toPandas()
-                )
-                if prev is not None:
-                    # the agg materialized the persisted frontier, so the
-                    # previous level's checkpoint can go
-                    prev.unpersist()
-                    prev = None
-            _t_agg = _time.time()
-            if np_pdf is not None:
-                if np_pdf.empty:
-                    if prev is not None:
-                        prev.unpersist()
-                        prev = None
-                    if first:
-                        # split_tile(empty, root) still creates the root
-                        # tile (lib.rs:265-295: insert precedes the early
-                        # return)
-                        self._register(rz, rx, ry, [], 0, 0)
-                    for ck in pending_children:
-                        self._register(ck[0], ck[1], ck[2], [], 0, 0)
-                    frontier.unpersist()
-                    return
-                first = False
-
-                observed = set()
-                decisions = []
-                for r in np_pdf.itertuples(index=False):
-                    z, x, y, tnp = int(r.z), int(r.x), int(r.y), int(r.tnp)
-                    observed.add((z, x, y))
-                    action = self._decide(z, x, y, tnp, cz, cx, cy)
-                    if action == "split" and tnp <= fuse_max:
-                        action = "fuse"
-                    decisions.append((z, x, y, action, tnp))
-                # children of the PREVIOUS level's split parents that got
-                # no features -> empty memoized tiles (lib.rs:344-428)
-                for ck in pending_children:
-                    if ck not in observed:
-                        self._register(ck[0], ck[1], ck[2], [], 0, 0)
-
-            ddf = decisions_df(
-                spark, [(z, x, y, a) for z, x, y, a, _ in decisions]
-            )
-            fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            has_fuse = any(a == "fuse" for _, _, _, a, _ in decisions)
-            has_leaf = any(a == "leaf" for _, _, _, a, _ in decisions)
-            has_nonfuse = any(a != "fuse" for _, _, _, a, _ in decisions)
-            if (
-                turn_mode != "optimistic"
-                and int(has_fuse) + int(has_leaf) + int(has_nonfuse) >= 2
-            ):
-                # cache only when >= 2 of the level's collections read fr
-                # (optimistic turns and single-action levels have exactly
-                # one consumer — caching there is a wasted extra job)
-                fr = fr.persist()
-
-            # ONE fused per-row pass renders every non-fused live tile AND
-            # clips split-tile children (the VtFeature is built once; one
-            # Spark job instead of a render job + a split job per level)
-            nonfuse = fr.filter(F.col("action") != "fuse")
-            # localCheckpoint truncates the per-level lineage: without it
-            # each level's logical plan embeds every previous level's and
-            # analysis cost compounds (measured 4x wall blowup by z5 on a
-            # no-fuse us-states build)
-            if turn_mode == "optimistic" and first_wave is not None:
-                # fused convert+wrap+render+split plan over the RAW input
-                # (one Arrow pass; fr is bypassed on this turn)
-                step2 = first_wave.localCheckpoint(eager=False)
-            else:
-                step2 = (
-                    render_split_stage(
-                        nonfuse, o,
-                        emit_parent_cagg=(turn_mode == "optimistic"),
-                    ).localCheckpoint(eager=False)
-                    if has_nonfuse
-                    else None
-                )
-
-            # the level's three collections are INDEPENDENT Spark actions
-            # (render rows from step2; fused subtrees and leaf retention
-            # from fr) -> run them as concurrent jobs so the level pays
-            # one job latency, not three (fr is a narrow broadcast join
-            # over the already-materialized persisted frontier, so a
-            # concurrent first touch duplicates only map-side work).
-            # RS_CAGG partials ride along in the SAME collection: the next
-            # level's decision agg finishes driver-side (no extra job).
-            _REND_COLS = [
-                "row_kind",
-                "z", "x", "y", "world_copy", "feature_seq", "slice_path",
-                "sub_idx", "type", "kind", "geometry_json", "tags_json",
-                "id_str", "id_num", "id_float", "n_emitted", "num_points",
-            ]
-
-            def _collect_rend():
-                if step2 is None:
-                    return pd.DataFrame(columns=_REND_COLS)
-                return step2.filter(
-                    F.col("row_kind").isin(RS_RENDER, RS_CAGG)
-                ).select(*_REND_COLS).toPandas()
-
-            def _collect_fuse():
-                step = (
-                    fr.filter(F.col("action") == "fuse")
-                    .drop("action")
-                    .groupBy("z", "x", "y")
-                    .applyInPandas(kernel, schema=STEP_SCHEMA)
-                )
-                return step.filter(
-                    F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
-                ).toPandas()
-
-            def _collect_leaf():
-                return (
-                    fr.filter(F.col("action") == "leaf")
-                    .drop("action")
-                    .select(*TILED_COLS)
-                    .toPandas()
-                )
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(3) as _ex:
-                rend_f = _ex.submit(_collect_rend)
-                fuse_f = _ex.submit(_collect_fuse) if has_fuse else None
-                leaf_f = _ex.submit(_collect_leaf) if has_leaf else None
-                merged = rend_f.result()
-                meta = fuse_f.result() if fuse_f is not None else None
-                leaf_rows = leaf_f.result() if leaf_f is not None else None
-            _t_rend = _time.time()
-            if prev is not None:
-                # the collections materialized this level's outputs; the
-                # previous checkpoint is no longer referenced
-                prev.unpersist()
-                prev = None
-            if turn_mode == "optimistic":
-                # finish the deferred root decision from the wave's own
-                # parent partials (sub_idx == -1 RS_CAGG rows)
-                pm = (
-                    (merged["row_kind"] == RS_CAGG)
-                    & (merged["sub_idx"] == -1)
-                ).to_numpy()
-                saw_root = bool(pm.any())
-                tnp_root = int(merged.loc[pm, "num_points"].sum())
-                merged = merged.loc[~pm]
-                if not saw_root:
-                    # empty (or fully-dropped) input: the root tile still
-                    # exists (lib.rs:265-295)
-                    self._register(rz, rx, ry, [], 0, 0)
-                    frontier.unpersist()
-                    fr.unpersist()
-                    if step2 is not None:
-                        step2.unpersist()
-                    return
-                action = self._decide(rz, rx, ry, tnp_root, cz, cx, cy)
-                decisions = [(rz, rx, ry, action, tnp_root)]
-                if action != "split":
-                    # mispredicted: the root is really a leaf — keep its
-                    # render rows, retain the source features from the
-                    # persisted frontier, drop the wasted child clips
-                    leaf_rows = frontier.select(*TILED_COLS).toPandas()
-            frontier.unpersist()
-            is_cagg = merged["row_kind"].to_numpy() == RS_CAGG
-            if is_cagg.any():
-                next_np = (
-                    merged.loc[is_cagg]
-                    .groupby(["z", "x", "y"], as_index=False)["num_points"]
-                    .sum()
-                    .rename(columns={"num_points": "tnp"})
-                )
-                rend = merged.loc[~is_cagg]
-            else:
-                next_np = None
-                rend = merged
-            rend_groups = (
-                dict(list(rend.groupby(["z", "x", "y"], sort=False)))
-                if not rend.empty
-                else {}
-            )
-
-            split_parents = []
-            for z, x, y, action, tnp in decisions:
-                if action == "fuse":
-                    continue
-                grp = rend_groups.get((z, x, y))
-                if grp is None:
-                    self._register(z, x, y, [], tnp, 0)
-                else:
-                    ns = int(grp["n_emitted"].sum())
-                    # feature materialization (sort + JSON parse) is
-                    # deferred to first .features access
-                    self._register(
-                        z, x, y, None, tnp, ns,
-                        lazy=(grp, _render_group_to_features),
-                    )
-                if action == "split":
-                    split_parents.append((z, x, y))
-                    self.leaf_features.pop(to_id(z, x, y), None)  # lib.rs:430-433
-
-            # bounded fused subtrees (grouped; group size <= fuse_max pts)
-            if meta is not None:
-                tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
-                for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
-                    stats_row = grp[grp.row_kind == K_STATS].iloc[0]
-                    self._register(
-                        int(z), int(x), int(y), None,
-                        int(stats_row["tile_num_points"]),
-                        int(stats_row["tile_num_simplified"]),
-                        lazy=(grp, _fused_group_to_features),
-                    )
-                leaf_pdf = meta[meta.row_kind == K_LEAF]
-                for (z, x, y), grp in leaf_pdf.groupby(["z", "x", "y"], sort=False):
-                    self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                        TILED_COLS
-                    ].reset_index(drop=True)
-
-            # leaf tiles retain their source features (lib.rs:311,324,335)
-            if leaf_rows is not None:
-                for (z, x, y), grp in leaf_rows.groupby(["z", "x", "y"], sort=False):
-                    self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                        TILED_COLS
-                    ].reset_index(drop=True)
-
-            if debug:
-                zmin = min(d[0] for d in decisions)
-                print(
-                    f"[pyramid] z{zmin}: tiles={len(decisions)} "
-                    f"mode={turn_mode or 'agg'} "
-                    f"agg={_t_agg - _t0:.1f}s render={_t_rend - _t_agg:.1f}s "
-                    f"rest={_time.time() - _t_rend:.1f}s",
-                    flush=True,
-                )
-            fr.unpersist()
-            if not split_parents:
-                if step2 is not None:
-                    step2.unpersist()
-                return
-            if next_np is None:
-                # split parents whose children all clipped empty: next
-                # turn sees an empty decision table without another job
-                next_np = pd.DataFrame(columns=["z", "x", "y", "tnp"])
-            pending_children = [
-                (z + 1, 2 * x + dx, 2 * y + dy)
-                for z, x, y in split_parents
-                for dx in (0, 1)
-                for dy in (0, 1)
-            ]
-            frontier = step2.filter(F.col("row_kind") == RS_CHILD).select(
-                *TILED_COLS
-            )
-            prev = step2
+    def _retain(self, rows: pd.DataFrame) -> None:
+        """Source rows (TILED_COLS) -> the leaf-features store."""
+        for (z, x, y), grp in rows.groupby(["z", "x", "y"], sort=False):
+            self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
+                TILED_COLS
+            ].reset_index(drop=True)
 
     # ------------------------------------------------------------------
     def find_parent(self, z, x, y):
@@ -807,33 +687,48 @@ class SparkGeoJSONVT:
         x = ((x_ % z2) + z2) % z2
         tid = to_id(z, x, y)
         if self._local is not None:
-            em = self._local.get_tile(z, x, y)
+            self._local.get_tile(z, x, y)
             self._sync_local()
-            if tid in self.tiles:
-                return self.tiles[tid]
-            return EMPTY_TILE
+            return self.tiles.get(tid, EMPTY_TILE)
         if tid in self.tiles:
             return self.tiles[tid]
         parent = self.find_parent(z, x, y)
         if parent is None:
             raise LookupError("Parent tile not found")
-        pz, px, py = parent
-        leaf = self.leaf_features.get(to_id(pz, px, py))
-        if leaf is None or leaf.empty:
-            # reference: split_tile(parent, empty) creates nothing new;
-            # no Spark job needed
-            if self.find_parent(z, x, y) is None:
-                raise LookupError("Parent tile not found")
-            return EMPTY_TILE
+        leaf = self.leaf_features.get(to_id(*parent))
+        if leaf is not None and not leaf.empty:
+            # (an ancestor without retained features creates nothing new:
+            # split_tile(parent, empty) — no Spark job needed)
+            self._drill(leaf, parent, (z, x, y))
+        return self.tiles.get(tid, EMPTY_TILE)
+
+    def _drill(self, leaf: pd.DataFrame, root: tuple, target: tuple) -> None:
+        """Cold get_tile: the drill pass from the ancestor's retained
+        features, collected once (index-sized: one root-to-target path)
+        and registered like a level — new tiles from the RS_CAGG partials
+        and render rows, retained features of the new leaf tiles."""
         frontier = create_feature_df(
             self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA
         )
-        self._run(frontier, pz, px, py, z, x, y)
-        if tid in self.tiles:
-            return self.tiles[tid]
-        if self.find_parent(z, x, y) is None:
-            raise LookupError("Parent tile not found")
-        return EMPTY_TILE
+        rows = drill_pass(
+            self.spark, frontier, self.options, root, target
+        ).toPandas()
+        existing = {(t.z, t.x, t.y) for t in self.tiles.values()}
+        kind = rows["row_kind"].to_numpy()
+        rend = rows[kind == RS_RENDER]
+        groups = dict(list(rend.groupby(["z", "x", "y"], sort=False)))
+        for z, x, y, tnp, ns in drill_tiles(
+            rows[kind == RS_CAGG], root, target, existing
+        ):
+            grp = groups.get((z, x, y))
+            self._register(
+                z, x, y, [] if grp is None else None, tnp, ns,
+                lazy=None if grp is None else (grp, _render_group_to_features),
+            )
+        # the ancestor was split (lib.rs:430-433); no other retained tile
+        # lies below it, so every RS_LEAF row belongs to a new tile
+        self.leaf_features.pop(to_id(*root), None)
+        self._retain(rows[kind == RS_LEAF])
 
     def get_internal_tiles(self):
         return self.tiles

@@ -3,9 +3,10 @@ rejection BEFORE allocation, generator determinism, and the driver
 query vs its inline-VALUES oracle."""
 
 import struct
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np

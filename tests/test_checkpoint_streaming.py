@@ -15,18 +15,42 @@ from geojson_vt_rs_spark.plans.checkpoint import (
     _read_manifest,
 )
 
+# the store protocol tests run on the us-states fixture and on a
+# generated polygon/line corpus that needs no reference fixtures
+CORPORA = ["us_states", "generated"]
 
-def test_checkpointed_pyramid_and_resume(spark, tmp_path):
+
+def load_corpus(spark, corpus):
+    if corpus == "us_states":
+        from conftest import fixture_path
+
+        return read_geojson_features(spark, fixture_path("us-states.json"))
+    from geojson_vt_rs_spark.sources.synth_features import generate_features
+
+    return generate_features(spark, 300, partitions=4)
+
+
+def core_total(spark, feats, opts):
+    """Tile count of the local core tiler over the same input."""
+    from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
+
+    return SparkGeoJSONVT(spark, feats, opts, prefer_local=True).total
+
+
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_checkpointed_pyramid_and_resume(spark, tmp_path, corpus):
     out = str(tmp_path / "pyr")
-    feats = read_geojson_features(spark, "/root/reference/fixtures/us-states.json")
-    cp = CheckpointedPyramid(
-        spark, Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
-    )
+    feats = load_corpus(spark, corpus)
+    opts = Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
+    cp = CheckpointedPyramid(spark, opts)
     s1 = cp.run(feats, out)
     # small inputs may fuse the whole subtree into level 0 — what matters
     # is the complete tile set landing in the store
     assert s1["levels"] >= 1
-    assert s1["total_tiles"] == 17  # local-tiler ground truth at imz=3/imp=200
+    if corpus == "us_states":
+        assert s1["total_tiles"] == 17  # local-tiler ground truth at imz=3/imp=200
+    else:
+        assert s1["total_tiles"] == core_total(spark, feats, opts)
     for m in s1["manifests"]:
         assert m["n_tiles"] > 0
         assert "wall_sec" in m
@@ -237,7 +261,8 @@ def test_streaming_replay_idempotent(spark, tmp_path):
     assert again == 200
 
 
-def test_checkpointed_exactly_once_after_crash(spark, tmp_path):
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     """Kill-and-resume with NO reader-side dedupe: simulate both crash
     windows of the level commit protocol — (a) after publish, before
     manifest (level dir exists, manifest missing) and (b) mid-staging
@@ -246,9 +271,7 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path):
     import pyspark.sql.functions as F
 
     out = str(tmp_path / "pyr_xonce")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
+    feats = load_corpus(spark, corpus)
     # tiny fuse bound forces true per-level distributed processing so the
     # run writes several level commits to crash between
     cp = CheckpointedPyramid(
@@ -422,7 +445,8 @@ def test_streaming_watermarked_windows_drop_late(spark, tmp_path):
     assert got3.get(0) == 1 and got3.get(1) == 1  # history untouched
 
 
-def test_drilldown_crash_window_retry(spark, tmp_path):
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_drilldown_crash_window_retry(spark, tmp_path, corpus):
     """get_tile drill-down commit protocol: simulate a crash AFTER the
     leaves rename but BEFORE the tiles rename (tiles is the commit
     point) — a retried get_tile must recompute and return the exact
@@ -432,9 +456,7 @@ def test_drilldown_crash_window_retry(spark, tmp_path):
     from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
 
     out = str(tmp_path / "pyr_dc")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
+    feats = load_corpus(spark, corpus)
     opts = Options()
     cp = CheckpointedPyramid(spark, opts)
     cp.run(feats, out)
@@ -481,7 +503,8 @@ def test_iceberg_sink_gating(spark, tmp_path):
     assert s2["total_tiles"] == s1["total_tiles"]
 
 
-def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch, corpus):
     """Execute the SNAPSHOT-COMMIT branch of the Iceberg sink (absent
     pyiceberg normally leaves it untested) against a faithful API double
     whose catalog state is durable on disk: full run commits one
@@ -499,13 +522,14 @@ def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch):
     assert iceberg_sink.iceberg_available()
 
     out = str(tmp_path / "pyr_ibs")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
+    feats = load_corpus(spark, corpus)
     opts = Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
     cp = CheckpointedPyramid(spark, opts, iceberg=True)
     s1 = cp.run(feats, out)
-    assert s1["total_tiles"] == 17
+    if corpus == "us_states":
+        assert s1["total_tiles"] == 17
+    else:
+        assert s1["total_tiles"] == core_total(spark, feats, opts)
 
     # snapshots carry the level manifests in table properties
     sink = cp._sink(out)
@@ -531,16 +555,15 @@ def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch):
     assert sink2.read_manifest("tiles", 0) == {"level": 0, "n_tiles": 0}
 
 
-def test_multi_drill_divergent_targets(spark, tmp_path):
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_multi_drill_divergent_targets(spark, tmp_path, corpus):
     """Two drills whose paths share a prefix then diverge: every drilled
     tile matches the in-memory tiler, and cousin tiles created by the
     first drill are not duplicated by the second (anti-join guard)."""
     from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
 
     out = str(tmp_path / "pyr_md")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
+    feats = load_corpus(spark, corpus)
     opts = Options()
     cp = CheckpointedPyramid(spark, opts)
     cp.run(feats, out)
@@ -569,14 +592,13 @@ def test_multi_drill_divergent_targets(spark, tmp_path):
     assert dup == 0
 
 
-def test_store_routes_identical_tiles(spark, tmp_path):
+@pytest.mark.parametrize("corpus", CORPORA)
+def test_store_routes_identical_tiles(spark, tmp_path, corpus):
     """The raw-gated level-0 routes (fuse-all subtree vs optimistic
     render+split levels) lay the store out differently (one fused level
     vs per-zoom levels) but every tile read back must be identical —
     same tile set, same ordered features per tile."""
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
+    feats = load_corpus(spark, corpus)
     o_fuse = Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
     o_opt = Options(max_zoom=14, index_max_zoom=3, index_max_points=200,
                     fuse_max_points=1)
@@ -588,7 +610,11 @@ def test_store_routes_identical_tiles(spark, tmp_path):
     sb = cp_b.run(feats, out_b)
     assert sa["levels"] == 1  # raw 3539 <= fuse_bound -> one fused level
     assert sb["levels"] >= 2  # optimistic split -> real per-zoom levels
-    assert sa["total_tiles"] == sb["total_tiles"] == 17
+    if corpus == "us_states":
+        assert sa["total_tiles"] == sb["total_tiles"] == 17
+    else:
+        want = core_total(spark, feats, o_fuse)
+        assert sa["total_tiles"] == sb["total_tiles"] == want
 
     keys_a = sorted(cp_a._tile_keys(out_a))
     keys_b = sorted(cp_b._tile_keys(out_b))

@@ -4,9 +4,10 @@ landing exactly on chunk boundaries, one doc spanning many chunks,
 sparse doc_ids, bucket-width and partitioning invariance."""
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -4,9 +4,10 @@ the edge paths — duplicate seeds leaving a cluster permanently empty
 (COALESCE lane), null embedding rows, argmin ties, and partitioning
 invariance (integer sums must not care how rows are placed)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -3,9 +3,10 @@ exactness vs a naive Python twin (incl. null/short/messy-whitespace
 docs), anti-join completeness, and broadcast-vs-shuffle equivalence."""
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

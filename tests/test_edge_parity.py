@@ -8,13 +8,14 @@ corpus (the round-4 advisory pattern: the batch tokenizer diverged only
 on documents the parity corpus didn't contain).
 """
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 DOCS_ROWS = [

@@ -2,9 +2,10 @@
 null/empty/short text, vertical-tab whitespace) and the sf0.001
 documents table."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -6,9 +6,10 @@ import duckdb
 import pandas as pd
 import pytest
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"

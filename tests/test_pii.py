@@ -1,9 +1,10 @@
 """PII redaction invariants (operators/pii.py): Spark and DuckDB produce
 byte-identical redacted text and counts on overlap/edge corpora."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -5,9 +5,10 @@ crafted + real tables (test_search.py / test_clustering.py) — together
 the triangle covers all three implementations without paying a Spark
 job per hypothesis example."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from hypothesis import given, settings

@@ -7,9 +7,10 @@ implementations without paying a Spark job per example."""
 
 import datetime
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from hypothesis import given, settings

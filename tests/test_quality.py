@@ -2,10 +2,11 @@
 match a naive Python twin and the DuckDB exprs on edge corpora."""
 
 import re
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -3,9 +3,10 @@ window-1 old included, window old excluded), same-us tie peers share a
 frame, partitioning invariance."""
 
 import datetime
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

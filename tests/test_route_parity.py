@@ -1,0 +1,190 @@
+"""Route parity on generated inputs: the local core tiler, the distributed
+index (``SparkGeoJSONVT(prefer_local=False)``) and the checkpointed store
+(``CheckpointedPyramid``'s tile rows) must agree tile by tile on every gate
+route of the level loop, and through drill-down on both ``get_tile``s.
+
+Runs without the reference fixtures: the corpus is
+``sources/synth_features.generate_features`` (polygons and polylines with
+three dense metros and a few antimeridian straddlers)."""
+
+import json
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from geojson_vt_rs_spark.config import Options
+from geojson_vt_rs_spark.core.geom import GEOM_POLYGON
+from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
+from geojson_vt_rs_spark.operators.schema import pdf_to_features
+from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
+from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
+from geojson_vt_rs_spark.sources.synth_features import generate_features
+
+N_FEATURES = 300  # 2070 raw points, 53 tiles
+BASE = dict(max_zoom=14, index_max_zoom=4, index_max_points=200)
+# raw points <= fuse_bound (min(fuse_max_points, max(imp, 8192)) = 8192):
+# the whole build is one fused task; fuse_max_points=1: optimistic z0
+# then per-level render+split; fuse_max_points=1000: optimistic z0, then
+# tiles with index_max_points < tnp <= 1000 fuse as bounded groups
+ROUTES = {
+    "fuse_all": {},
+    "split": dict(fuse_max_points=1),
+    "fuse_groups": dict(fuse_max_points=1000),
+}
+
+
+def tile_of(lon, lat, z):
+    z2 = 1 << z
+    s = np.sin(np.radians(lat))
+    y = 0.5 - 0.25 * np.log((1 + s) / (1 - s)) / np.pi
+    return z, int((lon + 180.0) / 360.0 * z2), int(y * z2)
+
+
+# dense: the first metro; sparse: a lone world-spread polygon; the third
+# lies south of every feature, so its nearest ancestor retains nothing
+DRILLS = [tile_of(-74.0, 40.7, 9), None, tile_of(-140.0, -82.0, 11)]
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    df = generate_features(spark, N_FEATURES, partitions=4).persist()
+    pdf = df.toPandas().sort_values("feature_seq", ignore_index=True)
+    yield df, pdf
+    df.unpersist()
+
+
+def core_index(pdf, opts):
+    return CoreTiler(list(pdf_to_features(pdf)), opts)
+
+
+def canon(feats):
+    """Tile-feature dicts (core emitter or SparkTile) -> comparable."""
+    return [
+        (f["type"], f["kind"],
+         json.dumps(f["geometry"], separators=(",", ":")),
+         f["tags"], f["id_str"], f["id_num"], f["id_float"])
+        for f in feats
+    ]
+
+
+def canon_rows(pdf):
+    """Store tile rows, in tile order -> comparable."""
+    return [
+        (int(r.type), int(r.kind), r.geometry_json,
+         None if r.tags_json is None else json.loads(r.tags_json),
+         r.tile_id_str if isinstance(r.tile_id_str, str) else None,
+         int(r.tile_id_num) if pd.notna(r.tile_id_num) else None,
+         float(r.tile_id_float) if pd.notna(r.tile_id_float) else None)
+        for r in pdf.itertuples(index=False)
+    ]
+
+
+def read_tile(cp, out, key):
+    return canon_rows(cp.read_tile(out, *key).toPandas().sort_values(
+        "feature_idx"))
+
+
+def core_tiles(core):
+    return {
+        (it.emitter.z, it.emitter.x, it.emitter.y): it.emitter
+        for it in core.tiles.values()
+    }
+
+
+def store_tiles(spark, out):
+    """The whole store in one scan: (z, x, y) -> ((num_points,
+    num_simplified), canonical features in read_tile's order).  Asserts
+    each tile has exactly one stats row."""
+    pdf = spark.read.parquet(f"{out}/tiles").toPandas()
+    st = pdf[pdf.feature_idx == -1]
+    assert not st.duplicated(subset=["z", "x", "y"]).any()
+    rows = pdf[pdf["type"].notna()].sort_values(
+        ["world_copy", "feature_seq", "slice_path", "sub_idx"])
+    feats = {
+        (int(z), int(x), int(y)): canon_rows(grp)
+        for (z, x, y), grp in rows.groupby(["z", "x", "y"], sort=False)
+    }
+    return {
+        (int(r.z), int(r.x), int(r.y)): (
+            (int(r.tile_num_points), int(r.tile_num_simplified)),
+            feats.get((int(r.z), int(r.x), int(r.y)), []),
+        )
+        for r in st.itertuples(index=False)
+    }
+
+
+@pytest.mark.parametrize("route", list(ROUTES))
+def test_routes_identical_tiles(spark, tmp_path, corpus, route):
+    df, pdf = corpus
+    opts = Options(**BASE, **ROUTES[route])
+    core = core_index(pdf, opts)
+    want = core_tiles(core)
+
+    idx = SparkGeoJSONVT(spark, df, opts, prefer_local=False)
+    out = str(tmp_path / route)
+    cp = CheckpointedPyramid(spark, opts)
+    s = cp.run(df, out)
+    if route == "fuse_all":
+        assert s["levels"] == 1
+    else:
+        assert s["levels"] > 1
+    if route == "fuse_groups":
+        # some split tile below the root falls in the fused-group band
+        assert any(
+            0 < k[0] < opts.index_max_zoom
+            and opts.index_max_points < em.num_points <= opts.fuse_max_points
+            for k, em in want.items()
+        )
+
+    got_idx = {(t.z, t.x, t.y): t for t in idx.tiles.values()}
+    store = store_tiles(spark, out)
+    assert set(got_idx) == set(want) == set(store) == cp._tile_keys(out)
+    assert s["total_tiles"] == idx.total == core.total == len(want)
+    assert idx.stats == core.stats
+    for key, em in want.items():
+        t = got_idx[key]
+        counts = (em.num_points, em.num_simplified)
+        assert (t.num_points, t.num_simplified) == counts, key
+        assert canon(t.features) == canon(em.features), key
+        assert store[key] == (counts, canon(em.features)), key
+    # the point lookup ranks exactly like the bulk scan: the root, the
+    # fullest tile and the emptiest
+    by_size = sorted(want, key=lambda k: len(want[k].features))
+    for key in {(0, 0, 0), by_size[0], by_size[-1]}:
+        assert read_tile(cp, out, key) == store[key][1]
+
+
+def test_drills_identical_tiles(spark, tmp_path, corpus):
+    df, pdf = corpus
+    opts = Options(**BASE, **ROUTES["split"])
+    core = core_index(pdf, opts)
+    idx = SparkGeoJSONVT(spark, df, opts, prefer_local=False)
+    out = str(tmp_path / "drill")
+    cp = CheckpointedPyramid(spark, opts)
+    cp.run(df, out)
+
+    lone = pdf[(pdf.feature_seq % 10 >= 3) & (pdf.geom_type == GEOM_POLYGON)].iloc[0]
+    targets = list(DRILLS)
+    targets[1] = tile_of(float(lone["xs"][0]), float(lone["ys"][0]), 10)
+    n_feats = []
+    for z, x, y in targets:
+        em = core.get_tile(z, x, y)
+        want = canon(em.features)
+        n_feats.append(len(want))
+        t = idx.get_tile(z, x, y)
+        assert canon(t.features) == want, (z, x, y)
+        assert canon_rows(cp.get_tile(out, z, x, y).toPandas().sort_values(
+            "feature_idx")) == want
+    assert n_feats[0] > 10 and n_feats[1] >= 1 and n_feats[2] == 0
+
+    # the drills created the same tiles everywhere, counted the same way
+    assert idx.stats == core.stats
+    assert idx.total == core.total
+    keys = set(core_tiles(core))
+    assert {(t.z, t.x, t.y) for t in idx.tiles.values()} == keys
+    assert cp._tile_keys(out) == keys
+    store = store_tiles(spark, out)
+    for key, em in core_tiles(core).items():
+        assert store[key] == (
+            (em.num_points, em.num_simplified), canon(em.features)), key

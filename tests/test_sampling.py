@@ -2,9 +2,10 @@
 and determinism, stratified-sample containment, and quota_cap exactness
 (salted two-phase rank == plain single-window top-k)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F

@@ -4,9 +4,10 @@ edge paths — ASCII-only whitespace class (vertical tab), null text rows,
 score ties at the top-k cut, and partitioning invariance (the per-doc
 score is an integer sum, so row placement cannot move a result)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -5,9 +5,10 @@ inclusivity, intervals spanning / inside one bucket), plus
 partitioning invariance."""
 
 import datetime
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -309,12 +309,13 @@ def test_convert_wrap_point_fast_path_equivalence(spark):
         assert fused == composed and len(fused) >= len(feats)
 
 
-def test_first_turn_modes_leaf_recovery_and_empty(spark):
+def test_first_turn_modes_leaf_recovery_and_empty(spark, tmp_path):
     """The raw-gated first level: (a) optimistic split over a root that
     is REALLY a leaf recovers exactly (render rows kept, leaf features
     retained from the frontier, no children); (b) an empty input still
     registers the root through both the fuse-all and optimistic routes
-    (lib.rs:265-295)."""
+    (lib.rs:265-295), in the index and in the parquet store."""
+    from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
     import numpy as np
 
     from geojson_vt_rs_spark.core.geom import GEOM_POINT, make_feature
@@ -356,19 +357,21 @@ def test_first_turn_modes_leaf_recovery_and_empty(spark):
 
     # (b) empty input, fuse-all route (raw 0 <= default fuse_bound)
     empty = pts_df(0)
-    e1 = SparkGeoJSONVT(
-        spark, empty,
-        Options(index_max_zoom=7, index_max_points=200, tile=TileOptions()),
-        prefer_local=False,
-    )
+    o1 = Options(index_max_zoom=7, index_max_points=200, tile=TileOptions())
+    e1 = SparkGeoJSONVT(spark, empty, o1, prefer_local=False)
     assert e1.total == 1 and len(e1.get_tile(0, 0, 0).features) == 0
 
     # (b') empty input with a tiny fuse bound still routes through fuse
     # (raw 0 <= bound) and must register the root all the same
-    e2 = SparkGeoJSONVT(
-        spark, empty,
-        Options(index_max_zoom=7, index_max_points=200,
-                tile=TileOptions(), fuse_max_points=1),
-        prefer_local=False,
-    )
+    o2 = Options(index_max_zoom=7, index_max_points=200,
+                 tile=TileOptions(), fuse_max_points=1)
+    e2 = SparkGeoJSONVT(spark, empty, o2, prefer_local=False)
     assert e2.total == 1 and len(e2.get_tile(0, 0, 0).features) == 0
+
+    # the store holds the same single empty root on both routes
+    for i, opts in enumerate((o1, o2)):
+        cp = CheckpointedPyramid(spark, opts)
+        out = str(tmp_path / f"empty{i}")
+        assert cp.run(empty, out)["total_tiles"] == 1
+        assert cp._tile_keys(out) == {(0, 0, 0)}
+        assert cp.read_tile(out, 0, 0, 0).count() == 0

@@ -10,7 +10,7 @@ import zipfile
 
 import pytest
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _make_zip(tmp_path) -> str:

@@ -7,7 +7,7 @@ import datetime as dt
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geojson_vt_rs_spark.operators.sessions import sessionize
 from geojson_vt_rs_spark.streaming.ingest import EVENT_SCHEMA

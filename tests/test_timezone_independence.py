@@ -13,11 +13,12 @@ and is asserted here as the counter-example so a refactor to it fails
 loudly.
 """
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -2,9 +2,10 @@
 twin vs bit-by-bit Python) + the locality property that justifies the
 layout op, + the zorder_blocks oracle at sf0.001."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pytest

@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 NS = [
     int(x)
@@ -125,7 +126,7 @@ def main():
         )
     payload = dict(runs[0], runs=runs)
     print(json.dumps(payload))
-    with open("/root/repo/BENCH_LARGE.json", "w") as fh:
+    with open(f"{REPO}/BENCH_LARGE.json", "w") as fh:
         json.dump(payload, fh, indent=1)
 
 

@@ -3,10 +3,12 @@ with an audit of the scale-relevant properties (pushdown, pruning,
 broadcast, codegen, no-Python-in-hot-path)."""
 
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from contextlib import redirect_stdout
 
@@ -401,7 +403,7 @@ def main():
             ok = (not hit) if neg else hit
             out.append(f"- {'PASS' if ok else 'MISS'}: `{pattern}` — {why}")
         out.append("\n```\n" + plan.strip()[:6000] + "\n```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(f"{REPO}/PLANS.md", "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

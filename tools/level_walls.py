@@ -9,7 +9,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N = int(os.environ.get("SPARK_GRAFT_LARGE_N", "1000000"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))

@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N = int(os.environ.get("SPARK_GRAFT_SCALING_N", "300000"))
 PAIRS = [(4, 16), (8, 32)]
@@ -137,7 +138,7 @@ def main():
     if levels_env:
         levels = [int(c) for c in levels_env.split(",")]
         full, gen, run_kind = measure_levels(levels)
-        part = f"/root/repo/.scaling_partial_{'_'.join(map(str, levels))}.json"
+        part = f"{REPO}/.scaling_partial_{'_'.join(map(str, levels))}.json"
         with open(part, "w") as fh:
             json.dump(dict(full=full, gen=gen, run_kind=run_kind), fh)
         print(json.dumps(dict(partial=part, full=full, gen=gen)))
@@ -146,7 +147,7 @@ def main():
         import glob
 
         full, gen, run_kind = merge_partials(
-            sorted(glob.glob("/root/repo/.scaling_partial_*.json"))
+            sorted(glob.glob(f"{REPO}/.scaling_partial_*.json"))
         )
     else:
         full, gen, run_kind = measure_levels(
@@ -174,7 +175,7 @@ def main():
         raw_control_efficiency=ctrl_eff,
     )
     print(json.dumps(payload))
-    with open("/root/repo/BENCH_SCALING.json", "w") as fh:
+    with open(f"{REPO}/BENCH_SCALING.json", "w") as fh:
         json.dump(payload, fh, indent=1)
 
 

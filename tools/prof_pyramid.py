@@ -1,6 +1,6 @@
 """Profile vt_pyramid_dist (bench shape) with per-level debug: run the
 forced-distributed us-states build N times in one session, print each
-build's wall and the per-level agg/render splits (SPARK_GRAFT_DEBUG_LEVELS).
+build's wall and the per-level walls (SPARK_GRAFT_DEBUG_LEVELS).
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_DEBUG_LEVELS", "1")
 
 from bench import run_vt_pyramid, warm_python_workers  # noqa: E402

@@ -8,7 +8,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import run_vt_pyramid, warm_python_workers  # noqa: E402
 from geojson_vt_rs_spark.operators.session import get_spark  # noqa: E402

@@ -15,7 +15,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
