@@ -415,8 +415,9 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash fingerprints (one md5 per token, majority bit vote
-    folded over the materialized hash array — production width)."""
+    """64-bit SimHash fingerprints (one md5 per distinct token, majority
+    bit vote over the token hashes in a numpy kernel — production
+    width)."""
     from geojson_vt_rs_spark.operators.text_dedup import with_simhash
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -438,16 +439,15 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style winnowing fingerprints (rolling K-token-gram polynomial
     hashes, min per sliding window of W grams — Schleimer et al. SIGMOD'03):
-    one (doc_id, fp) row per distinct selected fingerprint.  Pinned to the
-    pure JVM SQL path (slice/zip_with chains; the DuckDB twin is the
-    literal same integer math) — the numpy batch kernel is the separate
-    winnow_fingerprints_batch query."""
+    one (doc_id, fp) row per distinct selected fingerprint, from the
+    numpy winnowing kernel (one md5 per distinct token + vectorized
+    rolling-hash folds); the DuckDB twin is the same integer math."""
     from geojson_vt_rs_spark.operators.text_dedup import (
         winnow_fingerprint_rows,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_fingerprint_rows(docs, impl="expr")
+    return winnow_fingerprint_rows(docs)
 
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,17 +486,10 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_winnow_fingerprints_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The numpy mapInPandas twin of winnow_fingerprints (impl="batch"):
-    one md5 per distinct token + vectorized rolling-hash folds — the
-    long-document scale path (3.8-4.8x on ~100KB docs, BENCH.md).  Output
-    is byte-identical to the JVM expression chain, so the SAME DuckDB
-    oracle value-checks the kernel."""
-    from geojson_vt_rs_spark.operators.text_dedup import (
-        winnow_fingerprint_rows,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_fingerprint_rows(docs, impl="batch")
+    """The same rows as winnow_fingerprints, kept under its own name so
+    the query list stays stable: the operator has one implementation
+    (the numpy kernel), checked by the same DuckDB oracle."""
+    return q_winnow_fingerprints(spark, sf_dir)
 
 
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1255,8 +1248,8 @@ def q_salted_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN scale path (random-hyperplane multi-probe via a
     hamming-ball bit_count filter + exact rescore).  The hyperplanes are a
-    pure function of (seed, dim) inlined as constants into BOTH engines,
-    every float op a sequential left fold — fully oracle-checkable
+    pure function of (seed, dim) on BOTH engines, every float op a
+    sequential left fold — fully oracle-checkable
     (duck_lsh_topk_sql); recall vs brute force asserted in
     tests/test_ann_salting.py."""
     from geojson_vt_rs_spark.operators.ann import lsh_topk
@@ -1276,8 +1269,9 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (the memory-bound scale path: NSUB
     bytes/vector codes): per-subspace argmin codes against codebooks
     derived from the first 16 rows, ADC lookup-table scoring, exact
-    round-6 rescore of the 40 best candidates.  Pure JVM SQL with a
-    DuckDB twin that re-derives codebooks, codes, and the ADC sums."""
+    round-6 rescore of the 40 best candidates.  Codes and ADC sums come
+    from one numpy kernel; the DuckDB twin re-derives codebooks, codes,
+    and the ADC sums."""
     from geojson_vt_rs_spark.operators.ann import pq_codebooks, pq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1294,9 +1288,10 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed ANN scale path: coarse cells from the 16 vec_id<16
     rows as centroids (normalized with sequential folds), probe the 2
-    nearest cells, exact round-6 rescore.  Cell assignment is pure JVM
-    SQL, so the whole pipeline has a DuckDB twin that re-derives the
-    centroids from the table (sf-independent)."""
+    nearest cells, exact round-6 rescore.  Cell assignment is a numpy
+    kernel with the oracle's fold order, so the whole pipeline has a
+    DuckDB twin that re-derives the centroids from the table
+    (sf-independent)."""
     from geojson_vt_rs_spark.operators.ann import ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1325,9 +1320,10 @@ def q_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-shaped data selection (Xie et al. 2023): hashed-unigram
     likelihood-ratio scores against the lang='en' target subcorpus,
     exact fixed-point integer math (no transcendental accumulation),
-    top-100 by mean weight via TakeOrderedAndProject.  The <=4096-row
-    weight table broadcasts back onto the token stream, so scoring is
-    map-side + one per-doc partial agg."""
+    top-100 by mean weight via TakeOrderedAndProject.  The per-doc
+    bucket histogram comes from one Arrow kernel; the <=4096-row weight
+    table broadcasts back onto it, so scoring is map-side + one per-doc
+    partial agg."""
     from geojson_vt_rs_spark.operators.importance import importance_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1364,7 +1360,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): IVF-cell
     cluster (16 centroids = the vec_id<16 rows), then drop rows with a
     lower-id round-6-cosine>=0.3 partner WITHIN their cell.  Pairwise
-    work is per-cell only (equi-join on ivf_cell) — the paper's cost
+    work is per-cell only (grouped on ivf_cell) — the paper's cost
     model — and fully oracle-checkable (duck_semantic_dedup_sql)."""
     from geojson_vt_rs_spark.operators.ann import semantic_dedup
 
@@ -1682,9 +1678,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative k-means (Lloyd's, 8 clusters x 3 rounds) for topic
     balancing: fixed-point BIGINT arithmetic end to end, so the
     iterative algorithm is EXACTLY oracle-checkable (the DuckDB twin
-    unrolls the loop into chained CTEs).  Assignment is a pure JVM
-    expression over inlined centroid literals; each round is one
-    posexplode partial-agg job collecting K*dims ints."""
+    unrolls the loop into chained CTEs).  Assignment and partial sums
+    are one numpy kernel per round (centroids in the closure); each
+    round is one job collecting K*dims ints."""
     from geojson_vt_rs_spark.operators.clustering import (
         kmeans_cluster_stats,
     )

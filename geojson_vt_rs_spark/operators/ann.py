@@ -13,14 +13,14 @@ IVF or LSH-bucketed variant as the scale path"):
                      measured recall (tests/test_ann.py).
 
 Hyperplanes are a pure function of (seed, dim) -> identical on every
-executor, no fitting step, resumable.  The sign-bit computation is pure
-Spark SQL (sequential-fold dots against inlined constants, whole-stage
-codegen) so every pipeline here is byte-identical to its DuckDB twin.
+executor, no fitting step, resumable.  Bucket, cell and code assignment
+run in numpy mapInPandas kernels that keep the scalar left-fold order
+of every dot (loop over dims, vectorize over rows); rescoring and
+ranking are JVM expressions.  Each pipeline has a DuckDB twin
+(duck_*_sql) that computes byte-identical results.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -64,104 +64,91 @@ def ranked_topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
     )
 
 
-def _dot_sql(vec_expr: str, const_col: str) -> str:
-    """Sequential left-fold dot product — bit-identical to DuckDB's
-    list_sum(list_transform(list_zip(...))) and to a Python loop fold."""
-    return (
-        f"aggregate(zip_with({vec_expr}, {const_col}, (a, b) -> a * b), "
-        "0D, (acc, v) -> acc + v)"
+def cosine_topk(
+    cand: DataFrame, query_vec: list, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact round-6 cosine of every candidate row against the query,
+    ranked by ranked_topk.  The dots and norms are sequential left folds
+    (zip_with/aggregate; the query norm the same fold driver-side), the
+    ops DuckDB's list_sum performs, so scores match the oracles exactly."""
+    acc = 0.0
+    for v in query_vec:
+        acc += float(v) * float(v)
+    qn = acc ** 0.5
+    d = cand.select(
+        id_col,
+        F.expr(f"transform({vec_col}, v -> cast(v as double))").alias("emb"),
+    ).withColumn("q", F.array(*[F.lit(float(v)) for v in query_vec]))
+    dot = F.expr(
+        "aggregate(zip_with(emb, q, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
     )
+    nrm = F.expr(
+        "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
+    )
+    scored = d.withColumn("cos", F.round(dot / (nrm * F.lit(qn)), 6))
+    return ranked_topk(scored, id_col, k)
 
 
 def with_lsh_bucket(
     emb: DataFrame, dim: int, bits: int = 8, seed: int = 42,
     vec_col: str = "embedding", out: str = "bucket",
-    impl: str = "expr",
 ) -> DataFrame:
     """Add the random-hyperplane sign-bucket id.
 
-    ``impl="expr"`` (default): pure JVM SQL expressions (whole-stage
-    codegen, no Python worker): one sequential-fold dot per bit against
-    an inlined hyperplane constant array — the exact same fold DuckDB's
-    list_sum performs, so the bucket ids are oracle-checkable
-    byte-for-byte (duck_lsh_bucket_expr).  ``impl="batch"`` is the
-    bit-identical numpy kernel: it loops over DIMS and vectorizes over
+    A numpy mapInPandas kernel that loops over DIMS and vectorizes over
     ROWS, so each row's accumulator passes through the same sequence of
-    float64 additions as the scalar fold (np.dot would reorder and can
-    flip a borderline sign) — used by the cosine near-dup blocking where
-    the 16 interpreted folds per row dominate."""
+    float64 additions as a scalar left fold (np.dot would reorder and
+    can flip a borderline sign) — the fold DuckDB's list_sum performs,
+    so the bucket ids are oracle-checkable byte-for-byte
+    (duck_lsh_topk_sql, duck_cosine_near_dup_sql).
+
+    Off the happy path the kernel keeps Spark SQL semantics, which
+    DuckDB does not share: a NULL embedding, or one with a NULL
+    element, gets bucket 0 (a NULL fold fails every bit test), and a
+    NaN accumulator SETS its bit (Spark orders NaN above every number,
+    so ``NaN > 0`` is true)."""
+    from pyspark.sql import types as T
+
     H = _hyperplanes(dim, bits, seed)
-    if impl == "batch":
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # element-level nulls sanitize to a wholly-null vector JVM-side:
-        # Arrow->pandas delivers a null ELEMENT as NaN, indistinguishable
-        # from a true NaN — but the expr path's fold treats them
-        # differently (null element -> null fold -> CASE ELSE -> bucket
-        # 0; NaN element -> NaN fold -> bit SET under Spark's NaN
-        # ordering).  Pre-nullifying keeps the kernel bit-identical on
-        # both shapes without touching the caller-visible vec_col.
-        src = emb.withColumn(
-            "__lshvec",
-            F.expr(f"IF(exists({vec_col}, x -> x IS NULL), NULL, {vec_col})"),
-        )
-        out_schema = T.StructType(
-            list(src.schema.fields) + [T.StructField(out, T.LongType())]
-        )
-
-        def kernel(batches):
-            for pdf in batches:
-                n = len(pdf)
-                pdf = pdf.copy(deep=False)
-                if n == 0:
-                    pdf[out] = pd.Series([], dtype="int64")
-                    yield pdf
-                    continue
-                # expr-path parity off the happy path (ADVICE r4), checked
-                # against live Spark: a NULL embedding folds to bucket 0
-                # (each per-bit CASE's null condition falls to ELSE 0; the
-                # old kernel crashed the executor instead), and a NaN
-                # accumulator SETS the bit — Spark's NaN ordering makes
-                # `NaN > 0D` true where numpy's comparison is False.
-                na = pdf["__lshvec"].isna().to_numpy()
-                bucket = np.zeros(n, dtype=np.int64)
-                if (~na).any():
-                    M = np.array(list(pdf["__lshvec"][~na]), dtype=np.float64)
-                    sub = np.zeros(len(M), dtype=np.int64)
-                    for i in range(bits):
-                        acc = np.zeros(len(M), dtype=np.float64)
-                        for dd in range(dim):
-                            # same left-fold order per row as the SQL fold
-                            acc = acc + M[:, dd] * H[dd, i]
-                        sub |= (
-                            (acc > 0.0) | np.isnan(acc)
-                        ).astype(np.int64) << i
-                    bucket[~na] = sub
-                pdf[out] = bucket
-                yield pdf
-
-        return src.mapInPandas(kernel, schema=out_schema).drop("__lshvec")
-    if impl != "expr":
-        raise ValueError(f"unknown impl: {impl!r}")
-    d = emb
-    vec_d = f"transform({vec_col}, v -> cast(v as double))"
-    terms = []
-    for i in range(bits):
-        hcol = f"__h{i}"
-        d = d.withColumn(hcol, F.array(*[F.lit(float(v)) for v in H[:, i]]))
-        terms.append(
-            f"(CASE WHEN {_dot_sql(vec_d, hcol)} > 0D "
-            f"THEN {1 << i}L ELSE 0L END)"
-        )
-    return d.withColumn(out, F.expr(" + ".join(terms))).drop(
-        *[f"__h{i}" for i in range(bits)]
+    # element-level nulls sanitize to a wholly-null vector JVM-side:
+    # Arrow->pandas delivers a null ELEMENT as NaN, indistinguishable
+    # from a true NaN, and the two must bucket differently
+    src = emb.withColumn(
+        "__lshvec",
+        F.expr(f"IF(exists({vec_col}, x -> x IS NULL), NULL, {vec_col})"),
     )
+    out_schema = T.StructType(
+        list(src.schema.fields) + [T.StructField(out, T.LongType())]
+    )
+
+    def kernel(batches):
+        for pdf in batches:
+            n = len(pdf)
+            pdf = pdf.copy(deep=False)
+            if n == 0:
+                pdf[out] = pd.Series([], dtype="int64")
+                yield pdf
+                continue
+            na = pdf["__lshvec"].isna().to_numpy()
+            bucket = np.zeros(n, dtype=np.int64)
+            if (~na).any():
+                M = np.array(list(pdf["__lshvec"][~na]), dtype=np.float64)
+                sub = np.zeros(len(M), dtype=np.int64)
+                for i in range(bits):
+                    acc = np.zeros(len(M), dtype=np.float64)
+                    for dd in range(dim):
+                        acc = acc + M[:, dd] * H[dd, i]  # left fold
+                    sub |= ((acc > 0.0) | np.isnan(acc)).astype(np.int64) << i
+                bucket[~na] = sub
+            pdf[out] = bucket
+            yield pdf
+
+    return src.mapInPandas(kernel, schema=out_schema).drop("__lshvec")
 
 
 def query_bucket(query_vec: list, bits: int, seed: int = 42) -> int:
     """Driver-side bucket of the query vector via the SAME sequential
-    left-fold the SQL expressions use (numpy matmul would reorder the
+    left-fold the bucket kernel uses (numpy matmul would reorder the
     additions and can flip a borderline sign bit)."""
     H = _hyperplanes(len(query_vec), bits, seed)
     b = 0
@@ -172,6 +159,25 @@ def query_bucket(query_vec: list, bits: int, seed: int = 42) -> int:
         if acc > 0.0:
             b |= 1 << i
     return b
+
+
+def duck_lsh_bucket(vec: str, dim: int, bits: int, seed: int = 42) -> str:
+    """DuckDB twin of with_lsh_bucket's id for the DOUBLE[] expression
+    ``vec``: one list_sum left-fold dot per hyperplane, bit i set iff
+    the dot is > 0 (equal to the kernel on non-NULL, NaN-free input)."""
+    H = _hyperplanes(dim, bits, seed)
+
+    def dot(i):
+        h = "[" + ", ".join(repr(float(v)) for v in H[:, i]) + "]"
+        return (
+            f"list_sum(list_transform(list_zip({vec}, {h}), "
+            "p -> p[1] * p[2]))"
+        )
+
+    return " + ".join(
+        f"(CASE WHEN {dot(i)} > 0 THEN {1 << i} ELSE 0 END)"
+        for i in range(bits)
+    )
 
 
 def duck_lsh_topk_sql(
@@ -188,20 +194,9 @@ def duck_lsh_topk_sql(
     """DuckDB twin of lsh_topk with the query vector taken from the table
     row ``{id_col} = query_id`` — the whole multi-probe + rescore pipeline
     in ANSI SQL, byte-identical math to the Spark plan."""
-    H = _hyperplanes(dim, bits, seed)
-
-    def dot(vec, i):
-        h = "[" + ", ".join(repr(float(v)) for v in H[:, i]) + "]"
-        return (
-            f"list_sum(list_transform(list_zip({vec}, {h}), "
-            "p -> p[1] * p[2]))"
-        )
 
     def bucket(vec):
-        return " + ".join(
-            f"(CASE WHEN {dot(vec, i)} > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(bits)
-        )
+        return duck_lsh_bucket(vec, dim, bits, seed)
 
     return (
         f"WITH q AS (SELECT {vec_col}::DOUBLE[] AS qv, "
@@ -240,7 +235,7 @@ def _norm_centroids(centroids: list) -> list:
 
 def _centroid_sims(query_vec: list, cn: list) -> list:
     """Sequential-fold dot of the query against each unit centroid —
-    the same left fold the SQL expressions and DuckDB's list_sum use."""
+    the same left fold the kernels and DuckDB's list_sum use."""
     sims = []
     for _, c in cn:
         acc = 0.0
@@ -250,35 +245,48 @@ def _centroid_sims(query_vec: list, cn: list) -> list:
     return sims
 
 
+def _nearest_cell(E: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Row index into C (unit centroids, cid-ascending) of each row's
+    max-dot centroid.  Each dot accumulates dims 0..dim-1 sequentially
+    (vectorized across rows: the scalar left fold DuckDB's list_sum
+    performs); ties go to the FIRST (smallest-cid) centroid; NaN dots
+    rank below every real dot, as in Spark's ordering."""
+    s = np.zeros((len(E), len(C)))
+    for t in range(C.shape[1]):
+        s += E[:, t, None] * C[None, :, t]
+    s = -s
+    if np.isnan(s).any():
+        s = np.where(np.isnan(s), np.inf, s)
+    return s.argmin(axis=1)
+
+
 def with_ivf_cell(
     emb: DataFrame,
     centroids: list,  # list of (cid, vector)
     vec_col: str = "embedding",
     out: str = "ivf_cell",
 ) -> DataFrame:
-    """IVF coarse quantizer: assign each vector to its nearest centroid
+    """IVF coarse quantizer: add each vector's nearest centroid id
     (cosine; row norm is a positive scale, so argmax over unit-centroid
-    dots suffices).  Pure JVM SQL: one sortable struct per centroid
-    (-dot, index, cid), array_sort picks the max-dot / first-index
-    winner — each fold is evaluated exactly once per row, and the math
-    is byte-identical to the DuckDB twin (duck_ivf_topk_sql)."""
-    cn = _norm_centroids(centroids)
-    d = emb
-    vec_d = f"transform({vec_col}, v -> cast(v as double))"
-    structs = []
-    for j, (cid, c) in enumerate(cn):
-        col = f"__ivf{j}"
-        d = d.withColumn(col, F.array(*[F.lit(float(v)) for v in c]))
-        # tie-break on cid (ascending) — matches the oracle's window order
-        structs.append(
-            f"struct(-({_dot_sql(vec_d, col)}) AS s, {cid}L AS cid)"
-        )
-    expr = (
-        "element_at(array_sort(array(" + ", ".join(structs) + ")), 1).cid"
+    dots suffices) — one numpy pass per Arrow batch (_nearest_cell),
+    byte-identical to the DuckDB twin's cell (duck_ivf_topk_sql)."""
+    from pyspark.sql import types as T
+
+    cn = sorted(_norm_centroids(centroids))
+    C = np.asarray([c for _, c in cn], dtype=np.float64)
+    cids = np.asarray([cid for cid, _ in cn], dtype=np.int64)
+    schema = T.StructType(
+        list(emb.schema.fields) + [T.StructField(out, T.LongType())]
     )
-    return d.withColumn(out, F.expr(expr)).drop(
-        *[f"__ivf{j}" for j in range(len(cn))]
-    )
+
+    def kernel(batches):
+        for pdf in batches:
+            E = _stack_vecs(pdf[vec_col].to_numpy(), C.shape[1])
+            pdf = pdf.copy(deep=False)
+            pdf[out] = cids[_nearest_cell(E, C)]
+            yield pdf
+
+    return emb.mapInPandas(kernel, schema=schema)
 
 
 def query_probes(query_vec: list, centroids: list, n_probe: int) -> list:
@@ -291,14 +299,8 @@ def query_probes(query_vec: list, centroids: list, n_probe: int) -> list:
 
 
 def _ivf_members_kernel(cn: list, probes: list, id_col: str, vec_col: str):
-    """Batch twin of with_ivf_cell + the probe filter: one numpy pass
-    per Arrow batch emitting ONLY rows whose nearest centroid is probed.
-    Byte-identical cell assignment to the expr formulation: the dot
-    accumulates dims 0..63 sequentially (vectorized across rows, scalar
-    order per element — the zip_with/aggregate left fold); the winner is
-    argmin over (-dot) taking the FIRST minimum == array_sort
-    struct(-dot, cid) ties to the smaller cid (cn is cid-ascending);
-    NaN dots sort AFTER every real value, reproduced via +inf."""
+    """with_ivf_cell + the probe filter in one numpy pass per Arrow
+    batch, emitting ONLY rows whose nearest centroid is probed."""
     C = np.asarray([c for _, c in cn], dtype=np.float64)  # (ncent, dim)
     keep_cid = np.asarray(
         [cid in {int(p) for p in probes} for cid, _ in cn], dtype=bool
@@ -306,17 +308,10 @@ def _ivf_members_kernel(cn: list, probes: list, id_col: str, vec_col: str):
 
     def kernel(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             E = _stack_vecs(pdf[vec_col].to_numpy(), C.shape[1])
-            s = np.zeros((n, len(C)))
-            for t in range(C.shape[1]):
-                s += E[:, t, None] * C[None, :, t]
-            s = -s
-            if np.isnan(s).any():
-                s = np.where(np.isnan(s), np.inf, s)
-            keep = keep_cid[s.argmin(axis=1)]
+            keep = keep_cid[_nearest_cell(E, C)]
             if keep.any():
                 yield pdf.loc[keep, [id_col, vec_col]]
 
@@ -331,48 +326,20 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """IVF-bucketed cosine top-k: probe the n_probe centroids nearest
     the query, exact-rescore only their members (the scale path beside
-    lsh_topk; recall measured in tests).  Fully oracle-checkable.
-
-    ``impl="batch"`` (default) assigns cells + filters to the probed
-    members in one numpy Arrow pass (the inlined-centroid expr chain is
-    a ~30 KB plan dominated by analysis+codegen at bench scale);
-    ``impl="expr"`` keeps the pure-JVM original (the oracle shape).
-    Byte-equality asserted in tests/test_ann_salting.py."""
+    lsh_topk; recall measured in tests).  Cell assignment and the probe
+    filter are one numpy Arrow pass (_ivf_members_kernel); the rescore
+    and the rank are JVM-side.  Oracle: duck_ivf_topk_sql."""
     probes = query_probes(query_vec, centroids, n_probe)
-
-    if impl == "batch":
-        cn = sorted(_norm_centroids(centroids))  # cid-ascending tie rule
-        sel = emb.select(id_col, vec_col)
-        cand = sel.mapInPandas(
-            _ivf_members_kernel(cn, probes, id_col, vec_col),
-            schema=sel.schema,
-        )
-    else:
-        bucketed = with_ivf_cell(emb, centroids, vec_col=vec_col)
-        cand = bucketed.filter(
-            F.col("ivf_cell").isin([int(p) for p in probes])
-        )
-
-    acc = 0.0
-    for v in query_vec:
-        acc += float(v) * float(v)
-    qn = acc ** 0.5
-    d = cand.select(
-        id_col,
-        F.expr(f"transform({vec_col}, v -> cast(v as double))").alias("emb"),
-    ).withColumn("q", F.array(*[F.lit(float(v)) for v in query_vec]))
-    dot = F.expr(
-        "aggregate(zip_with(emb, q, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
+    cn = sorted(_norm_centroids(centroids))  # cid-ascending tie rule
+    sel = emb.select(id_col, vec_col)
+    cand = sel.mapInPandas(
+        _ivf_members_kernel(cn, probes, id_col, vec_col), schema=sel.schema
     )
-    nrm = F.expr(
-        "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
-    )
-    scored = d.withColumn("cos", F.round(dot / (nrm * F.lit(qn)), 6))
-    return ranked_topk(scored, id_col, k)
+
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def duck_ivf_topk_sql(
@@ -431,46 +398,22 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """LSH-bucketed cosine top-k: prune to buckets within hamming distance
     <= probe_radius of the query's bucket (multi-probe), rescore exactly,
     rank with a deterministic tie-break.  Every float op is a sequential
-    left fold, byte-identical to the DuckDB twin (duck_lsh_topk_sql).
-
-    ``impl`` picks the bucket-assignment twin (see with_lsh_bucket) —
-    the r5 batch kernel is byte-identical incl. null/NaN lanes; as the
-    default here (r6) it drops the per-query inlined-hyperplane plan
-    (cold 1.7 -> 0.6 s at sf0.1, identical rows asserted)."""
+    left fold, byte-identical to the DuckDB twin (duck_lsh_topk_sql)."""
     dim = len(query_vec)
     qbucket = query_bucket(query_vec, bits, seed)
 
-    bucketed = with_lsh_bucket(
-        emb, dim, bits, seed, vec_col=vec_col, impl=impl
-    )
+    bucketed = with_lsh_bucket(emb, dim, bits, seed, vec_col=vec_col)
     # multi-probe as a hamming-ball predicate: JVM bit_count, no bucket
     # enumeration (stays O(1) expression at any bits/radius)
     cand = bucketed.filter(
         F.expr(f"bit_count(bucket ^ {qbucket}L) <= {probe_radius}")
     )
 
-    # sequential fold for qn too (matches sqrt(list_sum(...)) in DuckDB)
-    acc = 0.0
-    for v in query_vec:
-        acc += float(v) * float(v)
-    qn = acc ** 0.5
-    d = cand.select(
-        id_col,
-        F.expr(f"transform({vec_col}, v -> cast(v as double))").alias("emb"),
-    ).withColumn("q", F.array(*[F.lit(float(v)) for v in query_vec]))
-    dot = F.expr(
-        "aggregate(zip_with(emb, q, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
-    )
-    nrm = F.expr(
-        "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
-    )
-    scored = d.withColumn("cos", F.round(dot / (nrm * F.lit(qn)), 6))
-    return ranked_topk(scored, id_col, k)
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 # ------------------------------------------------ blocked cosine near-dup
@@ -521,9 +464,7 @@ def cosine_near_dup_blocked(
     the defaults trade pruning for recall.  Recall vs the exact all-pairs
     join is measured in tests/test_ann_salting.py.
     """
-    bucketed = with_lsh_bucket(
-        emb, dim, bits, seed, vec_col=vec_col, impl="batch"
-    )
+    bucketed = with_lsh_bucket(emb, dim, bits, seed, vec_col=vec_col)
     nrm = F.expr(
         "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
     )
@@ -611,20 +552,7 @@ def duck_cosine_near_dup_sql(
     all-pairs scan with the SAME hamming + threshold predicates (the
     oracle may be quadratic at oracle scale; the banding is only a
     candidate generator and never changes the result set)."""
-    H = _hyperplanes(dim, bits, seed)
-
-    def dot(vec, i):
-        h = "[" + ", ".join(repr(float(v)) for v in H[:, i]) + "]"
-        return (
-            f"list_sum(list_transform(list_zip({vec}, {h}), "
-            "p -> p[1] * p[2]))"
-        )
-
-    bucket = " + ".join(
-        f"(CASE WHEN {dot(f'{vec_col}::DOUBLE[]', i)} > 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(bits)
-    )
+    bucket = duck_lsh_bucket(f"{vec_col}::DOUBLE[]", dim, bits, seed)
     cos = (
         "round(list_sum(list_transform(list_zip(a.emb, b.emb), "
         "p -> p[1] * p[2])) / (a.nrm * b.nrm), 6)"
@@ -705,10 +633,10 @@ def hamming_near_pairs(
 # --------------------------------------------------- Product Quantization
 # The fourth ANN family (beside brute force / LSH / IVF): each vector is
 # chopped into PQ_NSUB subvectors of PQ_SUBDIM dims; each subvector is
-# quantized to its nearest codebook entry (argmin L2, sortable-struct
-# like with_ivf_cell); query scoring is Asymmetric Distance Computation —
-# a per-subspace lookup table of query-to-codeword distances computed
-# once on the driver, summed per row with element_at.  Codebooks are the
+# quantized to its nearest codebook entry (argmin L2, ties to the
+# smaller index); query scoring is Asymmetric Distance Computation — a
+# per-subspace lookup table of query-to-codeword distances computed
+# once on the driver, summed per row in the kernel.  Codebooks are the
 # subvectors of the first PQ_NCODE table rows (no fitting step, derivable
 # by the oracle, same policy as the IVF centroids).  Candidates = rows
 # with the PQ_RESCORE smallest ADC distances (TakeOrderedAndProject),
@@ -718,12 +646,6 @@ def hamming_near_pairs(
 PQ_NSUB = 8
 PQ_SUBDIM = 8
 PQ_NCODE = 16
-
-
-def _dlit(v: float) -> str:
-    """Exact double literal (repr round-trips; D-suffix keeps Spark from
-    parsing plain decimals as DECIMAL under ANSI)."""
-    return f"{float(v)!r}D"
 
 
 def pq_codebooks(rows: list) -> list:
@@ -739,44 +661,9 @@ def pq_codebooks(rows: list) -> list:
     return cw
 
 
-def _sq_dist_fold(vec_slice: str, const_arr: str) -> str:
-    """Sequential left-fold squared L2 distance — bit-identical to
-    DuckDB's list_sum(list_transform(list_zip(...), p -> (p[1]-p[2])*
-    (p[1]-p[2]))) and to a Python accumulation loop."""
-    return (
-        f"aggregate(zip_with({vec_slice}, {const_arr}, "
-        "(a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), "
-        "0D, (acc, v) -> acc + v)"
-    )
-
-
-def with_pq_codes(
-    emb: DataFrame, codebooks: list, vec_col: str = "embedding"
-) -> DataFrame:
-    """Adds __pq0..__pq{NSUB-1}: per-subspace nearest-codeword index
-    (L2 argmin, ties to the smaller index).  Pure JVM SQL; the slices
-    index the raw column (attribute refs — cheap under projection
-    collapse, see CLAUDE.md) and every codeword array is an inlined
-    exact-double literal."""
-    d = emb
-    for s in range(PQ_NSUB):
-        sl = f"slice({vec_col}, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
-        structs = []
-        for j, cwv in enumerate(codebooks[s]):
-            arr = "array(" + ", ".join(_dlit(v) for v in cwv) + ")"
-            structs.append(
-                f"struct({_sq_dist_fold(sl, arr)} AS d, {j}L AS j)"
-            )
-        expr = (
-            "element_at(array_sort(array(" + ", ".join(structs) + ")), 1).j"
-        )
-        d = d.withColumn(f"__pq{s}", F.expr(expr))
-    return d
-
-
 def pq_adc_table(query_vec: list, codebooks: list) -> list:
     """T[s][j] = squared L2 distance of the query's s-th subvector to
-    codeword j, via the SAME sequential fold the SQL uses."""
+    codeword j, via the SAME sequential fold the kernel uses."""
     T = []
     for s in range(PQ_NSUB):
         a = s * PQ_SUBDIM
@@ -792,8 +679,9 @@ def pq_adc_table(query_vec: list, codebooks: list) -> list:
 
 
 def _stack_vecs(cells, dim: int, long_vecs: str = "nan") -> np.ndarray:
-    """Arrow vector cells -> (n, dim) float64 matrix, reproducing the
-    expr twins' ragged/NULL semantics via NaN lanes (downstream, NaN
+    """Arrow vector cells -> (n, dim) float64 matrix, reproducing Spark's
+    zip_with/aggregate fold semantics on ragged/NULL vectors (which
+    DuckDB's NULL-skipping list_sum does not share) via NaN lanes (NaN
     distances sort after reals through the +inf substitution, NaN
     cosines fail every >= filter, and all-NaN tie rows fall to the
     smallest index like the struct sort's NULL-tie rule):
@@ -827,37 +715,39 @@ def _stack_vecs(cells, dim: int, long_vecs: str = "nan") -> np.ndarray:
     return out
 
 
-def _pq_batch_kernel(codebooks: list, T: list, id_col: str, vec_col: str):
-    """Batch twin of with_pq_codes + the ADC sum: one numpy pass per
-    Arrow batch, byte-identical to the expr formulation —
-    * the squared-L2 fold accumulates t = 0..SUBDIM-1 SEQUENTIALLY
-      (vectorized across rows, scalar order per element: exactly the
-      zip_with/aggregate left fold; never np.sum, which pairs);
-    * argmin takes the FIRST minimum (== array_sort struct(d, j) ties to
-      the smaller j); NaN distances (NaN embedding values) sort AFTER
-      every real distance in Spark, reproduced via +inf substitution;
-    * the ADC total adds subspaces s = 0..NSUB-1 left-to-right (the
-      `+`-chain's association)."""
+def pq_codes(E: np.ndarray, codebooks: list) -> np.ndarray:
+    """(n, PQ_NSUB) nearest-codeword index of each row's subvectors.
+    The squared-L2 fold accumulates t = 0..SUBDIM-1 SEQUENTIALLY
+    (vectorized across rows, scalar order per element; never np.sum,
+    which pairs); argmin takes the FIRST minimum (ties to the smaller
+    j); NaN distances rank after every real one, as in Spark's
+    ordering."""
     CW = np.asarray(codebooks, dtype=np.float64)  # (NSUB, NCODE, SUBDIM)
+    Es = E.reshape(len(E), PQ_NSUB, PQ_SUBDIM)
+    acc = np.zeros((len(E), PQ_NSUB, CW.shape[1]))
+    for t in range(PQ_SUBDIM):
+        d = Es[:, :, t, None] - CW[None, :, :, t]
+        acc += d * d
+    if np.isnan(acc).any():
+        acc = np.where(np.isnan(acc), np.inf, acc)
+    return acc.argmin(axis=2)
+
+
+def _pq_adc_kernel(codebooks: list, T: list, id_col: str, vec_col: str):
+    """pq_codes + the ADC sum, one numpy pass per Arrow batch; the ADC
+    total adds subspaces s = 0..NSUB-1 left-to-right (the oracle's
+    list_sum order)."""
     Tarr = np.asarray(T, dtype=np.float64)  # (NSUB, NCODE)
 
     def kernel(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             E = _stack_vecs(
                 pdf[vec_col].to_numpy(), PQ_NSUB * PQ_SUBDIM,
                 long_vecs="truncate",
             )
-            Es = E.reshape(n, PQ_NSUB, PQ_SUBDIM)
-            acc = np.zeros((n, PQ_NSUB, PQ_NCODE))
-            for t in range(PQ_SUBDIM):
-                d = Es[:, :, t, None] - CW[None, :, :, t]
-                acc += d * d
-            if np.isnan(acc).any():
-                acc = np.where(np.isnan(acc), np.inf, acc)
-            codes = acc.argmin(axis=2)  # first min == smaller-j tie rule
+            codes = pq_codes(E, codebooks)
             adist = Tarr[0, codes[:, 0]].copy()
             for s in range(1, PQ_NSUB):
                 adist += Tarr[s, codes[:, s]]
@@ -878,33 +768,20 @@ def pq_adc_scored(
     codebooks: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """(id, vec, adist): per-row PQ code assignment + ADC approximate
-    distance.  ``impl="batch"`` (default) is the numpy mapInPandas twin —
-    the inlined-literal expr chain is a ~80 KB plan whose analysis +
-    codegen dominated the query wherever the table fits a few Arrow
-    batches; ``impl="expr"`` keeps the pure-JVM original (the oracle
-    formulation).  Byte-equality asserted in tests/test_ann_salting.py."""
-    T = pq_adc_table(query_vec, codebooks)
-    if impl == "batch":
-        from pyspark.sql import types as _Ty
+    distance, one numpy mapInPandas pass (_pq_adc_kernel)."""
+    from pyspark.sql import types as _Ty
 
-        sel = emb.select(id_col, vec_col)
-        schema = _Ty.StructType(
-            [sel.schema[id_col], sel.schema[vec_col],
-             _Ty.StructField("adist", _Ty.DoubleType())]
-        )
-        return sel.mapInPandas(
-            _pq_batch_kernel(codebooks, T, id_col, vec_col), schema=schema
-        )
-    coded = with_pq_codes(emb, codebooks, vec_col=vec_col)
-    terms = []
-    for s in range(PQ_NSUB):
-        arr = "array(" + ", ".join(_dlit(v) for v in T[s]) + ")"
-        terms.append(f"element_at({arr}, cast(__pq{s} + 1 as int))")
-    # left-assoc: matches list_sum's fold order
-    return coded.withColumn("adist", F.expr(" + ".join(terms)))
+    T = pq_adc_table(query_vec, codebooks)
+    sel = emb.select(id_col, vec_col)
+    schema = _Ty.StructType(
+        [sel.schema[id_col], sel.schema[vec_col],
+         _Ty.StructField("adist", _Ty.DoubleType())]
+    )
+    return sel.mapInPandas(
+        _pq_adc_kernel(codebooks, T, id_col, vec_col), schema=schema
+    )
 
 
 def pq_topk(
@@ -915,7 +792,6 @@ def pq_topk(
     rescore: int = 40,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """PQ/ADC top-k: approximate distance = left-to-right sum of the
     per-subspace table lookups; the `rescore` best candidates (ADC asc,
@@ -931,7 +807,7 @@ def pq_topk(
     limits, the cut stays ``Limit(Sort(...))``, and the agg itself only
     ever sees the <=``rescore`` surviving rows."""
     scored0 = pq_adc_scored(
-        emb, query_vec, codebooks, id_col=id_col, vec_col=vec_col, impl=impl
+        emb, query_vec, codebooks, id_col=id_col, vec_col=vec_col
     )
     cut = (
         scored0.orderBy(F.col("adist").asc(), F.col(id_col).asc())
@@ -945,39 +821,23 @@ def pq_topk(
             F.col(f"c.{vec_col}").alias(vec_col),
         )
     )
-    acc = 0.0
-    for v in query_vec:
-        acc += float(v) * float(v)
-    qn = acc ** 0.5
-    d = cand.select(
-        id_col,
-        F.expr(f"transform({vec_col}, v -> cast(v as double))").alias("emb"),
-    ).withColumn("q", F.array(*[F.lit(float(v)) for v in query_vec]))
-    dot = F.expr(
-        "aggregate(zip_with(emb, q, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
-    )
-    nrm = F.expr(
-        "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
-    )
-    scored = d.withColumn("cos", F.round(dot / (nrm * F.lit(qn)), 6))
-    return ranked_topk(scored, id_col, k)
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
-def duck_pq_topk_sql(
-    k: int = 10,
-    rescore: int = 40,
+def duck_pq_adist_ctes(
     table: str = "embeddings",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: int = 0,
 ) -> str:
-    """DuckDB twin of pq_topk, re-deriving the codebooks from the table:
-    same argmin codes (window rn=1 over dist asc, j asc), the per-id ADC
-    sum as list_sum over the s-ORDERED distance list (the same left fold
-    as the SQL's literal additions), same candidate cut, same rescore."""
+    """The CTE list (no leading WITH) ending in ``adist(id, adist)``:
+    codebooks re-derived from the table's first PQ_NCODE rows, argmin
+    codes (window rn=1 over dist asc, j asc), the per-id ADC sum as
+    list_sum over the s-ORDERED distance list (the same left fold as
+    the kernel's additions).  Also defines ``q(qv)`` and ``b(id, emb)``."""
     sq = "list_sum(list_transform(list_zip({a}, {b}), p -> (p[1] - p[2]) * (p[1] - p[2])))"
     return (
-        f"WITH q AS (SELECT {vec_col}::DOUBLE[] AS qv FROM {table} "
+        f"q AS (SELECT {vec_col}::DOUBLE[] AS qv FROM {table} "
         f"WHERE {id_col} = {query_id}), "
         f"b AS (SELECT {id_col} AS id, {vec_col}::DOUBLE[] AS emb FROM {table}), "
         f"subs AS (SELECT s FROM range(0, {PQ_NSUB}) t(s)), "
@@ -1004,7 +864,23 @@ def duck_pq_topk_sql(
         "adist AS (SELECT code.id, "
         "list_sum(list(qd.d ORDER BY code.s)) AS adist "
         "FROM code JOIN qd ON qd.s = code.s AND qd.j = code.j "
-        "GROUP BY code.id), "
+        "GROUP BY code.id)"
+    )
+
+
+def duck_pq_topk_sql(
+    k: int = 10,
+    rescore: int = 40,
+    table: str = "embeddings",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id: int = 0,
+) -> str:
+    """DuckDB twin of pq_topk: the duck_pq_adist_ctes codes and ADC
+    sums, then the same candidate cut and the same rescore."""
+    return (
+        "WITH " + duck_pq_adist_ctes(table, id_col, vec_col, query_id)
+        + ", "
         f"cand AS (SELECT id FROM adist ORDER BY adist ASC, id ASC "
         f"LIMIT {rescore}), "
         f"scored AS (SELECT b.id AS {id_col}, round("
@@ -1030,9 +906,8 @@ def duck_pq_topk_sql(
 
 
 def _sem_cells_kernel(cn: list, id_col: str, vec_col: str):
-    """Batch twin of the semantic-dedup projection: cell assignment
-    (identical rules to _ivf_members_kernel), double-cast embedding, and
-    the sequential-fold norm, one numpy pass per Arrow batch."""
+    """The semantic-dedup projection in one numpy pass per Arrow batch:
+    cell (_nearest_cell), double-cast embedding, sequential-fold norm."""
     C = np.asarray([c for _, c in cn], dtype=np.float64)
     cids = np.asarray([cid for cid, _ in cn], dtype=np.int64)
 
@@ -1042,13 +917,6 @@ def _sem_cells_kernel(cn: list, id_col: str, vec_col: str):
             if n == 0:
                 continue
             E = _stack_vecs(pdf[vec_col].to_numpy(), C.shape[1])
-            s = np.zeros((n, len(C)))
-            for t in range(C.shape[1]):
-                s += E[:, t, None] * C[None, :, t]
-            s = -s
-            if np.isnan(s).any():
-                s = np.where(np.isnan(s), np.inf, s)
-            cell = cids[s.argmin(axis=1)]
             acc = np.zeros(n)
             for t in range(E.shape[1]):
                 acc += E[:, t] * E[:, t]
@@ -1057,7 +925,7 @@ def _sem_cells_kernel(cn: list, id_col: str, vec_col: str):
                     id_col: pdf[id_col].to_numpy(),
                     "emb": list(E),
                     "nrm": np.sqrt(acc),
-                    "ivf_cell": cell,
+                    "ivf_cell": cids[_nearest_cell(E, C)],
                 }
             )
 
@@ -1102,94 +970,46 @@ def semantic_dedup(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """Dropped rows of a SemDeDup pass: (id, ivf_cell, n_dups, max_cos).
 
-    Plan shape (the 100-TB contract): cell assignment is the pure-JVM
-    with_ivf_cell expression (one codegen'd fold per centroid); the
-    candidate generator is a self EQUI-join on ivf_cell — a shuffled
-    hash join whose fan-in is bounded by cell size (pick n_centroids ~
-    sqrt(n) upstream; hot cells salt like any skewed key), never a
-    BroadcastNestedLoopJoin.  The exact rescore runs only on within-cell
-    pairs, matching the paper's cost model.  Every float op is the same
-    sequential left fold as the DuckDB twin (duck_semantic_dedup_sql).
-
-    ``impl="batch"`` (default): cell assignment + norms are one numpy
-    Arrow pass, and the within-cell pairwise dots run vectorized in a
-    per-cell applyInPandas kernel (the interpreted zip_with fold costs
-    ~10 us/pair — the dominant job at any cell size); round-6 + the
+    Plan shape: cell assignment + norms are one numpy Arrow pass
+    (_sem_cells_kernel); the candidate generator is a shuffle on
+    ivf_cell, and the within-cell pairwise dots run vectorized in a
+    per-cell applyInPandas kernel (_sem_pairs_kernel) — the pairwise
+    cost is paid per cell, never globally (pick n_centroids ~ sqrt(n)
+    upstream; a hot cell is one task's m^2 dots).  round-6 + the
     threshold filter + the aggregation stay JVM-side, so the rounding
-    convention is never re-implemented in Python.  ``impl="expr"``
-    keeps the pure-JVM equi-join original (the oracle shape).
-    Byte-equality asserted in tests/test_ann_salting.py.
+    convention is never re-implemented in Python.  Every float op is
+    the same sequential left fold as the DuckDB twin
+    (duck_semantic_dedup_sql).
     """
-    if impl == "batch":
-        from pyspark.sql import types as _Ty
+    from pyspark.sql import types as _Ty
 
-        cn = sorted(_norm_centroids(centroids))
-        sel = emb.select(id_col, vec_col)
-        cells_schema = _Ty.StructType(
-            [
-                sel.schema[id_col],
-                _Ty.StructField("emb", _Ty.ArrayType(_Ty.DoubleType())),
-                _Ty.StructField("nrm", _Ty.DoubleType()),
-                _Ty.StructField("ivf_cell", _Ty.LongType()),
-            ]
-        )
-        cellsdf = sel.mapInPandas(
-            _sem_cells_kernel(cn, id_col, vec_col), schema=cells_schema
-        )
-        pair_schema = _Ty.StructType(
-            [
-                _Ty.StructField("id_a", sel.schema[id_col].dataType),
-                _Ty.StructField("ivf_cell", _Ty.LongType()),
-                _Ty.StructField("q", _Ty.DoubleType()),
-            ]
-        )
-        pairs = (
-            cellsdf.groupBy("ivf_cell")
-            .applyInPandas(_sem_pairs_kernel(id_col), schema=pair_schema)
-            .withColumn("cos", F.round(F.col("q"), 6))
-            .filter(F.col("cos") >= threshold)
-        )
-        return pairs.groupBy(
-            F.col("id_a").alias(id_col), "ivf_cell"
-        ).agg(
-            F.count("*").alias("n_dups"),
-            F.max("cos").alias("max_cos"),
-        )
-    cells = with_ivf_cell(emb, centroids, vec_col=vec_col)
-    nrm = F.expr(
-        "sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))"
+    cn = sorted(_norm_centroids(centroids))
+    sel = emb.select(id_col, vec_col)
+    cells_schema = _Ty.StructType(
+        [
+            sel.schema[id_col],
+            _Ty.StructField("emb", _Ty.ArrayType(_Ty.DoubleType())),
+            _Ty.StructField("nrm", _Ty.DoubleType()),
+            _Ty.StructField("ivf_cell", _Ty.LongType()),
+        ]
     )
-    d = cells.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, v -> cast(v as double))").alias("emb"),
-        F.col("ivf_cell"),
-    ).withColumn("nrm", nrm)
-    # the self-join would otherwise evaluate the n_centroids interpreted
-    # argmax folds TWICE (one subtree per side — Catalyst does not CSE
-    # across self-join aliases); a lazy localCheckpoint materializes the
-    # (id, emb, cell, nrm) projection once, and its storage is freed
-    # when the plan is GC'd (no cache-manager leak)
-    d = d.localCheckpoint(eager=False)
-    a = d.select(
-        F.col(id_col).alias("id_a"), F.col("emb").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"), F.col("ivf_cell"),
+    cellsdf = sel.mapInPandas(
+        _sem_cells_kernel(cn, id_col, vec_col), schema=cells_schema
     )
-    b = d.select(
-        F.col(id_col).alias("id_b"), F.col("emb").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"), F.col("ivf_cell"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(emb_a, emb_b, (x, y) -> x * y), 0D, "
-        "(acc, v) -> acc + v)"
+    pair_schema = _Ty.StructType(
+        [
+            _Ty.StructField("id_a", sel.schema[id_col].dataType),
+            _Ty.StructField("ivf_cell", _Ty.LongType()),
+            _Ty.StructField("q", _Ty.DoubleType()),
+        ]
     )
     pairs = (
-        a.join(b, ["ivf_cell"])
-        .filter(F.col("id_a") > F.col("id_b"))
-        .withColumn("cos", F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 6))
+        cellsdf.groupBy("ivf_cell")
+        .applyInPandas(_sem_pairs_kernel(id_col), schema=pair_schema)
+        .withColumn("cos", F.round(F.col("q"), 6))
         .filter(F.col("cos") >= threshold)
     )
     return pairs.groupBy(

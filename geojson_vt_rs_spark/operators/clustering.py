@@ -13,25 +13,25 @@ Exactness contract (the whole point of this module):
   ``floor(v * 1e6 + 0.5)`` — every later sum is INTEGER arithmetic, so
   partial aggregation order cannot change a single bit (the float
   sequential-fold invariant in CLAUDE.md does not even come into play).
-* Squared L2 distances are BIGINT folds over ``zip_with`` (values are
-  bounded by the quantized input range: |q| <= ~1e6 for unit-ish
-  embeddings -> d <= dims * 4e12, far inside int64).
+* Squared L2 distances are int64 sums (values are bounded by the
+  quantized input range: |q| <= ~1e6 for unit-ish embeddings ->
+  d <= dims * 4e12, far inside int64).
 * Centroid updates are ``floor(double(sum) / n)`` computed IN-ENGINE on
   both sides (int64 sums convert to double exactly below 2^53; the
   division + floor is one IEEE op each, bit-identical across engines).
-* argmin tie-breaks on the cluster id ascending (struct sort on the
+* argmin tie-breaks on the cluster id ascending (first minimum on the
   Spark side, ``ORDER BY d, k`` window on the DuckDB side).
 * Clusters that lose every member KEEP their previous centroid
   (COALESCE in the oracle, a dict fallback in the driver loop).
 
 Scale shape (the 100-TB story):
 
-* each Lloyd iteration is ONE job: assignment is a pure JVM expression
-  over INLINED centroid literals (no join, no shuffle on the data path —
-  same pattern as ann.with_ivf_cell), followed by a
-  posexplode -> groupBy(k, pos) partial aggregation (map-side combine;
-  K*dims result rows).  The driver collects K*dims ints per iteration —
-  bounded, independent of table size.
+* each Lloyd iteration is ONE job: assignment and per-batch partial
+  sums are one numpy mapInPandas pass with the centroids in the kernel
+  closure (no join, no shuffle on the data path, no per-iteration plan
+  literals), followed by a groupBy(k, pos) aggregation of the
+  K*dims-row partials.  The driver collects K*dims ints per iteration
+  — bounded, independent of table size.
 * lineage does NOT grow with iterations: every iteration's plan reads
   the base table with fresh literals (no chained per-iteration plans —
   the pyramid's hard-won lesson).
@@ -62,30 +62,14 @@ def duck_quantize_sql(vec_expr: str) -> str:
     )
 
 
-def _argmin_struct_sql(centroids: list[list[int]]) -> str:
-    """``struct(d, k)`` of the nearest centroid: array_sort over one
-    struct per centroid (lexicographic (d, k) — ties fall to the lowest
-    cluster id, matching the oracle window's ORDER BY d, k)."""
-    structs = []
-    for k, c in enumerate(centroids):
-        lit = "array(" + ", ".join(f"{int(v)}L" for v in c) + ")"
-        structs.append(
-            f"struct(aggregate(zip_with(q, {lit}, "
-            f"(a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v) AS d, "
-            f"{k} AS k)"
-        )
-    return "element_at(array_sort(array(" + ", ".join(structs) + ")), 1)"
-
-
 def _iteration_partials_kernel(centroids: list[list[int]]):
-    """Batch twin of the per-iteration assignment+partial-sum scan: one
-    numpy pass per Arrow batch over the quantized vectors emitting
-    (k, pos, sv, n, wp) partials.  All arithmetic is int64 (the module's
-    fixed-point contract), so partial order cannot change a bit; argmin
-    takes the FIRST minimum == the struct sort's ties-to-lowest-k rule.
-    The centroids live in the closure, NOT as plan literals — the expr
-    formulation re-analyzed + re-codegen'd ~512 inlined literals per
-    Lloyd round."""
+    """The per-iteration assignment+partial-sum scan: one numpy pass per
+    Arrow batch over the quantized vectors emitting (k, pos, sv, n, wp)
+    partials.  All arithmetic is int64 (the module's fixed-point
+    contract), so partial order cannot change a bit; argmin takes the
+    FIRST minimum (ties to the lowest k).  The centroids live in the
+    closure, NOT as plan literals (an inlined-literal expression plan
+    re-analyzes and re-codegens ~512 literals per Lloyd round)."""
     import numpy as np
     import pandas as pd
 
@@ -105,7 +89,7 @@ def _iteration_partials_kernel(centroids: list[list[int]]):
             dmin = d[np.arange(n), k]
             K, dims = C.shape
             # per-(k, pos) partial sums of v; counts and wss partials
-            # ride the pos==0 lane exactly like the expr formulation
+            # ride the pos==0 lane
             sv = np.zeros((K, dims), dtype=np.int64)
             cnt = np.zeros(K, dtype=np.int64)
             wp = np.zeros(K, dtype=np.int64)
@@ -132,12 +116,10 @@ def _iteration_partials_kernel(centroids: list[list[int]]):
     return kernel
 
 
-def _iteration_agg_batch(
-    qdf: DataFrame, centroids: list[list[int]]
-) -> DataFrame:
-    """Batch twin of _iteration_agg: same (k, pos, c, n, wpart) table
-    (final stats byte-identical; intermediate wpart uses 0 instead of
-    NULL on pos != 0 lanes, invisible to every downstream SUM)."""
+def _iteration_agg(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """One Lloyd pass: per-(cluster, dim) integer sums -> floored
+    centroid ``c``, member count ``n`` and the wss partial ``wpart``
+    (nonzero only on the pos == 0 lane), all from ONE scan."""
     part = qdf.mapInPandas(
         _iteration_partials_kernel(centroids),
         schema="k int, pos int, sv long, n long, wp long",
@@ -148,36 +130,6 @@ def _iteration_agg_batch(
         .alias("c"),
         F.sum("n").alias("n"),
         F.sum("wp").alias("wpart"),
-    )
-
-
-def _iteration_agg(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """One Lloyd pass: per-(cluster, dim) integer sums + floored centroid
-    + member count + wss partial, all in ONE scan (count/wss ride the
-    pos==0 lane so no second aggregation touches the data)."""
-    a = _argmin_struct_sql(centroids)
-    # The argmin must ride INSIDE the generator expression: selecting
-    # it beside posexplode(q) leaves the argmin Project ABOVE the
-    # Generate, so the whole fold re-evaluates on every one of the 64
-    # generated rows per input row (measured 64x: 12s/iteration at a
-    # 2000-row sf0.1 table).  The single-element-array transform
-    # let-binds the argmin struct once per row (`s`), the inner
-    # indexed transform fans it out over the dims, and inline_OUTER
-    # (not inline) keeps Catalyst from inferring size()>0 and pushing
-    # the expression into a scan-side filter (the winnow lesson,
-    # CLAUDE.md) — quantize + argmin evaluate exactly ONCE per row.
-    gen = (
-        f"inline_outer(element_at(transform(array({a}), s -> "
-        "transform(q, (v, i) -> "
-        "struct(s.k AS k, s.d AS d, i AS pos, v AS v))), 1))"
-    )
-    sel = qdf.select(F.expr(gen)).filter(F.col("pos").isNotNull())
-    return sel.groupBy("k", "pos").agg(
-        F.floor(F.sum("v").cast("double") / F.count(F.lit(1)))
-        .cast("long")
-        .alias("c"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("pos") == 0, F.col("d"))).alias("wpart"),
     )
 
 
@@ -211,7 +163,6 @@ def kmeans_cluster_stats(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "batch",
 ) -> DataFrame:
     """Lloyd's k-means for a fixed iteration count; returns per-cluster
     (cluster, n_members, wss, centroid_checksum) of the FINAL assignment
@@ -223,9 +174,6 @@ def kmeans_cluster_stats(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if impl not in ("batch", "expr"):
-        raise ValueError(f"unknown impl: {impl!r}")
-    it_agg = _iteration_agg_batch if impl == "batch" else _iteration_agg
     cents = seed_centroids(emb, n_clusters, id_col, vec_col)
     if len(cents) < n_clusters:
         raise ValueError(
@@ -234,7 +182,7 @@ def kmeans_cluster_stats(
     qdf = quantized(emb, vec_col)
     # iterations 1..N-1 update centroids driver-side (K*dims ints/round)
     for _ in range(iterations - 1):
-        per = it_agg(qdf, cents).collect()
+        per = _iteration_agg(qdf, cents).collect()
         upd: dict[int, dict[int, int]] = {}
         for r in per:
             upd.setdefault(int(r["k"]), {})[int(r["pos"])] = int(r["c"])
@@ -244,7 +192,7 @@ def kmeans_cluster_stats(
             for k in range(n_clusters)
         ]
     # final pass: same one-scan agg, finished per-cluster JVM-side
-    per = it_agg(qdf, cents)
+    per = _iteration_agg(qdf, cents)
     return (
         per.groupBy("k")
         .agg(

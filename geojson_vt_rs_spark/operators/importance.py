@@ -25,14 +25,14 @@ CLAUDE.md invariants):
 
 Scale shape at 100 TB:
 
-* tokens are exploded with ``explode_outer`` + not-null filter (the
-  CLAUDE.md Catalyst rule: a plain explode makes Catalyst push the
-  whole generator below exchanges as an inferred ``size()>0`` filter).
+* the per-(doc, bucket) histogram is row-local — ONE mapInPandas pass
+  emits it (one md5 per DISTINCT token per Arrow batch); the token
+  stream is never exploded into the engine or shuffled.
 * the per-bucket count aggregation shuffles at most ``V_BUCKETS`` rows
   after map-side partial aggs; the resulting weight table (``<= V``
-  rows) is BROADCAST back onto the token stream, so scoring is
-  map-side + one per-doc partial agg.  Two scans of the corpus total,
-  both pruned to (doc_id, lang, text).
+  rows) is BROADCAST back onto the histogram, so scoring is map-side +
+  one per-doc partial agg.  The corpus is scanned once, pruned to
+  (doc_id, lang, text).
 * the keep step is ``orderBy().limit(k)`` — TakeOrderedAndProject
   (per-partition local top-k, merged on the driver), never a global
   range sort.
@@ -52,13 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text_dedup import (
-    _ASCII_WS,
-    _CACHE_REGISTRY,
-    _duck_words,
-    _plan_key,
-    _spark_words,
-)
+from .text_dedup import _ASCII_WS, _CACHE_REGISTRY, _duck_words, _plan_key
 
 V_BUCKETS = 4_096
 SCALE = 1_000_000
@@ -71,54 +65,12 @@ _HIST_CACHE: dict = {}
 _CACHE_REGISTRY.append(_HIST_CACHE)
 
 
-def _bucket_expr(tok: str, seed: str = SEED) -> str:
-    return (
-        f"cast(conv(substring(md5(concat('{seed}:', {tok})), 1, 15), "
-        f"16, 10) as bigint) % {V_BUCKETS}"
-    )
-
-
-def token_buckets(docs: DataFrame, target_pred: str) -> DataFrame:
-    """(doc_id, lang, b, t) — one row per token: vocab bucket ``b`` and
-    target-membership flag ``t`` (1 iff the doc satisfies target_pred)."""
-    return (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.expr(f"CASE WHEN {target_pred} THEN 1L ELSE 0L END").alias("t"),
-            F.explode_outer(F.expr(_spark_words())).alias("tok"),
-        )
-        .filter(F.col("tok").isNotNull())
-        .select(
-            "doc_id", "lang", "t", F.expr(_bucket_expr("tok")).alias("b")
-        )
-    )
-
-
-def doc_bucket_hist(tokens: DataFrame) -> DataFrame:
-    """(doc_id, lang, t, b, c) — per-document vocab-bucket histogram.
-
-    The ONE aggregation both phases derive from: the global per-bucket
-    counts are sums over it, and per-doc scores weight its rows — so the
-    corpus is token-exploded exactly once.  Row count is bounded by
-    sum(distinct buckets per doc) <= n_tokens, typically far smaller
-    (vocabulary reuse), which is why persisting IT instead of the raw
-    token stream is the scale move.
-    """
-    return tokens.groupBy("doc_id", "lang", "t", "b").agg(
-        F.count("*").alias("c")
-    )
-
-
 def _doc_buckets(text, cache: dict):
     """(b, c) int64 arrays — the doc's per-vocab-bucket token counts,
-    one md5 per DISTINCT token (via the cross-doc ``cache``).  The
-    batch twin of token_buckets+doc_bucket_hist for ONE document:
-    tokenizes on the ASCII whitespace class (text_dedup._ASCII_WS —
+    one md5 per DISTINCT token (via the cross-doc ``cache``).
+    Tokenizes on the ASCII whitespace class (text_dedup._ASCII_WS —
     Java ``\\s`` semantics, empties filtered) and buckets with the
-    same seeded md5 as _bucket_expr, so outputs are byte-identical to
-    the expr path (asserted by tests incl. non-ASCII whitespace and
-    null text)."""
+    oracle's seeded md5 (duck_importance_topk_sql)."""
     tokens = (
         [t for t in _ASCII_WS.split(text) if t] if isinstance(text, str)
         else []
@@ -145,16 +97,17 @@ def _doc_buckets(text, cache: dict):
     return b, cnt[b]
 
 
-def doc_bucket_hist_batch(docs: DataFrame, target_pred: str) -> DataFrame:
-    """Batch-kernel twin of ``doc_bucket_hist(token_buckets(..))``: the
-    per-document histogram is a row-local computation (a doc's tokens
-    live in its own row), so ONE mapInPandas pass emits (doc_id, lang,
-    t, b, c) directly — the token stream is never exploded into the
-    engine and never shuffled (the expr path shuffles ~n_tokens rows
-    into its groupBy).  One md5 per DISTINCT token per Arrow batch.
+def doc_bucket_hist(docs: DataFrame, target_pred: str) -> DataFrame:
+    """(doc_id, lang, t, b, c) — per-document vocab-bucket histogram,
+    with ``t`` = 1 iff the doc satisfies target_pred.
 
-    Docs with no tokens (null/empty/whitespace text) emit no rows,
-    matching explode_outer + not-null filter."""
+    The ONE aggregation both phases derive from: the global per-bucket
+    counts are sums over it, and per-doc scores weight its rows.  It is
+    row-local (a doc's tokens live in its own row), so ONE mapInPandas
+    pass emits it directly — the token stream is never exploded into
+    the engine and never shuffled.  One md5 per DISTINCT token per
+    Arrow batch.  Docs with no tokens (null/empty/whitespace text) emit
+    no rows."""
     d = docs.select(
         "doc_id",
         "lang",
@@ -229,7 +182,6 @@ def importance_topk(
     docs: DataFrame,
     target_pred: str = "lang = 'en'",
     k: int = 100,
-    impl: str = "batch",
 ) -> DataFrame:
     """Top-``k`` documents by mean fixed-point importance weight.
 
@@ -238,31 +190,18 @@ def importance_topk(
     docs whose unigrams over-index in the target subcorpus rank first.
     Deterministic total order (avg_w desc, doc_id asc).
 
-    ``impl="batch"`` (default) computes the per-(doc, bucket) histogram
-    in ONE mapInPandas pass (doc_bucket_hist_batch — row-local, one md5
-    per distinct token, no token-stream shuffle); ``impl="expr"`` keeps
-    the pure-JVM explode+groupBy formulation the DuckDB oracle mirrors
-    literally.  Histograms are byte-identical (asserted by tests), so
-    everything downstream — and the oracle — checks either path.
-
     The histogram is persisted for its two consumers (weight derivation
-    + scoring) so the corpus is scanned/exploded ONCE; scores are exact
+    + scoring) so the corpus is scanned ONCE; scores are exact
     integer sums of c*w, identical to the per-token formulation.  The
     persisted table lives in a plan-keyed single-slot cache: a later
     call over a different input (or the same input — every existing
     entry is evicted before storing, so nothing leaks when the key is
     None) unpersists the old table.
     """
-    if impl not in ("batch", "expr"):
-        raise ValueError(f"unknown impl: {impl!r}")
-    key = (_plan_key(docs), target_pred, impl)
+    key = (_plan_key(docs), target_pred)
     hist = _HIST_CACHE.get(key) if key[0] is not None else None
     if hist is None:
-        hist = (
-            doc_bucket_hist_batch(docs, target_pred)
-            if impl == "batch"
-            else doc_bucket_hist(token_buckets(docs, target_pred))
-        ).persist()
+        hist = doc_bucket_hist(docs, target_pred).persist()
         for old in list(_HIST_CACHE):
             _HIST_CACHE.pop(old).unpersist()
         _HIST_CACHE[key] = hist
@@ -284,25 +223,34 @@ def importance_topk(
     return scored.orderBy(F.desc("avg_w"), F.asc("doc_id")).limit(k)
 
 
-def duck_importance_topk_sql(
-    target_pred: str = "lang = 'en'",
-    k: int = 100,
-    table: str = "documents",
-) -> str:
-    """DuckDB twin of importance_topk — same md5 buckets, the same
-    integer ratio (every DuckDB sum CAST to BIGINT before arithmetic:
-    HUGEINT sums flip the driver's value-hash AND would widen the
-    multiplication), `//` == positive-operand `div`."""
+def duck_token_bucket_ctes(target_pred: str, table: str = "documents") -> str:
+    """The CTE list (no leading WITH) ending in ``tk(doc_id, lang, t,
+    b)``: one row per token with its seeded md5 vocab bucket — grouped,
+    the DuckDB twin of doc_bucket_hist."""
     words = _duck_words()
     bucket = (
         f"(('0x' || substr(md5('{SEED}:' || tok), 1, 15))::BIGINT "
         f"% {V_BUCKETS})"
     )
     return (
-        f"WITH tk0 AS (SELECT doc_id, lang, "
+        f"tk0 AS (SELECT doc_id, lang, "
         f"CASE WHEN {target_pred} THEN 1 ELSE 0 END AS t, "
         f"unnest({words}) AS tok FROM {table}), "
-        f"tk AS (SELECT doc_id, lang, t, {bucket} AS b FROM tk0), "
+        f"tk AS (SELECT doc_id, lang, t, {bucket} AS b FROM tk0)"
+    )
+
+
+def duck_importance_topk_sql(
+    target_pred: str = "lang = 'en'",
+    k: int = 100,
+    table: str = "documents",
+) -> str:
+    """DuckDB twin of importance_topk — the duck_token_bucket_ctes
+    tokens, the same integer ratio (every DuckDB sum CAST to BIGINT
+    before arithmetic: HUGEINT sums flip the oracle value-hash AND
+    would widen the multiplication), `//` == positive-operand `div`."""
+    return (
+        "WITH " + duck_token_bucket_ctes(target_pred, table) + ", "
         "tot AS (SELECT CAST(count(*) AS BIGINT) AS nq, "
         "CAST(sum(t) AS BIGINT) AS nt FROM tk), "
         "cb AS (SELECT b, CAST(count(*) AS BIGINT) AS cq, "

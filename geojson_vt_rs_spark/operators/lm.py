@@ -24,12 +24,10 @@ distributed-exact counterpart:
 
 Scale shape at 100 TB:
 
-* ``impl="batch"`` (default): the per-(doc, b1, b2) histogram is
-  row-local — ONE mapInPandas pass emits it directly (one md5 per
-  DISTINCT token per Arrow batch, np.unique over packed pair keys);
-  the token stream is never exploded into the engine.  ``impl="expr"``
-  keeps the pure-JVM zip_with formulation the DuckDB oracle mirrors
-  literally; histograms are byte-identical (asserted by tests).
+* the per-(doc, b1, b2) histogram is row-local — ONE mapInPandas pass
+  emits it directly (one md5 per DISTINCT token per Arrow batch,
+  np.unique over packed pair keys); the token stream is never exploded
+  into the engine.
 * the model tables aggregate FROM the persisted histogram: ``c12`` is
   a partial-agg groupBy bounded by ``LM_BUCKETS^2`` distinct keys
   (~16.7M worst case — a real table, so the score join is a plain
@@ -54,13 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text_dedup import (
-    _ASCII_WS,
-    _CACHE_REGISTRY,
-    _duck_words,
-    _plan_key,
-    _spark_words,
-)
+from .text_dedup import _ASCII_WS, _CACHE_REGISTRY, _duck_words, _plan_key
 
 LM_BUCKETS = 4_096
 SEED = "lm-v1"
@@ -69,50 +61,10 @@ _HIST_CACHE: dict = {}
 _CACHE_REGISTRY.append(_HIST_CACHE)
 
 
-def _bucket_expr(tok: str, seed: str = SEED) -> str:
-    return (
-        f"cast(conv(substring(md5(concat('{seed}:', {tok})), 1, 15), "
-        f"16, 10) as bigint) % {LM_BUCKETS}"
-    )
-
-
-def _spark_bigram_pairs() -> str:
-    """Array of (b1, b2) bucket structs for the doc's adjacent word
-    pairs, as ONE SQL expression.  Let-bindings (the decontam idiom)
-    make the word split evaluate once and the bucket transform once
-    (one md5 per token); the zip_with's null-padded tail is filtered
-    on ``b2 IS NOT NULL`` (bucket values themselves are never null)."""
-    w = _spark_words()
-    return (
-        f"transform(array({w}), W -> "
-        f"transform(array(transform(W, w -> {_bucket_expr('w')})), B -> "
-        "filter(zip_with(B, slice(B, 2, size(B)), "
-        "(a, b) -> named_struct('b1', a, 'b2', b)), "
-        "p -> p.b2 IS NOT NULL))[0])[0]"
-    )
-
-
-def bigram_hist(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, b1, b2, c) — per-document bigram-bucket histogram,
-    pure-JVM formulation (the oracle's literal shape).  explode_outer +
-    not-null filter per the Catalyst inferred-filter rule."""
-    return (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.explode_outer(F.expr(_spark_bigram_pairs())).alias("p"),
-        )
-        .filter(F.col("p").isNotNull())
-        .select("doc_id", "lang", "p.b1", "p.b2")
-        .groupBy("doc_id", "lang", "b1", "b2")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def _doc_bigram_hist(text, cache: dict):
-    """(b1, b2, c) int64 arrays for ONE document — the batch twin of
-    bigram_hist's row: one md5 per DISTINCT token (via the cross-doc
-    ``cache``), pairs counted over a packed ``b1*LM_BUCKETS + b2`` key.
+    """(b1, b2, c) int64 arrays for ONE document — bigram_hist's rows
+    for it: one md5 per DISTINCT token (via the cross-doc ``cache``),
+    pairs counted over a packed ``b1*LM_BUCKETS + b2`` key.
     ASCII-whitespace tokenizer + '\\x01' np.unique sentinel, the
     text_dedup._batch_token_hashes rules."""
     tokens = (
@@ -140,11 +92,11 @@ def _doc_bigram_hist(text, cache: dict):
     return u // LM_BUCKETS, u % LM_BUCKETS, c.astype(np.int64)
 
 
-def bigram_hist_batch(docs: DataFrame) -> DataFrame:
-    """Batch-kernel twin of :func:`bigram_hist`: the per-doc histogram
-    is row-local, so ONE mapInPandas pass emits it directly — the
+def bigram_hist(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, b1, b2, c) — per-document bigram-bucket histogram.
+    It is row-local, so ONE mapInPandas pass emits it directly — the
     bigram stream is never exploded/shuffled.  Docs with < 2 tokens
-    emit no rows, matching the expr path."""
+    (NULL text included) emit no rows."""
     d = docs.select("doc_id", "lang", "text")
     fields = {f.name: f for f in d.schema.fields}
     out_schema = T.StructType(
@@ -211,7 +163,6 @@ def lm_model(hist: DataFrame) -> DataFrame:
 def lm_perplexity_topk(
     docs: DataFrame,
     k: int = 100,
-    impl: str = "batch",
 ) -> DataFrame:
     """Top-``k`` most fluent documents by mean fixed-point bigram NLL.
 
@@ -222,14 +173,10 @@ def lm_perplexity_topk(
     The histogram persists for its two consumers (model + scoring) in
     the plan-keyed single-slot cache (every existing entry evicted
     before storing — the ADVICE-r4 None-key rule)."""
-    if impl not in ("batch", "expr"):
-        raise ValueError(f"unknown impl: {impl!r}")
-    key = (_plan_key(docs), impl)
-    hist = _HIST_CACHE.get(key) if key[0] is not None else None
+    key = _plan_key(docs)
+    hist = _HIST_CACHE.get(key) if key is not None else None
     if hist is None:
-        hist = (
-            bigram_hist_batch(docs) if impl == "batch" else bigram_hist(docs)
-        ).persist()
+        hist = bigram_hist(docs).persist()
         for old in list(_HIST_CACHE):
             _HIST_CACHE.pop(old).unpersist()
         _HIST_CACHE[key] = hist
@@ -251,29 +198,39 @@ def lm_perplexity_topk(
     return scored.orderBy(F.asc("avg_nll_fp"), F.asc("doc_id")).limit(k)
 
 
-def duck_lm_perplexity_sql(k: int = 100, table: str = "documents") -> str:
-    """DuckDB twin — same seeded md5 buckets (1-based list indexing,
-    ``range(1, len)`` enumerates bigram starts), same round-6 in-engine
-    ln, same integer floor/`//` math, every sum CAST to BIGINT."""
+def duck_bigram_hist_ctes(table: str = "documents") -> str:
+    """The CTE list (no leading WITH) ending in ``hist(doc_id, lang, b1,
+    b2, c)`` — the DuckDB twin of bigram_hist: same seeded md5 buckets
+    (1-based list indexing, ``range(1, len)`` enumerates bigram
+    starts)."""
     words = _duck_words()
     bucket = (
         f"(('0x' || substr(md5('{SEED}:' || w), 1, 15))::BIGINT "
         f"% {LM_BUCKETS})"
     )
-    fp = (
-        "CAST(floor(round(-ln(CAST(c12 + 1 AS DOUBLE) / "
-        f"CAST(c1 + {LM_BUCKETS} AS DOUBLE)), 6) * 1000000.0 + 0.5) "
-        "AS BIGINT)"
-    )
     return (
-        f"WITH d AS (SELECT doc_id, lang, "
+        f"d AS (SELECT doc_id, lang, "
         f"list_transform({words}, w -> {bucket}) AS bar FROM {table} "
         "WHERE text IS NOT NULL), "
         "r AS (SELECT doc_id, lang, bar[i] AS b1, bar[i + 1] AS b2 FROM "
         "(SELECT doc_id, lang, bar, unnest(range(1, len(bar))) AS i "
         "FROM d)), "
         "hist AS (SELECT doc_id, lang, b1, b2, "
-        "CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2, 3, 4), "
+        "CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2, 3, 4)"
+    )
+
+
+def duck_lm_perplexity_sql(k: int = 100, table: str = "documents") -> str:
+    """DuckDB twin — the duck_bigram_hist_ctes histogram, same round-6
+    in-engine ln, same integer floor/`//` math, every sum CAST to
+    BIGINT."""
+    fp = (
+        "CAST(floor(round(-ln(CAST(c12 + 1 AS DOUBLE) / "
+        f"CAST(c1 + {LM_BUCKETS} AS DOUBLE)), 6) * 1000000.0 + 0.5) "
+        "AS BIGINT)"
+    )
+    return (
+        "WITH " + duck_bigram_hist_ctes(table) + ", "
         "c12t AS (SELECT b1, b2, CAST(sum(c) AS BIGINT) AS c12 "
         "FROM hist GROUP BY b1, b2), "
         "c1t AS (SELECT b1, CAST(sum(c12) AS BIGINT) AS c1 "

@@ -221,112 +221,6 @@ def wrap_stage(df: DataFrame, buffer: float, line_metrics: bool) -> DataFrame:
     return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
-def split_stage(df: DataFrame, options: Options) -> DataFrame:
-    """One pyramid level: tiled features -> up-to-4-way child features.
-
-    Child clip bands use the half buffer p = 0.5*buffer/extent
-    (lib.rs:340); x is clipped once and reused for both y children.
-    Narrow (no shuffle).
-
-    Columnar fast path: clip_feature's bbox trivial accept returns the
-    feature UNCHANGED (clip.rs:385-390), so rows whose bbox makes every
-    one of the four child bands a trivial accept or reject are routed
-    with pure pandas slicing — no VtFeature construction, no Python
-    per-feature work.  In a deep pyramid that is the vast majority of
-    rows (a feature straddles child midlines only near the top).  Only
-    straddling rows take the per-feature clip path.  The band arithmetic
-    uses the same float64 op order as the scalar path, so the
-    classification is bit-identical to clip_feature's own checks.
-    """
-    buffer = options.tile.buffer
-    extent = options.tile.extent
-    lm = options.tile.line_metrics
-
-    def slow_rows(pdf: pd.DataFrame) -> List[dict]:
-        out: List[dict] = []
-        zs = pdf["z"].to_numpy()
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        for i, f in enumerate(pdf_to_features(pdf)):
-            z, x, y = int(zs[i]), int(xs[i]), int(ys[i])
-            z2 = float(1 << z)
-            p = 0.5 * buffer / extent
-            left = clip_feature(f, 0, (x - p) / z2, (x + 0.5 + p) / z2, lm)
-            right = clip_feature(f, 0, (x + 0.5 - p) / z2, (x + 1.0 + p) / z2, lm)
-            for dx, half in ((0, left), (1, right)):
-                for lf in half:
-                    top = clip_feature(lf, 1, (y - p) / z2, (y + 0.5 + p) / z2, lm)
-                    bot = clip_feature(
-                        lf, 1, (y + 0.5 - p) / z2, (y + 1.0 + p) / z2, lm
-                    )
-                    for dy, quarter in ((0, top), (1, bot)):
-                        for qf in quarter:
-                            row = feature_to_row(qf)
-                            row["z"] = z + 1
-                            row["x"] = x * 2 + dx
-                            row["y"] = y * 2 + dy
-                            out.append(row)
-        return out
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = 0.5 * buffer / extent
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(columns=TILED_COLS)
-                continue
-            z = pdf["z"].to_numpy()
-            x = pdf["x"].to_numpy().astype(np.float64)
-            y = pdf["y"].to_numpy().astype(np.float64)
-            z2 = np.ldexp(1.0, z.astype(np.int64))  # exact float(1 << z)
-            xm = pdf["bbox_min_x"].to_numpy()
-            xM = pdf["bbox_max_x"].to_numpy()
-            ym = pdf["bbox_min_y"].to_numpy()
-            yM = pdf["bbox_max_y"].to_numpy()
-
-            def classify(c, bmin, bmax):
-                # same op order as the scalar path: (c - p) / z2 etc.
-                k1a = (c - p) / z2
-                k2a = (c + 0.5 + p) / z2
-                k1b = (c + 0.5 - p) / z2
-                k2b = (c + 1.0 + p) / z2
-                acc_a = (bmin >= k1a) & (bmax < k2a)
-                rej_a = (bmax < k1a) | (bmin >= k2a)
-                acc_b = (bmin >= k1b) & (bmax < k2b)
-                rej_b = (bmax < k1b) | (bmin >= k2b)
-                return acc_a, rej_a, acc_b, rej_b
-
-            xa0, xr0, xa1, xr1 = classify(x, xm, xM)
-            ya0, yr0, ya1, yr1 = classify(y, ym, yM)
-            trivial = (
-                (xa0 | xr0) & (xa1 | xr1) & (ya0 | yr0) & (ya1 | yr1)
-            )
-
-            parts: List[pd.DataFrame] = []
-            for dx, xacc in ((0, xa0), (1, xa1)):
-                for dy, yacc in ((0, ya0), (1, ya1)):
-                    sel = trivial & xacc & yacc
-                    if not sel.any():
-                        continue
-                    sub = pdf.loc[sel, TILED_COLS].copy(deep=False)
-                    sub["z"] = (z[sel] + 1).astype(sub["z"].dtype)
-                    sub["x"] = (
-                        pdf["x"].to_numpy()[sel] * 2 + dx
-                    ).astype(sub["x"].dtype)
-                    sub["y"] = (
-                        pdf["y"].to_numpy()[sel] * 2 + dy
-                    ).astype(sub["y"].dtype)
-                    parts.append(sub)
-            if not trivial.all():
-                slow = slow_rows(pdf.loc[~trivial])
-                if slow:
-                    parts.append(pd.DataFrame(slow, columns=TILED_COLS))
-            for part in parts:
-                if len(part):
-                    yield part[TILED_COLS]
-
-    return df.mapInPandas(kernel, schema=TILED_FEATURE_SCHEMA)
-
-
 def clip_xy_stage(
     df: DataFrame,
     x_band: tuple,
@@ -359,29 +253,6 @@ def clip_xy_stage(
             yield pd.DataFrame(out, columns=FEATURE_COLS)
 
     return pruned.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-RENDER_SCHEMA = T.StructType(
-    [
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        T.StructField("world_copy", T.IntegerType()),
-        T.StructField("feature_seq", T.LongType()),
-        T.StructField("slice_path", T.StringType()),
-        T.StructField("sub_idx", T.IntegerType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("geometry_json", T.StringType()),
-        T.StructField("tags_json", T.StringType()),
-        T.StructField("id_str", T.StringType()),
-        T.StructField("id_num", T.LongType()),
-        T.StructField("id_float", T.DoubleType()),
-        T.StructField("n_emitted", T.IntegerType()),
-    ]
-)
-
-RENDER_COLS = [f.name for f in RENDER_SCHEMA.fields]
 
 
 def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
@@ -436,85 +307,6 @@ def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
     ty = _round_half_away((all_y * rep_z2 - rep_y) * ext).astype(np.int64)
     keep = all_z > rep_sq
     return offs, tx, ty, keep
-
-
-def render_stage(df: DataFrame, options) -> DataFrame:
-    """Per-ROW tile rendering (tile.rs:105-297 per feature).
-
-    Rendering a tile is decomposable: every feature transforms and
-    filters independently (GC flattening yields several output features,
-    ordered by sub_idx); per-tile num_simplified is the sum of the
-    per-row n_emitted.  This keeps giant tiles (a z0 root with millions
-    of features) fully row-parallel — the reference's sequential
-    InternalTile::new loop is just the serial schedule of this map.
-    feature_idx is assigned later from the deterministic sort key
-    (world_copy, feature_seq, slice_path, sub_idx).
-    """
-    extent = options.tile.extent
-    tol = options.tile.tolerance
-    max_zoom = options.max_zoom
-    lm = options.tile.line_metrics
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            zs = pdf["z"].to_numpy()
-            xs_ = pdf["x"].to_numpy()
-            ys_ = pdf["y"].to_numpy()
-            wc = pdf["world_copy"].to_numpy()
-            seq = pdf["feature_seq"].to_numpy()
-            sp = pdf["slice_path"].to_numpy()
-            offs, btx, bty, bkeep = batch_pre_transform(
-                pdf, extent, tol, max_zoom
-            )
-            for i, f in enumerate(pdf_to_features(pdf)):
-                z, x, y = int(zs[i]), int(xs_[i]), int(ys_[i])
-                tolerance = 0.0 if z == max_zoom else tol / (float(1 << z) * extent)
-                em = TileEmitter(z, x, y, extent, tolerance, lm)
-                a, b = offs[i], offs[i + 1]
-                em.add_feature(f, pre=(btx[a:b], bty[a:b], bkeep[a:b]))
-                if not em.features:
-                    # still contributes num_simplified? no features kept,
-                    # but transform_point calls may have run (e.g. points
-                    # filtered later) — keep the counter row
-                    if em.num_simplified:
-                        out.append(
-                            dict.fromkeys(RENDER_COLS)
-                            | dict(
-                                z=z, x=x, y=y,
-                                world_copy=int(wc[i]), feature_seq=int(seq[i]),
-                                slice_path=sp[i], sub_idx=-1,
-                                n_emitted=em.num_simplified,
-                            )
-                        )
-                    continue
-                for si, tf in enumerate(em.features):
-                    out.append(
-                        dict(
-                            z=z, x=x, y=y,
-                            world_copy=int(wc[i]),
-                            feature_seq=int(seq[i]),
-                            slice_path=sp[i],
-                            sub_idx=si,
-                            type=tf["type"],
-                            kind=tf["kind"],
-                            geometry_json=json.dumps(
-                                tf["geometry"], separators=(",", ":")
-                            ),
-                            tags_json=(
-                                None
-                                if tf["tags"] is None
-                                else json.dumps(tf["tags"], separators=(",", ":"))
-                            ),
-                            id_str=tf["id_str"],
-                            id_num=tf["id_num"],
-                            id_float=tf["id_float"],
-                            n_emitted=em.num_simplified if si == 0 else 0,
-                        )
-                    )
-            yield pd.DataFrame(out, columns=RENDER_COLS)
-
-    return df.mapInPandas(kernel, schema=RENDER_SCHEMA)
 
 
 # fused render+split output: one row stream discriminated by row_kind
@@ -816,14 +608,16 @@ def render_split_stage(
     df: DataFrame, options: Options, emit_parent_cagg: bool = False
 ) -> DataFrame:
     """ONE Python pass per pyramid level: renders every row (RS_RENDER
-    rows, the per-feature RENDER_SCHEMA payload) and, for rows whose tile
+    rows: sub_idx, type, kind, geometry/tags JSON, n_emitted per
+    feature) and, for rows whose tile
     the driver decided to split (action == 'split'), also emits the child
     features (RS_CHILD rows) — the VtFeature is constructed once and
     shared by both, and the level runs one Spark job instead of a render
     job plus a split job.
 
-    The split side keeps split_stage's columnar fast path: bbox-contained
-    rows pass through as pandas slices with no per-feature Python.
+    The split side has a columnar fast path: rows whose bbox makes every
+    child band a trivial accept or reject pass through as pandas slices
+    with no per-feature Python; only straddling rows are clipped.
     Input must carry the driver's ``action`` column ('leaf'/'split').
 
     ``emit_parent_cagg=True`` additionally emits per-batch partials of

@@ -2,10 +2,12 @@
 exact dedup, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine ANN,
 language-ID, quality scoring, fingerprinting.
 
-Everything is JVM-side column expressions (higher-order functions, no
-Python UDFs); each builder has a DuckDB SQL twin computing byte-identical
-values (md5-derived integer hashes, integer-ratio divisions), which is
-what makes the driver's value-hash oracle pass exactly.
+The per-document signatures (minhash, simhash, winnowing) are numpy
+mapInPandas kernels that hash each DISTINCT token/shingle once; the
+rest is JVM-side column expressions.  Each builder has a DuckDB SQL twin
+computing byte-identical values (md5-derived integer hashes,
+integer-ratio divisions), which is what makes the value-hash oracle
+pass exactly.
 
 Scale notes: shingle/minhash work is per-row (narrow);  LSH banding turns
 the O(n^2) similarity join into an equi-join on band keys; SimHash
@@ -43,15 +45,7 @@ def _duck_shingles(col: str = "text") -> str:
 # (A Kirsch–Mitzenmacher a+p*b family was tried first: its per-shingle
 # mins correlate across permutations, which doubled the band-collision
 # candidate rate on the test corpus.  Independent md5 slices keep the
-# candidate rate at the true-permutation baseline.)  The md5 arrays
-# materialize into columns once (Catalyst does no CSE across HOF
-# lambdas); each minhash is then a substr/conv fold.
-
-
-def _spark_minhash_over(hx: str, p: int) -> str:
-    off = 8 * (p % 4) + 1
-    v = f"cast(conv(substr(h, {off}, 8), 16, 10) as bigint)"
-    return f"array_min(transform({hx}, h -> {v}))"
+# candidate rate at the true-permutation baseline.)
 
 
 def _duck_minhash_over(hx: str, p: int) -> str:
@@ -61,10 +55,13 @@ def _duck_minhash_over(hx: str, p: int) -> str:
 
 
 def _minhash_batch(text, cache: dict):
-    """Byte-identical numpy twin of the with_minhashes expression: same
-    5-gram-every-3-chars shingles, same two md5s per shingle, same four
-    32-bit hex slices per md5, per-permutation min.  One md5 pair per
-    DISTINCT shingle via the per-batch cache."""
+    """The 8 minhashes of one document: 5-gram-every-3-chars shingles,
+    two md5s per shingle, four 32-bit hex slices per md5,
+    per-permutation min (the oracle's _duck_minhash_over).  One md5 pair
+    per DISTINCT shingle via the per-batch cache.  NULL text gives eight
+    NULLs, the Spark SQL value of this formulation (concat('x', NULL) is
+    NULL); DuckDB's concat skips the NULL, so the oracle differs on that
+    row."""
     import hashlib
 
     if not isinstance(text, str):
@@ -89,58 +86,27 @@ def _minhash_batch(text, cache: dict):
     return [int(m) for m in rows.min(axis=0)]
 
 
-def with_minhashes(docs: DataFrame, impl: str = "batch") -> DataFrame:
-    """doc_id + the 8 minhashes as ONE array column.
-
-    ``impl="batch"`` (default): numpy mapInPandas kernel — one md5 pair
-    per DISTINCT shingle and a single vectorized min, ~3x the expression
-    path on the oracle corpus (the 8 interpreted substr/conv folds over
-    hex-string arrays are the expr path's cost).  ``impl="expr"`` is the
-    pure-JVM original: the two shingle md5 arrays materialize into their
-    own columns, each minhash folds over one of them.  Outputs are
-    byte-identical (asserted by tests), so the DuckDB oracles check
-    either path — with the batch default they are a genuinely
-    independent implementation of the same math."""
-    if impl == "batch":
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("mhs", T.ArrayType(T.LongType())),
-            ]
-        )
-
-        def kernel(batches):
-            cache: dict = {}
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "mhs": [
-                            _minhash_batch(t, cache) for t in pdf["text"]
-                        ],
-                    }
-                )
-
-        return docs.mapInPandas(kernel, schema=out_schema)
-    if impl != "expr":
-        raise ValueError(f"unknown impl: {impl!r}")
-    d = docs.withColumn(
-        "__hx", F.expr(f"transform({_spark_shingles()}, s -> md5(s))")
-    ).withColumn(
-        "__hx2",
-        F.expr(f"transform({_spark_shingles()}, s -> md5(concat('x', s)))"),
+def with_minhashes(docs: DataFrame) -> DataFrame:
+    """doc_id + the 8 minhashes as ONE array column, from a numpy
+    mapInPandas kernel (_minhash_batch)."""
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("mhs", T.ArrayType(T.LongType())),
+        ]
     )
-    return d.select(
-        "doc_id",
-        F.array(
-            *[
-                F.expr(
-                    _spark_minhash_over("__hx" if p < 4 else "__hx2", p)
-                )
-                for p in range(N_PERM)
-            ]
-        ).alias("mhs"),
-    )
+
+    def kernel(batches):
+        cache: dict = {}
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "mhs": [_minhash_batch(t, cache) for t in pdf["text"]],
+                }
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
 
 
 _BAND_CACHE: dict = {}  # semantic plan key -> persisted band table (max 1)
@@ -254,11 +220,23 @@ def minhash_band_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def duck_minhash_pairs_sql() -> str:
+def duck_minhash_ctes(table: str = "documents") -> str:
+    """The CTE list (no leading WITH) ending in ``mh(doc_id, mh0..mh7)``
+    — the DuckDB twin of with_minhashes."""
     mh_cols = ", ".join(
         f"{_duck_minhash_over('hx' if p < 4 else 'hx2', p)} AS mh{p}"
         for p in range(N_PERM)
     )
+    return (
+        "hxs AS (SELECT doc_id, "
+        f"list_transform({_duck_shingles()}, s -> md5(s)) AS hx, "
+        f"list_transform({_duck_shingles()}, s -> md5(concat('x', s))) AS hx2 "
+        f"FROM {table}), "
+        f"mh AS (SELECT doc_id, {mh_cols} FROM hxs)"
+    )
+
+
+def duck_minhash_pairs_sql() -> str:
     bands = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
         f"concat(CAST(mh{2*b} AS VARCHAR), ',', CAST(mh{2*b+1} AS VARCHAR)) AS bkey, "
@@ -270,11 +248,7 @@ def duck_minhash_pairs_sql() -> str:
         f"(CASE WHEN a.mh{p} = b.mh{p} THEN 1 ELSE 0 END)" for p in range(N_PERM)
     )
     return (
-        "WITH hxs AS (SELECT doc_id, "
-        f"list_transform({_duck_shingles()}, s -> md5(s)) AS hx, "
-        f"list_transform({_duck_shingles()}, s -> md5(concat('x', s))) AS hx2 "
-        "FROM documents), "
-        f"mh AS (SELECT doc_id, {mh_cols} FROM hxs), "
+        "WITH " + duck_minhash_ctes() + ", "
         f"bands AS ({bands}) "
         f"SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, "
         f"CAST(({n_eq}) AS DOUBLE) / {float(N_PERM)} AS est_sim "
@@ -293,15 +267,6 @@ SIMHASH_BITS = 64  # production width: pair output stays sparse at any scale
 _MIN_BIGINT = "(-9223372036854775807 - 1)"
 
 
-def _spark_word_hash64(w: str = "w") -> str:
-    lo = f"cast(conv(substr(md5({w}), 1, 8), 16, 10) as bigint)"
-    hi = f"cast(conv(substr(md5({w}), 9, 8), 16, 10) as bigint)"
-    return (
-        f"(({hi}) - (CASE WHEN ({hi}) >= 2147483648L THEN 4294967296L "
-        f"ELSE 0L END)) * 4294967296L + ({lo})"
-    )
-
-
 def _duck_word_hash64(w: str = "w") -> str:
     lo = f"('0x' || substr(md5({w}), 1, 8))::BIGINT"
     hi = f"('0x' || substr(md5({w}), 9, 8))::BIGINT"
@@ -311,17 +276,13 @@ def _duck_word_hash64(w: str = "w") -> str:
     )
 
 
-def _simhash_bit_terms(bits: int, hs: str, size_expr: str, spark: bool) -> list:
+def _duck_simhash_bit_terms(bits: int, hs: str, size_expr: str) -> list:
     """Per-bit majority-vote terms over a PRE-HASHED bigint array column —
-    each fold is shifts/adds only (the md5 ran once per token upstream; the
-    round-2 kernel re-ran md5 once per bit, 16x redundant hashing).  Bit 63
-    contributes MIN_BIGINT (two's complement), summed exactly."""
+    each fold is shifts/adds only (the md5 ran once per token upstream).
+    Bit 63 contributes MIN_BIGINT (two's complement), summed exactly."""
     terms = []
     for j in range(bits):
-        if spark:
-            cnt = f"aggregate({hs}, 0L, (acc, h) -> acc + ((h >> {j}) & 1))"
-        else:
-            cnt = f"COALESCE(list_sum(list_transform({hs}, h -> (h >> {j}) & 1)), 0)"
+        cnt = f"COALESCE(list_sum(list_transform({hs}, h -> (h >> {j}) & 1)), 0)"
         bit_val = _MIN_BIGINT if j == 63 else str(1 << j)
         terms.append(
             f"(CASE WHEN 2 * ({cnt}) > {size_expr} THEN {bit_val} ELSE 0 END)"
@@ -331,23 +292,23 @@ def _simhash_bit_terms(bits: int, hs: str, size_expr: str, spark: bool) -> list:
 
 # ASCII \s only — Java regex \s == [ \t\n\x0b\f\r]; Python str.split()
 # would ALSO split on Unicode whitespace (U+00A0, U+2000.., U+3000) and
-# silently diverge from the expr/oracle tokenization (ADVICE r4).
+# silently diverge from the JVM/oracle tokenization (ADVICE r4).
 _ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _batch_token_hashes(text, cache: dict):
     """(h64, lo32) int64 arrays of the doc's whitespace tokens — the
-    batch twin of _spark_word_hash64 / the winnow lo-32 hash, one md5
-    per DISTINCT token (something the JVM expression path cannot do).
-    Tokenizes on ASCII whitespace ONLY, mirroring the JVM
-    `split(trim(text), '\\\\s+')` semantics.
+    simhash 64-bit word hash (the oracle's _duck_word_hash64) and the
+    winnow lo-32 hash, one md5 per DISTINCT token.  Tokenizes on ASCII
+    whitespace ONLY, mirroring the JVM `split(trim(text), '\\\\s+')`
+    semantics.
 
     Vectorized gather: np.unique over a fixed-width unicode array (a C
     sort) finds the distinct tokens; Python touches only those for the
     md5 (through the cross-doc ``cache``), and the per-token expansion
-    is a fancy-index — the former per-token dict loop made highly
-    repetitive long docs (15k tokens / 2k vocab) SLOWER than the JVM
-    expr path (BENCH.md counter-shape, VERDICT r4 item 6)."""
+    is a fancy-index — a per-token dict loop made highly repetitive
+    long docs (15k tokens / 2k vocab) slow (BENCH.md counter-shape,
+    VERDICT r4 item 6)."""
     import hashlib
 
     tokens = (
@@ -386,9 +347,8 @@ def _batch_token_hashes(text, cache: dict):
 
 
 def _simhash_batch(h64: np.ndarray) -> int:
-    """Exact majority-vote fold of _simhash_bit_terms, vectorized: the
-    64 interpreted per-bit HOF folds (~1-10us/element each) become two
-    numpy passes over the token-hash array."""
+    """Exact majority-vote fold of _duck_simhash_bit_terms, vectorized:
+    two numpy passes over the token-hash array."""
     n = len(h64)
     if n == 0:
         return 0
@@ -405,50 +365,29 @@ def _simhash_batch(h64: np.ndarray) -> int:
     return uval - (1 << 64) if uval >= (1 << 63) else uval
 
 
-def with_simhash(docs: DataFrame, impl: str = "batch") -> DataFrame:
+def with_simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over whitespace tokens: bit j set when more than half
-    the tokens have bit j of their (single, materialized) md5 hash set.
+    the tokens have bit j of their md5 word hash set.  A numpy
+    mapInPandas kernel: one md5 per DISTINCT token (an np.unique gather)
+    and unpackbits bit counts.  NULL text hashes to 0."""
+    out_schema = T.StructType(
+        list(docs.schema.fields) + [T.StructField("simhash", T.LongType())]
+    )
 
-    ``impl="batch"`` (default): numpy mapInPandas kernel — unpackbits
-    bit counts + one md5 per DISTINCT token, with an np.unique gather
-    replacing the former per-token Python cache loop; 2-5x the
-    expression path on BOTH corpus shapes (the repetitive-long-doc
-    counter-shape where the old loop lost 1.4x now wins 5x, BENCH.md).
-    ``impl="expr"`` is the pure-JVM original (folds the 64 bit counts
-    over a once-materialized hash-array column — Catalyst does no CSE
-    across HOF lambdas, so in-lining the hash per bit would rerun md5
-    64x per token).  Outputs are byte-identical (asserted by tests incl.
-    null text and non-ASCII whitespace), so the DuckDB oracle checks
-    either path."""
-    if impl == "batch":
-        out_schema = T.StructType(
-            list(docs.schema.fields)
-            + [T.StructField("simhash", T.LongType())]
-        )
+    def kernel(batches):
+        cache: dict = {}
+        for pdf in batches:
+            pdf = pdf.copy(deep=False)
+            pdf["simhash"] = np.array(
+                [
+                    _simhash_batch(_batch_token_hashes(t, cache)[0])
+                    for t in pdf["text"]
+                ],
+                dtype=np.int64,
+            )
+            yield pdf
 
-        def kernel(batches):
-            cache: dict = {}
-            for pdf in batches:
-                pdf = pdf.copy(deep=False)
-                pdf["simhash"] = np.array(
-                    [
-                        _simhash_batch(_batch_token_hashes(t, cache)[0])
-                        for t in pdf["text"]
-                    ],
-                    dtype=np.int64,
-                )
-                yield pdf
-
-        return docs.mapInPandas(kernel, schema=out_schema)
-    if impl != "expr":
-        raise ValueError(f"unknown impl: {impl!r}")
-    words = "filter(split(trim(text), '\\\\s+'), w -> length(w) > 0)"
-    hs = f"transform({words}, w -> {_spark_word_hash64()})"
-    d = docs.withColumn("__hs", F.expr(hs))
-    terms = _simhash_bit_terms(SIMHASH_BITS, "__hs", "size(__hs)", spark=True)
-    return d.withColumn(
-        "simhash", F.expr(" + ".join(terms)).cast("long")
-    ).drop("__hs")
+    return docs.mapInPandas(kernel, schema=out_schema)
 
 
 def simhash_near_pairs(docs: DataFrame, hamming_max: int = 3) -> DataFrame:
@@ -475,7 +414,7 @@ def duck_simhash_sql(table: str = "documents") -> str:
     then folds the 64 majority votes over it."""
     words = _duck_words()
     hs = f"list_transform({words}, w -> {_duck_word_hash64()})"
-    terms = _simhash_bit_terms(SIMHASH_BITS, "hs", "len(hs)", spark=False)
+    terms = _duck_simhash_bit_terms(SIMHASH_BITS, "hs", "len(hs)")
     return (
         f"WITH __hs AS (SELECT doc_id, {hs} AS hs FROM {table}) "
         f"SELECT doc_id, CAST({' + '.join(terms)} AS BIGINT) AS simhash "
@@ -546,27 +485,13 @@ def duck_ngram_jaccard_sql() -> str:
 
 def ann_topk(docs_embeddings: DataFrame, query_vec: list, k: int = 20) -> DataFrame:
     """Brute-force cosine top-k against a broadcast query vector —
-    the exact baseline; the LSH-bucketed scale path shares the same
-    scoring expression (see simhash blocking).  Scores rounded to 6
+    the exact baseline; the LSH/IVF/PQ scale paths rescore their
+    candidates through the same ann.cosine_topk.  Scores rounded to 6
     decimals for cross-engine float stability; deterministic vec_id
     tie-break."""
-    from geojson_vt_rs_spark.operators.ann import ranked_topk
+    from geojson_vt_rs_spark.operators.ann import cosine_topk
 
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    qn = sum(float(v) * float(v) for v in query_vec) ** 0.5
-    dot = F.expr(
-        "aggregate(zip_with(emb, q, (a, b) -> a * b), 0D, (acc, v) -> acc + v)"
-    )
-    nrm = F.expr("sqrt(aggregate(transform(emb, a -> a * a), 0D, (acc, v) -> acc + v))")
-    d = (
-        docs_embeddings.select(
-            "vec_id",
-            F.expr("transform(embedding, v -> cast(v as double))").alias("emb"),
-        )
-        .withColumn("q", q)
-        .withColumn("cos", F.round(dot / (nrm * F.lit(qn)), 6))
-    )
-    return ranked_topk(d, "vec_id", k)
+    return cosine_topk(docs_embeddings, query_vec, k, "vec_id", "embedding")
 
 
 def duck_ann_topk_sql(query_vec: list, k: int = 20) -> str:
@@ -656,7 +581,7 @@ def duck_text_features_exprs() -> dict:
 # >= W + K - 1 is GUARANTEED to share a fingerprint, so the fingerprint
 # equi-join is a complete near-dup blocking — the rolling-hash member of
 # the dedup family (exact md5 / minhash / simhash / winnowing).
-# Everything is JVM SQL expressions with a byte-identical DuckDB twin.
+# A numpy kernel with a byte-identical DuckDB twin (duck_winnow_sql).
 
 WINNOW_K = 4  # tokens per gram (templates below hard-code 4 terms)
 WINNOW_W = 4  # grams per winnowing window
@@ -665,10 +590,12 @@ WINNOW_M = 2147483647  # modulus 2^31 - 1; every term is nonnegative
 
 
 def _winnow_batch(lo32: np.ndarray) -> np.ndarray:
-    """Byte-identical numpy twin of the with_winnow_fingerprints
-    slice/zip_with chain: step-wise % M polynomial grams, pairwise-min
-    window minima, sorted distinct.  Values stay within int64 at every
-    step (th < 2^32, B = 1009: th*B < 2^42; (M-1)*B + th < 2^42)."""
+    """Winnowed fingerprints of one document's lo-32 token hashes:
+    step-wise % M polynomial grams (equal to the oracle's flat
+    polynomial mod M, an integer identity), pairwise-min window minima,
+    sorted distinct.  Values stay within int64 at every step (th < 2^32,
+    B = 1009: th*B < 2^42; (M-1)*B + th < 2^42).  Fewer than 4 tokens:
+    one polynomial over all of them (0 for none)."""
     B, M = WINNOW_B, WINNOW_M
     a = lo32
     n = len(a)
@@ -692,124 +619,41 @@ def _winnow_batch(lo32: np.ndarray) -> np.ndarray:
     return np.unique(np.minimum(w2[:-2], w2[2:])).astype(np.int64)
 
 
-def with_winnow_fingerprints(docs: DataFrame, impl: str = "batch") -> DataFrame:
-    """Adds ``fingerprints`` (sorted distinct array<bigint>).
-
-    ``impl="batch"`` (default) runs the byte-identical numpy
-    mapInPandas kernel (_winnow_batch) — one md5 per DISTINCT token +
-    vectorized rolling folds, 3-6x the JVM expression chain on both the
-    oracle corpus and ~100KB documents.  ``impl="expr"`` keeps the pure
-    JVM slice/zip_with chain (the formulation the DuckDB oracle SQL
-    mirrors literally); outputs are byte-identical either way.
-
-    Grams and window minima are built from whole-array ``slice`` +
-    ``zip_with`` chains, NEVER ``element_at(col, i)`` inside a
-    per-element lambda: after projection collapse Catalyst substitutes
-    the backing array's full expression into each element access, so an
-    indexed formulation re-runs the token-hash transform once per
-    element — measured O(n^2) md5 per document (render hung).  The
-    chained form bounds re-evaluation at a small constant regardless of
-    how the optimizer collapses projections, and the step-wise ``% M``
-    equals the flat polynomial mod M exactly (integer identity).  All
-    slices are CASE-guarded in bounds, so the plan is ANSI-mode safe."""
-    if impl == "batch":
-        out_schema = T.StructType(
-            list(docs.schema.fields)
-            + [T.StructField("fingerprints", T.ArrayType(T.LongType()))]
-        )
-
-        def kernel(batches):
-            cache: dict = {}
-            for pdf in batches:
-                pdf = pdf.copy(deep=False)
-                pdf["fingerprints"] = [
-                    _winnow_batch(_batch_token_hashes(t, cache)[1])
-                    for t in pdf["text"]
-                ]
-                yield pdf
-
-        # same parallelism boundary as the expr path (spreads a
-        # single-file toy input across cores; the dedup join shuffles
-        # anyway)
-        return docs.repartition(F.col("doc_id")).mapInPandas(
-            kernel, schema=out_schema
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown impl: {impl!r}")
-    B, M = WINNOW_B, WINNOW_M
-    B2 = B * B
-    toks = "filter(split(trim(text), '\\\\s+'), w -> length(w) > 0)"
-    th = (
-        f"transform({toks}, "
-        "w -> cast(conv(substr(md5(w), 1, 8), 16, 10) as bigint))"
+def with_winnow_fingerprints(docs: DataFrame) -> DataFrame:
+    """Adds ``fingerprints`` (sorted distinct array<bigint>), from a
+    numpy mapInPandas kernel (_winnow_batch) — one md5 per DISTINCT
+    token + vectorized rolling folds."""
+    out_schema = T.StructType(
+        list(docs.schema.fields)
+        + [T.StructField("fingerprints", T.ArrayType(T.LongType()))]
     )
-    d = docs.withColumn("__th", F.expr(th)).withColumn(
-        "__n", F.expr("size(__th)")
+
+    def kernel(batches):
+        cache: dict = {}
+        for pdf in batches:
+            pdf = pdf.copy(deep=False)
+            pdf["fingerprints"] = [
+                _winnow_batch(_batch_token_hashes(t, cache)[1])
+                for t in pdf["text"]
+            ]
+            yield pdf
+
+    # spreads a single-file toy input across cores; the dedup join
+    # shuffles anyway
+    return docs.repartition(F.col("doc_id")).mapInPandas(
+        kernel, schema=out_schema
     )
-    # materialization boundary: the exchange pins __th (the only md5
-    # work) as a REAL column, so every downstream reference is an
-    # attribute read instead of a re-inlined hash transform when
-    # projections collapse.  Also spreads a single-file toy input across
-    # all cores; the dedup join shuffles anyway, so this adds one
-    # bounded exchange of the (smaller-than-text) hash arrays.
-    d = d.repartition(F.col("doc_id"))
-    roll = f"(a, b) -> (a * {B}L + b) % {M}L"
-    lmin = "(a, b) -> least(a, b)"
-    # gram chain nested SINGLE-REFERENCE (p2 appears once inside p3,
-    # p3 once inside gr): projection collapse then duplicates nothing
-    # exponentially.  The earlier multi-withColumn version collapsed to
-    # a 180 KB plan (4 textual copies of the whole chain) whose
-    # analysis+codegen dominated runtime; this one stays ~3 KB.
-    p2 = f"zip_with(slice(__th, 1, __n - 1), slice(__th, 2, __n - 1), {roll})"
-    p3 = f"zip_with(slice({p2}, 1, __n - 2), slice(__th, 3, __n - 2), {roll})"
-    gr = f"zip_with(slice({p3}, 1, __n - 3), slice(__th, 4, __n - 3), {roll})"
-    # min over each window of 4 grams = pairwise mins, then mins of the
-    # pair-mins 2 apart: fps(i) = min(w2(i), w2(i+2)), w2(i) = min(g_i, g_i+1);
-    # g = __n - 3 grams.  w2/gr each appear TWICE (two shifted slices of
-    # the same array) — 4 bounded copies of the cheap integer chain, the
-    # md5 transform stays behind the exchange.
-    w2 = (
-        f"zip_with(slice(__gr, 1, __n - 4), slice(__gr, 2, __n - 4), {lmin})"
-    )
-    fps = (
-        f"zip_with(slice(__w2, 1, __n - 6), slice(__w2, 3, __n - 6), {lmin})"
-    ).replace("__w2", w2).replace("__gr", gr)
-    small = (
-        "CASE "
-        f"WHEN __n = 3 THEN (element_at(__th, 1) * {B2}L"
-        f" + element_at(__th, 2) * {B}L + element_at(__th, 3)) % {M}L "
-        f"WHEN __n = 2 THEN (element_at(__th, 1) * {B}L"
-        f" + element_at(__th, 2)) % {M}L "
-        f"WHEN __n = 1 THEN element_at(__th, 1) % {M}L "
-        "ELSE 0L END"
-    )
-    fingerprints = (
-        # n >= 7: at least one full window of 4 grams; 4 <= n < 7: a
-        # single window over all (< 4) grams; n < 4: small-n polynomial.
-        # CASE keeps every slice length positive in its taken branch.
-        f"CASE WHEN __n >= 7 THEN {fps} "
-        f"WHEN __n >= 4 THEN array(array_min({gr})) "
-        f"ELSE array({small}) END"
-    )
-    return d.withColumn(
-        "fingerprints",
-        F.expr(f"array_sort(array_distinct({fingerprints}))"),
-    ).drop("__th", "__n")
 
 
-def winnow_fingerprint_rows(docs: DataFrame, impl: str = "batch") -> DataFrame:
+def winnow_fingerprint_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, fp) rows — each doc's distinct winnowed fingerprints.
 
-    explode_outer, NOT explode: a plain explode makes Catalyst infer a
-    ``size(fingerprints) > 0`` filter and push it below the exchange,
-    re-evaluating the ENTIRE fingerprint chain (md5 included) as a
-    scan-side row filter — measured 4s -> 16s.  Fingerprint arrays are
-    never empty (every branch yields >= 1 element), so the outer
-    variant is row-identical; the null guard keeps the contract exact
-    for null-text rows and cannot be pushed below the Generate (it
-    references the generated column)."""
+    explode_outer + not-null filter, NOT explode: a plain explode makes
+    Catalyst infer a ``size(fingerprints) > 0`` filter and push it below
+    the exchange.  Fingerprint arrays are never empty (every branch
+    yields >= 1 element), so the rows are those of explode."""
     return (
-        with_winnow_fingerprints(docs, impl=impl)
+        with_winnow_fingerprints(docs)
         .select("doc_id", F.explode_outer("fingerprints").alias("fp"))
         .filter(F.col("fp").isNotNull())
     )

@@ -765,7 +765,7 @@ def _fused_group_to_features(grp: pd.DataFrame) -> list:
 
 
 def _render_rows_to_features(sub: pd.DataFrame) -> list:
-    """RENDER_SCHEMA rows (already sorted) -> canonical tile features."""
+    """Sorted RS_RENDER rows -> canonical tile features."""
     feats = []
     for r in sub.itertuples(index=False):
         feats.append(

@@ -196,13 +196,23 @@ def test_winnow_guarantee_and_edges(spark):
 
 
 def test_batch_hash_kernels_match_expr(spark):
-    """The numpy mapInPandas twins of the simhash / winnow JVM expression
-    chains must be BYTE-IDENTICAL on a corpus spanning every length
-    branch (0..8 tokens) plus long documents (5k-40k tokens) where the
-    interpreted HOF folds are the expr path's known ceiling."""
+    """The simhash / minhash / winnowing kernels against their DuckDB
+    SQL twins (the expression formulation of the same math), on a
+    corpus spanning every winnow length branch (0..8 tokens), whitespace
+    edge cases, non-ASCII whitespace, trailing-NUL tokens, vertical tab,
+    null text, and long documents (5k-40k tokens).  The one shape DuckDB
+    does not share is pinned to the value Spark SQL gives: the minhashes
+    of NULL text."""
     import random
 
+    import duckdb
+    import pandas as pd
+
     from geojson_vt_rs_spark.operators.text_dedup import (
+        duck_minhash_ctes,
+        duck_simhash_sql,
+        duck_winnow_sql,
+        with_minhashes,
         with_simhash,
         with_winnow_fingerprints,
     )
@@ -213,14 +223,14 @@ def test_batch_hash_kernels_match_expr(spark):
     def doc(n):
         return " ".join(rng.choice(vocab) for _ in range(n))
 
-    texts = [doc(n) for n in range(0, 9)]  # every small-n CASE branch
+    texts = [doc(n) for n in range(0, 9)]  # every small-n winnow branch
     texts += ["", "  ", "\t\n  foo\tbar\nbaz  "]  # whitespace edge cases
     # non-ASCII whitespace (NBSP, EM SPACE, NEL, IDEOGRAPHIC SPACE) must
     # stay INSIDE tokens: Java \s+ is ASCII-only, and Python str.split()
     # would silently split here (ADVICE r4 regression corpus)
     texts += [
-        "foo bar baz qux",
-        "ab　c ab　c end",
+        "foo bar baz qux",
+        "ab　c ab　c end",
     ]
     # trailing-NUL token: numpy fixed-width unicode strips trailing
     # NULs on round-trip, so an unprotected np.unique gather would
@@ -234,87 +244,100 @@ def test_batch_hash_kernels_match_expr(spark):
     long_docs.append(long_docs[0][:1000] + " " + shared + " " + doc(3000))
     long_docs.append(doc(2500) + " " + shared)
     texts += long_docs
-    texts.append(None)  # null text row: both paths must agree
+    texts.append(None)  # null text row
+    null_id = len(texts) - 1
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pd.DataFrame({"doc_id": list(range(len(texts))), "text": texts}),
+    )
 
-    sim_e = {
+    sim = {
         r.doc_id: r.simhash
-        for r in with_simhash(docs, impl="expr")
-        .select("doc_id", "simhash")
-        .collect()
+        for r in with_simhash(docs).select("doc_id", "simhash").collect()
     }
-    sim_b = {
-        r.doc_id: r.simhash
-        for r in with_simhash(docs, impl="batch")
-        .select("doc_id", "simhash")
-        .collect()
-    }
-    assert sim_e == sim_b
+    assert sim == dict(con.execute(duck_simhash_sql()).fetchall())
 
-    from geojson_vt_rs_spark.operators.text_dedup import with_minhashes
-
-    mh_e = {
-        r.doc_id: list(r.mhs)
-        for r in with_minhashes(docs, impl="expr").collect()
+    mh = {r.doc_id: list(r.mhs) for r in with_minhashes(docs).collect()}
+    cols = ", ".join(f"mh{p}" for p in range(8))
+    want_mh = {
+        d: list(v)
+        for d, v in con.execute(
+            f"WITH {duck_minhash_ctes()} SELECT doc_id, [{cols}] FROM mh"
+        ).fetchall()
     }
-    mh_b = {
-        r.doc_id: list(r.mhs)
-        for r in with_minhashes(docs, impl="batch").collect()
-    }
-    assert mh_e == mh_b
+    # pinned: Spark's concat('x', NULL) is NULL, so all 8 minhashes of
+    # NULL text are NULL; DuckDB's concat skips the NULL and hashes 'x'
+    assert mh.pop(null_id) == [None] * 8
+    want_mh.pop(null_id)
+    assert mh == want_mh
 
-    fp_e = {
+    fp = {
         r.doc_id: list(r.fingerprints)
-        for r in with_winnow_fingerprints(docs, impl="expr")
+        for r in with_winnow_fingerprints(docs)
         .select("doc_id", "fingerprints")
         .collect()
     }
-    fp_b = {
-        r.doc_id: list(r.fingerprints)
-        for r in with_winnow_fingerprints(docs, impl="batch")
-        .select("doc_id", "fingerprints")
-        .collect()
-    }
-    assert fp_e == fp_b
+    want_fp: dict = {}
+    for d, f in con.execute(duck_winnow_sql()).fetchall():
+        want_fp.setdefault(d, []).append(f)
+    assert fp == {d: sorted(v) for d, v in want_fp.items()}
     # the shared run produced at least one common fingerprint
     a, b = len(texts) - 3, len(texts) - 2  # the two planted-run docs
-    assert set(fp_b[a]) & set(fp_b[b])
+    assert set(fp[a]) & set(fp[b])
 
 
 def test_lsh_bucket_batch_matches_expr(spark):
-    """The numpy LSH-bucket kernel must reproduce the SQL fold's bucket
-    ids BIT-identically — it loops over dims (vectorizing over rows) so
-    every row's accumulator sees the same float64 addition order; a
-    matmul formulation would reorder and can flip borderline signs."""
-    from geojson_vt_rs_spark.operators.ann import with_lsh_bucket
+    """The numpy LSH-bucket kernel must reproduce the DuckDB twin's
+    list_sum fold bucket ids BIT-identically — it loops over dims
+    (vectorizing over rows) so every row's accumulator sees the same
+    float64 addition order; a matmul formulation would reorder and can
+    flip borderline signs."""
+    import duckdb
+
+    from geojson_vt_rs_spark.operators.ann import (
+        duck_lsh_bucket,
+        with_lsh_bucket,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     dim = len(emb.select("embedding").head()[0])
-    e = {
+    got = {
         r.vec_id: r.bucket
         for r in with_lsh_bucket(emb, dim, 16).select(
             "vec_id", "bucket"
         ).collect()
     }
-    b = {
-        r.vec_id: r.bucket
-        for r in with_lsh_bucket(emb, dim, 16, impl="batch").select(
-            "vec_id", "bucket"
-        ).collect()
-    }
-    assert e == b and len(e) > 0
+    want = dict(
+        duckdb.connect().execute(
+            "SELECT vec_id, CAST("
+            + duck_lsh_bucket("embedding::DOUBLE[]", dim, 16)
+            + f" AS BIGINT) FROM read_parquet('{SF}/embeddings.parquet')"
+        ).fetchall()
+    )
+    assert got == want and len(got) > 0
 
 
 def test_lsh_bucket_batch_null_and_nan(spark):
-    """Off-happy-path parity of the batch kernel with the expr path
-    (ADVICE r4): a NULL embedding row folds to bucket 0 (each per-bit
-    CASE's null condition falls to its ELSE 0 — verified against the
-    live expr plan; the old kernel crashed the executor), and a NaN in
-    the vector sets the affected bits the same way Spark's NaN ordering
-    does (`NaN > 0D` is TRUE in Spark, False in numpy)."""
-    from geojson_vt_rs_spark.operators.ann import with_lsh_bucket
+    """Off-happy-path buckets.  Plain, NULL and all-zero vectors match
+    the DuckDB twin.  Two shapes follow Spark SQL semantics that DuckDB
+    does not share, so they are pinned to the values of the SQL fold
+    (zip_with/aggregate + CASE WHEN dot > 0D): a NaN in the vector SETS
+    every bit whose fold saw it (`NaN > 0D` is TRUE in Spark; DuckDB
+    gives 18 here), and a NULL ELEMENT gives a NULL fold -> bucket 0
+    (DuckDB's list_sum skips the NULL and gives 218).  Arrow delivers a
+    null element to pandas as NaN, so the kernel must sanitize it
+    JVM-side rather than guess from the NaN."""
+    import duckdb
+    import pandas as pd
+
+    from geojson_vt_rs_spark.operators.ann import (
+        duck_lsh_bucket,
+        with_lsh_bucket,
+    )
 
     dim = 4
     rows = [
@@ -322,27 +345,33 @@ def test_lsh_bucket_batch_null_and_nan(spark):
         (1, None),
         (2, [float("nan"), 1.0, 1.0, 1.0]),
         (3, [0.0, 0.0, 0.0, 0.0]),
-        # element-level null: Arrow delivers it to pandas as NaN
-        # (indistinguishable from row 2's true NaN), but the expr fold
-        # yields NULL -> CASE ELSE -> bucket 0 — the kernel must
-        # sanitize these JVM-side, not guess from the NaN
         (4, [1.0, None, 1.0, 1.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {}
-    for impl in ("expr", "batch"):
-        got[impl] = {
-            r.vec_id: r.bucket
-            for r in with_lsh_bucket(emb, dim, bits=8, impl=impl)
-            .select("vec_id", "bucket")
-            .collect()
-        }
-    assert got["expr"] == got["batch"]
-    assert got["batch"][1] == 0  # null embedding -> CASE ELSE 0 per bit
-    # NaN accumulator compares greater-than-zero under Spark semantics:
-    # every bit whose fold saw the NaN is set
-    assert got["batch"][2] == 255
-    assert got["batch"][4] == 0  # null ELEMENT -> null fold -> bucket 0
+    got = {
+        r.vec_id: r.bucket
+        for r in with_lsh_bucket(emb, dim, bits=8)
+        .select("vec_id", "bucket")
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "e",
+        pd.DataFrame(
+            {"vec_id": [i for i, _ in rows], "embedding": [v for _, v in rows]}
+        ),
+    )
+    want = dict(
+        con.execute(
+            "SELECT vec_id, CAST("
+            + duck_lsh_bucket("embedding::DOUBLE[]", dim, 8)
+            + " AS BIGINT) FROM e WHERE vec_id IN (0, 1, 3)"
+        ).fetchall()
+    )
+    assert {i: got[i] for i in (0, 1, 3)} == want
+    assert got[1] == 0  # null embedding -> every bit test fails
+    assert got[2] == 255  # pinned: NaN accumulator > 0D under Spark
+    assert got[4] == 0  # pinned: null ELEMENT -> null fold -> bucket 0
 
 
 def test_dedup_clusters_crafted_graph(spark):
@@ -396,10 +425,12 @@ def test_dedup_clusters_long_chain(spark):
 def test_pq_topk_recall(spark):
     """PQ/ADC candidates must recover most of the exact top-k, and the
     codes must spread across the codebook (quantizer actually quantizes)."""
+    import numpy as np
+
     from geojson_vt_rs_spark.operators.ann import (
         pq_codebooks,
+        pq_codes,
         pq_topk,
-        with_pq_codes,
     )
     from geojson_vt_rs_spark.operators.text_dedup import ann_topk
 
@@ -414,16 +445,47 @@ def test_pq_topk_recall(spark):
     approx = {r["vec_id"] for r in pq_topk(emb, qv, cb, k=10, rescore=40).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"PQ recall too low: {recall}"
-    codes = with_pq_codes(emb, cb).groupBy("__pq0").count().collect()
-    assert len(codes) > 4  # subspace 0 uses a spread of codewords
+    vecs = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
+    codes = pq_codes(vecs, cb)
+    assert len(set(codes[:, 0])) > 4  # subspace 0 uses a spread of codewords
+
+
+def _embeddings_view(rows):
+    """DuckDB connection with an ``embeddings`` view over (vec_id,
+    embedding) rows — embedding FLOAT[] like the parquet tables."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register(
+        "emb_rows",
+        pd.DataFrame(
+            {"vec_id": [i for i, _ in rows], "embedding": [v for _, v in rows]}
+        ),
+    )
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT vec_id::BIGINT AS vec_id, "
+        "embedding::FLOAT[] AS embedding FROM emb_rows"
+    )
+    return con
 
 
 def test_pq_topk_batch_matches_expr(spark):
-    """The default numpy ADC kernel must be BYTE-identical to the pure
-    JVM expr formulation (the oracle shape) — full row set, both the cut
-    ordering keys and the final scores, plus NaN/negative-zero hostile
-    vectors exercising the tie and NaN-ordering rules."""
-    from geojson_vt_rs_spark.operators.ann import pq_codebooks, pq_topk
+    """The numpy ADC kernel against the DuckDB twin (the expression
+    formulation the codes and ADC sums are defined by): the full top-k
+    on the real table, then codes+adist of hostile vectors exercising
+    the tie and NaN-ordering rules — NaN lanes (sort AFTER reals in the
+    argmin), an exact-duplicate codeword row (argmin takes the smaller
+    index), negative zeros, a NULL vector, and short/long ragged rows."""
+    import duckdb
+
+    from geojson_vt_rs_spark.operators.ann import (
+        duck_pq_adist_ctes,
+        duck_pq_topk_sql,
+        pq_adc_scored,
+        pq_codebooks,
+        pq_topk,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     rows = sorted(
@@ -432,15 +494,13 @@ def test_pq_topk_batch_matches_expr(spark):
     )
     cb = pq_codebooks(rows)
     qv = list(next(v for i, v in rows if i == 0))
-    a = pq_topk(emb, qv, cb, k=10, rescore=40, impl="batch").collect()
-    b = pq_topk(emb, qv, cb, k=10, rescore=40, impl="expr").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-
-    # hostile shapes at the scored stage (the impl fork): NaN lanes
-    # (sort AFTER reals in the argmin), exact-tie vectors (argmin must
-    # take the smaller codeword index), negative zeros (a -0.0 norm
-    # would divide-by-zero the shared rescore, so compare codes+adist)
-    from geojson_vt_rs_spark.operators.ann import pq_adc_scored
+    got = [tuple(r) for r in pq_topk(emb, qv, cb, k=10, rescore=40).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF}/embeddings.parquet')"
+    )
+    assert got == con.execute(duck_pq_topk_sql(k=10, rescore=40)).fetchall()
 
     base = rows[0][1]
     hostile = [
@@ -449,7 +509,7 @@ def test_pq_topk_batch_matches_expr(spark):
         (102, list(base)),  # exact duplicate of codeword row 0
         (103, [-0.0] * 64),
         (104, [v + 1e-7 for v in base]),
-        (105, None),  # NULL vector: expr ties every code to j=0
+        (105, None),  # NULL vector: every code ties to j=0
         (106, base[:60]),       # short: partial subspace ties to j=0
         (107, list(base) + [0.25] * 6),  # long: slices never pass dim
     ]
@@ -460,21 +520,35 @@ def test_pq_topk_batch_matches_expr(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    ha = sorted(
+    got = sorted(
         (r["vec_id"], r["adist"])
-        for r in pq_adc_scored(hdf, qv, cb, impl="batch").collect()
+        for r in pq_adc_scored(hdf, qv, cb).collect()
     )
-    hb = sorted(
-        (r["vec_id"], r["adist"])
-        for r in pq_adc_scored(hdf, qv, cb, impl="expr").collect()
-    )
-    assert ha == hb
+    # the codebook rows + query row the oracle derives from, + hostile
+    hcon = _embeddings_view(rows + hostile)
+    want = hcon.execute(
+        f"WITH {duck_pq_adist_ctes()} SELECT id, adist FROM adist "
+        "WHERE id >= 100 ORDER BY id"
+    ).fetchall()
+    assert got == want
 
 
 def test_ivf_topk_batch_matches_expr(spark):
-    """The default numpy IVF member kernel must be BYTE-identical to the
-    expr formulation, incl. NaN lanes and exact-tie vectors."""
-    from geojson_vt_rs_spark.operators.ann import ivf_topk
+    """The numpy IVF member kernel against the DuckDB twin: the real
+    table, then the real centroid rows plus exact-tie vectors (an exact
+    duplicate of the query, a 1e-7 perturbation, a copy of another
+    centroid).  NaN, NULL and ragged vectors follow Spark SQL semantics
+    DuckDB does not share (NaN/NULL cosines rank differently in
+    ranked_topk than in DuckDB's window, and DuckDB's list_sum skips the
+    NULLs zip_with pads ragged rows with), so their top-k and cells are
+    pinned to the values of the pure-SQL formulation."""
+    import duckdb
+
+    from geojson_vt_rs_spark.operators.ann import (
+        duck_ivf_topk_sql,
+        ivf_topk,
+        with_ivf_cell,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     rows = emb.filter("vec_id < 16").collect()
@@ -482,18 +556,37 @@ def test_ivf_topk_batch_matches_expr(spark):
         (int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in rows
     )
     qv = list(next(v for i, v in cents if i == 0))
-    a = ivf_topk(emb, qv, cents, k=10, n_probe=2, impl="batch").collect()
-    b = ivf_topk(emb, qv, cents, k=10, n_probe=2, impl="expr").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
+    got = [tuple(r) for r in ivf_topk(emb, qv, cents, k=10, n_probe=2).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF}/embeddings.parquet')"
+    )
+    assert got == con.execute(duck_ivf_topk_sql(16, k=10, n_probe=2)).fetchall()
 
     base = cents[0][1]
+    ties = [
+        (202, list(base)),
+        (203, [v + 1e-7 for v in base]),
+        (204, list(cents[5][1])),
+    ]
+    tdf = spark.createDataFrame(
+        [(i, [float(v) for v in vec]) for i, vec in cents + ties],
+        "vec_id long, embedding array<float>",
+    )
+    got = [tuple(r) for r in ivf_topk(tdf, qv, cents, k=10, n_probe=2).collect()]
+    want = _embeddings_view(cents + ties).execute(
+        duck_ivf_topk_sql(16, k=10, n_probe=2)
+    ).fetchall()
+    assert got == want
+
     hostile = [
         (200, [float("nan")] * 64),
         (201, base[:8] + [float("nan")] * 56),
         (202, list(base)),
         (203, [v + 1e-7 for v in base]),
         (204, list(cents[5][1])),
-        (205, None),  # NULL vector: expr cell falls to the first cid
+        (205, None),  # NULL vector: cell falls to the first cid
         (206, base[:60]),       # short: every dot NULL -> first cid
         (207, list(base) + [0.25] * 6),  # long: centroid side pads NULL
     ]
@@ -504,34 +597,51 @@ def test_ivf_topk_batch_matches_expr(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    ha = ivf_topk(hdf, qv, cents, k=5, n_probe=2, impl="batch").collect()
-    hb = ivf_topk(hdf, qv, cents, k=5, n_probe=2, impl="expr").collect()
+    got = ivf_topk(hdf, qv, cents, k=5, n_probe=2).collect()
     # repr-compare: NaN cos values (NaN embeddings) must match positionally
-    assert [tuple(map(repr, r)) for r in ha] == [
-        tuple(map(repr, r)) for r in hb
+    assert [tuple(map(repr, r)) for r in got] == [
+        ("205", "1", "None"),
+        ("202", "2", "1.0"),
+        ("203", "3", "1.0"),
+        ("200", "4", "nan"),
+        ("201", "5", "nan"),
+    ]
+    cells = sorted(
+        (r.vec_id, r.ivf_cell)
+        for r in with_ivf_cell(hdf, cents).select("vec_id", "ivf_cell").collect()
+    )
+    assert cells == [
+        (200, 0), (201, 0), (202, 0), (203, 0),
+        (204, 5), (205, 0), (206, 0), (207, 0),
     ]
 
 
 def test_semantic_dedup_batch_matches_expr(spark):
-    """The default per-cell numpy pair kernel must equal the pure-JVM
+    """The per-cell numpy pair kernel must equal the DuckDB twin's
     equi-join formulation exactly (full output set)."""
-    from geojson_vt_rs_spark.operators.ann import semantic_dedup
+    import duckdb
+
+    from geojson_vt_rs_spark.operators.ann import (
+        duck_semantic_dedup_sql,
+        semantic_dedup,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     rows = emb.filter("vec_id < 16").collect()
     cents = sorted(
         (int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in rows
     )
-    key = lambda r: (r["vec_id"], r["ivf_cell"])  # noqa: E731
-    a = sorted(
+    got = sorted(
         (r["vec_id"], r["ivf_cell"], r["n_dups"], r["max_cos"])
-        for r in semantic_dedup(emb, cents, 0.3, impl="batch").collect()
+        for r in semantic_dedup(emb, cents, 0.3).collect()
     )
-    b = sorted(
-        (r["vec_id"], r["ivf_cell"], r["n_dups"], r["max_cos"])
-        for r in semantic_dedup(emb, cents, 0.3, impl="expr").collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF}/embeddings.parquet')"
     )
-    assert a == b and len(a) > 0
+    want = sorted(con.execute(duck_semantic_dedup_sql(16, 0.3)).fetchall())
+    assert got == want and len(got) > 0
 
 
 def test_semantic_dedup_matches_bruteforce(spark):

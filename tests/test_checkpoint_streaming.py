@@ -25,9 +25,50 @@ def load_corpus(spark, corpus):
         from conftest import fixture_path
 
         return read_geojson_features(spark, fixture_path("us-states.json"))
+    if corpus == "empty_children":
+        return empty_children_corpus(spark)
     from geojson_vt_rs_spark.sources.synth_features import generate_features
 
     return generate_features(spark, 300, partitions=4)
+
+
+def empty_children_corpus(spark):
+    """A corpus whose level 1 (at index_max_points=200, fuse_max_points=1)
+    splits one tile but emits NO child rows, so the level's manifest has
+    n_children == 0 and four pending (empty) children.
+
+    A zigzag line lives only in the outer buffer ring of z1 tile (0, 0):
+    inside that tile's clip band (world x <= 0.5 + 1/128) but outside
+    every child band (x <= 0.5 + 1/256).  Clipped to the band, each
+    inside vertex gains two intersection points, so the ring tile holds
+    ~240 points and splits while the neighbour tile (1, 0), holding the
+    unclipped 160-point line, stays a leaf.  A 60-point cluster in tile
+    (1, 1) lifts the root above index_max_points."""
+    import json
+    import math
+
+    def lonlat(x, y):
+        lat = math.atan(math.sinh(math.pi * (1 - 2 * y)))
+        return [(x - 0.5) * 360.0, math.degrees(lat)]
+
+    zig = [
+        lonlat(0.505 if i % 2 == 0 else 0.510, 0.1 + 0.3 * i / 159)
+        for i in range(160)
+    ]
+    cluster = [
+        lonlat(0.75 + 0.001 * (i % 8), 0.75 + 0.001 * (i // 8))
+        for i in range(60)
+    ]
+    fc = {
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature", "properties": {"name": "zigzag"},
+             "geometry": {"type": "LineString", "coordinates": zig}},
+            {"type": "Feature", "properties": {"name": "cluster"},
+             "geometry": {"type": "MultiPoint", "coordinates": cluster}},
+        ],
+    }
+    return read_geojson_features(spark, json.dumps(fc))
 
 
 def core_total(spark, feats, opts):
@@ -261,13 +302,18 @@ def test_streaming_replay_idempotent(spark, tmp_path):
     assert again == 200
 
 
-@pytest.mark.parametrize("corpus", CORPORA)
+@pytest.mark.parametrize("corpus", CORPORA + ["empty_children"])
 def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     """Kill-and-resume with NO reader-side dedupe: simulate both crash
     windows of the level commit protocol — (a) after publish, before
     manifest (level dir exists, manifest missing) and (b) mid-staging
     (orphan staging dir) — the resumed store must hold zero duplicate
-    (z,x,y,feature_idx) keys and byte-identical content."""
+    (z,x,y,feature_idx) keys and byte-identical content.
+
+    ``empty_children``: the level before the last records only empty
+    pending children (n_children == 0), so the resume takes the
+    no-frontier branch; its manifests and every read_tile must equal
+    the uninterrupted build's."""
     import pyspark.sql.functions as F
 
     out = str(tmp_path / "pyr_xonce")
@@ -306,6 +352,27 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     base = snapshot()
     assert_no_dupes(base)
 
+    def manifests():
+        return [
+            {k: v for k, v in m.items() if k not in ("wall_sec", "steal_frac")}
+            for m in cp.summary(out)["manifests"]
+        ]
+
+    def tiles_by_key():
+        keys = (
+            spark.read.parquet(os.path.join(out, "tiles"))
+            .select("z", "x", "y").distinct().collect()
+        )
+        return {
+            (k.z, k.x, k.y): cp.read_tile(out, k.z, k.x, k.y).toPandas()
+            for k in keys
+        }
+
+    if corpus == "empty_children":
+        m_prev = s1["manifests"][-2]
+        assert m_prev["n_children"] == 0 and m_prev["pending_children"]
+        base_manifests, base_tiles = manifests(), tiles_by_key()
+
     # (a) crash after publish, before manifest: kill the LAST level's
     # manifest but leave its published dir in place
     last = s1["levels"] - 1
@@ -323,6 +390,12 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     assert_no_dupes(resumed)
     assert base.equals(resumed)
     assert not os.path.exists(stg)
+    if corpus == "empty_children":
+        assert manifests() == base_manifests
+        got = tiles_by_key()
+        assert got.keys() == base_tiles.keys()
+        for k, tile in base_tiles.items():
+            assert got[k].equals(tile), k
 
 
 def test_streaming_stateful_dedupe(spark, tmp_path):

@@ -78,19 +78,30 @@ def test_kmeans_real_table_three_way(spark):
 
 
 def test_kmeans_batch_matches_expr(spark):
-    """The default numpy per-round kernel must equal the pure-JVM expr
-    formulation exactly (same centroids every round => same final
-    stats), incl. the empty-cluster and tie shapes."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = {
+    """The numpy per-round kernel must equal the DuckDB twin's unrolled
+    expression formulation exactly (same centroids every round => same
+    final stats) on the 10x larger sf0.01 table, with more clusters and
+    rounds than the kmeans_clusters query, over a repartitioned input."""
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet").repartition(5)
+    got = {
         r["cluster"]: (r["n_members"], r["wss"], r["centroid_checksum"])
-        for r in kmeans_cluster_stats(emb, impl="batch").collect()
+        for r in kmeans_cluster_stats(
+            emb, n_clusters=12, iterations=4
+        ).collect()
     }
-    b = {
-        r["cluster"]: (r["n_members"], r["wss"], r["centroid_checksum"])
-        for r in kmeans_cluster_stats(emb, impl="expr").collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf}/embeddings.parquet')"
+    )
+    want = {
+        int(k): (int(n), int(w), int(c))
+        for k, n, w, c in con.execute(
+            duck_kmeans_sql(n_clusters=12, iterations=4)
+        ).fetchall()
     }
-    assert a == b
+    assert got == want and len(got) > 1
 
 
 def test_kmeans_empty_cluster_keeps_centroid(spark):

@@ -1,10 +1,10 @@
 """LM bigram-perplexity scoring: cross-engine exactness + semantics.
 
 Three-way contract (the bm25/kmeans pattern): Spark batch kernel ==
-Spark JVM expr path == DuckDB oracle == plain-Python reference, on a
-corpus that includes every shape that has burned a kernel before
-(non-ASCII whitespace, \\x0b separator, null/empty/1-token text,
-trailing-NUL tokens, a repetitive long doc).
+DuckDB oracle == plain-Python reference, on a corpus that includes
+every shape that has burned a kernel before (non-ASCII whitespace,
+\\x0b separator, null/empty/1-token text, trailing-NUL tokens, a
+repetitive long doc).
 """
 
 import duckdb
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from geojson_vt_rs_spark.operators.lm import (
     bigram_hist,
-    bigram_hist_batch,
+    duck_bigram_hist_ctes,
     duck_lm_perplexity_sql,
     lm_perplexity_topk,
     python_lm_perplexity,
@@ -43,27 +43,34 @@ def docs(spark):
     ).persist()
 
 
+def _duck(docs):
+    con = duckdb.connect()
+    con.register("documents_v", docs.toPandas())
+    con.execute("CREATE VIEW documents AS SELECT * FROM documents_v")
+    return con
+
+
 def test_hist_batch_matches_expr(spark, docs):
+    """The histogram kernel == the DuckDB twin's expression formulation
+    (duck_bigram_hist_ctes) on every hostile shape of ROWS."""
     def key(r):
         return (r["doc_id"], r["lang"], r["b1"], r["b2"], r["c"])
 
-    batch = sorted(map(key, bigram_hist_batch(docs).collect()))
-    expr = sorted(map(key, bigram_hist(docs).collect()))
-    assert batch == expr and len(batch) > 0
-    # null/empty/whitespace/1-token docs emit nothing on either path
+    batch = sorted(map(key, bigram_hist(docs).collect()))
+    want = sorted(
+        _duck(docs).execute(
+            f"WITH {duck_bigram_hist_ctes()} SELECT * FROM hist"
+        ).fetchall()
+    )
+    assert batch == want and len(batch) > 0
+    # null/empty/whitespace/1-token docs emit nothing
     assert not any(r[0] in (6, 7, 8, 9) for r in batch)
 
 
 def test_topk_three_way(spark, docs):
     got_b = [tuple(r) for r in lm_perplexity_topk(docs, k=50).collect()]
-    got_e = [
-        tuple(r) for r in lm_perplexity_topk(docs, k=50, impl="expr").collect()
-    ]
-    assert got_b == got_e
 
-    con = duckdb.connect()
-    con.register("documents_v", docs.toPandas())
-    con.execute("CREATE VIEW documents AS SELECT * FROM documents_v")
+    con = _duck(docs)
     want_sql = con.execute(duck_lm_perplexity_sql(k=50)).fetchall()
     assert got_b == [tuple(r) for r in want_sql]
 

@@ -175,7 +175,6 @@ def test_importance_topk_prefers_target_vocab(spark):
         bucket_weights,
         doc_bucket_hist,
         importance_topk,
-        token_buckets,
     )
 
     rows = []
@@ -197,7 +196,7 @@ def test_importance_topk_prefers_target_vocab(spark):
     assert all(scores[i] < SCALE for i in range(1, 40, 2))
 
     # weight table is bounded by the vocab hash range
-    wt = bucket_weights(doc_bucket_hist(token_buckets(docs, "lang = 'en'")))
+    wt = bucket_weights(doc_bucket_hist(docs, "lang = 'en'"))
     assert wt.count() <= V_BUCKETS
 
     # partitioning invariance
@@ -208,17 +207,20 @@ def test_importance_topk_prefers_target_vocab(spark):
 
 
 def test_importance_hist_batch_matches_expr(spark):
-    """The mapInPandas histogram kernel is byte-identical to the
-    explode+groupBy expr path on every shape that has burned a batch
-    kernel before: non-ASCII whitespace (NBSP/ideographic space are
-    TOKEN chars, \\x0b IS a separator), null/empty/whitespace-only text
-    (no rows emitted), trailing-NUL tokens (the np.unique sentinel),
-    and a highly repetitive doc (the distinct-token gather)."""
+    """The mapInPandas histogram kernel is byte-identical to the DuckDB
+    twin's unnest+GROUP BY expression formulation (and the top-k to the
+    oracle) on every shape that has burned a batch kernel before:
+    non-ASCII whitespace (NBSP/ideographic space are TOKEN chars, \\x0b
+    IS a separator), null/empty/whitespace-only text (no rows emitted),
+    trailing-NUL tokens (the np.unique sentinel), and a highly
+    repetitive doc (the distinct-token gather)."""
+    import duckdb
+
     from geojson_vt_rs_spark.operators.importance import (
         doc_bucket_hist,
-        doc_bucket_hist_batch,
+        duck_importance_topk_sql,
+        duck_token_bucket_ctes,
         importance_topk,
-        token_buckets,
     )
 
     rows = [
@@ -238,17 +240,23 @@ def test_importance_hist_batch_matches_expr(spark):
     def key(r):
         return (r["doc_id"], r["lang"], r["t"], r["b"], r["c"])
 
-    batch = sorted(map(key, doc_bucket_hist_batch(docs, pred).collect()))
-    expr = sorted(
-        map(key, doc_bucket_hist(token_buckets(docs, pred)).collect())
+    batch = sorted(map(key, doc_bucket_hist(docs, pred).collect()))
+    con = duckdb.connect()
+    con.register("documents_v", docs.toPandas())
+    con.execute("CREATE VIEW documents AS SELECT * FROM documents_v")
+    want = sorted(
+        con.execute(
+            f"WITH {duck_token_bucket_ctes(pred)} SELECT doc_id, lang, t, "
+            "b, CAST(count(*) AS BIGINT) FROM tk GROUP BY ALL"
+        ).fetchall()
     )
-    assert batch == expr and len(batch) > 0
-    # docs 3/4/5 emit no histogram rows on either path
+    assert batch == want and len(batch) > 0
+    # docs 3/4/5 emit no histogram rows
     assert not any(r[0] in (3, 4, 5) for r in batch)
 
-    t_b = importance_topk(docs, pred, k=9, impl="batch").collect()
-    t_e = importance_topk(docs, pred, k=9, impl="expr").collect()
-    assert [tuple(r) for r in t_b] == [tuple(r) for r in t_e]
+    t_b = importance_topk(docs, pred, k=9).collect()
+    t_o = con.execute(duck_importance_topk_sql(pred, k=9)).fetchall()
+    assert [tuple(r) for r in t_b] == [tuple(r) for r in t_o]
 
 
 def test_pack_to_budget_keeps_null_group(spark):

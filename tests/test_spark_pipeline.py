@@ -118,9 +118,9 @@ def test_feature_schema_parquet_roundtrip(spark, tmp_path):
 
 
 def test_nofuse_split_path_tilewise_exact(spark):
-    """fuse_max_points=1 forces EVERY level through split_stage (including
-    its columnar bbox pass-through fast path) — all 105 tiles of the
-    us-states imz=7/imp=200 corpus must match the local tiler exactly."""
+    """fuse_max_points=1 forces EVERY level through render_split_stage
+    (including its columnar bbox pass-through fast path) — all 105 tiles
+    of the us-states imz=7/imp=200 corpus must match the local tiler exactly."""
     from geojson_vt_rs_spark.config import Options
     from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
     from geojson_vt_rs_spark.operators.pipeline import read_geojson_features

@@ -50,8 +50,8 @@ AUDITS = {
         ("TakeOrderedAndProject", "distributed top-k over the pruned bucket"),
         ("!Window", "no WindowExec"),
         ("MapInPandas",
-         "LSH buckets are the r5 byte-identical numpy kernel (r6 default "
-         "here too: drops the inlined-hyperplane plan; expr twin kept)"),
+         "LSH buckets come from the numpy kernel (its only "
+         "implementation; no inlined-hyperplane plan)"),
         ("!BatchEvalPython",
          "no row-at-a-time Python UDF — Arrow batches only"),
     ],
@@ -60,9 +60,8 @@ AUDITS = {
         ("!Window", "no WindowExec"),
         ("MapInPandas",
          "IVF cell assignment + probe filter are ONE numpy Arrow pass "
-         "(r6: the inlined-centroid expr chain was a 30 KB plan "
-         "dominated by analysis+codegen; expr twin kept, byte-equality "
-         "asserted)"),
+         "(an inlined-centroid expression chain was a 30 KB plan "
+         "dominated by analysis+codegen)"),
         ("!BatchEvalPython",
          "no row-at-a-time Python UDF — Arrow batches only"),
     ],
@@ -74,9 +73,9 @@ AUDITS = {
          "+ Local/GlobalLimit) must not green-light this section again"),
         ("!Window", "no WindowExec"),
         ("MapInPandas",
-         "PQ codes + ADC lookups are ONE numpy Arrow pass (r6: the "
-         "inlined-literal expr chain was an 80 KB plan dominated by "
-         "analysis+codegen; expr twin kept, byte-equality asserted)"),
+         "PQ codes + ADC lookups are ONE numpy Arrow pass (an "
+         "inlined-literal expression chain was an 80 KB plan dominated "
+         "by analysis+codegen)"),
         ("!BatchEvalPython",
          "no row-at-a-time Python UDF — Arrow batches only"),
     ],
@@ -160,8 +159,7 @@ AUDITS = {
         ("FlatMapGroupsInPandas",
          "per-cell pairwise = ONE vectorized kernel per ivf_cell group "
          "(SemDeDup cost model: pairwise work bounded per cell; r6 — "
-         "the interpreted per-pair fold was ~10 us/pair; expr equi-join "
-         "twin kept, byte-equality asserted)"),
+         "the interpreted per-pair fold was ~10 us/pair)"),
         ("!BroadcastNestedLoopJoin", "no all-pairs theta join"),
         ("!CartesianProduct", "no cartesian"),
         ("!Window", "no WindowExec"),
@@ -179,8 +177,7 @@ AUDITS = {
         ("MapInPandas",
          "per-doc bucket histogram is row-local — ONE Arrow kernel "
          "(one md5 per DISTINCT token) emits (doc,b,c) directly; the "
-         "token stream is never exploded/shuffled (expr twin kept for "
-         "the oracle, byte-identical)"),
+         "token stream is never exploded/shuffled"),
         ("!Window", "no WindowExec"),
     ],
     "lm_perplexity": [
@@ -190,7 +187,7 @@ AUDITS = {
         ("MapInPandas",
          "per-doc bigram histogram is row-local — ONE Arrow kernel "
          "(one md5 per DISTINCT token); the bigram stream is never "
-         "exploded/shuffled (expr twin kept for the oracle)"),
+         "exploded/shuffled"),
         ("BroadcastHashJoin",
          "the <=LM_BUCKETS-row context-total table broadcasts onto "
          "c12; the model join itself is a plain equi-join (c12 can be "
@@ -254,9 +251,9 @@ AUDITS = {
     "kmeans_clusters": [
         ("MapInPandas",
          "per-round assignment + partial sums are ONE numpy Arrow pass "
-         "over the JVM-quantized vectors (r6: the inlined-centroid expr "
-         "chain re-analyzed + re-codegen'd ~512 literals per Lloyd "
-         "round; expr twin kept, three-way parity asserted)"),
+         "over the JVM-quantized vectors (an inlined-centroid "
+         "expression chain re-analyzed + re-codegen'd ~512 literals per "
+         "Lloyd round)"),
         ("!BatchEvalPython",
          "no row-at-a-time Python UDF — Arrow batches only"),
         ("!Window", "no WindowExec"),
@@ -356,9 +353,8 @@ AUDITS = {
         ("!BroadcastNestedLoopJoin", "no all-pairs theta join"),
         ("!CartesianProduct", "no cartesian"),
         ("MapInPandas",
-         "fingerprints from the Arrow-batched numpy kernel (round-4 "
-         "default; impl='expr' keeps the pure-JVM slice/zip_with chain "
-         "the oracle SQL mirrors)"),
+         "fingerprints from the Arrow-batched numpy kernel (the "
+         "operator's only implementation)"),
         ("!BatchEvalPython",
          "no row-at-a-time Python UDF — Arrow batches only"),
         ("HashAggregate", "partial+final shared-count agg"),
