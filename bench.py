@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from geojson_vt_rs_spark.plans.checkpoint import cpu_ticks, steal_frac  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_IMAGES", "20000"))
@@ -39,19 +41,6 @@ def _sf_from_dir(d: str) -> float:
         return float(d.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         return -1.0
-
-
-def _read_cpu_ticks():
-    """(steal_ticks, total_ticks) from the /proc/stat aggregate cpu line;
-    (0, 0) where /proc is unavailable (non-Linux)."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except (OSError, ValueError, IndexError):
-        return 0, 0
 
 
 def _control_kernel_sec() -> float:
@@ -332,7 +321,7 @@ def main():
     # control kernel bracket the measurement, so a contended VM window
     # is classifiable from the artifact alone
     out["control_sec_pre"] = _control_kernel_sec()
-    steal0, total0 = _read_cpu_ticks()
+    ticks0 = cpu_ticks()
     t0 = time.time()
     timings, vt_total, g = _run_headline(spark, SF_DIR)
     gen_sec = timings.pop("graft_images_gen")
@@ -372,10 +361,7 @@ def main():
     st_lps, st_tps = run_single_tile_shapes()
     out["single_tile_index_lookups_per_sec"] = st_lps
     out["single_tile_to_tile_per_sec"] = st_tps
-    steal1, total1 = _read_cpu_ticks()
-    out["steal_frac"] = round(
-        (steal1 - steal0) / max(1, total1 - total0), 4
-    )
+    out["steal_frac"] = steal_frac(ticks0, cpu_ticks())
     out["control_sec_post"] = _control_kernel_sec()
     spark.stop()
 

@@ -317,8 +317,8 @@ RS_CHILD = 1
 # decision agg finishes these index-sized partials in pandas, so a
 # pyramid level needs NO separate Spark agg job (one wave per level)
 RS_CAGG = 2
-# retained-leaf source rows (drill_descend_stage output only): rows of a
-# tile the drill leaves as-is, destined for the leaves store
+# retained-leaf source rows (drill_descend_stage and the fused subtree
+# kernel): rows of a tile left as-is, destined for the leaves store
 RS_LEAF = 3
 
 _RS_RENDER_ONLY = ["sub_idx", "type", "kind", "geometry_json", "tags_json",
@@ -727,7 +727,10 @@ def drill_descend_stage(
     persisted order keys), RS_LEAF (retained source rows of leaf tiles),
     RS_CAGG (per-tile (tnp, n_emitted) partials — num_points carries the
     tile's source-point sum, n_emitted the rendered-emission sum — the
-    driver finishes stats rows from these without another job).
+    driver finishes stats rows from these without another job).  This is
+    the one row contract of a multi-level pass: the build's fused
+    subtrees (plans/pyramid.py _subtree_kernel) emit it too, so both
+    sinks decode one format.
 
     ``tile_sink={"path": staging_dir, "existing": tile_key_set}`` moves
     the RS_RENDER rows OUT of the Arrow output entirely: each task

@@ -52,9 +52,6 @@ from geojson_vt_rs_spark.operators.pipeline import (
 from geojson_vt_rs_spark.operators.schema import TILE_STORE_DDL
 from geojson_vt_rs_spark.plans.pyramid import (
     CAGG_COLS,
-    K_LEAF,
-    K_STATS,
-    K_TILE,
     TILED_COLS,
     drill_pass,
     drill_tiles,
@@ -62,11 +59,12 @@ from geojson_vt_rs_spark.plans.pyramid import (
 )
 
 
-def _cpu_ticks() -> tuple:
+def cpu_ticks() -> tuple:
     """(steal_ticks, total_ticks) from /proc/stat; (0, 0) off-Linux.
-    Each level manifest records its window's steal fraction so a slow
-    level is classifiable from the store alone (a 32-core z1 was
-    observed bimodal 9-17s across sessions — the slow runs track
+    The one steal reader: bench.py and tools/ bracket their timed windows
+    with it too.  Each level manifest records its window's steal fraction
+    so a slow level is classifiable from the store alone (a 32-core z1
+    was observed bimodal 9-17s across sessions — the slow runs track
     elevated hypervisor steal, not GC; this pins that per level)."""
     try:
         with open("/proc/stat") as f:
@@ -76,7 +74,8 @@ def _cpu_ticks() -> tuple:
         return 0, 0
 
 
-def _steal_frac(t0: tuple, t1: tuple) -> float:
+def steal_frac(t0: tuple, t1: tuple) -> float:
+    """The steal share of the CPU ticks between two cpu_ticks() reads."""
     d = t1[1] - t0[1]
     return round((t1[0] - t0[0]) / d, 4) if d > 0 else 0.0
 
@@ -128,6 +127,33 @@ def _stats_row(z, x, y, tnp, ns, action) -> tuple:
             action, None, None, None, None)
 
 
+def _feature_rows(rows: DataFrame) -> DataFrame:
+    """A pass's RS_RENDER rows (RS_SCHEMA) -> tiles-table feature rows
+    (TILE_STORE_DDL order).  feature_idx is NOT ranked here: a
+    Window.partitionBy(z,x,y) at z0 has ONE partition, serializing the
+    whole dataset through a single task (54s of the 76s 1M build; 8->32
+    efficiency 0.236).  The deterministic order-key columns are persisted
+    instead and read_tile derives feature_idx per tile."""
+    return rows.filter(
+        (F.col("row_kind") == RS_RENDER) & (F.col("sub_idx") >= 0)
+    ).select(
+        "z", "x", "y",
+        F.lit(None).cast("int").alias("feature_idx"),
+        "type", "kind", "geometry_json", "tags_json",
+        F.col("id_str").alias("tile_id_str"),
+        F.col("id_num").alias("tile_id_num"),
+        F.col("id_float").alias("tile_id_float"),
+        F.lit(None).cast("int").alias("tile_num_points"),
+        F.lit(None).cast("int").alias("tile_num_simplified"),
+        F.lit("feature").alias("action"),
+        "world_copy", "feature_seq", "slice_path", "sub_idx",
+    )
+
+
+def _append(df: DataFrame, path: str) -> None:
+    df.write.mode("append").partitionBy("z").parquet(path)
+
+
 class _Commit:
     """One exactly-once commit unit of the store: tile and leaf rows are
     staged in ``_staging/{tiles,leaves}_<stage>`` and published by one
@@ -164,9 +190,10 @@ class _StoreSink:
         self.out = out_dir
 
     def begin(self, level):
-        self.t0, self.tick0 = time.time(), _cpu_ticks()
+        self.t0, self.tick0 = time.time(), cpu_ticks()
         self.c = _Commit(self.out, f"level_{level}", f"L{level}")
         self.ns: dict = {}
+        self.n_fused = self.n_leaf_fused = 0
 
     def _frontier_dir(self, level):
         return os.path.join(self.out, "frontier", f"level_{level + 1}")
@@ -175,32 +202,16 @@ class _StoreSink:
               children=False):
         cagg = pd.DataFrame(columns=CAGG_COLS)
         if step2 is not None:
-            rend = step2.filter(F.col("row_kind") == RS_RENDER)
             # wave 1 — the heavy write; materializes step2 (and fr) so the
-            # follow-up actions scan cached data.  feature_idx is NOT
-            # ranked here: a Window.partitionBy(z,x,y) at z0 has ONE
-            # partition, serializing the whole dataset through a single
-            # task (54s of the 76s 1M build; 8->32 efficiency 0.236).
-            # The deterministic order-key columns are persisted instead
-            # and read_tile derives feature_idx per tile.
-            rend.filter(F.col("sub_idx") >= 0).select(
-                "z", "x", "y",
-                F.lit(None).cast("int").alias("feature_idx"),
-                "type", "kind", "geometry_json", "tags_json",
-                F.col("id_str").alias("tile_id_str"),
-                F.col("id_num").alias("tile_id_num"),
-                F.col("id_float").alias("tile_id_float"),
-                F.lit(None).cast("int").alias("tile_num_points"),
-                F.lit(None).cast("int").alias("tile_num_simplified"),
-                F.lit("feature").alias("action"),
-                "world_copy", "feature_seq", "slice_path", "sub_idx",
-            ).write.mode("append").partitionBy("z").parquet(self.c.stg_tiles)
+            # follow-up actions scan cached data
+            _append(_feature_rows(step2), self.c.stg_tiles)
 
             # wave 2 — independent actions over the cached data run as
             # concurrent jobs, each writing its own directory (concurrent
             # appends to one directory would race in the committer):
             # per-tile render counters, the next level's partials, the
             # children frontier and the leaf features
+            rend = step2.filter(F.col("row_kind") == RS_RENDER)
             jobs = [lambda: rend.groupBy("z", "x", "y").agg(
                 F.sum("n_emitted").alias("ns"),
                 F.sum((F.col("sub_idx") >= 0).cast("long")).alias("nf"),
@@ -223,51 +234,47 @@ class _StoreSink:
             }
             if children:
                 cagg = res[1]
-        n_fused = 0
         if fuse is not None:
-            # fused subtrees: tile + stats rows, then leaf rows, from one
-            # cached pass
+            # fused subtrees, from one cached pass: the leaves write (it
+            # fills the cache), one collection of each fused tile's RS_CAGG
+            # row and RS_LEAF count (a tile with retained rows is a leaf;
+            # the rest stopped at max zoom or hold no features), then the
+            # feature rows written with the tiles' stats rows — three
+            # jobs, the stats rows need no write of their own
             step = fuse.persist()
-            is_tile = F.col("row_kind") == K_TILE
-            step.filter(F.col("row_kind").isin(K_TILE, K_STATS)).select(
-                "z", "x", "y",
-                # keep only the -1 stats marker; feature rows derive
-                # feature_idx at read time from synthesized order keys
-                # (0, kernel_idx, '', 0) — the read-time rank over
-                # (world_copy, feature_seq, slice_path, sub_idx)
-                # reproduces the kernel's order exactly
-                F.when(~is_tile, F.col("feature_idx")).alias("feature_idx"),
-                "type", "kind",
-                "geometry_json", "tags_json", "tile_id_str", "tile_id_num",
-                "tile_id_float",
-                "tile_num_points", "tile_num_simplified",
-                F.coalesce(F.col("action"), F.lit("feature")).alias("action"),
-                F.when(is_tile, F.lit(0)).alias("world_copy"),
-                F.when(is_tile, F.col("feature_idx").cast("long")).alias("feature_seq"),
-                F.when(is_tile, F.lit("")).alias("slice_path"),
-                F.when(is_tile, F.lit(0)).alias("sub_idx"),
-            ).write.mode("append").partitionBy("z").parquet(self.c.stg_tiles)
-            self.leaves(level, step.filter(F.col("row_kind") == K_LEAF)
-                        .select(*TILED_COLS))
-            n_fused = int(step.filter(F.col("row_kind") == K_STATS).count())
+            kind = F.col("row_kind")
+            self.leaves(level, step.filter(kind == RS_LEAF).select(*TILED_COLS))
+            st = step.filter(kind != RS_RENDER).groupBy("z", "x", "y").agg(
+                F.sum(F.when(kind == RS_CAGG, F.col("num_points"))).alias("tnp"),
+                F.sum(F.when(kind == RS_CAGG, F.col("n_emitted"))).alias("ns"),
+                F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
+            ).toPandas()
+            stats = [
+                _stats_row(int(r.z), int(r.x), int(r.y), int(r.tnp),
+                           int(r.ns), "leaf" if r.n_leaf else "stop")
+                for r in st.itertuples(index=False)
+            ]
+            _append(_feature_rows(step).unionByName(
+                self.cp.spark.createDataFrame(stats, TILE_STORE_DDL)
+            ), self.c.stg_tiles)
             step.unpersist()
-        return cagg, n_fused
+            self.n_fused, self.n_leaf_fused = len(st), int(st["n_leaf"].sum())
+        return cagg, self.n_fused
 
     def leaves(self, level, df):
-        df.write.mode("append").partitionBy("z").parquet(self.c.stg_leaves)
+        _append(df, self.c.stg_leaves)
 
-    def commit(self, level, tiles, pending, n_children, n_leaf, n_fused):
+    def commit(self, level, tiles, pending, n_children, n_leaf):
         # per-tile stats rows: num_points from the decision partials,
-        # num_simplified from the render counters (fused tiles got theirs
-        # from the subtree kernel's K_STATS rows)
+        # num_simplified from the render counters (the fused tiles' rows
+        # were written with their features)
         stats = [
             _stats_row(z, x, y, tnp, self.ns.get((z, x, y), (0, 0))[0], a)
             for z, x, y, a, tnp, _ in tiles
         ]
         if stats:
-            self.cp.spark.createDataFrame(stats, TILE_STORE_DDL).write.mode(
-                "append"
-            ).partitionBy("z").parquet(self.c.stg_tiles)
+            _append(self.cp.spark.createDataFrame(stats, TILE_STORE_DDL),
+                    self.c.stg_tiles)
         if not n_children:
             shutil.rmtree(self._frontier_dir(level), ignore_errors=True)
         self.c.publish()
@@ -276,13 +283,13 @@ class _StoreSink:
             f"level_{level}",
             dict(
                 level=level,
-                n_tiles=len(stats) + n_fused,
+                n_tiles=len(stats) + self.n_fused,
                 n_tile_feature_rows=sum(nf for _, nf in self.ns.values()),
-                n_leaf_feature_rows=int(n_leaf),
+                n_leaf_feature_rows=int(n_leaf) + self.n_leaf_fused,
                 n_children=n_children,
                 pending_children=pending,
                 wall_sec=round(time.time() - self.t0, 3),
-                steal_frac=_steal_frac(self.tick0, _cpu_ticks()),
+                steal_frac=steal_frac(self.tick0, cpu_ticks()),
             ),
             self.c.fin_tiles,
             self.c.fin_leaves,
@@ -593,11 +600,9 @@ class CheckpointedPyramid:
         # effect of whichever job computes it first; duplicated
         # concurrent compute re-writes identical files atomically)
         def _write_leaves():
-            step.filter(F.col("row_kind") == RS_LEAF).join(
+            _append(step.filter(F.col("row_kind") == RS_LEAF).join(
                 exist_df, ["z", "x", "y"], "left_anti"
-            ).select(*TILED_COLS).write.mode("append").partitionBy(
-                "z"
-            ).parquet(commit.stg_leaves)
+            ).select(*TILED_COLS), commit.stg_leaves)
 
         def _collect_stats():
             return (
@@ -618,9 +623,8 @@ class CheckpointedPyramid:
                 partials, root, target, existing)
         ]
         if stats_rows:
-            spark.createDataFrame(stats_rows, TILE_STORE_DDL).write.mode(
-                "append"
-            ).partitionBy("z").parquet(commit.stg_tiles)
+            _append(spark.createDataFrame(stats_rows, TILE_STORE_DDL),
+                    commit.stg_tiles)
 
 
 def checkpointed_mosaic(

@@ -33,23 +33,22 @@ index_max_points splitting them further down; AQE coalesces the tail.
 from __future__ import annotations
 
 import json
-import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Dict, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
     RS_CAGG,
     RS_CHILD,
+    RS_COLS,
     RS_LEAF,
     RS_RENDER,
+    RS_SCHEMA,
     _convert_wrap_kernel,
     convert_wrap_render_split_stage,
     convert_wrap_stage,
@@ -57,7 +56,6 @@ from geojson_vt_rs_spark.operators.pipeline import (
     render_split_stage,
 )
 from geojson_vt_rs_spark.operators.schema import (
-    FEATURE_FIELDS,
     TILED_FEATURE_SCHEMA,
     create_feature_df,
     feature_to_row,
@@ -65,36 +63,6 @@ from geojson_vt_rs_spark.operators.schema import (
 )
 
 TILED_COLS = [f.name for f in TILED_FEATURE_SCHEMA.fields]
-
-# row_kind values in the fused-subtree kernel output
-K_TILE = 0  # rendered tile feature row
-K_STATS = 1  # per-tile stats row (always present)
-K_LEAF = 2  # retained source feature of a stopped tile
-
-STEP_SCHEMA = T.StructType(
-    [
-        T.StructField("row_kind", T.IntegerType(), False),
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        # rendered tile rows
-        T.StructField("feature_idx", T.IntegerType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("geometry_json", T.StringType()),
-        T.StructField("tags_json", T.StringType()),
-        T.StructField("tile_id_str", T.StringType()),
-        T.StructField("tile_id_num", T.LongType()),
-        T.StructField("tile_id_float", T.DoubleType()),
-        T.StructField("tile_num_points", T.IntegerType()),
-        T.StructField("tile_num_simplified", T.IntegerType()),
-        T.StructField("action", T.StringType()),  # on stats rows
-    ]
-    + FEATURE_FIELDS
-)
-
-STEP_COLS = [f.name for f in STEP_SCHEMA.fields]
-_ROW_NULLS = dict.fromkeys(STEP_COLS)
 
 # render-pass columns the in-memory index collects, and the RS_CAGG
 # partial columns every sink hands back to the loop
@@ -202,15 +170,13 @@ def _children(tiles) -> list:
 
 def _subtree_kernel(options: Options):
     """Group kernel: the core tiler's whole split recursion under one
-    tile (a raw-gated root, or a 'fuse' split), as STEP_SCHEMA rows per
-    subtree tile — K_TILE features, one K_STATS row, K_LEAF retained
-    source features."""
+    tile (a raw-gated root, or a 'fuse' split), as the drill pass's rows
+    (drill_descend_stage) per subtree tile: RS_RENDER features whose
+    order keys (0, i, '', 0) rank in the emitter's order, the RS_LEAF
+    retained source rows, and one RS_CAGG row (num_points,
+    n_emitted = num_simplified) — empty tiles included."""
 
-    def row(row_kind, em, **kw):
-        return _ROW_NULLS | dict(row_kind=row_kind, z=em.z, x=em.x, y=em.y,
-                                 **kw)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
 
         z, x, y = int(key[0]), int(key[1]), int(key[2])
@@ -221,10 +187,11 @@ def _subtree_kernel(options: Options):
         rows: list = []
         for it in CoreTiler.subtree(feats, options, z, x, y).tiles.values():
             em = it.emitter
-            for idx, tf in enumerate(em.features):
-                rows.append(row(
-                    K_TILE, em,
-                    feature_idx=idx,
+            tile = dict.fromkeys(RS_COLS) | dict(z=em.z, x=em.x, y=em.y)
+            for i, tf in enumerate(em.features):
+                rows.append(tile | dict(
+                    row_kind=RS_RENDER,
+                    world_copy=0, feature_seq=i, slice_path="", sub_idx=0,
                     type=tf["type"],
                     kind=tf["kind"],
                     geometry_json=json.dumps(tf["geometry"],
@@ -234,20 +201,15 @@ def _subtree_kernel(options: Options):
                         if tf["tags"] is None
                         else json.dumps(tf["tags"], separators=(",", ":"))
                     ),
-                    tile_id_str=tf["id_str"],
-                    tile_id_num=tf["id_num"],
-                    tile_id_float=tf["id_float"],
+                    id_str=tf["id_str"],
+                    id_num=tf["id_num"],
+                    id_float=tf["id_float"],
                 ))
-            rows.append(row(
-                K_STATS, em,
-                feature_idx=-1,
-                tile_num_points=em.num_points,
-                tile_num_simplified=em.num_simplified,
-                action="leaf" if it.source_features else "stop",
-            ))
             for f in it.source_features:
-                rows.append(row(K_LEAF, em) | feature_to_row(f))
-        return pd.DataFrame(rows, columns=STEP_COLS)
+                rows.append(tile | dict(row_kind=RS_LEAF) | feature_to_row(f))
+            rows.append(tile | dict(row_kind=RS_CAGG, num_points=em.num_points,
+                                    n_emitted=em.num_simplified))
+        return pd.DataFrame(rows, columns=RS_COLS)
 
     return run
 
@@ -289,14 +251,17 @@ def run_levels(
       begin(level)
       level(level, step2, fuse, leaves, children) -> (cagg, n_fused)
           materialize the render pass ``step2`` (RS_SCHEMA, or None),
-          the fused-subtree rows ``fuse`` (STEP_SCHEMA, or None) and the
-          leaf tiles' source rows ``leaves`` (TILED_COLS, or None);
-          return the RS_CAGG partials (CAGG_COLS; child partials are
-          needed only when ``children``) and the fused tile count
+          the fused subtrees ``fuse`` (RS_SCHEMA, or None: the drill
+          pass's rows, one RS_CAGG row per fused tile) and the leaf
+          tiles' source rows ``leaves`` (TILED_COLS, or None); return
+          the render pass's RS_CAGG partials (CAGG_COLS; child partials
+          are needed only when ``children``; never the fused tiles'
+          rows) and the fused tile count
       leaves(level, df)  -- the mispredicted-root recovery only
-      commit(level, tiles, pending, n_children, n_leaf, n_fused)
+      commit(level, tiles, pending, n_children, n_leaf)
           ``tiles``: (z, x, y, action, num_points, rows) of every
-          non-fused tile, empty children first (action 'empty')."""
+          non-fused tile, empty children first (action 'empty');
+          ``n_leaf``: the non-fused leaf tiles' source row count."""
     o = options
     first_wave = None
     next_np = None
@@ -324,13 +289,13 @@ def run_levels(
                     _convert_wrap_kernel(*cw_args), _subtree_kernel(o),
                     (0, 0, 0),
                 ),
-                schema=STEP_SCHEMA,
+                schema=RS_SCHEMA,
             )
             n_fused = sink.level(level, fuse=wave)[1]
             # an empty or fully-dropped input still creates the root
             # (lib.rs:265-295: insert precedes the early return)
             root = [] if n_fused else [(0, 0, 0, "empty", 0, 0)]
-            sink.commit(level, root, [], 0, 0, n_fused)
+            sink.commit(level, root, [], 0, 0)
             return
         frontier = convert_wrap_stage(features_df, *cw_args).select(
             F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
@@ -345,7 +310,6 @@ def run_levels(
     prev = None  # previous turn's render pass: this turn's frontier
     while True:
         sink.begin(level)
-        t0 = time.time()
         if first_wave is not None:
             decisions = [(0, 0, 0, "split", None, None)]
         else:
@@ -375,7 +339,7 @@ def run_levels(
         if not decisions:
             if frontier is not None:
                 frontier.unpersist()
-            sink.commit(level, tiles, [], 0, 0, 0)
+            sink.commit(level, tiles, [], 0, 0)
             return
 
         acts = {d[3] for d in decisions}
@@ -408,14 +372,14 @@ def run_levels(
                     fr.filter(F.col("action") == "fuse")
                     .drop("action")
                     .groupBy("z", "x", "y")
-                    .applyInPandas(_subtree_kernel(o), schema=STEP_SCHEMA)
+                    .applyInPandas(_subtree_kernel(o), schema=RS_SCHEMA)
                 )
             if "leaf" in acts:
                 leaves = fr.filter(F.col("action") == "leaf").select(
                     *TILED_COLS
                 )
         split = [d[:3] for d in decisions if d[3] == "split"]
-        cagg, n_fused = sink.level(level, step2, fuse, leaves, bool(split))
+        cagg = sink.level(level, step2, fuse, leaves, bool(split))[0]
         if prev is not None:
             # this level's outputs are materialized; the previous pass
             # is no longer referenced
@@ -431,7 +395,7 @@ def run_levels(
                 # empty (or fully-dropped) input: the root tile still
                 # exists (lib.rs:265-295)
                 step2.unpersist()
-                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], 0, 0, 0)
+                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], 0, 0)
                 return
             tnp = int(root["num_points"].sum())
             # a 'fuse' root already rendered+split: its children run as a
@@ -452,15 +416,10 @@ def run_levels(
             pending,
             n_children,
             sum(d[5] for d in decisions if d[3] == "leaf"),
-            n_fused,
         )
         for df in (fr, frontier):
             if df is not None:
                 df.unpersist()
-        if os.environ.get("SPARK_GRAFT_DEBUG_LEVELS") == "1":
-            print(f"[pyramid] level {level}: tiles={len(decisions)} "
-                  f"children={n_children} wall={time.time() - t0:.1f}s",
-                  flush=True)
         if not split:
             if step2 is not None:
                 step2.unpersist()
@@ -489,10 +448,10 @@ class _IndexSink:
 
     def __init__(self, index: "SparkGeoJSONVT"):
         self.index = index
-        self.rend = self.fused = None
 
     def begin(self, level):
-        pass
+        self.rend = pd.DataFrame(columns=_REND_COLS)
+        self.fused = None
 
     def level(self, level, step2=None, fuse=None, leaves=None,
               children=False):
@@ -504,16 +463,11 @@ class _IndexSink:
                 F.col("row_kind").isin(RS_RENDER, RS_CAGG)
             ).select(*_REND_COLS).toPandas()
 
-        def fused():
-            return fuse.filter(
-                F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
-            ).toPandas()
-
         with ThreadPoolExecutor(3) as ex:
             rf = ex.submit(rend) if step2 is not None else None
-            ff = ex.submit(fused) if fuse is not None else None
+            ff = ex.submit(fuse.toPandas) if fuse is not None else None
             lf = ex.submit(self.leaves, level, leaves) if leaves is not None else None
-            merged = rf.result() if rf else pd.DataFrame(columns=_REND_COLS)
+            merged = rf.result() if rf else self.rend
             self.fused = ff.result() if ff else None
             if lf:
                 lf.result()
@@ -521,37 +475,27 @@ class _IndexSink:
         self.rend = merged.loc[~is_cagg]
         n_fused = 0
         if self.fused is not None:
-            n_fused = int((self.fused["row_kind"] == K_STATS).sum())
+            n_fused = int((self.fused["row_kind"] == RS_CAGG).sum())
         return merged.loc[is_cagg, CAGG_COLS], n_fused
 
     def leaves(self, level, df):
         # leaf tiles retain their source features (lib.rs:311,324,335)
         self.index._retain(df.toPandas())
 
-    def commit(self, level, tiles, pending, n_children, n_leaf, n_fused):
-        reg = self.index._register
-        rend = self.rend
-        groups = {} if rend is None or rend.empty else dict(
-            list(rend.groupby(["z", "x", "y"], sort=False)))
-        for z, x, y, _, tnp, _ in tiles:
-            grp = groups.get((z, x, y))
-            if grp is None:
-                reg(z, x, y, [], tnp, 0)
-            else:
-                # feature materialization (sort + JSON parse) is
-                # deferred to first .features access
-                reg(z, x, y, None, tnp, int(grp["n_emitted"].sum()),
-                    lazy=(grp, _render_group_to_features))
-        meta = self.fused
-        if meta is not None:
-            tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
-            for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
-                st = grp[grp.row_kind == K_STATS].iloc[0]
-                reg(int(z), int(x), int(y), None,
-                    int(st["tile_num_points"]), int(st["tile_num_simplified"]),
-                    lazy=(grp, _fused_group_to_features))
-            self.index._retain(meta[meta.row_kind == K_LEAF])
-        self.rend = self.fused = None
+    def commit(self, level, tiles, pending, n_children, n_leaf):
+        rend, fused = self.rend, self.fused
+        ns = rend.groupby(["z", "x", "y"], sort=False)["n_emitted"].sum()
+        self.index._add_pass(rend, [
+            (z, x, y, tnp, int(ns.get((z, x, y), 0)))
+            for z, x, y, _, tnp, _ in tiles
+        ])
+        if fused is not None:
+            self.index._add_pass(fused, [
+                (int(r.z), int(r.x), int(r.y), int(r.num_points),
+                 int(r.n_emitted))
+                for r in fused[fused["row_kind"] == RS_CAGG].itertuples(
+                    index=False)
+            ])
 
 
 def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
@@ -661,6 +605,22 @@ class SparkGeoJSONVT:
         self.stats[z] = self.stats.get(z, 0) + 1
         self.total += 1
 
+    def _add_pass(self, rows: pd.DataFrame, tiles) -> None:
+        """Register ``tiles`` ((z, x, y, num_points, num_simplified)) of
+        one collected pass (RS_SCHEMA rows: a level's render rows, fused
+        subtrees or a drill): features from each tile's RS_RENDER rows,
+        parsed on first access; the RS_LEAF rows are retained."""
+        kind = rows["row_kind"].to_numpy()
+        groups = dict(list(
+            rows[kind == RS_RENDER].groupby(["z", "x", "y"], sort=False)))
+        for z, x, y, tnp, ns in tiles:
+            grp = groups.get((z, x, y))
+            self._register(
+                z, x, y, [] if grp is None else None, tnp, ns,
+                lazy=None if grp is None else (grp, _render_group_to_features),
+            )
+        self._retain(rows[kind == RS_LEAF])
+
     def _retain(self, rows: pd.DataFrame) -> None:
         """Source rows (TILED_COLS) -> the leaf-features store."""
         for (z, x, y), grp in rows.groupby(["z", "x", "y"], sort=False):
@@ -714,21 +674,13 @@ class SparkGeoJSONVT:
             self.spark, frontier, self.options, root, target
         ).toPandas()
         existing = {(t.z, t.x, t.y) for t in self.tiles.values()}
-        kind = rows["row_kind"].to_numpy()
-        rend = rows[kind == RS_RENDER]
-        groups = dict(list(rend.groupby(["z", "x", "y"], sort=False)))
-        for z, x, y, tnp, ns in drill_tiles(
-            rows[kind == RS_CAGG], root, target, existing
-        ):
-            grp = groups.get((z, x, y))
-            self._register(
-                z, x, y, [] if grp is None else None, tnp, ns,
-                lazy=None if grp is None else (grp, _render_group_to_features),
-            )
+        tiles = drill_tiles(
+            rows[rows["row_kind"] == RS_CAGG], root, target, existing
+        )
         # the ancestor was split (lib.rs:430-433); no other retained tile
         # lies below it, so every RS_LEAF row belongs to a new tile
         self.leaf_features.pop(to_id(*root), None)
-        self._retain(rows[kind == RS_LEAF])
+        self._add_pass(rows, tiles)
 
     def get_internal_tiles(self):
         return self.tiles
@@ -751,52 +703,21 @@ def _fuse_wave_kernel(cw_kernel, group_kernel, key):
 
 
 def _render_group_to_features(grp: pd.DataFrame) -> list:
-    """One tile's collected render rows -> ordered canonical features
-    (the deferred half of _register's lazy payload)."""
+    """One tile's collected RS_RENDER rows -> canonical features in the
+    order-key order (the deferred half of _register's lazy payload)."""
     sub = grp[grp["sub_idx"] >= 0].sort_values(
         ["world_copy", "feature_seq", "slice_path", "sub_idx"],
         kind="stable",
     )
-    return _render_rows_to_features(sub)
-
-
-def _fused_group_to_features(grp: pd.DataFrame) -> list:
-    return _rows_to_tile_features(grp[grp.row_kind == K_TILE])
-
-
-def _render_rows_to_features(sub: pd.DataFrame) -> list:
-    """Sorted RS_RENDER rows -> canonical tile features."""
-    feats = []
-    for r in sub.itertuples(index=False):
-        feats.append(
-            dict(
-                type=int(r.type),
-                kind=int(r.kind),
-                geometry=json.loads(r.geometry_json),
-                tags=None if r.tags_json is None else json.loads(r.tags_json),
-                id_str=r.id_str if isinstance(r.id_str, str) else None,
-                id_num=int(r.id_num) if pd.notna(r.id_num) else None,
-                id_float=float(r.id_float) if pd.notna(r.id_float) else None,
-            )
+    return [
+        dict(
+            type=int(r.type),
+            kind=int(r.kind),
+            geometry=json.loads(r.geometry_json),
+            tags=None if r.tags_json is None else json.loads(r.tags_json),
+            id_str=r.id_str if isinstance(r.id_str, str) else None,
+            id_num=int(r.id_num) if pd.notna(r.id_num) else None,
+            id_float=float(r.id_float) if pd.notna(r.id_float) else None,
         )
-    return feats
-
-
-def _rows_to_tile_features(grp: pd.DataFrame) -> list:
-    feats = []
-    sub = grp.sort_values("feature_idx")
-    for r in sub.itertuples(index=False):
-        feats.append(
-            dict(
-                type=int(r.type),
-                kind=int(r.kind),
-                geometry=json.loads(r.geometry_json),
-                tags=None if r.tags_json is None else json.loads(r.tags_json),
-                id_str=r.tile_id_str if isinstance(r.tile_id_str, str) else None,
-                id_num=int(r.tile_id_num) if pd.notna(r.tile_id_num) else None,
-                id_float=(
-                    float(r.tile_id_float) if pd.notna(r.tile_id_float) else None
-                ),
-            )
-        )
-    return feats
+        for r in sub.itertuples(index=False)
+    ]

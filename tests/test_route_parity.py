@@ -1,7 +1,8 @@
 """Route parity on generated inputs: the local core tiler, the distributed
 index (``SparkGeoJSONVT(prefer_local=False)``) and the checkpointed store
-(``CheckpointedPyramid``'s tile rows) must agree tile by tile on every gate
-route of the level loop, and through drill-down on both ``get_tile``s.
+(``CheckpointedPyramid``'s tile rows) must agree tile by tile, and on the
+retained leaf features, on every gate route of the level loop, and through
+drill-down on both ``get_tile``s from the leaves each route retained.
 
 Runs without the reference fixtures: the corpus is
 ``sources/synth_features.generate_features`` (polygons and polylines with
@@ -92,6 +93,27 @@ def core_tiles(core):
     }
 
 
+def leaf_rows(rows):
+    """Retained source rows (TILED_COLS) -> (z, x, y) -> sorted source
+    keys (world_copy, feature_seq, slice_path, num_points)."""
+    out = {}
+    for r in rows.itertuples(index=False):
+        out.setdefault((int(r.z), int(r.x), int(r.y)), []).append(
+            (int(r.world_copy), int(r.feature_seq), r.slice_path,
+             int(r.num_points)))
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def core_leaves(core):
+    """The core tiler's retained source features, keyed like leaf_rows."""
+    return {
+        (it.emitter.z, it.emitter.x, it.emitter.y): sorted(
+            (f.world_copy, f.feature_seq, f.slice_path, f.num_points)
+            for f in it.source_features)
+        for it in core.tiles.values() if it.source_features
+    }
+
+
 def store_tiles(spark, out):
     """The whole store in one scan: (z, x, y) -> ((num_points,
     num_simplified), canonical features in read_tile's order).  Asserts
@@ -154,13 +176,23 @@ def test_routes_identical_tiles(spark, tmp_path, corpus, route):
     for key in {(0, 0, 0), by_size[0], by_size[-1]}:
         assert read_tile(cp, out, key) == store[key][1]
 
+    # every route retains the core tiler's leaf features, and the
+    # manifests count every stored leaf row
+    leaves = spark.read.parquet(f"{out}/leaves").toPandas()
+    want_leaves = core_leaves(core)
+    assert want_leaves
+    assert leaf_rows(leaves) == want_leaves
+    assert leaf_rows(pd.concat(idx.leaf_features.values())) == want_leaves
+    assert sum(m["n_leaf_feature_rows"] for m in s["manifests"]) == len(leaves)
 
-def test_drills_identical_tiles(spark, tmp_path, corpus):
+
+@pytest.mark.parametrize("route", list(ROUTES))
+def test_drills_identical_tiles(spark, tmp_path, corpus, route):
     df, pdf = corpus
-    opts = Options(**BASE, **ROUTES["split"])
+    opts = Options(**BASE, **ROUTES[route])
     core = core_index(pdf, opts)
     idx = SparkGeoJSONVT(spark, df, opts, prefer_local=False)
-    out = str(tmp_path / "drill")
+    out = str(tmp_path / route)
     cp = CheckpointedPyramid(spark, opts)
     cp.run(df, out)
 

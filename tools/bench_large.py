@@ -35,16 +35,6 @@ NS = [
 CPU_LEVELS = (8, 32)
 
 
-def _cpu():
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:9]))
-
-
-def _steal(v0, v1):
-    d = [a - b for a, b in zip(v1, v0)]
-    return (d[7] / sum(d)) if sum(d) else 0.0
-
-
 def run_level(cpus: int, N: int) -> dict:
     """CheckpointedPyramid is the scale path (parquet tiles/leaves, no
     driver tile dict); get_tile cold = drill-down Spark jobs + store
@@ -54,7 +44,11 @@ def run_level(cpus: int, N: int) -> dict:
 
     from geojson_vt_rs_spark.config import Options
     from geojson_vt_rs_spark.operators.session import get_spark
-    from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
+    from geojson_vt_rs_spark.plans.checkpoint import (
+        CheckpointedPyramid,
+        cpu_ticks,
+        steal_frac,
+    )
     from geojson_vt_rs_spark.sources.synth_features import generate_points
 
     import bench
@@ -66,11 +60,11 @@ def run_level(cpus: int, N: int) -> dict:
     out_dir = tempfile.mkdtemp(prefix=f"large_{cpus}_")
     cp = CheckpointedPyramid(spark, o)
 
-    v0 = _cpu()
+    v0 = cpu_ticks()
     t0 = time.time()
     s = cp.run(feats, out_dir, raw_npts=N)
     build = time.time() - t0
-    steal_build = _steal(v0, _cpu())
+    steal_build = steal_frac(v0, cpu_ticks())
 
     t0 = time.time()
     tile = cp.get_tile(out_dir, 12, 1171, 1566)

@@ -26,12 +26,6 @@ import numpy as np
 import pandas as pd
 
 
-def _steal():
-    with open("/proc/stat") as f:
-        v = list(map(int, f.readline().split()[1:]))
-    return sum(v), v[7]
-
-
 def make_images(spark, n: int, sizes, partitions: int):
     """generate_images with a custom size table (the module's generator
     pins ~24-48 px sides; 192-256 px sides give 110-190 KB raw rows)."""
@@ -80,6 +74,7 @@ def make_images(spark, n: int, sizes, partitions: int):
 
 def main():
     from geojson_vt_rs_spark.operators.session import get_spark
+    from geojson_vt_rs_spark.plans.checkpoint import cpu_ticks, steal_frac
     from geojson_vt_rs_spark.plans.spatial import (
         mosaic_tiles,
         with_cells,
@@ -102,6 +97,7 @@ def main():
         "large": [192, 224, 256],
     }
     out = {"n_rows": n, "cpus": cpus, "zoom": zoom, "reps": reps}
+    ticks0 = cpu_ticks()
     for name, sizes in profiles.items():
         if sizes is None:
             from geojson_vt_rs_spark.sources.images import generate_images
@@ -127,7 +123,7 @@ def main():
         walls = {False: [], True: []}
         for _ in range(reps):
             for early in (False, True):
-                s0, t0 = _steal(), time.time()
+                t0 = time.time()
                 mosaic_tiles(imgs, zoom, decode_early=early).write.format(
                     "noop"
                 ).mode("overwrite").save()
@@ -142,8 +138,7 @@ def main():
             late_median=med(walls[False]),
             early_median=med(walls[True]),
         )
-    s1, tot1 = _steal()
-    out["steal_probe"] = 0.0
+    out["steal_probe"] = steal_frac(ticks0, cpu_ticks())
     print(json.dumps(out))
     spark.stop()
 

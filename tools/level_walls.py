@@ -15,20 +15,14 @@ N = int(os.environ.get("SPARK_GRAFT_LARGE_N", "1000000"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
-def _cpu():
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:9]))
-
-
-def _steal(v0, v1):
-    d = [a - b for a, b in zip(v1, v0)]
-    return (d[7] / sum(d)) if sum(d) else 0.0
-
-
 def main():
     from geojson_vt_rs_spark.config import Options
     from geojson_vt_rs_spark.operators.session import get_spark
-    from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
+    from geojson_vt_rs_spark.plans.checkpoint import (
+        CheckpointedPyramid,
+        cpu_ticks,
+        steal_frac,
+    )
     from geojson_vt_rs_spark.sources.synth_features import generate_points
 
     import bench
@@ -39,11 +33,11 @@ def main():
     feats = generate_points(spark, N, parts)
     out_dir = tempfile.mkdtemp(prefix=f"walls_{CPUS}_")
     cp = CheckpointedPyramid(spark, Options())
-    v0 = _cpu()
+    v0 = cpu_ticks()
     t0 = time.time()
     s = cp.run(feats, out_dir, raw_npts=N)
     build = time.time() - t0
-    steal = _steal(v0, _cpu())
+    steal = steal_frac(v0, cpu_ticks())
     t0 = time.time()
     n_feat = cp.get_tile(out_dir, 12, 1171, 1566).count()
     cold = time.time() - t0

@@ -32,17 +32,6 @@ STEAL_GATE = 0.02
 MAX_TRIES = 3
 
 
-def _cpu():
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:9]))
-
-
-def _steal_frac(v0, v1):
-    d = [a - b for a, b in zip(v1, v0)]
-    tot = sum(d)
-    return (d[7] / tot) if tot else 0.0
-
-
 def raw_control(n=40000):
     from multiprocessing import Pool
 
@@ -79,14 +68,15 @@ def _measure(job, cpus):
     skew the efficiency number; if no clean run happens within MAX_TRIES we
     fall back to the best dirty run and record which case applied."""
     from geojson_vt_rs_spark.operators.session import get_spark
+    from geojson_vt_rs_spark.plans.checkpoint import cpu_ticks, steal_frac
 
     best_clean, best_clean_steal = 0.0, 1.0
     best_dirty, best_dirty_steal = 0.0, 1.0
     for t in range(MAX_TRIES):
         s = get_spark(app_name=f"scal{cpus}-{time.monotonic_ns()}", cpus=cpus)
-        v0 = _cpu()
+        v0 = cpu_ticks()
         rps = job(s, cpus)
-        steal = _steal_frac(v0, _cpu())
+        steal = steal_frac(v0, cpu_ticks())
         s.stop()
         print(f"local[{cpus}]: {rps:.0f} rows/s steal={100 * steal:.1f}%",
               flush=True)
