@@ -189,18 +189,6 @@ class GeoJSONVT:
         return self.tiles
 
 
-def split_clip_bands(z: int, x: int, y: int, buffer: float, extent: int):
-    """The four child clip bands used by the split (lib.rs:340-428)."""
-    z2 = float(1 << z)
-    p = 0.5 * buffer / extent
-    return dict(
-        left=((x - p) / z2, (x + 0.5 + p) / z2),
-        right=((x + 0.5 - p) / z2, (x + 1.0 + p) / z2),
-        top=((y - p) / z2, (y + 0.5 + p) / z2),
-        bottom=((y + 0.5 - p) / z2, (y + 1.0 + p) / z2),
-    )
-
-
 def geojson_to_tile(
     features_raw: list,
     z: int,

@@ -706,7 +706,7 @@ def convert_wrap_render_split_stage(
 
 def drill_descend_stage(
     df: DataFrame, options: Options, root: tuple, target: tuple,
-    tile_sink: dict | None = None,
+    tile_sink: str | None = None,
 ) -> DataFrame:
     """The ENTIRE root-to-target drill descent as ONE feature-parallel
     mapInPandas pass (get_tile cold-miss path, lib.rs:184-223).
@@ -732,30 +732,31 @@ def drill_descend_stage(
     subtrees (plans/pyramid.py _subtree_kernel) emit it too, so both
     sinks decode one format.
 
-    ``tile_sink={"path": staging_dir, "existing": tile_key_set}`` moves
-    the RS_RENDER rows OUT of the Arrow output entirely: each task
-    writes its rendered tile features straight into the staging dir as
-    store-schema parquet (pyarrow, one file per (task, z), dot-prefixed
-    tmp + atomic os.replace under a DETERMINISTIC final name — retried
-    or speculatively duplicated tasks overwrite with identical content,
-    so the write is idempotent and the caller's stage-then-rename commit
-    point is unchanged).  The render rows are ~85 % of the pass's output
-    volume and only ever existed to be parquet-written by a follow-up
-    job: sinking them in-kernel removes their Python->JVM boundary
-    crossing, the JVM cache copy, AND the separate write job (4M drill
-    pass 19.7 s -> see OPTIMIZATION_r06.md).  Rows of tiles already in
-    ``existing`` are excluded in-kernel (the former broadcast
-    anti-join); stats partials still count them, matching the Spark
-    path.  The task-side ``os.replace`` needs the staging dir on one
-    shared POSIX path: the filesystem contract stated once in
-    plans/checkpoint.py's module docstring."""
-    az, ax, ay = root
+    ``root`` is the one memoized tile a drill touches (its nearest
+    memoized ancestor, plans/pyramid.py find_parent): the pass re-splits
+    it but emits none of its render rows, so every RS_RENDER row belongs
+    to a new tile; its RS_CAGG partial still carries its point count
+    (drill_tiles reads it).
+
+    ``tile_sink=staging_dir`` moves the RS_RENDER rows OUT of the Arrow
+    output entirely: each task writes its rendered tile features
+    straight into the staging dir as store-schema parquet (pyarrow, one
+    file per (task, z), dot-prefixed tmp + atomic os.replace under a
+    DETERMINISTIC final name — retried or speculatively duplicated
+    tasks overwrite with identical content, so the write is idempotent
+    and the caller's stage-then-rename commit point is unchanged).  The
+    render rows are ~85 % of the pass's output volume and only ever
+    existed to be parquet-written by a follow-up job: sinking them
+    in-kernel removes their Python->JVM boundary crossing, the JVM cache
+    copy, AND the separate write job (4M drill pass 19.7 s -> see
+    OPTIMIZATION_r06.md).  The task-side ``os.replace`` needs the
+    staging dir on one shared POSIX path: the filesystem contract stated
+    once in plans/checkpoint.py's module docstring."""
+    az = root[0]
     cz, cx, cy = target
     max_zoom = options.max_zoom
 
-    sink_path = None
     arrow_schema = None
-    ex_keys = None
     if tile_sink is not None:
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -764,14 +765,6 @@ def drill_descend_stage(
         store = T.StructType.fromDDL(TILE_STORE_DDL)
         arrow_schema = to_arrow_schema(
             T.StructType([f for f in store.fields if f.name != "z"])
-        )
-        sink_path = tile_sink["path"]
-        ex_keys = np.asarray(
-            sorted(
-                (int(tz) << 56) | (int(tx) << 28) | int(ty)
-                for tz, tx, ty in (tile_sink.get("existing") or ())
-            ),
-            dtype=np.int64,
         )
 
     def decide(tz: int, tx: int, ty: int) -> str:
@@ -794,15 +787,9 @@ def drill_descend_stage(
                 # Spark-side tiles write performed) and hold them as
                 # Arrow batches until the task finishes
                 zs = rend["z"].to_numpy().astype(np.int64)
-                xs_ = rend["x"].to_numpy().astype(np.int64)
-                ys_ = rend["y"].to_numpy().astype(np.int64)
                 keep = np.asarray(
                     rend["sub_idx"].to_numpy() >= 0, dtype=bool
                 )
-                if len(ex_keys):
-                    keep = keep & ~np.isin(
-                        (zs << 56) | (xs_ << 28) | ys_, ex_keys
-                    )
                 if not keep.any():
                     return
                 if not keep.all():
@@ -853,7 +840,7 @@ def drill_descend_stage(
                 pid = ctx.partitionId() if ctx is not None else 0
                 att = ctx.taskAttemptId() if ctx is not None else 0
                 for zv, batches_z in buf.items():
-                    d = os.path.join(sink_path, f"z={zv}")
+                    d = os.path.join(tile_sink, f"z={zv}")
                     os.makedirs(d, exist_ok=True)
                     final = os.path.join(d, f"part-{pid:05d}.parquet")
                     tmp = os.path.join(d, f".part-{pid:05d}.tmp{att}")
@@ -912,7 +899,8 @@ def drill_descend_stage(
                 nxt = []
                 for part in parts:
                     rend = part[part["row_kind"] == RS_RENDER]
-                    if len(rend):
+                    # the root keeps its memoized rows: emit none of its own
+                    if len(rend) and int(zc[0]) != az:
                         # ns partial per tile from the render rows
                         ns = rend.groupby(["z", "x", "y"], sort=False)[
                             "n_emitted"

@@ -131,39 +131,6 @@ def _np(v, dtype):
     return np.asarray(v, dtype=dtype)
 
 
-def row_to_feature(r) -> VtFeature:
-    """Build a VtFeature from a pandas row / dict of the FEATURE_SCHEMA."""
-    gk = r["gc_kinds"]
-    return VtFeature(
-        geom_type=int(r["geom_type"]),
-        xs=_np(r["xs"], np.float64),
-        ys=_np(r["ys"], np.float64),
-        zs=_np(r["zs"], np.float64),
-        part_offsets=_np(r["part_offsets"], np.int32),
-        ring_offsets=_np(r["ring_offsets"], np.int32),
-        gc_kinds=None if gk is None else np.asarray(gk, dtype=np.int8),
-        gc_part_offsets=_np(r["gc_part_offsets"], np.int32),
-        part_dist=_np(r["part_dist"], np.float64),
-        part_seg_start=_np(r["part_seg_start"], np.float64),
-        part_seg_end=_np(r["part_seg_end"], np.float64),
-        part_area=_np(r["part_area"], np.float64),
-        props_json=r["props_json"] if pd.notna(r["props_json"]) else None,
-        id_str=r["id_str"] if pd.notna(r["id_str"]) else None,
-        id_num=int(r["id_num"]) if pd.notna(r["id_num"]) else None,
-        id_float=float(r["id_float"]) if pd.notna(r["id_float"]) else None,
-        feature_seq=int(r["feature_seq"]),
-        world_copy=int(r["world_copy"]),
-        slice_path=r["slice_path"] or "",
-        bbox=(
-            float(r["bbox_min_x"]),
-            float(r["bbox_min_y"]),
-            float(r["bbox_max_x"]),
-            float(r["bbox_max_y"]),
-        ),
-        num_points=int(r["num_points"]),
-    )
-
-
 def features_to_pdf(features: list, extra: Optional[dict] = None) -> pd.DataFrame:
     """Column-wise assembly (dict-of-lists) — avoids per-cell boxing."""
     names = [f.name for f in FEATURE_SCHEMA.fields]

@@ -494,25 +494,6 @@ def ann_topk(docs_embeddings: DataFrame, query_vec: list, k: int = 20) -> DataFr
     return cosine_topk(docs_embeddings, query_vec, k, "vec_id", "embedding")
 
 
-def duck_ann_topk_sql(query_vec: list, k: int = 20) -> str:
-    qn = sum(float(v) * float(v) for v in query_vec) ** 0.5
-    qlit = "[" + ", ".join(repr(float(v)) for v in query_vec) + "]"
-    return (
-        "SELECT vec_id, rnk, cos FROM ("
-        "SELECT vec_id, round("
-        f"list_sum(list_transform(list_zip(embedding::DOUBLE[], {qlit}), "
-        "p -> p[1] * p[2])) / "
-        "(sqrt(list_sum(list_transform(embedding::DOUBLE[], v -> v * v))) "
-        f"* {qn!r}), 6) AS cos, "
-        "row_number() OVER (ORDER BY round("
-        f"list_sum(list_transform(list_zip(embedding::DOUBLE[], {qlit}), "
-        "p -> p[1] * p[2])) / "
-        "(sqrt(list_sum(list_transform(embedding::DOUBLE[], v -> v * v))) "
-        f"* {qn!r}), 6) DESC, vec_id ASC) AS rnk "
-        f"FROM embeddings) WHERE rnk <= {k}"
-    )
-
-
 # --------------------------------------------------------- text analysis
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"]

@@ -55,6 +55,7 @@ from geojson_vt_rs_spark.plans.pyramid import (
     TILED_COLS,
     drill_pass,
     drill_tiles,
+    find_parent,
     run_levels,
 )
 
@@ -150,6 +151,22 @@ def _feature_rows(rows: DataFrame) -> DataFrame:
     )
 
 
+def _tile_partials(step: DataFrame) -> pd.DataFrame:
+    """Per tile of a multi-level pass (RS_SCHEMA rows: fused subtrees or
+    a drill), in one collection: ``num_points`` and ``n_emitted`` from
+    its RS_CAGG rows, its RS_LEAF row count ``n_leaf`` (a tile with
+    retained rows is a leaf) and its feature row count ``nf``."""
+    kind = F.col("row_kind")
+    cagg = kind == RS_CAGG
+    feature = (kind == RS_RENDER) & (F.col("sub_idx") >= 0)
+    return step.groupBy("z", "x", "y").agg(
+        F.sum(F.when(cagg, F.col("num_points"))).alias("num_points"),
+        F.sum(F.when(cagg, F.col("n_emitted"))).alias("n_emitted"),
+        F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
+        F.sum(feature.cast("long")).alias("nf"),
+    ).toPandas()
+
+
 def _append(df: DataFrame, path: str) -> None:
     df.write.mode("append").partitionBy("z").parquet(path)
 
@@ -193,7 +210,7 @@ class _StoreSink:
         self.t0, self.tick0 = time.time(), cpu_ticks()
         self.c = _Commit(self.out, f"level_{level}", f"L{level}")
         self.ns: dict = {}
-        self.n_fused = self.n_leaf_fused = 0
+        self.n_fused = self.n_leaf_fused = self.nf_fused = 0
 
     def _frontier_dir(self, level):
         return os.path.join(self.out, "frontier", f"level_{level + 1}")
@@ -236,29 +253,27 @@ class _StoreSink:
                 cagg = res[1]
         if fuse is not None:
             # fused subtrees, from one cached pass: the leaves write (it
-            # fills the cache), one collection of each fused tile's RS_CAGG
-            # row and RS_LEAF count (a tile with retained rows is a leaf;
-            # the rest stopped at max zoom or hold no features), then the
-            # feature rows written with the tiles' stats rows — three
-            # jobs, the stats rows need no write of their own
+            # fills the cache), one collection of the fused tiles'
+            # partials (a tile without retained rows stopped at max zoom
+            # or holds no features), then the feature rows written with
+            # the tiles' stats rows — the stats rows need no write of
+            # their own
             step = fuse.persist()
-            kind = F.col("row_kind")
-            self.leaves(level, step.filter(kind == RS_LEAF).select(*TILED_COLS))
-            st = step.filter(kind != RS_RENDER).groupBy("z", "x", "y").agg(
-                F.sum(F.when(kind == RS_CAGG, F.col("num_points"))).alias("tnp"),
-                F.sum(F.when(kind == RS_CAGG, F.col("n_emitted"))).alias("ns"),
-                F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
-            ).toPandas()
+            self.leaves(level, step.filter(
+                F.col("row_kind") == RS_LEAF).select(*TILED_COLS))
+            st = _tile_partials(step)
             stats = [
-                _stats_row(int(r.z), int(r.x), int(r.y), int(r.tnp),
-                           int(r.ns), "leaf" if r.n_leaf else "stop")
+                _stats_row(int(r.z), int(r.x), int(r.y), int(r.num_points),
+                           int(r.n_emitted), "leaf" if r.n_leaf else "stop")
                 for r in st.itertuples(index=False)
             ]
             _append(_feature_rows(step).unionByName(
                 self.cp.spark.createDataFrame(stats, TILE_STORE_DDL)
             ), self.c.stg_tiles)
             step.unpersist()
-            self.n_fused, self.n_leaf_fused = len(st), int(st["n_leaf"].sum())
+            self.n_fused = len(st)
+            self.n_leaf_fused = int(st["n_leaf"].sum())
+            self.nf_fused = int(st["nf"].sum())
         return cagg, self.n_fused
 
     def leaves(self, level, df):
@@ -284,7 +299,8 @@ class _StoreSink:
             dict(
                 level=level,
                 n_tiles=len(stats) + self.n_fused,
-                n_tile_feature_rows=sum(nf for _, nf in self.ns.values()),
+                n_tile_feature_rows=sum(nf for _, nf in self.ns.values())
+                + self.nf_fused,
                 n_leaf_feature_rows=int(n_leaf) + self.n_leaf_fused,
                 n_children=n_children,
                 pending_children=pending,
@@ -337,16 +353,21 @@ class CheckpointedPyramid:
         self._iceberg = iceberg
         self._catalog_kwargs = catalog_kwargs
         self._sinks: dict = {}
-        # per-store memo of existing tile keys (the reference's in-memory
-        # tile memo, lib.rs:145-150): loaded with ONE stats-row job,
-        # invalidated on every publish by THIS object.  Exists purely to
-        # avoid re-scanning per lookup; external writers are out of scope
-        # (same single-writer contract as the staged-rename protocol).
+        # per-store memo of the tile keys (the reference's in-memory tile
+        # memo, lib.rs:145-150) and of the keys of the tiles that retain
+        # leaf features: loaded together with ONE stats-row job
+        # (_tile_keys), extended by each drill of THIS object (a drill
+        # only adds tiles) and invalidated by each level commit.  Exists
+        # purely to avoid re-scanning per lookup; external writers are
+        # out of scope (same single-writer contract as the staged-rename
+        # protocol).
         self._keys: dict = {}
+        self._leaf_keys: dict = {}
         # warm-lookup memo: (out_dir, z, x, y) -> persisted ranked tile DF
         # (the reference's warm get_tile is a dict hit, lib.rs:193-195;
         # without this every repeat read pays the one-tile rank window).
-        # Bounded LRU; invalidated with _keys on every publish.
+        # Bounded LRU; kept across drills (a drill never changes a
+        # published tile), invalidated with _keys by each level commit.
         self._tile_dfs: dict = {}
         self._tile_dfs_cap = 256
 
@@ -382,6 +403,7 @@ class CheckpointedPyramid:
 
     def _invalidate_memos(self, out_dir: str) -> None:
         self._keys.pop(out_dir, None)
+        self._leaf_keys.pop(out_dir, None)
         for k in [k for k in self._tile_dfs if k[0] == out_dir]:
             self._tile_dfs.pop(k).unpersist()
 
@@ -478,32 +500,34 @@ class CheckpointedPyramid:
     def _tile_keys(self, out_dir: str) -> set:
         """All existing tile keys, from the per-tile stats rows
         (feature_idx == -1 — exactly one per tile) in ONE pushed-filter
-        scan; cached until this object publishes new tiles.  Replaces the
-        previous per-ancestor take(1) probes (one Spark job each) and
-        the full feature-row distinct in the drill."""
+        scan that also loads ``_leaf_keys``, the tiles that retain leaf
+        features (action 'leaf'); cached until this object commits a
+        level, extended by its drills."""
         keys = self._keys.get(out_dir)
         if keys is None:
             tiles_root = os.path.join(out_dir, "tiles")
-            keys = set()
+            keys, leaves = set(), set()
             if os.path.isdir(tiles_root):
                 pdf = (
                     self.spark.read.parquet(tiles_root)
                     .filter(F.col("feature_idx") == -1)
-                    .select("z", "x", "y")
+                    .select("z", "x", "y", "action")
                     .toPandas()
                 )
-                keys = {
-                    (int(r.z), int(r.x), int(r.y))
-                    for r in pdf.itertuples(index=False)
-                }
-            self._keys[out_dir] = keys
+                for r in pdf.itertuples(index=False):
+                    key = (int(r.z), int(r.x), int(r.y))
+                    keys.add(key)
+                    if r.action == "leaf":
+                        leaves.add(key)
+            self._keys[out_dir], self._leaf_keys[out_dir] = keys, leaves
         return keys
 
     def get_tile(self, out_dir: str, z: int, x_: int, y: int) -> DataFrame:
         """Full get_tile semantics on the parquet store (lib.rs:184-223):
         memo-hit -> pruned read; miss -> drill down from the nearest
-        ancestor's retained leaf features, append the newly created tiles
-        (and updated leaves) to the store, then read.  Returns the tile's
+        memoized ancestor (find_parent, shared with the in-memory index)
+        when it retains leaf features, append the newly created tiles
+        (and their leaves) to the store, then read.  Returns the tile's
         feature rows (possibly empty = EMPTY_TILE)."""
         o = self.options
         if z > o.max_zoom:
@@ -514,62 +538,30 @@ class CheckpointedPyramid:
         tile_keys = self._tile_keys(out_dir)
         if (z, x, y) in tile_keys:
             return self.read_tile(out_dir, z, x, y)
-
-        # find nearest memoized ancestor with retained leaf features:
-        # ONE pushed-filter probe over the ancestor path (z levels
-        # shrink the candidate set to <= max_zoom keys) instead of a
-        # sequential take(1) job per ancestor
-        leaves_path = os.path.join(out_dir, "leaves")
-        path = []
-        az, ax, ay = z, x, y
-        while az != 0:
-            az -= 1
-            ax //= 2
-            ay //= 2
-            path.append((az, ax, ay))
-        leaf_set: set = set()
-        if path and os.path.isdir(leaves_path):
-            cond = None
-            for pz, px, py in path:
-                c = (F.col("z") == pz) & (F.col("x") == px) & (F.col("y") == py)
-                cond = c if cond is None else (cond | c)
-            probe = (
-                self.spark.read.parquet(leaves_path)
-                .filter(cond)
-                .select("z", "x", "y")
-                .distinct()
-                .toPandas()
-            )
-            leaf_set = {
-                (int(r.z), int(r.x), int(r.y))
-                for r in probe.itertuples(index=False)
-            }
-        leaf = None
-        for pz, px, py in path:
-            if (pz, px, py) in leaf_set:
-                leaf = self.spark.read.parquet(leaves_path).filter(
-                    (F.col("z") == pz) & (F.col("x") == px) & (F.col("y") == py)
-                )
-                az, ax, ay = pz, px, py
-                break
-            if (pz, px, py) in tile_keys:
-                break  # memoized but feature-less ancestor -> EMPTY
-        if leaf is None:
-            return self.read_tile(out_dir, z, x, y)  # empty result
+        root = find_parent(z, x, y, lambda *k: k in tile_keys)
+        if root not in self._leaf_keys[out_dir]:
+            # no ancestor, or a feature-less one -> EMPTY
+            return self.read_tile(out_dir, z, x, y)
 
         # drill DISTRIBUTED: tiles and leaves stream from the executors
         # straight into the staging dirs, committed like a level
+        rz, rx, ry = root
+        leaf = self.spark.read.parquet(os.path.join(out_dir, "leaves")).filter(
+            (F.col("z") == rz) & (F.col("x") == rx) & (F.col("y") == ry)
+        )
         tag = f"drill_{z}_{x}_{y}"
         commit = _Commit(out_dir, tag, tag)
-        self._drill(leaf, (az, ax, ay), (z, x, y), commit, tile_keys)
+        tiles, leafy = self._drill(leaf, root, (z, x, y), commit)
         commit.publish()
-        self._invalidate_memos(out_dir)  # new tiles published
+        # the drill only added tiles below its root: extend the key
+        # memos, keep the read_tile memo
+        tile_keys.update(tiles)
+        self._leaf_keys[out_dir] |= leafy
         return self.read_tile(out_dir, z, x, y)
 
     def _drill(
-        self, leaf: DataFrame, root: tuple, target: tuple,
-        commit: _Commit, existing: set,
-    ) -> None:
+        self, leaf: DataFrame, root: tuple, target: tuple, commit: _Commit,
+    ) -> tuple:
         """Target-directed descent from the ancestor's retained leaves:
         non-path tiles stop and retain (lib.rs:324-338), the path tile
         splits until the target — the whole descent is ONE feature-
@@ -577,54 +569,42 @@ class CheckpointedPyramid:
         in-memory index's get_tile runs too.  The rendered tile features
         (~85 % of the pass's output rows) sink to the staging parquet
         IN-KERNEL (drill_descend_stage ``tile_sink``: idempotent per-task
-        files, existing-tile exclusion in-kernel) — they never cross the
-        Python->JVM boundary and need no write job.  Stats rows are
-        finished driver-side from the pass's per-tile partials.  Tiles
-        already in the store (the re-split ancestor; cousins from prior
-        drills) are excluded via ``existing``, the caller's index-sized
-        tile-key set (one stats-row scan, _tile_keys)."""
+        files) — they never cross the Python->JVM boundary and need no
+        write job.  ``root`` is the only stored tile the pass touches,
+        and it emits none of root's rows.  Stats rows are finished
+        driver-side from the pass's per-tile partials; a new tile with
+        retained rows records action 'leaf', the rest 'drill'.  Returns
+        the new tile keys and the set of those that are leaves."""
         spark = self.spark
-        exist_df = F.broadcast(
-            spark.createDataFrame(
-                [(a, b, c) for a, b, c in existing] or [(-1, -1, -1)],
-                "z int, x int, y int",
-            )
-        )
         step = drill_pass(
             spark, leaf, self.options, root, target,
-            tile_sink=dict(path=commit.stg_tiles, existing=existing),
+            tile_sink=commit.stg_tiles,
         ).persist()
 
         # one wave: leaf write + partials collection run as concurrent
         # jobs over the cached pass (the tile files appear as a side
         # effect of whichever job computes it first; duplicated
         # concurrent compute re-writes identical files atomically)
-        def _write_leaves():
-            _append(step.filter(F.col("row_kind") == RS_LEAF).join(
-                exist_df, ["z", "x", "y"], "left_anti"
-            ).select(*TILED_COLS), commit.stg_leaves)
-
-        def _collect_stats():
-            return (
-                step.filter(F.col("row_kind") == RS_CAGG)
-                .select("z", "x", "y", "num_points", "n_emitted")
-                .toPandas()
-            )
-
+        leaves = step.filter(F.col("row_kind") == RS_LEAF).select(*TILED_COLS)
         with ThreadPoolExecutor(2) as ex:
-            lf = ex.submit(_write_leaves)
-            sf = ex.submit(_collect_stats)
+            lf = ex.submit(_append, leaves, commit.stg_leaves)
+            sf = ex.submit(_tile_partials, step)
             lf.result()
             partials = sf.result()
         step.unpersist()
+        leafy = {
+            (int(r.z), int(r.x), int(r.y))
+            for r in partials.itertuples(index=False) if r.n_leaf
+        }
+        tiles = drill_tiles(partials, root, target)
         stats_rows = [
-            _stats_row(tz, tx, ty, tnp, ns, "drill")
-            for tz, tx, ty, tnp, ns in drill_tiles(
-                partials, root, target, existing)
+            _stats_row(*t, "leaf" if t[:3] in leafy else "drill")
+            for t in tiles
         ]
         if stats_rows:
             _append(spark.createDataFrame(stats_rows, TILE_STORE_DDL),
                     commit.stg_tiles)
+        return [t[:3] for t in tiles], leafy
 
 
 def checkpointed_mosaic(

@@ -2,7 +2,8 @@
 as a straight-line Spark plan: convert -> [wrap] -> x/y clip (FULL buffer
 p = buffer/extent, lib.rs:113 — note the indexed split path uses the half
 buffer) -> grouped emit.  This is the engine's minimum end-to-end slice
-and the flagship `entry()` query."""
+of the tiler (the driver contract's `entry()` is `q_cell_assign`, in
+`__spark_entry__.py`)."""
 
 from __future__ import annotations
 

@@ -498,8 +498,20 @@ class _IndexSink:
             ])
 
 
+def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
+    """The nearest ancestor of (z, x, y) for which ``memoized(z, x, y)``
+    holds, or None (lib.rs:229-245): the drill root of both get_tiles.
+    split_tile creates all four children of every tile it splits
+    (lib.rs:344-428), so no tile below that ancestor is memoized yet."""
+    while z != 0:
+        z, x, y = z - 1, x // 2, y // 2
+        if memoized(z, x, y):
+            return z, x, y
+    return None
+
+
 def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
-               root: tuple, target: tuple, tile_sink: Optional[dict] = None
+               root: tuple, target: tuple, tile_sink: Optional[str] = None
                ) -> DataFrame:
     """The cold get_tile pass of both SparkGeoJSONVT and
     CheckpointedPyramid: drill_descend_stage from ``root``'s retained
@@ -512,23 +524,22 @@ def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
     )
 
 
-def drill_tiles(partials: pd.DataFrame, root: tuple, target: tuple,
-                existing) -> list:
+def drill_tiles(partials: pd.DataFrame, root: tuple, target: tuple) -> list:
     """The tiles a drill pass creates, as (z, x, y, num_points,
-    num_simplified): every tile the pass saw that is not in ``existing``,
-    finished from its RS_CAGG partials, plus the empty children of the
-    split path tiles (split_tile creates all four, lib.rs:344-428)."""
+    num_simplified): every tile the pass saw but ``root`` (the one
+    memoized tile it touches, see find_parent), finished from its
+    RS_CAGG partials, plus the empty children of the split path tiles
+    (split_tile creates all four, lib.rs:344-428)."""
     agg: dict = {}
     for r in partials.itertuples(index=False):
         key = (int(r.z), int(r.x), int(r.y))
         tnp, ns = agg.get(key, (0, 0))
         agg[key] = (tnp + int(r.num_points), ns + int(r.n_emitted))
-    out = [k + v for k, v in agg.items() if k not in existing]
+    out = [k + v for k, v in agg.items() if k != root]
     (pz, px, py), (cz, cx, cy) = root, target
     while pz < cz and agg.get((pz, px, py), (0,))[0] > 0:
         out += [
-            ch + (0, 0) for ch in _children([(pz, px, py)])
-            if ch not in agg and ch not in existing
+            ch + (0, 0) for ch in _children([(pz, px, py)]) if ch not in agg
         ]
         m = 1 << (cz - pz - 1)
         pz, px, py = pz + 1, cx // m, cy // m
@@ -629,16 +640,6 @@ class SparkGeoJSONVT:
             ].reset_index(drop=True)
 
     # ------------------------------------------------------------------
-    def find_parent(self, z, x, y):
-        while z != 0:
-            z -= 1
-            x //= 2
-            y //= 2
-            tid = to_id(z, x, y)
-            if tid in self.tiles:
-                return z, x, y
-        return None
-
     def get_tile(self, z: int, x_: int, y: int) -> SparkTile:
         o = self.options
         if z > o.max_zoom:
@@ -652,7 +653,7 @@ class SparkGeoJSONVT:
             return self.tiles.get(tid, EMPTY_TILE)
         if tid in self.tiles:
             return self.tiles[tid]
-        parent = self.find_parent(z, x, y)
+        parent = find_parent(z, x, y, lambda *k: to_id(*k) in self.tiles)
         if parent is None:
             raise LookupError("Parent tile not found")
         leaf = self.leaf_features.get(to_id(*parent))
@@ -663,20 +664,18 @@ class SparkGeoJSONVT:
         return self.tiles.get(tid, EMPTY_TILE)
 
     def _drill(self, leaf: pd.DataFrame, root: tuple, target: tuple) -> None:
-        """Cold get_tile: the drill pass from the ancestor's retained
-        features, collected once (index-sized: one root-to-target path)
-        and registered like a level — new tiles from the RS_CAGG partials
-        and render rows, retained features of the new leaf tiles."""
+        """Cold get_tile: the drill pass from the nearest memoized
+        ancestor's retained features, collected once (index-sized: one
+        root-to-target path) and registered like a level — new tiles
+        from the RS_CAGG partials and render rows (the pass emits none
+        of the root's), retained features of the new leaf tiles."""
         frontier = create_feature_df(
             self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA
         )
         rows = drill_pass(
             self.spark, frontier, self.options, root, target
         ).toPandas()
-        existing = {(t.z, t.x, t.y) for t in self.tiles.values()}
-        tiles = drill_tiles(
-            rows[rows["row_kind"] == RS_CAGG], root, target, existing
-        )
+        tiles = drill_tiles(rows[rows["row_kind"] == RS_CAGG], root, target)
         # the ancestor was split (lib.rs:430-433); no other retained tile
         # lies below it, so every RS_LEAF row belongs to a new tile
         self.leaf_features.pop(to_id(*root), None)

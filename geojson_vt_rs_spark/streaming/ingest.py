@@ -54,38 +54,6 @@ def stream_cell_counts(
     q.awaitTermination()
 
 
-def stream_mosaics(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    zoom: int = 5,
-) -> None:
-    """Micro-batch raster mosaicking (per-batch tiles, epoch-stamped)."""
-    from geojson_vt_rs_spark.plans.spatial import (
-        mosaic_tiles,
-        with_cells,
-        with_footprints,
-    )
-
-    stream = spark.readStream.schema(IMAGE_SCHEMA).parquet(src_dir)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        tiles = mosaic_tiles(with_cells(with_footprints(batch), zoom), zoom)
-        # idempotent per-epoch dir (see module docstring)
-        tiles.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

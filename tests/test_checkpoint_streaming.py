@@ -540,9 +540,12 @@ def test_drilldown_crash_window_retry(spark, tmp_path, corpus):
     assert len(want) == len(mem.get_tile(7, 37, 48).features)
 
     # roll back to the crash window: remove the committed drill tiles dir
-    # but LEAVE the drill leaves dir (as if we died between the renames)
+    # but LEAVE the drill leaves dir (as if we died between the renames);
+    # the retry runs in a new process, so a new object with empty memos
     _sh.rmtree(os.path.join(out, "tiles", "level=drill_7_37_48"))
-    again = cp.get_tile(out, 7, 37, 48).toPandas()
+    again = CheckpointedPyramid(spark, opts).get_tile(out, 7, 37, 48)
+    again = again.toPandas()
+    assert os.path.isdir(os.path.join(out, "tiles", "level=drill_7_37_48"))
     assert len(again) == len(want)
     assert not again.duplicated(subset=["feature_idx"]).any()
 
@@ -632,7 +635,8 @@ def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch, corpus):
 def test_multi_drill_divergent_targets(spark, tmp_path, corpus):
     """Two drills whose paths share a prefix then diverge: every drilled
     tile matches the in-memory tiler, and cousin tiles created by the
-    first drill are not duplicated by the second (anti-join guard)."""
+    first drill are not duplicated by the second (a drill starts from
+    the nearest memoized ancestor and writes no row of it)."""
     from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
 
     out = str(tmp_path / "pyr_md")
@@ -704,12 +708,13 @@ def test_store_routes_identical_tiles(spark, tmp_path, corpus):
 
 
 def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
-    """drill_descend_stage's in-kernel tile sink (tile_sink=...) must
-    write EXACTLY the rows the yield-path's Spark-side write produced:
-    same store schema, same row set, existing-tile exclusion applied,
-    and idempotent under re-execution (deterministic filenames +
-    atomic rename — a retried/duplicated task overwrites with
-    identical content)."""
+    """drill_descend_stage's in-kernel tile sink (tile_sink=<dir>) must
+    write EXACTLY the render rows the yield path returns, shaped by the
+    store's feature-row projection: same store schema, same row set,
+    none of the memoized root's rows (the one stored tile a drill
+    touches), and idempotent under re-execution (deterministic
+    filenames + atomic rename — a retried/duplicated task overwrites
+    with identical content)."""
     import glob
     import os
 
@@ -722,13 +727,12 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
         RS_RENDER,
         drill_descend_stage,
     )
+    from geojson_vt_rs_spark.plans.checkpoint import _feature_rows
     from geojson_vt_rs_spark.plans.pyramid import TILED_COLS
 
     out = str(tmp_path / "sinkstore")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
-    opts = Options()
+    feats = load_corpus(spark, "generated")
+    opts = Options()  # the root is a leaf: every feature stays at z0
     cp = CheckpointedPyramid(spark, opts)
     cp.run(feats, out)
 
@@ -736,33 +740,14 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
         "z = 0 and x = 0 and y = 0"
     )
     src = leaf.select(*TILED_COLS).repartition(4)
-    root, target = (0, 0, 0), (7, 37, 48)
-    existing = {(0, 0, 0), (5, 9, 11)}  # ancestor + a fake prior cousin
+    root, target = (0, 0, 0), (7, 37, 48)  # the first generated metro
 
-    # yield path: render rows cross the boundary, shaped by the former
-    # Spark-side write expression
+    # yield path: render rows cross the boundary, shaped like the level
+    # render write (the sink tags its rows 'drill')
     plain = drill_descend_stage(src, opts, root, target).persist()
     want_tiles = (
-        plain.filter(
-            (F.col("row_kind") == RS_RENDER) & (F.col("sub_idx") >= 0)
-        )
-        .select(
-            "z", "x", "y",
-            F.lit(None).cast("int").alias("feature_idx"),
-            "type", "kind", "geometry_json", "tags_json",
-            F.col("id_str").alias("tile_id_str"),
-            F.col("id_num").alias("tile_id_num"),
-            F.col("id_float").alias("tile_id_float"),
-            F.lit(None).cast("int").alias("tile_num_points"),
-            F.lit(None).cast("int").alias("tile_num_simplified"),
-            F.lit("drill").alias("action"),
-            "world_copy", "feature_seq", "slice_path", "sub_idx",
-        )
-        .filter(
-            ~F.struct("z", "x", "y").isin(
-                [F.struct(F.lit(a), F.lit(b), F.lit(c)) for a, b, c in existing]
-            )
-        )
+        _feature_rows(plain)
+        .withColumn("action", F.lit("drill"))
         .toPandas()
     )
     plain_kinds = {
@@ -773,10 +758,7 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
 
     # sink path
     stg = str(tmp_path / "stg_tiles")
-    sunk = drill_descend_stage(
-        src, opts, root, target,
-        tile_sink=dict(path=stg, existing=existing),
-    ).persist()
+    sunk = drill_descend_stage(src, opts, root, target, tile_sink=stg).persist()
     sunk_kinds = {
         r["row_kind"]: r["n"]
         for r in sunk.groupBy("row_kind").agg(F.count("*").alias("n")).collect()
@@ -789,23 +771,24 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
     assert sunk_kinds[RS_CAGG] == plain_kinds[RS_CAGG]
 
     got_tiles = spark.read.parquet(stg).toPandas()
+    assert len(got_tiles) > 10
     cols = sorted(want_tiles.columns)
     assert sorted(got_tiles.columns) == cols
     key = ["z", "x", "y", "world_copy", "feature_seq", "slice_path", "sub_idx"]
     a = got_tiles[cols].sort_values(key, ignore_index=True)
     b = want_tiles[cols].sort_values(key, ignore_index=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=True)
-    # exclusion applied: no row for any existing tile
-    assert not set(
-        map(tuple, got_tiles[["z", "x", "y"]].drop_duplicates().to_numpy())
-    ) & existing
+    # root-only exclusion: the pass renders tiles below the root only,
+    # down to the target
+    tiles = set(map(tuple, got_tiles[["z", "x", "y"]].to_numpy().tolist()))
+    assert root not in tiles and target in tiles
+    assert all(0 < t[0] <= target[0] for t in tiles)
 
     # idempotence: re-executing the pass overwrites the same files with
     # identical content (no duplicates, no leftover visible tmp files)
     files1 = sorted(glob.glob(f"{stg}/z=*/part-*.parquet"))
     drill_descend_stage(
-        src, opts, root, target,
-        tile_sink=dict(path=stg, existing=existing),
+        src, opts, root, target, tile_sink=stg,
     ).write.format("noop").mode("overwrite").save()
     files2 = sorted(glob.glob(f"{stg}/z=*/part-*.parquet"))
     assert files1 == files2

@@ -177,13 +177,16 @@ def test_routes_identical_tiles(spark, tmp_path, corpus, route):
         assert read_tile(cp, out, key) == store[key][1]
 
     # every route retains the core tiler's leaf features, and the
-    # manifests count every stored leaf row
+    # manifests count every stored leaf and feature row
     leaves = spark.read.parquet(f"{out}/leaves").toPandas()
     want_leaves = core_leaves(core)
     assert want_leaves
     assert leaf_rows(leaves) == want_leaves
     assert leaf_rows(pd.concat(idx.leaf_features.values())) == want_leaves
     assert sum(m["n_leaf_feature_rows"] for m in s["manifests"]) == len(leaves)
+    n_rows = sum(len(feats) for _, feats in store.values())
+    assert n_rows == sum(len(em.features) for em in want.values())
+    assert s["total_tile_rows"] == n_rows
 
 
 @pytest.mark.parametrize("route", list(ROUTES))
@@ -220,3 +223,11 @@ def test_drills_identical_tiles(spark, tmp_path, corpus, route):
     for key, em in core_tiles(core).items():
         assert store[key] == (
             (em.num_points, em.num_simplified), canon(em.features)), key
+
+    # the drills extended the memos exactly as a rescan of the store
+    # loads them, and the leaf flag marks exactly the tiles in leaves/
+    fresh = CheckpointedPyramid(spark, opts)
+    assert fresh._tile_keys(out) == cp._tile_keys(out)
+    assert fresh._leaf_keys[out] == cp._leaf_keys[out]
+    leaves = spark.read.parquet(f"{out}/leaves").toPandas()
+    assert cp._leaf_keys[out] == set(leaf_rows(leaves))
