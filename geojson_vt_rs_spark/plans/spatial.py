@@ -10,16 +10,20 @@ exprs, no Python), and mosaicked into z/x/y raster tiles.
 
 Scale notes:
   * tile polygons are index-sized -> broadcast; the equi-join on (x, y)
-    is the prune, ray-casting refines only co-located pairs.
+    plus each polygon's tile-extent bbox is the prune, in the JVM, so
+    ray-casting refines only pairs whose point lies in the polygon bbox.
   * kNN never leaves the JVM: explode(9 cells) + broadcast join + window.
   * mosaic caps each tile at SLOTS images via a row_number window BEFORE
-    the grouped render — bounds per-group memory under metro-cell skew
-    (AQE skew-join handles the join side; the cap handles the agg side).
+    the render — bounds per-tile memory under metro-cell skew (AQE
+    skew-join handles the join side; the cap handles the render side).
+    The render is one mapInPandas over rows clustered by tile: one
+    Python call per Arrow batch, not one per tile.
 """
 
 from __future__ import annotations
 
 import json
+import math
 from typing import Iterator, Optional
 
 import numpy as np
@@ -28,8 +32,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geojson_vt_rs_spark.core.geom import GEOM_MULTIPOLYGON
 from geojson_vt_rs_spark.functions.geo_synth import METROS
 from geojson_vt_rs_spark.functions.mercator import cell_xy, mercator_x, mercator_y
+from geojson_vt_rs_spark.operators.schema import local_relation_df
 from geojson_vt_rs_spark.sources.images import decode_image
 from geojson_vt_rs_spark.sources.png import encode_png
 
@@ -94,7 +100,9 @@ def build_tile_polygons(spark: SparkSession, geojson_path: str, zoom: int):
 
 def tile_polygons_df(spark: SparkSession, index, zoom: int) -> DataFrame:
     """Tile polygon features at ``zoom`` from a SparkGeoJSONVT index as a
-    broadcastable DataFrame (x, y, feature_idx, rings_json, id_str)."""
+    broadcastable DataFrame (x, y, feature_idx, rings_json, id_str,
+    id_num, minx, maxx, miny, maxy); the bounds are the polygon's
+    tile-extent bbox over all of its rings."""
     rows = []
     for tid, t in index.get_internal_tiles().items():
         if t.z != zoom:
@@ -104,24 +112,27 @@ def tile_polygons_df(spark: SparkSession, index, zoom: int) -> DataFrame:
                 continue
             geom = f["geometry"]
             # normalize Polygon vs MultiPolygon to a flat ring list
-            from geojson_vt_rs_spark.core.geom import GEOM_MULTIPOLYGON
-
             rings = (
                 [r for poly in geom for r in poly]
                 if f["kind"] == GEOM_MULTIPOLYGON
                 else geom
             )
+            xs = [p[0] for r in rings for p in r]
+            ys = [p[1] for r in rings for p in r]
             rows.append(
-                (t.x, t.y, idx, json.dumps(rings), f["id_str"], f["id_num"])
+                (t.x, t.y, idx, json.dumps(rings), f["id_str"], f["id_num"],
+                 math.floor(min(xs)), math.ceil(max(xs)),
+                 math.floor(min(ys)), math.ceil(max(ys)))
             )
+    # integer bounds keep the VALUES literals plain (a double literal is a
+    # CAST per cell); floor/ceil keep them inclusive for any coordinate
     schema = (
         "x long, y long, feature_idx int, rings_json string, "
-        "id_str string, id_num long"
+        "id_str string, id_num long, "
+        "minx long, maxx long, miny long, maxy long"
     )
     # LocalRelation: pip_join broadcasts this table, and an RDD-backed
     # build ran a 32-task Python job per use (0.5 s warm on local[32])
-    from geojson_vt_rs_spark.operators.schema import local_relation_df
-
     return local_relation_df(spark, rows, schema)
 
 
@@ -155,11 +166,15 @@ def pip_join(
     zoom: int,
     extent: int = 4096,
 ) -> DataFrame:
-    """Broadcast equi-join on the cell (prune) + ray-cast refine.
+    """Broadcast equi-join on the cell plus the polygon bbox (prune) +
+    ray-cast refine.
 
     Points are transformed to tile-local extent coords (tile.rs:351-357
     transform without rounding) so the test against the emitted integer
-    polygons happens in the polygons' own space.
+    polygons happens in the polygons' own space.  The bbox bounds are
+    inclusive, so the prune drops only pairs the refine would reject: a
+    point outside every ring's bbox crosses each closed ring an even
+    number of times.
     """
     z2 = float(1 << zoom)
     pts = images_pts.select(
@@ -172,7 +187,10 @@ def pip_join(
     )
     joined = pts.join(
         F.broadcast(tile_polys),
-        (pts.cx == tile_polys.x) & (pts.cy == tile_polys.y),
+        (pts.cx == tile_polys.x)
+        & (pts.cy == tile_polys.y)
+        & pts.tx.between(tile_polys.minx, tile_polys.maxx)
+        & pts.ty.between(tile_polys.miny, tile_polys.maxy),
         "inner",
     ).select("image_id", "caption", "cx", "cy", "tx", "ty", "feature_idx",
              "rings_json", "id_str")
@@ -330,9 +348,10 @@ def mosaic_tiles(
     #   2. broadcast the survivor ids back onto the cached image rows —
     #      the survivor set is bounded by n_tiles * SLOTS regardless of
     #      input size (mosaic zooms are low, so this stays driver-safe);
-    #   3. the surviving image rows cross the wire exactly ONCE, into the
-    #      render groupBy (the round-1 plan window-shuffled them twice
-    #      more).
+    #   3. the surviving image rows cross the wire exactly ONCE, in the
+    #      repartition that clusters each tile into one partition, sorted
+    #      by slot, for the batch render (the round-1 plan window-shuffled
+    #      them twice more).
     # decode_early=True additionally decodes + nn-resamples map-side so
     # the one wide exchange moves fixed 768-byte slot thumbnails instead
     # of original bytes — the right call when real images are 100KB-10MB;
@@ -394,43 +413,72 @@ def mosaic_tiles(
     else:
         pre = joined
 
-    def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cx, cy = int(key[0]), int(key[1])
-        canvas = np.zeros((TILE_PX, TILE_PX, 3), dtype=np.uint8)
-        pdf = pdf.sort_values("slot")
-        manifest = {}
-        src_bytes = 0
-        per = TILE_PX // SLOT_PX
-        for r in pdf.itertuples(index=False):
-            s = int(r.slot)
-            ry, rx = (s // per) * SLOT_PX, (s % per) * SLOT_PX
-            if decode_early:
-                tile_rgb = np.frombuffer(r.rgb, dtype=np.uint8).reshape(
-                    SLOT_PX, SLOT_PX, 3
-                )
-                src_bytes += int(r.src_len)
-            else:
-                tile_rgb = nn_resample(
-                    decode_image(r.bytes, int(r.w), int(r.h), r.fmt)
-                )
-                src_bytes += len(r.bytes)
-            canvas[ry : ry + SLOT_PX, rx : rx + SLOT_PX] = tile_rgb
-            manifest[str(s)] = r.image_id
-        ids = pdf["image_id"]
-        return pd.DataFrame(
-            [
-                dict(
-                    z=zoom,
-                    x=cx,
-                    y=cy,
-                    tile_png=encode_png(canvas),
-                    n_images=len(pdf),
-                    src_bytes=src_bytes,
-                    first_image_id=ids.min(),
-                    last_image_id=ids.max(),
-                    manifest_json=json.dumps(manifest, sort_keys=True),
-                )
+    per = TILE_PX // SLOT_PX
+    out_cols = [f.name for f in MOSAIC_SCHEMA.fields]
+
+    def render_tile(canvas: np.ndarray, pdf: pd.DataFrame) -> tuple:
+        """One tile from its rows, already in slot order."""
+        canvas.fill(0)
+        slots = pdf["slot"].tolist()
+        ids = pdf["image_id"].tolist()
+        if decode_early:
+            thumbs = [
+                np.frombuffer(b, dtype=np.uint8).reshape(SLOT_PX, SLOT_PX, 3)
+                for b in pdf["rgb"]
             ]
+            src_bytes = int(pdf["src_len"].sum())
+        else:
+            blobs = pdf["bytes"].tolist()
+            thumbs = [
+                nn_resample(decode_image(b, int(w), int(h), f))
+                for b, w, h, f in zip(blobs, pdf["w"], pdf["h"], pdf["fmt"])
+            ]
+            src_bytes = sum(len(b) for b in blobs)
+        for s, rgb in zip(slots, thumbs):
+            ry, rx = (s // per) * SLOT_PX, (s % per) * SLOT_PX
+            canvas[ry : ry + SLOT_PX, rx : rx + SLOT_PX] = rgb
+        manifest = {str(s): i for s, i in zip(slots, ids)}
+        return (
+            zoom,
+            int(pdf["cx"].iat[0]),
+            int(pdf["cy"].iat[0]),
+            encode_png(canvas),
+            len(ids),
+            src_bytes,
+            min(ids),
+            max(ids),
+            json.dumps(manifest, sort_keys=True),
         )
 
-    return pre.groupBy("cx", "cy").applyInPandas(render, schema=MOSAIC_SCHEMA)
+    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Rows arrive clustered by tile and in slot order within it; a
+        tile may straddle Arrow batches, so the last tile of each batch
+        (at most SLOTS rows) carries into the next one."""
+        canvas = np.zeros((TILE_PX, TILE_PX, 3), dtype=np.uint8)
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if pdf.empty:
+                continue
+            cx, cy = pdf["cx"].to_numpy(), pdf["cy"].to_numpy()
+            starts = np.flatnonzero(
+                np.r_[True, (cx[1:] != cx[:-1]) | (cy[1:] != cy[:-1])]
+            ).tolist()
+            carry = pdf.iloc[starts[-1]:]
+            done = [
+                render_tile(canvas, pdf.iloc[a:b])
+                for a, b in zip(starts[:-1], starts[1:])
+            ]
+            if done:
+                yield pd.DataFrame(done, columns=out_cols)
+        if carry is not None:
+            yield pd.DataFrame([render_tile(canvas, carry)], columns=out_cols)
+
+    # one exchange clusters each tile's rows into one partition, in slot
+    # order; the kernel then renders a whole Arrow batch per Python call
+    return (
+        pre.repartition("cx", "cy")
+        .sortWithinPartitions("cx", "cy", "slot")
+        .mapInPandas(render, schema=MOSAIC_SCHEMA)
+    )

@@ -94,34 +94,75 @@ def test_metro_skew_present(images):
     assert sum(r["count"] for r in top) > 0.25 * N
 
 
-@pytest.fixture(scope="module")
-def us_index(spark):
-    from geojson_vt_rs_spark.config import Options
-    from geojson_vt_rs_spark.operators.pipeline import read_geojson_features
-    from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
+def _box(x0, y0, x1, y1):
+    """Closed lon/lat box ring as (xs, ys, zs)."""
+    xs = np.array([x0, x1, x1, x0, x0], dtype=np.float64)
+    ys = np.array([y0, y0, y1, y1, y0], dtype=np.float64)
+    return xs, ys, np.zeros(5)
 
+
+def _hand_shapes():
+    """Shapes that the generated boxes lack, each over image footprints:
+    a concave L whose notch corner sits inside the NYC metro cluster, a
+    ring whose hole's corner sits inside the Tokyo cluster, and a box
+    spanning the 2x2 block of z5 tiles x 16-17, y 15-16, which clipping
+    cuts into four tile polygons."""
+    from geojson_vt_rs_spark.core.geom import GEOM_POLYGON, make_feature
+
+    lx = np.array([-74.5, -73.5, -73.5, -74.001, -74.001, -74.5, -74.5])
+    ly = np.array([40.2, 40.2, 40.7175, 40.7175, 41.2, 41.2, 40.2])
+    shapes = [
+        [(lx, ly, np.zeros(len(lx)))],
+        [_box(139.2, 35.2, 140.2, 36.2), _box(139.696, 35.694, 140.0, 36.0)],
+        [_box(1.0, -8.0, 20.0, 8.0)],
+    ]
+    feats = []
+    for i, rings in enumerate(shapes):
+        f = make_feature(
+            GEOM_POLYGON, rings, ring_group_sizes=[len(rings)],
+            feature_seq=10_000 + i, id_str=f"hand{i}",
+        )
+        f.num_points = len(f.xs)
+        feats.append(f)
+    return feats
+
+
+@pytest.fixture(scope="module")
+def poly_index(spark):
+    """Generated polygons and polylines plus the hand-built shapes."""
+    from geojson_vt_rs_spark.config import Options
+    from geojson_vt_rs_spark.operators.schema import (
+        FEATURE_SCHEMA,
+        create_feature_df,
+        features_to_pdf,
+    )
+    from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
+    from geojson_vt_rs_spark.sources.synth_features import generate_features
+
+    feats = generate_features(spark, 600, partitions=4).unionByName(
+        create_feature_df(spark, features_to_pdf(_hand_shapes()), FEATURE_SCHEMA)
+    )
     # index_max_points=0 forces full split to ZOOM so every occupied
     # cell has its clipped tile polygons materialized
-    feats = read_geojson_features(spark, "/root/reference/fixtures/us-states.json")
     return SparkGeoJSONVT(
         spark, feats, Options(index_max_zoom=ZOOM, index_max_points=0)
     )
 
 
-def test_pip_join_vs_bruteforce(spark, images, us_index):
+def test_pip_join_vs_bruteforce(spark, images, poly_index):
     from geojson_vt_rs_spark.plans.spatial import (
         pip_join,
         ray_cast_inside,
         tile_polygons_df,
     )
 
-    polys = tile_polygons_df(spark, us_index, ZOOM)
+    polys = tile_polygons_df(spark, poly_index, ZOOM)
     npolys = polys.count()
     assert npolys > 0
     got = pip_join(images, polys, ZOOM).toPandas()
-    assert (got["id_str"].notna()).all() or len(got) == 0
 
-    # brute force on the driver over every (point, polygon) pair
+    # brute force on the driver: every polygon against every point of
+    # its cell, with no bbox prune
     pts = images.select("image_id", "mx", "my", "cx", "cy").toPandas()
     pl = polys.toPandas()
     expected = set()
@@ -134,24 +175,41 @@ def test_pip_join_vs_bruteforce(spark, images, us_index):
         ty = (sub["my"].to_numpy() * z2 - pr.y) * 4096
         inside = ray_cast_inside(tx, ty, json.loads(pr.rings_json))
         for iid in sub["image_id"].to_numpy()[inside]:
-            expected.add((iid, pr.x, pr.y, pr.feature_idx))
+            expected.add((iid, pr.x, pr.y, pr.feature_idx, pr.id_str))
     actual = {
-        (r.image_id, r.cx, r.cy, r.feature_idx) for r in got.itertuples(index=False)
+        (r.image_id, r.cx, r.cy, r.feature_idx, r.id_str)
+        for r in got.itertuples(index=False)
     }
     assert actual == expected
-    assert len(actual) > 0  # metro NYC sits inside a us-states tile polygon
+    # the hand shapes: the L and the holed ring each keep part of their
+    # metro cluster out, and the 2x2 box is clipped into four tiles
+    hand = {}
+    for t in poly_index.get_internal_tiles().values():
+        for idx, f in enumerate(t.features):
+            if t.z == ZOOM and (f["id_str"] or "").startswith("hand"):
+                hand.setdefault(f["id_str"], set()).add((t.x, t.y, idx))
+    assert {(x, y) for x, y, _ in hand["hand2"]} == {
+        (16, 15), (17, 15), (16, 16), (17, 16)
+    }
+    for k, metro in (("hand0", 0), ("hand1", 1)):  # L: NYC, holed ring: Tokyo
+        ids = set(
+            images.filter(f"pmod(xxhash64(image_id), 10) = {metro}")
+            .toPandas()["image_id"]
+        )
+        hits = {a[0] for a in actual if a[1:4] in hand[k]}
+        assert 0 < len(hits) < len(ids), (k, len(hits), len(ids))
     # caption invariant: joined captions byte-equal the source formula
     for r in got.itertuples(index=False):
         assert r.caption == "caption for " + r.image_id
 
 
-def test_knn_join(spark, images, us_index):
+def test_knn_join(spark, images, poly_index):
     from geojson_vt_rs_spark.plans.spatial import knn_neighbor_tiles
 
     centers = spark.createDataFrame(
         [
             (t.x, t.y)
-            for t in us_index.get_internal_tiles().values()
+            for t in poly_index.get_internal_tiles().values()
             if t.z == ZOOM and t.features
         ],
         "x long, y long",
@@ -259,3 +317,55 @@ def test_mosaic_unbroadcast_survivors_identical(spark):
     assert "rightHint=(strategy=broadcast)" in lo_plan
     assert "strategy=broadcast" not in hi_plan
     imgs.unpersist()
+
+
+def test_mosaic_batch_border_vs_oracle(spark, images):
+    """Arrow batches of 7 rows cut most tiles across batches; every tile
+    must still equal a driver-side render of its first SLOTS images.
+    One cell is packed past SLOTS so its tile also carries the cap."""
+    from pyspark.sql import functions as F
+
+    from geojson_vt_rs_spark.plans.spatial import (
+        SLOT_PX,
+        SLOTS,
+        TILE_PX,
+        mosaic_tiles,
+        nn_resample,
+    )
+
+    hot = F.pmod(F.xxhash64("image_id"), F.lit(5)) == 0  # ~N/5 > SLOTS rows
+    imgs = images.withColumn("cx", F.when(hot, F.lit(0)).otherwise(F.col("cx")))
+    imgs = imgs.withColumn("cy", F.when(hot, F.lit(0)).otherwise(F.col("cy")))
+    src = imgs.select("cx", "cy", "image_id", "bytes", "w", "h", "fmt").toPandas()
+
+    per = TILE_PX // SLOT_PX
+    want = {}
+    for (cx, cy), g in src.groupby(["cx", "cy"]):
+        g = g.sort_values("image_id").head(SLOTS)
+        canvas = np.zeros((TILE_PX, TILE_PX, 3), dtype=np.uint8)
+        for s, r in enumerate(g.itertuples(index=False)):
+            ry, rx = (s // per) * SLOT_PX, (s % per) * SLOT_PX
+            canvas[ry : ry + SLOT_PX, rx : rx + SLOT_PX] = nn_resample(
+                decode_image(bytes(r.bytes), r.w, r.h, r.fmt)
+            )
+        ids = g["image_id"].tolist()
+        want[(cx, cy)] = (
+            ZOOM, cx, cy, encode_png(canvas), len(ids),
+            sum(len(b) for b in g["bytes"]), ids[0], ids[-1],
+            json.dumps({str(s): i for s, i in enumerate(ids)}, sort_keys=True),
+        )
+    assert max(len(g) for _, g in src.groupby(["cx", "cy"])) > SLOTS
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {(r["x"], r["y"]): tuple(r) for r in mosaic_tiles(imgs, ZOOM).collect()}
+        empty = mosaic_tiles(imgs.limit(0), ZOOM).count()
+    finally:
+        spark.conf.set(key, old)
+    assert got.keys() == want.keys()
+    for k, row in got.items():
+        assert row[:3] == want[k][:3] and bytes(row[3]) == want[k][3], k
+        assert row[4:] == want[k][4:], k
+    assert empty == 0
