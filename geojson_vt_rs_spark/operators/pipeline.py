@@ -19,7 +19,7 @@ Scale notes (100 TB shape):
 from __future__ import annotations
 
 import json
-from typing import Iterator, List
+from typing import Iterator, List, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -35,6 +35,7 @@ from geojson_vt_rs_spark.core.wrap import wrap as core_wrap
 from geojson_vt_rs_spark.operators.schema import (
     FEATURE_SCHEMA,
     TILE_ROW_SCHEMA,
+    TILE_STORE_SCHEMA,
     TILED_FEATURE_SCHEMA,
     create_feature_df,
     feature_to_row,
@@ -337,6 +338,160 @@ RS_SCHEMA = T.StructType(
 )
 RS_COLS = [f.name for f in RS_SCHEMA.fields]
 
+# a sink-mode pass (``tile_sink``: its tasks write the rows themselves)
+# returns only per-(task, tile) partials, told apart by sub_idx: NULL a
+# child partial (num_points, n_emitted = row count), -1 a parent partial
+# (the same, of an input tile), 0 a rendered tile's counters
+# (n_emitted = num_simplified, nf feature rows, n_leaf retained rows) and
+# 1 a multi-level pass's tile (the same plus its num_points)
+PARTIAL_SCHEMA = T.StructType(
+    [T.StructField(c, T.IntegerType()) for c in ("z", "x", "y", "sub_idx")]
+    + [T.StructField(c, T.LongType())
+       for c in ("num_points", "n_emitted", "nf", "n_leaf")]
+)
+PARTIAL_COLS = [f.name for f in PARTIAL_SCHEMA.fields]
+
+
+def pass_schema(tile_sink) -> T.StructType:
+    """Output schema of a pass with or without a task-side sink."""
+    return RS_SCHEMA if tile_sink is None else PARTIAL_SCHEMA
+
+
+class TaskSink(NamedTuple):
+    """Where the tasks of a sink-mode pass write (the filesystem contract
+    in plans/checkpoint.py's module docstring): rendered feature rows to
+    ``tiles`` and retained leaf rows to ``leaves``, both partitioned by
+    z, child rows to ``frontier``; feature rows record ``action``."""
+
+    tiles: str
+    leaves: str
+    frontier: Optional[str] = None
+    action: str = "feature"
+
+
+def z_part_schema(struct: T.StructType):
+    """Arrow schema of a z-partitioned table's files (z is the dir)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        T.StructType([f for f in struct.fields if f.name != "z"])
+    )
+
+
+def write_parquet(d: str, name: str, table) -> None:
+    """Write one parquet file ``d/name``: to a dot-prefixed temp name
+    (hidden from readers), then ``os.replace``d onto the final name."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{os.getpid()}.tmp")
+    pq.write_table(table, tmp, compression="snappy")
+    os.replace(tmp, os.path.join(d, name))
+
+
+class _TaskWriter:
+    """The task side of a sink-mode pass: routes its RS rows to the
+    TaskSink's dirs (RS_RENDER features -> tiles, RS_LEAF -> leaves,
+    RS_CHILD -> frontier), held as Arrow batches per (dir, z) and written
+    by ``close`` as ONE file each, ``part-<partition>-<tag>.parquet``.
+    The names are deterministic, so a retried or duplicated task rewrites
+    the same files with the same content.  Tallies per tile (ns, nf,
+    n_leaf) for the pass's partials."""
+
+    def __init__(self, sink: TaskSink, tag: str):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.sink, self.tag = sink, tag
+        self.tile_schema = z_part_schema(TILE_STORE_SCHEMA)
+        self.leaf_schema = z_part_schema(TILED_FEATURE_SCHEMA)
+        self.frontier_schema = to_arrow_schema(TILED_FEATURE_SCHEMA)
+        self.buf: dict = {}  # dir -> (arrow schema, [RecordBatch])
+        self.counts: dict = {}  # (z, x, y) -> [ns, nf, n_leaf]
+
+    def _put(self, d: str, schema, pdf: pd.DataFrame) -> None:
+        import pyarrow as pa
+
+        self.buf.setdefault(d, (schema, []))[1].append(
+            pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+        )
+
+    def _by_z(self, root: str, schema, pdf: pd.DataFrame) -> None:
+        import os
+
+        zs = pdf["z"].to_numpy()
+        for zv in np.unique(zs):
+            sub = pdf if (zs == zv).all() else pdf.loc[zs == zv]
+            self._put(os.path.join(root, f"z={int(zv)}"), schema,
+                      sub[schema.names])
+
+    def _tally(self, rows: pd.DataFrame, i: int, vals) -> None:
+        g = pd.Series(np.asarray(vals)).groupby(
+            [rows["z"].to_numpy(), rows["x"].to_numpy(), rows["y"].to_numpy()],
+            sort=False,
+        ).sum()
+        for k, v in g.items():
+            key = (int(k[0]), int(k[1]), int(k[2]))
+            self.counts.setdefault(key, [0, 0, 0])[i] += int(v)
+
+    def leaves(self, rows: pd.DataFrame) -> None:
+        """Retained source rows (TILED_COLS and more) -> leaves."""
+        self._tally(rows, 2, np.ones(len(rows), dtype=np.int64))
+        self._by_z(self.sink.leaves, self.leaf_schema, rows)
+
+    def put(self, part: pd.DataFrame) -> None:
+        kind = part["row_kind"].to_numpy()
+        rend = part.loc[kind == RS_RENDER]
+        if len(rend):
+            sub = rend["sub_idx"].to_numpy()
+            self._tally(rend, 0, rend["n_emitted"].fillna(0).to_numpy())
+            feat = rend.loc[sub >= 0]
+            if len(feat):
+                self._tally(feat, 1, np.ones(len(feat), dtype=np.int64))
+                n = len(feat)
+                self._by_z(self.sink.tiles, self.tile_schema, feat.assign(
+                    feature_idx=np.full(n, None, dtype=object),
+                    tile_id_str=feat["id_str"].to_numpy(),
+                    tile_id_num=feat["id_num"].to_numpy(),
+                    tile_id_float=feat["id_float"].to_numpy(),
+                    tile_num_points=np.full(n, None, dtype=object),
+                    tile_num_simplified=np.full(n, None, dtype=object),
+                    action=np.full(n, self.sink.action, dtype=object),
+                ))
+        if (kind == RS_LEAF).any():
+            self.leaves(part.loc[kind == RS_LEAF])
+        if (kind == RS_CHILD).any():
+            self._put(self.sink.frontier, self.frontier_schema,
+                      part.loc[kind == RS_CHILD, TILED_COLS])
+
+    def close(self) -> dict:
+        """Write every buffered file; returns the per-tile tallies."""
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        for d, (schema, batches) in self.buf.items():
+            write_parquet(d, f"part-{pid:05d}-{self.tag}.parquet",
+                          pa.Table.from_batches(batches, schema=schema))
+        self.buf.clear()
+        return self.counts
+
+
+def _rs_rows(rows: pd.DataFrame, kind: int) -> pd.DataFrame:
+    """Source rows (TILED_COLS and more) as RS_COLS rows of ``kind``."""
+    out = rows[TILED_COLS].copy(deep=False)
+    out.insert(0, "row_kind", kind)
+    for c in _RS_RENDER_ONLY:
+        # explicit object-dtype nulls: keeps Arrow types clean and
+        # silences pandas' all-NA concat warning (np.full fills at C
+        # speed — a [None]*n list pays pandas' per-element listlike
+        # construction)
+        out[c] = pd.Series(np.full(len(out), None, dtype=object),
+                           index=out.index)
+    return out
+
 
 def _rs_body(options: Options):
     """Factory for the render+split PER-BATCH body shared by
@@ -425,20 +580,10 @@ def _rs_body(options: Options):
                     sel = passthrough & xacc & yacc
                     if not sel.any():
                         continue
-                    sub = pdf.loc[sel, TILED_COLS].copy(deep=False)
+                    sub = _rs_rows(pdf.loc[sel], RS_CHILD)
                     sub["z"] = (z[sel] + 1).astype(sub["z"].dtype)
                     sub["x"] = (x[sel] * 2 + dx).astype(sub["x"].dtype)
                     sub["y"] = (y[sel] * 2 + dy).astype(sub["y"].dtype)
-                    sub.insert(0, "row_kind", RS_CHILD)
-                    for c in _RS_RENDER_ONLY:
-                        # explicit object-dtype nulls: keeps Arrow types
-                        # clean and silences pandas' all-NA concat warning
-                        # (np.full fills at C speed — a [None]*n list pays
-                        # pandas' per-element listlike construction)
-                        sub[c] = pd.Series(
-                            np.full(len(sub), None, dtype=object),
-                            index=sub.index,
-                        )
                     parts.append(sub)
                     g = sub.groupby(["z", "x", "y"], sort=False)[
                         "num_points"
@@ -583,29 +728,33 @@ def _rs_body(options: Options):
     return body
 
 
-def _rs_cagg_frame(cagg: dict, sub_idx=None) -> pd.DataFrame:
-    """(z,x,y) -> (num_points, row_count) partials as RS_CAGG rows.
+def _rs_cagg_frame(cagg: dict, sub_idx=None, cols=RS_COLS) -> pd.DataFrame:
+    """(z,x,y) -> (num_points, row_count[, nf, n_leaf]) partials as
+    RS_CAGG rows (``cols=PARTIAL_COLS``: as a sink-mode pass's partials).
     n_emitted doubles as the partial child ROW count so the driver can
     finish n_children without a job.  ``sub_idx=-1`` marks PARENT
     partials (the input tiles' own point sums, emitted by the optimistic
     first wave) apart from the default child partials (sub_idx NULL)."""
     keys = list(cagg)
-    d = {c: [None] * len(keys) for c in RS_COLS}
+    vals = [tuple(v) + (0, 0)[: 4 - len(v)] for v in cagg.values()]
+    d = {c: [None] * len(keys) for c in cols}
     d.update(
-        row_kind=RS_CAGG,
         z=[k[0] for k in keys],
         x=[k[1] for k in keys],
         y=[k[2] for k in keys],
-        num_points=[int(v[0]) for v in cagg.values()],
-        n_emitted=[int(v[1]) for v in cagg.values()],
+        sub_idx=sub_idx,
+        num_points=[int(v[0]) for v in vals],
+        n_emitted=[int(v[1]) for v in vals],
     )
-    if sub_idx is not None:
-        d["sub_idx"] = sub_idx
-    return pd.DataFrame(d, columns=RS_COLS)
+    if "row_kind" in cols:
+        d["row_kind"] = RS_CAGG
+    else:
+        d.update(nf=[int(v[2]) for v in vals], n_leaf=[int(v[3]) for v in vals])
+    return pd.DataFrame(d, columns=cols)
 
 
 def render_split_stage(
-    df: DataFrame, options: Options, emit_parent_cagg: bool = False
+    df: DataFrame, options: Options, tile_sink: Optional[TaskSink] = None
 ) -> DataFrame:
     """ONE Python pass per pyramid level: renders every row (RS_RENDER
     rows: sub_idx, type, kind, geometry/tags JSON, n_emitted per
@@ -620,29 +769,46 @@ def render_split_stage(
     with no per-feature Python; only straddling rows are clipped.
     Input must carry the driver's ``action`` column ('leaf'/'split').
 
-    ``emit_parent_cagg=True`` additionally emits per-batch partials of
-    the INPUT tiles' own point sums as RS_CAGG rows with sub_idx = -1 —
-    the optimistic first wave decides leaf-vs-split AFTER rendering from
-    these, so the first level needs no separate decision agg job."""
+    ``tile_sink`` (the checkpointed store's levels) writes the level's
+    outputs from the tasks instead of returning them (_TaskWriter):
+    rendered features to the staged tiles, the input rows of 'leaf'
+    tiles to the staged leaves, the child rows to the next level's
+    frontier.  Only the partials come back (PARTIAL_SCHEMA): the child
+    partials and each rendered tile's counters, so collecting them is
+    the level's one Spark job."""
     return df.mapInPandas(
-        _render_split_kernel(options, emit_parent_cagg), schema=RS_SCHEMA
+        _render_split_kernel(options, tile_sink=tile_sink),
+        schema=pass_schema(tile_sink),
     )
 
 
-def _render_split_kernel(options: Options, emit_parent_cagg: bool = False):
+def _render_split_kernel(options: Options, emit_parent_cagg: bool = False,
+                         tile_sink: Optional[TaskSink] = None):
     """The render/split pandas kernel (see render_split_stage) as a
     reusable generator factory — composable behind the convert+wrap
-    kernel for the fused first-turn wave."""
+    kernel for the fused first-turn wave.  ``emit_parent_cagg=True``
+    additionally emits per-batch partials of the INPUT tiles' own point
+    sums with sub_idx = -1: the optimistic first wave decides
+    leaf-vs-split AFTER rendering from these, so the first level needs no
+    separate decision agg job."""
+    cols = RS_COLS if tile_sink is None else PARTIAL_COLS
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)
+        w = None if tile_sink is None else _TaskWriter(tile_sink, "render")
         for pdf in batches:
             if pdf.empty:
-                yield pd.DataFrame(columns=RS_COLS)
                 continue
             parts, cagg = body(pdf)
+            if w is not None:
+                leaf = (pdf["action"] == "leaf").to_numpy()
+                if leaf.any():
+                    w.leaves(pdf.loc[leaf])
+                for part in parts:
+                    w.put(part)
+                parts = []
             if cagg:
-                parts.append(_rs_cagg_frame(cagg))
+                parts.append(_rs_cagg_frame(cagg, cols=cols))
             if emit_parent_cagg:
                 g = pdf.groupby(["z", "x", "y"], sort=False)[
                     "num_points"
@@ -653,15 +819,36 @@ def _render_split_kernel(options: Options, emit_parent_cagg: bool = False):
                         g.index, g["sum"].tolist(), g["size"].tolist()
                     )
                 }
-                parts.append(_rs_cagg_frame(pc, sub_idx=-1))
+                parts.append(_rs_cagg_frame(pc, -1, cols))
             # yield each part as its own Arrow batch: pd.concat of mixed
             # all-NA object frames triggers an elementwise NA scan (~4s
             # per 100k-row batch measured) that the separate batches skip
             for part in parts:
                 if len(part):
-                    yield part[RS_COLS]
+                    yield part[cols]
+        if w is not None:
+            counts = w.close()
+            if counts:
+                yield _rs_cagg_frame(
+                    {k: (0, *v) for k, v in counts.items()}, 0, cols)
 
     return kernel
+
+
+def root_rows(batches: Iterator[pd.DataFrame], action: Optional[str] = None,
+              ) -> Iterator[pd.DataFrame]:
+    """Converted feature batches as rows of the root tile: (z, x, y) =
+    (0, 0, 0) columns in front, plus the decided ``action`` if given."""
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        pdf = pdf.copy(deep=False)
+        for i, c in enumerate("zxy"):
+            pdf.insert(i, c, np.zeros(n, dtype=np.int32))
+        if action is not None:
+            pdf["action"] = action
+        yield pdf
 
 
 def convert_wrap_render_split_stage(
@@ -671,7 +858,7 @@ def convert_wrap_render_split_stage(
     buffer: float,
     line_metrics: bool,
     options: Options,
-    root: tuple = (0, 0, 0),
+    tile_sink: Optional[TaskSink] = None,
 ) -> DataFrame:
     """The ENTIRE optimistic first turn as ONE Python pass: raw features
     -> convert+wrap -> render root + clip children (+ parent RS_CAGG
@@ -681,32 +868,20 @@ def convert_wrap_render_split_stage(
     stage), and the constant (z, x, y, action='split') columns the
     decision join used to add are synthesized in-kernel — byte-identical
     output to render_split_stage(frontier JOIN decisions) because the
-    optimistic decision table is the single row (root, 'split')."""
+    optimistic decision table is the single row (root, 'split').
+    ``tile_sink`` as in render_split_stage."""
     cw = _convert_wrap_kernel(tolerance, generate_id, buffer, line_metrics)
-    rs = _render_split_kernel(options, emit_parent_cagg=True)
-    rz, rx, ry = root
+    rs = _render_split_kernel(options, True, tile_sink)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tiled() -> Iterator[pd.DataFrame]:
-            for pdf in cw(batches):
-                n = len(pdf)
-                if n == 0:
-                    continue
-                pdf = pdf.copy(deep=False)
-                pdf.insert(0, "z", np.full(n, rz, dtype=np.int32))
-                pdf.insert(1, "x", np.full(n, rx, dtype=np.int32))
-                pdf.insert(2, "y", np.full(n, ry, dtype=np.int32))
-                pdf["action"] = "split"
-                yield pdf
+        yield from rs(root_rows(cw(batches), "split"))
 
-        yield from rs(tiled())
-
-    return df.mapInPandas(kernel, schema=RS_SCHEMA)
+    return df.mapInPandas(kernel, schema=pass_schema(tile_sink))
 
 
 def drill_descend_stage(
     df: DataFrame, options: Options, root: tuple, target: tuple,
-    tile_sink: str | None = None,
+    tile_sink: Optional[TaskSink] = None,
 ) -> DataFrame:
     """The ENTIRE root-to-target drill descent as ONE feature-parallel
     mapInPandas pass (get_tile cold-miss path, lib.rs:184-223).
@@ -738,34 +913,19 @@ def drill_descend_stage(
     to a new tile; its RS_CAGG partial still carries its point count
     (drill_tiles reads it).
 
-    ``tile_sink=staging_dir`` moves the RS_RENDER rows OUT of the Arrow
-    output entirely: each task writes its rendered tile features
-    straight into the staging dir as store-schema parquet (pyarrow, one
-    file per (task, z), dot-prefixed tmp + atomic os.replace under a
-    DETERMINISTIC final name — retried or speculatively duplicated
-    tasks overwrite with identical content, so the write is idempotent
-    and the caller's stage-then-rename commit point is unchanged).  The
-    render rows are ~85 % of the pass's output volume and only ever
+    ``tile_sink`` (the checkpointed store) moves the RS_RENDER and RS_LEAF
+    rows OUT of the Arrow output entirely: each task writes them straight
+    into the staged tiles / leaves as store-schema parquet (_TaskWriter,
+    as the store's level passes do) and only one partial per tile comes
+    back (PARTIAL_SCHEMA, sub_idx 1: num_points, n_emitted, nf, n_leaf).
+    The render rows are ~85 % of the pass's output volume and only ever
     existed to be parquet-written by a follow-up job: sinking them
     in-kernel removes their Python->JVM boundary crossing, the JVM cache
     copy, AND the separate write job (4M drill pass 19.7 s -> see
-    OPTIMIZATION_r06.md).  The task-side ``os.replace`` needs the
-    staging dir on one shared POSIX path: the filesystem contract stated
-    once in plans/checkpoint.py's module docstring."""
+    OPTIMIZATION_r06.md)."""
     az = root[0]
     cz, cx, cy = target
     max_zoom = options.max_zoom
-
-    arrow_schema = None
-    if tile_sink is not None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from geojson_vt_rs_spark.operators.schema import TILE_STORE_DDL
-
-        store = T.StructType.fromDDL(TILE_STORE_DDL)
-        arrow_schema = to_arrow_schema(
-            T.StructType([f for f in store.fields if f.name != "z"])
-        )
 
     def decide(tz: int, tx: int, ty: int) -> str:
         if tz == max_zoom:
@@ -777,85 +937,11 @@ def drill_descend_stage(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)
-        if tile_sink is not None:
-            import pyarrow as pa
-
-            buf: dict = {}  # z -> [store-schema RecordBatch, ...]
-
-            def sink_buffer(rend: pd.DataFrame) -> None:
-                # store-shape the render rows (the column mapping the
-                # Spark-side tiles write performed) and hold them as
-                # Arrow batches until the task finishes
-                zs = rend["z"].to_numpy().astype(np.int64)
-                keep = np.asarray(
-                    rend["sub_idx"].to_numpy() >= 0, dtype=bool
-                )
-                if not keep.any():
-                    return
-                if not keep.all():
-                    rend = rend.loc[keep]
-                    zs = zs[keep]
-                for zv in np.unique(zs):
-                    m = zs == zv
-                    sub = rend if m.all() else rend.loc[m]
-                    n = len(sub)
-                    none_i = np.full(n, None, dtype=object)
-                    pdf_out = pd.DataFrame(
-                        {
-                            "x": sub["x"].to_numpy(),
-                            "y": sub["y"].to_numpy(),
-                            "feature_idx": none_i,
-                            "type": sub["type"].to_numpy(),
-                            "kind": sub["kind"].to_numpy(),
-                            "geometry_json": sub["geometry_json"].to_numpy(),
-                            "tags_json": sub["tags_json"].to_numpy(),
-                            "tile_id_str": sub["id_str"].to_numpy(),
-                            "tile_id_num": sub["id_num"].to_numpy(),
-                            "tile_id_float": sub["id_float"].to_numpy(),
-                            "tile_num_points": none_i,
-                            "tile_num_simplified": none_i,
-                            "action": np.full(n, "drill", dtype=object),
-                            "world_copy": sub["world_copy"].to_numpy(),
-                            "feature_seq": sub["feature_seq"].to_numpy(),
-                            "slice_path": sub["slice_path"].to_numpy(),
-                            "sub_idx": sub["sub_idx"].to_numpy(),
-                        }
-                    )
-                    buf.setdefault(int(zv), []).append(
-                        pa.RecordBatch.from_pandas(
-                            pdf_out, schema=arrow_schema,
-                            preserve_index=False,
-                        )
-                    )
-
-            def sink_flush() -> None:
-                if not buf:
-                    return
-                import os
-
-                import pyarrow.parquet as pq
-                from pyspark import TaskContext
-
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
-                att = ctx.taskAttemptId() if ctx is not None else 0
-                for zv, batches_z in buf.items():
-                    d = os.path.join(tile_sink, f"z={zv}")
-                    os.makedirs(d, exist_ok=True)
-                    final = os.path.join(d, f"part-{pid:05d}.parquet")
-                    tmp = os.path.join(d, f".part-{pid:05d}.tmp{att}")
-                    pq.write_table(
-                        pa.Table.from_batches(batches_z, schema=arrow_schema),
-                        tmp,
-                        compression="snappy",
-                    )
-                    os.replace(tmp, final)
-                buf.clear()
-
+        w = None if tile_sink is None else _TaskWriter(tile_sink, "drill")
+        stats: dict = {}  # (z,x,y) -> [tnp_partial, ns_partial]
         for pdf in batches:
             if pdf.empty:
                 continue
-            stats: dict = {}  # (z,x,y) -> [tnp_partial, ns_partial]
             cur = pdf
             while len(cur):
                 # the frontier holds at most 4 distinct tiles (the
@@ -886,15 +972,10 @@ def drill_descend_stage(
                 # retained leaves out (target tile included; 'stop' tiles
                 # render but retain nothing, matching the level loop)
                 leaf_sel = (cur["action"] == "leaf").to_numpy()
-                if leaf_sel.any():
-                    lv = cur.loc[leaf_sel, TILED_COLS].copy(deep=False)
-                    lv.insert(0, "row_kind", RS_LEAF)
-                    for c in _RS_RENDER_ONLY:
-                        lv[c] = pd.Series(
-                            np.full(len(lv), None, dtype=object),
-                            index=lv.index,
-                        )
-                    yield lv[RS_COLS]
+                if leaf_sel.any() and w is not None:
+                    w.leaves(cur.loc[leaf_sel])
+                elif leaf_sel.any():
+                    yield _rs_rows(cur.loc[leaf_sel], RS_LEAF)
                 parts, _cagg = body(cur)
                 nxt = []
                 for part in parts:
@@ -908,10 +989,10 @@ def drill_descend_stage(
                         for k, v in ns.items():
                             key = (int(k[0]), int(k[1]), int(k[2]))
                             stats.setdefault(key, [0, 0])[1] += int(v)
-                        if tile_sink is None:
+                        if w is None:
                             yield rend[RS_COLS]
                         else:
-                            sink_buffer(rend)
+                            w.put(rend)
                     ch = part[part["row_kind"] == RS_CHILD]
                     if len(ch):
                         nxt.append(ch[TILED_COLS])
@@ -924,12 +1005,18 @@ def drill_descend_stage(
                     cur = nxt[0].reset_index(drop=True)
                 else:
                     cur = pd.concat(nxt, ignore_index=True)
+        if w is None:
             if stats:
-                yield _rs_cagg_frame(stats)[RS_COLS]
-        if tile_sink is not None:
-            sink_flush()
+                yield _rs_cagg_frame(stats)
+            return
+        counts = w.close()
+        if stats:
+            yield _rs_cagg_frame({
+                k: (tnp, ns, *counts.get(k, (0, 0, 0))[1:])
+                for k, (tnp, ns) in stats.items()
+            }, 1, PARTIAL_COLS)
 
-    return df.mapInPandas(kernel, schema=RS_SCHEMA)
+    return df.mapInPandas(kernel, schema=pass_schema(tile_sink))
 
 
 def _emit_rows(

@@ -54,15 +54,30 @@ FEATURE_FIELDS = [
 
 FEATURE_SCHEMA = T.StructType(FEATURE_FIELDS)
 
-# CheckpointedPyramid tiles-table row DDL (plans/checkpoint.py): feature
+# CheckpointedPyramid tiles-table row schema (plans/checkpoint.py): feature
 # rows carry the deterministic order-key columns (feature_idx NULL, ranked
 # at read time); stats rows keep the feature_idx = -1 marker
-TILE_STORE_DDL = (
-    "z int, x int, y int, feature_idx int, type int, kind int, "
-    "geometry_json string, tags_json string, tile_id_str string, "
-    "tile_id_num long, tile_id_float double, tile_num_points int, "
-    "tile_num_simplified int, action string, world_copy int, "
-    "feature_seq long, slice_path string, sub_idx int"
+TILE_STORE_SCHEMA = T.StructType(
+    [
+        _f("z", T.IntegerType()),
+        _f("x", T.IntegerType()),
+        _f("y", T.IntegerType()),
+        _f("feature_idx", T.IntegerType()),
+        _f("type", T.IntegerType()),
+        _f("kind", T.IntegerType()),
+        _f("geometry_json", T.StringType()),
+        _f("tags_json", T.StringType()),
+        _f("tile_id_str", T.StringType()),
+        _f("tile_id_num", T.LongType()),
+        _f("tile_id_float", T.DoubleType()),
+        _f("tile_num_points", T.IntegerType()),
+        _f("tile_num_simplified", T.IntegerType()),
+        _f("action", T.StringType()),
+        _f("world_copy", T.IntegerType()),
+        _f("feature_seq", T.LongType()),
+        _f("slice_path", T.StringType()),
+        _f("sub_idx", T.IntegerType()),
+    ]
 )
 
 # features flowing through the pyramid carry their tile assignment

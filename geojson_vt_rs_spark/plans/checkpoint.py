@@ -18,12 +18,18 @@ Everything is written with deterministic content, so a resumed run
 produces byte-identical outputs to an uninterrupted one.
 
 Filesystem contract.  Every commit is staged, then published by rename:
-Spark jobs write under ``<out_dir>/_staging``, the driver publishes a
-level or drill with one ``os.rename`` per table (``_Commit``) and writes
-each manifest to a temp file it ``os.replace``s into place; executor
-tasks of a drill pass write their tile files to dot-prefixed temp names
-and ``os.replace`` them onto deterministic final names
-(drill_descend_stage's ``tile_sink``).  So ``out_dir`` must be ONE
+the tasks of a level or drill pass write that commit's rows themselves —
+rendered features to ``<out_dir>/_staging/tiles_<commit>``, retained
+leaf rows to ``_staging/leaves_<commit>``, and a level's child rows to
+``frontier/level_<N+1>`` (operators/pipeline.py ``_TaskWriter``: one
+pyarrow file per (task, pass, z) under a deterministic name, written to a
+dot-prefixed temp name and ``os.replace``d into place, so a retried task
+rewrites the same file).  The driver writes the commit's stats rows the
+same way (``_write_stats``), publishes the staged tables with one
+``os.rename`` each (``_Commit``) and writes the manifest to a temp file
+it ``os.replace``s into place.  Before a level's pass runs, the driver
+removes that level's staging dirs and the frontier dir the pass writes,
+so no file of an earlier attempt survives.  So ``out_dir`` must be ONE
 shared POSIX path: the same directory for the driver and every
 executor, with atomic rename within it.  Local mode and a shared POSIX
 mount satisfy this; an object store without atomic rename does not.
@@ -35,24 +41,24 @@ import json
 import os
 import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.operators.pipeline import (
-    RS_CAGG,
-    RS_CHILD,
-    RS_LEAF,
-    RS_RENDER,
+    TaskSink,
+    write_parquet,
+    z_part_schema,
 )
-from geojson_vt_rs_spark.operators.schema import TILE_STORE_DDL
+from geojson_vt_rs_spark.operators.schema import (
+    TILE_STORE_SCHEMA,
+    TILED_FEATURE_SCHEMA,
+)
 from geojson_vt_rs_spark.plans.pyramid import (
     CAGG_COLS,
-    TILED_COLS,
     drill_pass,
     drill_tiles,
     find_parent,
@@ -123,52 +129,25 @@ def _read_manifest(out_dir: str, name: str) -> Optional[dict]:
 
 
 def _stats_row(z, x, y, tnp, ns, action) -> tuple:
-    """A tile's stats row (feature_idx -1) in TILE_STORE_DDL order."""
+    """A tile's stats row (feature_idx -1) in TILE_STORE_SCHEMA order."""
     return (z, x, y, -1, None, None, None, None, None, None, None, tnp, ns,
             action, None, None, None, None)
 
 
-def _feature_rows(rows: DataFrame) -> DataFrame:
-    """A pass's RS_RENDER rows (RS_SCHEMA) -> tiles-table feature rows
-    (TILE_STORE_DDL order).  feature_idx is NOT ranked here: a
-    Window.partitionBy(z,x,y) at z0 has ONE partition, serializing the
-    whole dataset through a single task (54s of the 76s 1M build; 8->32
-    efficiency 0.236).  The deterministic order-key columns are persisted
-    instead and read_tile derives feature_idx per tile."""
-    return rows.filter(
-        (F.col("row_kind") == RS_RENDER) & (F.col("sub_idx") >= 0)
-    ).select(
-        "z", "x", "y",
-        F.lit(None).cast("int").alias("feature_idx"),
-        "type", "kind", "geometry_json", "tags_json",
-        F.col("id_str").alias("tile_id_str"),
-        F.col("id_num").alias("tile_id_num"),
-        F.col("id_float").alias("tile_id_float"),
-        F.lit(None).cast("int").alias("tile_num_points"),
-        F.lit(None).cast("int").alias("tile_num_simplified"),
-        F.lit("feature").alias("action"),
-        "world_copy", "feature_seq", "slice_path", "sub_idx",
-    )
+def _write_stats(stg_tiles: str, rows: list) -> None:
+    """A commit's stats rows -> one pyarrow file per z in its staged
+    tiles dir, written by the driver: stats rows need no Spark job."""
+    import pyarrow as pa
 
-
-def _tile_partials(step: DataFrame) -> pd.DataFrame:
-    """Per tile of a multi-level pass (RS_SCHEMA rows: fused subtrees or
-    a drill), in one collection: ``num_points`` and ``n_emitted`` from
-    its RS_CAGG rows, its RS_LEAF row count ``n_leaf`` (a tile with
-    retained rows is a leaf) and its feature row count ``nf``."""
-    kind = F.col("row_kind")
-    cagg = kind == RS_CAGG
-    feature = (kind == RS_RENDER) & (F.col("sub_idx") >= 0)
-    return step.groupBy("z", "x", "y").agg(
-        F.sum(F.when(cagg, F.col("num_points"))).alias("num_points"),
-        F.sum(F.when(cagg, F.col("n_emitted"))).alias("n_emitted"),
-        F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
-        F.sum(feature.cast("long")).alias("nf"),
-    ).toPandas()
-
-
-def _append(df: DataFrame, path: str) -> None:
-    df.write.mode("append").partitionBy("z").parquet(path)
+    schema = z_part_schema(TILE_STORE_SCHEMA)
+    by_z: dict = {}
+    for r in rows:
+        by_z.setdefault(r[0], []).append(r[1:])
+    for z, rs in by_z.items():
+        write_parquet(
+            os.path.join(stg_tiles, f"z={z}"), "stats.parquet",
+            pa.Table.from_pydict(dict(zip(schema.names, zip(*rs))), schema),
+        )
 
 
 class _Commit:
@@ -197,112 +176,69 @@ class _Commit:
 
 
 class _StoreSink:
-    """run_levels sink of CheckpointedPyramid: each level's rendered tile
-    rows, stats rows and leaf features go to a ``_Commit``, its children
-    to ``frontier/level_<N+1>`` (the resume point), and the level
-    manifest is written after the publish."""
+    """run_levels sink of CheckpointedPyramid: every pass of a level
+    writes its rendered tile rows and leaf features to a ``_Commit`` and
+    its children to ``frontier/level_<N+1>`` (the next level's input and
+    the resume point) from the tasks; the driver collects the passes'
+    partials in the level's one Spark job, writes the stats rows, and
+    writes the level manifest after the publish."""
 
     def __init__(self, cp: "CheckpointedPyramid", out_dir: str):
         self.cp = cp
         self.out = out_dir
 
+    def _frontier_dir(self, level):
+        return os.path.join(self.out, "frontier", f"level_{level}")
+
     def begin(self, level):
         self.t0, self.tick0 = time.time(), cpu_ticks()
         self.c = _Commit(self.out, f"level_{level}", f"L{level}")
-        self.ns: dict = {}
-        self.n_fused = self.n_leaf_fused = self.nf_fused = 0
-
-    def _frontier_dir(self, level):
-        return os.path.join(self.out, "frontier", f"level_{level + 1}")
+        fdir = self._frontier_dir(level + 1)
+        shutil.rmtree(fdir, ignore_errors=True)
+        self.tiles: dict = {}
+        return TaskSink(self.c.stg_tiles, self.c.stg_leaves, fdir)
 
     def level(self, level, step2=None, fuse=None, leaves=None,
               children=False):
-        cagg = pd.DataFrame(columns=CAGG_COLS)
-        if step2 is not None:
-            # wave 1 — the heavy write; materializes step2 (and fr) so the
-            # follow-up actions scan cached data
-            _append(_feature_rows(step2), self.c.stg_tiles)
+        got = reduce(DataFrame.unionByName,
+                     [p for p in (step2, fuse) if p is not None]).toPandas()
+        own = (got["sub_idx"] >= 0).to_numpy()
+        per_tile = got.loc[own].groupby(["z", "x", "y"]).agg(
+            tnp=("num_points", "sum"), ns=("n_emitted", "sum"),
+            nf=("nf", "sum"), n_leaf=("n_leaf", "sum"),
+            fused=("sub_idx", "max"),
+        )
+        self.tiles = {
+            (int(z), int(x), int(y)): tuple(int(v) for v in vals)
+            for (z, x, y), *vals in per_tile.itertuples()
+        }
+        n_fused = sum(t[4] for t in self.tiles.values())
+        return got.loc[~own, CAGG_COLS], n_fused
 
-            # wave 2 — independent actions over the cached data run as
-            # concurrent jobs, each writing its own directory (concurrent
-            # appends to one directory would race in the committer):
-            # per-tile render counters, the next level's partials, the
-            # children frontier and the leaf features
-            rend = step2.filter(F.col("row_kind") == RS_RENDER)
-            jobs = [lambda: rend.groupBy("z", "x", "y").agg(
-                F.sum("n_emitted").alias("ns"),
-                F.sum((F.col("sub_idx") >= 0).cast("long")).alias("nf"),
-            ).toPandas()]
-            if children:
-                jobs.append(lambda: step2.filter(
-                    F.col("row_kind") == RS_CAGG
-                ).select(*CAGG_COLS).toPandas())
-                jobs.append(lambda: step2.filter(
-                    F.col("row_kind") == RS_CHILD
-                ).select(*TILED_COLS).write.mode("overwrite").parquet(
-                    self._frontier_dir(level)))
-            if leaves is not None:
-                jobs.append(lambda: self.leaves(level, leaves))
-            with ThreadPoolExecutor(len(jobs)) as ex:
-                res = [f.result() for f in [ex.submit(j) for j in jobs]]
-            self.ns = {
-                (int(r.z), int(r.x), int(r.y)): (int(r.ns), int(r.nf))
-                for r in res[0].itertuples(index=False)
-            }
-            if children:
-                cagg = res[1]
-        if fuse is not None:
-            # fused subtrees, from one cached pass: the leaves write (it
-            # fills the cache), one collection of the fused tiles'
-            # partials (a tile without retained rows stopped at max zoom
-            # or holds no features), then the feature rows written with
-            # the tiles' stats rows — the stats rows need no write of
-            # their own
-            step = fuse.persist()
-            self.leaves(level, step.filter(
-                F.col("row_kind") == RS_LEAF).select(*TILED_COLS))
-            st = _tile_partials(step)
-            stats = [
-                _stats_row(int(r.z), int(r.x), int(r.y), int(r.num_points),
-                           int(r.n_emitted), "leaf" if r.n_leaf else "stop")
-                for r in st.itertuples(index=False)
-            ]
-            _append(_feature_rows(step).unionByName(
-                self.cp.spark.createDataFrame(stats, TILE_STORE_DDL)
-            ), self.c.stg_tiles)
-            step.unpersist()
-            self.n_fused = len(st)
-            self.n_leaf_fused = int(st["n_leaf"].sum())
-            self.nf_fused = int(st["nf"].sum())
-        return cagg, self.n_fused
-
-    def leaves(self, level, df):
-        _append(df, self.c.stg_leaves)
-
-    def commit(self, level, tiles, pending, n_children, n_leaf):
+    def commit(self, level, tiles, pending, partials):
         # per-tile stats rows: num_points from the decision partials,
-        # num_simplified from the render counters (the fused tiles' rows
-        # were written with their features)
+        # num_simplified from the render counters; the fused tiles' from
+        # their own partials (a tile without retained rows stopped at
+        # max zoom or holds no features)
         stats = [
-            _stats_row(z, x, y, tnp, self.ns.get((z, x, y), (0, 0))[0], a)
+            _stats_row(z, x, y, tnp, self.tiles.get((z, x, y), (0, 0))[1], a)
             for z, x, y, a, tnp, _ in tiles
+        ] + [
+            _stats_row(*k, tnp, ns, "leaf" if n_leaf else "stop")
+            for k, (tnp, ns, _, n_leaf, fused) in self.tiles.items() if fused
         ]
-        if stats:
-            _append(self.cp.spark.createDataFrame(stats, TILE_STORE_DDL),
-                    self.c.stg_tiles)
-        if not n_children:
-            shutil.rmtree(self._frontier_dir(level), ignore_errors=True)
+        _write_stats(self.c.stg_tiles, stats)
         self.c.publish()
         self.cp._commit_manifest(
             self.out,
             f"level_{level}",
             dict(
                 level=level,
-                n_tiles=len(stats) + self.n_fused,
-                n_tile_feature_rows=sum(nf for _, nf in self.ns.values())
-                + self.nf_fused,
-                n_leaf_feature_rows=int(n_leaf) + self.n_leaf_fused,
-                n_children=n_children,
+                n_tiles=len(stats),
+                n_tile_feature_rows=sum(t[2] for t in self.tiles.values()),
+                n_leaf_feature_rows=sum(t[3] for t in self.tiles.values()),
+                n_children=sum(p[4] for p in partials),
+                next_partials=[list(p) for p in partials],
                 pending_children=pending,
                 wall_sec=round(time.time() - self.t0, 3),
                 steal_frac=steal_frac(self.tick0, cpu_ticks()),
@@ -310,6 +246,10 @@ class _StoreSink:
             self.c.fin_tiles,
             self.c.fin_leaves,
         )
+
+    def frontier(self, level, n_rows):
+        return self.cp.spark.read.schema(TILED_FEATURE_SCHEMA).parquet(
+            self._frontier_dir(level))
 
 
 class CheckpointedPyramid:
@@ -438,12 +378,13 @@ class CheckpointedPyramid:
             return self.summary(out_dir)
         m = self._get_manifest(out_dir, f"level_{level - 1}")
         pending = [tuple(c) for c in m.get("pending_children", [])]
-        if m["n_children"] or pending:
+        partials = [tuple(p) for p in m.get("next_partials", [])]
+        if m["n_children"] and not partials:
+            raise ValueError(f"{out_dir}: level {level - 1}'s manifest "
+                             "lacks next_partials; rebuild the store")
+        if partials or pending:
             # no children rows but pending ones: a turn records them
-            frontier = spark.read.parquet(
-                os.path.join(out_dir, "frontier", f"level_{level}")
-            ) if m["n_children"] else None
-            run_levels(spark, self.options, sink, frontier=frontier,
+            run_levels(spark, self.options, sink, partials=partials,
                        pending=pending, level=level)
         return self.summary(out_dir)
 
@@ -567,43 +508,29 @@ class CheckpointedPyramid:
         splits until the target — the whole descent is ONE feature-
         parallel pass (plans/pyramid.py drill_pass), the one the
         in-memory index's get_tile runs too.  The rendered tile features
-        (~85 % of the pass's output rows) sink to the staging parquet
-        IN-KERNEL (drill_descend_stage ``tile_sink``: idempotent per-task
-        files) — they never cross the Python->JVM boundary and need no
-        write job.  ``root`` is the only stored tile the pass touches,
-        and it emits none of root's rows.  Stats rows are finished
-        driver-side from the pass's per-tile partials; a new tile with
-        retained rows records action 'leaf', the rest 'drill'.  Returns
-        the new tile keys and the set of those that are leaves."""
-        spark = self.spark
-        step = drill_pass(
-            spark, leaf, self.options, root, target,
-            tile_sink=commit.stg_tiles,
-        ).persist()
-
-        # one wave: leaf write + partials collection run as concurrent
-        # jobs over the cached pass (the tile files appear as a side
-        # effect of whichever job computes it first; duplicated
-        # concurrent compute re-writes identical files atomically)
-        leaves = step.filter(F.col("row_kind") == RS_LEAF).select(*TILED_COLS)
-        with ThreadPoolExecutor(2) as ex:
-            lf = ex.submit(_append, leaves, commit.stg_leaves)
-            sf = ex.submit(_tile_partials, step)
-            lf.result()
-            partials = sf.result()
-        step.unpersist()
+        and retained leaves sink to the staging parquet IN-KERNEL
+        (drill_descend_stage ``tile_sink``: idempotent per-task files) —
+        they never cross the Python->JVM boundary and need no write job;
+        collecting the per-tile partials is the drill's one job.
+        ``root`` is the only stored tile the pass touches, and it emits
+        none of root's rows.  Stats rows are finished driver-side from
+        the partials (_write_stats); a new tile with retained rows
+        records action 'leaf', the rest 'drill'.  Returns the new tile
+        keys and the set of those that are leaves."""
+        partials = drill_pass(
+            self.spark, leaf, self.options, root, target,
+            tile_sink=TaskSink(commit.stg_tiles, commit.stg_leaves,
+                               action="drill"),
+        ).toPandas()
         leafy = {
             (int(r.z), int(r.x), int(r.y))
             for r in partials.itertuples(index=False) if r.n_leaf
         }
         tiles = drill_tiles(partials, root, target)
-        stats_rows = [
+        _write_stats(commit.stg_tiles, [
             _stats_row(*t, "leaf" if t[:3] in leafy else "drill")
             for t in tiles
-        ]
-        if stats_rows:
-            _append(spark.createDataFrame(stats_rows, TILE_STORE_DDL),
-                    commit.stg_tiles)
+        ])
         return [t[:3] for t in tiles], leafy
 
 

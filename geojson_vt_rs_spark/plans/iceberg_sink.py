@@ -72,21 +72,15 @@ class IcebergTileSink:
         """Arrow schema for an all-empty first level (no data file to
         sample): derived from the engine's stable row schemas, minus the
         ``z`` hive-partition column the parquet files never contain."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
+        from geojson_vt_rs_spark.operators.pipeline import z_part_schema
         from geojson_vt_rs_spark.operators.schema import (
-            TILE_STORE_DDL,
+            TILE_STORE_SCHEMA,
             TILED_FEATURE_SCHEMA,
         )
 
-        spark_schema = (
-            StructType.fromDDL(TILE_STORE_DDL)
-            if name == "tiles"
-            else TILED_FEATURE_SCHEMA
+        return z_part_schema(
+            TILE_STORE_SCHEMA if name == "tiles" else TILED_FEATURE_SCHEMA
         )
-        arrow = to_arrow_schema(spark_schema)
-        return arrow.remove(arrow.get_field_index("z"))
 
     def _table(self, name: str, sample_parquet: Optional[str]):
         """Load or create the table with the schema of the first data

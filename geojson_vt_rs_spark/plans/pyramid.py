@@ -43,17 +43,22 @@ from pyspark.sql import functions as F
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
+    PARTIAL_COLS,
     RS_CAGG,
     RS_CHILD,
     RS_COLS,
     RS_LEAF,
     RS_RENDER,
-    RS_SCHEMA,
+    TaskSink,
     _convert_wrap_kernel,
+    _rs_cagg_frame,
+    _TaskWriter,
     convert_wrap_render_split_stage,
     convert_wrap_stage,
     drill_descend_stage,
+    pass_schema,
     render_split_stage,
+    root_rows,
 )
 from geojson_vt_rs_spark.operators.schema import (
     TILED_FEATURE_SCHEMA,
@@ -168,24 +173,27 @@ def _children(tiles) -> list:
     ]
 
 
-def _subtree_kernel(options: Options):
-    """Group kernel: the core tiler's whole split recursion under one
-    tile (a raw-gated root, or a 'fuse' split), as the drill pass's rows
-    (drill_descend_stage) per subtree tile: RS_RENDER features whose
-    order keys (0, i, '', 0) rank in the emitter's order, the RS_LEAF
-    retained source rows, and one RS_CAGG row (num_points,
-    n_emitted = num_simplified) — empty tiles included."""
+def _subtree_kernel(options: Options, tile_sink: Optional[TaskSink] = None):
+    """mapInPandas kernel over TILED rows clustered by tile (a fused
+    level's rows, repartitioned and sorted by (z, x, y), or the raw-gated
+    wave's root rows): the core tiler's whole split recursion under each
+    tile, as the drill pass's rows (drill_descend_stage) per subtree
+    tile: RS_RENDER features whose order keys (0, i, '', 0) rank in the
+    emitter's order, the RS_LEAF retained source rows, and one RS_CAGG
+    row (num_points, n_emitted = num_simplified) — empty tiles included.
+    With ``tile_sink`` the tasks write the RS_RENDER and RS_LEAF rows
+    themselves and return one partial per tile (PARTIAL_SCHEMA,
+    sub_idx 1)."""
+    order = ["world_copy", "feature_seq", "slice_path"]
 
-    def run(key, pdf):
+    def subtree(key, pieces) -> pd.DataFrame:
         from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
 
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        ordered = pdf.sort_values(
-            ["world_copy", "feature_seq", "slice_path"], kind="stable"
-        )
-        feats = list(pdf_to_features(ordered[TILED_COLS[3:]]))
+        feats = [f for p in pieces for f in pdf_to_features(p[TILED_COLS[3:]])]
+        keys = pd.concat([p[order] for p in pieces], ignore_index=True)
+        feats = [feats[i] for i in keys.sort_values(order, kind="stable").index]
         rows: list = []
-        for it in CoreTiler.subtree(feats, options, z, x, y).tiles.values():
+        for it in CoreTiler.subtree(feats, options, *key).tiles.values():
             em = it.emitter
             tile = dict.fromkeys(RS_COLS) | dict(z=em.z, x=em.x, y=em.y)
             for i, tf in enumerate(em.features):
@@ -211,7 +219,53 @@ def _subtree_kernel(options: Options):
                                     n_emitted=em.num_simplified))
         return pd.DataFrame(rows, columns=RS_COLS)
 
+    def groups(batches):
+        # (key, row slices) per tile; a tile's rows may span batches
+        key, pieces = None, []
+        for pdf in batches:
+            for k, g in pdf.groupby(["z", "x", "y"], sort=False):
+                if k != key and pieces:
+                    yield key, pieces
+                    pieces = []
+                key = tuple(map(int, k))
+                pieces.append(g)
+        if pieces:
+            yield key, pieces
+
+    def run(batches):
+        if tile_sink is None:
+            for key, pieces in groups(batches):
+                yield subtree(key, pieces)
+            return
+        w = _TaskWriter(tile_sink, "fuse")
+        tiles: dict = {}
+        for key, pieces in groups(batches):
+            rows = subtree(key, pieces)
+            w.put(rows)
+            for r in rows[rows["row_kind"] == RS_CAGG].itertuples(index=False):
+                tiles[(int(r.z), int(r.x), int(r.y))] = (r.num_points,
+                                                         r.n_emitted)
+        counts = w.close()
+        if tiles:
+            yield _rs_cagg_frame({
+                k: (*v, *counts.get(k, (0, 0, 0))[1:])
+                for k, v in tiles.items()
+            }, 1, PARTIAL_COLS)
+
     return run
+
+
+def fused_stage(fr: DataFrame, options: Options,
+                tile_sink: Optional[TaskSink] = None) -> DataFrame:
+    """The 'fuse' tiles of a level (``fr`` rows with the decided action)
+    as whole subtrees, one _subtree_kernel call per task over its rows
+    clustered by tile."""
+    return (
+        fr.filter(F.col("action") == "fuse").drop("action")
+        .repartition("z", "x", "y").sortWithinPartitions("z", "x", "y")
+        .mapInPandas(_subtree_kernel(options, tile_sink),
+                     schema=pass_schema(tile_sink))
+    )
 
 
 def run_levels(
@@ -220,7 +274,7 @@ def run_levels(
     sink,
     features_df: Optional[DataFrame] = None,
     raw_npts: Optional[int] = None,
-    frontier: Optional[DataFrame] = None,
+    partials=(),
     pending=(),
     level: int = 0,
 ) -> None:
@@ -228,12 +282,12 @@ def run_levels(
 
     1. per-tile (num_points, rows) — the ONLY per-tile state the stop
        predicate needs (lib.rs:305-313) — finished driver-side from the
-       previous turn's RS_CAGG map-side partials, so a level is ONE job
-       wave; only a resumed ``frontier`` pays a Spark agg job;
+       previous turn's RS_CAGG map-side partials (a resumed build: from
+       its last manifest), so a level needs no decision agg job;
     2. ``decide`` per tile (index-sized, on the driver);
     3. rendering and child clipping run per ROW (render_split_stage) —
        a z0 root with millions of features stays fully parallel; only
-       bounded 'fuse' groups run whole subtrees (applyInPandas).
+       bounded 'fuse' groups run whole subtrees (fused_stage).
 
     A fresh build passes the raw ``features_df``; the FIRST level then
     skips the decision agg, which would materialize the whole
@@ -242,29 +296,35 @@ def run_levels(
     one fused task (converted tnp <= 3*raw: wrap at most triples
     dateline-straddling features); larger inputs render+split the root
     OPTIMISTICALLY and finish its decision from parent partials emitted
-    in the same wave, recovering the leaf retention from the frontier in
-    the (rare) case the root was not really a split.  A resumed build
-    passes its persisted ``frontier`` (None when only empty children are
-    left), the previous level's ``pending`` children and ``level``.
+    in the same wave; in the (rare) case the root was not really a split
+    the level runs again as a leaf level over the converted rows.  A
+    resumed build passes the ``partials`` ((z, x, y, num_points, rows)
+    of its next level's tiles, empty when only empty children are left),
+    the previous level's ``pending`` children and ``level``.
 
     ``sink`` receives each level in this order:
-      begin(level)
+      begin(level) -> tile_sink
+          start the level; a TaskSink makes every pass of the level
+          write its outputs from the tasks and return only its partials
+          (PARTIAL_SCHEMA), None makes the passes return their rows
+          (RS_SCHEMA)
       level(level, step2, fuse, leaves, children) -> (cagg, n_fused)
-          materialize the render pass ``step2`` (RS_SCHEMA, or None),
-          the fused subtrees ``fuse`` (RS_SCHEMA, or None: the drill
-          pass's rows, one RS_CAGG row per fused tile) and the leaf
-          tiles' source rows ``leaves`` (TILED_COLS, or None); return
-          the render pass's RS_CAGG partials (CAGG_COLS; child partials
-          are needed only when ``children``; never the fused tiles'
-          rows) and the fused tile count
-      leaves(level, df)  -- the mispredicted-root recovery only
-      commit(level, tiles, pending, n_children, n_leaf)
+          materialize the render pass ``step2`` (or None), the fused
+          subtrees ``fuse`` (or None: the drill pass's rows, one RS_CAGG
+          row per fused tile) and, without a tile_sink, the leaf tiles'
+          source rows ``leaves`` (TILED_COLS, or None); return the
+          render pass's RS_CAGG partials (CAGG_COLS; child partials are
+          needed only when ``children``; never the fused tiles' rows)
+          and the fused tile count
+      commit(level, tiles, pending, partials)
           ``tiles``: (z, x, y, action, num_points, rows) of every
           non-fused tile, empty children first (action 'empty');
-          ``n_leaf``: the non-fused leaf tiles' source row count."""
+          ``partials``: the next level's (z, x, y, num_points, rows)
+      frontier(level, n_rows) -> DataFrame
+          the input rows (TILED_COLS) of ``level``, the next one: the
+          sink hands them back from where its last pass put them."""
     o = options
-    first_wave = None
-    next_np = None
+    first_wave = frontier = None
     if features_df is not None:
         if raw_npts is None:
             raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
@@ -283,51 +343,36 @@ def run_levels(
             # and frontier.coalesce(1) re-initialized the Python runner
             # once per upstream partition: 4 s of overhead for a 0.15 s
             # kernel on us-states)
-            sink.begin(level)
+            ts = sink.begin(level)
+            cw, sub = _convert_wrap_kernel(*cw_args), _subtree_kernel(o, ts)
             wave = features_df.coalesce(1).mapInPandas(
-                _fuse_wave_kernel(
-                    _convert_wrap_kernel(*cw_args), _subtree_kernel(o),
-                    (0, 0, 0),
-                ),
-                schema=RS_SCHEMA,
+                lambda batches: sub(root_rows(cw(batches))),
+                schema=pass_schema(ts),
             )
             n_fused = sink.level(level, fuse=wave)[1]
             # an empty or fully-dropped input still creates the root
             # (lib.rs:265-295: insert precedes the early return)
             root = [] if n_fused else [(0, 0, 0, "empty", 0, 0)]
-            sink.commit(level, root, [], 0, 0)
+            sink.commit(level, root, [], [])
             return
         frontier = convert_wrap_stage(features_df, *cw_args).select(
             F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
         )
-        # lazy fused convert+wrap+render+split plan for the optimistic
+        # the fused convert+wrap+render+split plan is the optimistic
         # first turn (one Arrow pass instead of two); `frontier` stays
         # the mispredicted-leaf recovery source
-        first_wave = convert_wrap_render_split_stage(
-            features_df, *cw_args, options=o
-        )
+        first_wave = True
+    elif partials:
+        frontier = sink.frontier(level, sum(p[4] for p in partials))
     pending = list(pending)
-    prev = None  # previous turn's render pass: this turn's frontier
     while True:
-        sink.begin(level)
-        if first_wave is not None:
+        ts = sink.begin(level)
+        if first_wave:
             decisions = [(0, 0, 0, "split", None, None)]
         else:
-            if next_np is None and frontier is not None:
-                # a resumed frontier is cached: the agg and fr read it
-                frontier = frontier.persist()
-                next_np = (
-                    frontier.groupBy("z", "x", "y")
-                    .agg(F.sum("num_points").alias("tnp"),
-                         F.count(F.lit(1)).alias("rows"))
-                    .toPandas()
-                )
             decisions = [
-                (int(r.z), int(r.x), int(r.y),
-                 decide(o, int(r.z), int(r.x), int(r.y), int(r.tnp)),
-                 int(r.tnp), int(r.rows))
-                for r in (() if next_np is None
-                          else next_np.itertuples(index=False))
+                (z, x, y, decide(o, z, x, y, tnp), tnp, rows)
+                for z, x, y, tnp, rows in partials
             ]
         seen = {d[:3] for d in decisions}
         # children of the previous level's split parents that got no
@@ -337,56 +382,43 @@ def run_levels(
             if (z, x, y) not in seen
         ]
         if not decisions:
-            if frontier is not None:
-                frontier.unpersist()
-            sink.commit(level, tiles, [], 0, 0)
+            sink.commit(level, tiles, [], [])
             return
 
         acts = {d[3] for d in decisions}
         fr = fuse = leaves = None
-        if first_wave is not None:
+        if first_wave:
             # the fused convert+wrap+render+split plan over the RAW input
             # (one Arrow pass; no decision join on this turn)
-            step2 = first_wave.localCheckpoint(eager=False)
+            step2 = convert_wrap_render_split_stage(
+                features_df, *cw_args, options=o, tile_sink=ts)
         else:
             ddf = decisions_df(spark, [d[:4] for d in decisions])
             fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            if ("fuse" in acts) + ("leaf" in acts) + bool(acts - {"fuse"}) >= 2:
-                # cache only when >= 2 of the level's actions read fr
-                # (single-action levels have one consumer, and caching
-                # there is a wasted copy: a 4M-point build OOM'd an 8g
-                # heap holding prev + frontier + fr + step2 at once)
+            readers = (bool(acts - {"fuse"}) + ("fuse" in acts)
+                       + ("leaf" in acts and ts is None))
+            if readers >= 2:
+                # cache only when >= 2 of the level's passes read fr
+                # (single-reader levels would waste a copy: a 4M-point
+                # build OOM'd an 8g heap holding prev + frontier + fr +
+                # step2 at once)
                 fr = fr.persist()
-            # localCheckpoint truncates the per-level lineage: without it
-            # each level's logical plan embeds every previous level's and
-            # analysis cost compounds (measured 4x wall blowup by z5 on a
-            # no-fuse us-states build)
             step2 = (
-                render_split_stage(fr.filter(F.col("action") != "fuse"), o)
-                .localCheckpoint(eager=False)
+                render_split_stage(fr.filter(F.col("action") != "fuse"), o,
+                                   tile_sink=ts)
                 if acts - {"fuse"}
                 else None
             )
             if "fuse" in acts:
-                fuse = (
-                    fr.filter(F.col("action") == "fuse")
-                    .drop("action")
-                    .groupBy("z", "x", "y")
-                    .applyInPandas(_subtree_kernel(o), schema=RS_SCHEMA)
-                )
-            if "leaf" in acts:
+                fuse = fused_stage(fr, o, ts)
+            if "leaf" in acts and ts is None:
                 leaves = fr.filter(F.col("action") == "leaf").select(
                     *TILED_COLS
                 )
         split = [d[:3] for d in decisions if d[3] == "split"]
         cagg = sink.level(level, step2, fuse, leaves, bool(split))[0]
-        if prev is not None:
-            # this level's outputs are materialized; the previous pass
-            # is no longer referenced
-            prev.unpersist()
-            prev = None
-        if first_wave is not None:
-            first_wave = None
+        if first_wave:
+            first_wave = False
             # finish the deferred root decision from the wave's own
             # parent partials (sub_idx == -1 RS_CAGG rows)
             pm = (cagg["sub_idx"] == -1).to_numpy()
@@ -394,67 +426,66 @@ def run_levels(
             if root.empty:
                 # empty (or fully-dropped) input: the root tile still
                 # exists (lib.rs:265-295)
-                step2.unpersist()
-                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], 0, 0)
+                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], [])
                 return
             tnp = int(root["num_points"].sum())
+            rows = int(root["n_emitted"].sum())
+            if decide(o, 0, 0, 0, tnp) == "leaf":
+                # mispredicted: the root is really a leaf — run the level
+                # again, as a leaf level over the converted rows
+                partials = [(0, 0, 0, tnp, rows)]
+                continue
             # a 'fuse' root already rendered+split: its children run as a
             # real level (and fuse there)
-            action = "leaf" if decide(o, 0, 0, 0, tnp) == "leaf" else "split"
-            decisions = [(0, 0, 0, action, tnp, int(root["n_emitted"].sum()))]
-            if action == "leaf":
-                # mispredicted: the root is really a leaf — keep its
-                # render rows, retain the source features from the
-                # frontier, drop the wasted child clips
-                split, cagg = [], cagg.iloc[:0]
-                sink.leaves(level, frontier.select(*TILED_COLS))
-        n_children = int(cagg["n_emitted"].sum())
+            decisions = [(0, 0, 0, "split", tnp, rows)]
+        nxt = [
+            (int(r.z), int(r.x), int(r.y), int(r.tnp), int(r.rows))
+            for r in cagg.groupby(["z", "x", "y"], as_index=False).agg(
+                tnp=("num_points", "sum"), rows=("n_emitted", "sum")
+            ).itertuples(index=False)
+        ] if split else []
         pending = _children(split)
         sink.commit(
             level,
             tiles + [d for d in decisions if d[3] != "fuse"],
             pending,
-            n_children,
-            sum(d[5] for d in decisions if d[3] == "leaf"),
+            nxt,
         )
-        for df in (fr, frontier):
-            if df is not None:
-                df.unpersist()
+        if fr is not None:
+            fr.unpersist()
         if not split:
-            if step2 is not None:
-                step2.unpersist()
             return
         level += 1
-        if n_children:
-            next_np = cagg.groupby(["z", "x", "y"], as_index=False).agg(
-                tnp=("num_points", "sum"), rows=("n_emitted", "sum")
-            )
-            # continue from the cached pass, coalesced to a size-aware
-            # partition count (the row count is known from the partials)
-            frontier = step2.filter(F.col("row_kind") == RS_CHILD).select(
-                *TILED_COLS
-            ).coalesce(_frontier_parts(n_children, spark))
-            prev = step2
-        else:
-            # every child clipped empty: one more turn records them
-            next_np, frontier = None, None
-            step2.unpersist()
+        partials = nxt
+        if nxt:
+            frontier = sink.frontier(level, sum(p[4] for p in nxt))
 
 
 class _IndexSink:
     """run_levels sink of SparkGeoJSONVT: collects each level's render
     rows, fused subtrees and leaf features to the driver (index-sized
-    outputs) and registers the tiles, their features parsed lazily."""
+    outputs) and registers the tiles, their features parsed lazily; the
+    next level's frontier is the last render pass's child rows."""
 
     def __init__(self, index: "SparkGeoJSONVT"):
         self.index = index
+        self.prev = None  # the last render pass, cached
 
     def begin(self, level):
         self.rend = pd.DataFrame(columns=_REND_COLS)
         self.fused = None
+        return None
 
     def level(self, level, step2=None, fuse=None, leaves=None,
               children=False):
+        if step2 is not None:
+            # the next frontier reads the pass again; localCheckpoint
+            # also truncates the per-level lineage: without it each
+            # level's logical plan embeds every previous level's and
+            # analysis cost compounds (measured 4x wall blowup by z5 on
+            # a no-fuse us-states build)
+            step2 = step2.localCheckpoint(eager=False)
+
         # the collections are INDEPENDENT Spark actions -> concurrent
         # jobs, so the level pays one job latency, not three; the RS_CAGG
         # partials ride along in the render collection (no extra job)
@@ -466,11 +497,16 @@ class _IndexSink:
         with ThreadPoolExecutor(3) as ex:
             rf = ex.submit(rend) if step2 is not None else None
             ff = ex.submit(fuse.toPandas) if fuse is not None else None
-            lf = ex.submit(self.leaves, level, leaves) if leaves is not None else None
+            lf = ex.submit(self.leaves, leaves) if leaves is not None else None
             merged = rf.result() if rf else self.rend
             self.fused = ff.result() if ff else None
             if lf:
                 lf.result()
+        # this level's outputs are materialized; the previous pass is no
+        # longer referenced
+        if self.prev is not None:
+            self.prev.unpersist()
+        self.prev = step2
         is_cagg = (merged["row_kind"] == RS_CAGG).to_numpy()
         self.rend = merged.loc[~is_cagg]
         n_fused = 0
@@ -478,11 +514,11 @@ class _IndexSink:
             n_fused = int((self.fused["row_kind"] == RS_CAGG).sum())
         return merged.loc[is_cagg, CAGG_COLS], n_fused
 
-    def leaves(self, level, df):
+    def leaves(self, df):
         # leaf tiles retain their source features (lib.rs:311,324,335)
         self.index._retain(df.toPandas())
 
-    def commit(self, level, tiles, pending, n_children, n_leaf):
+    def commit(self, level, tiles, pending, partials):
         rend, fused = self.rend, self.fused
         ns = rend.groupby(["z", "x", "y"], sort=False)["n_emitted"].sum()
         self.index._add_pass(rend, [
@@ -496,6 +532,16 @@ class _IndexSink:
                 for r in fused[fused["row_kind"] == RS_CAGG].itertuples(
                     index=False)
             ])
+        if not partials and self.prev is not None:
+            self.prev.unpersist()
+            self.prev = None
+
+    def frontier(self, level, n_rows):
+        # coalesced to a size-aware partition count (the row count is
+        # known from the partials)
+        return self.prev.filter(F.col("row_kind") == RS_CHILD).select(
+            *TILED_COLS
+        ).coalesce(_frontier_parts(n_rows, self.index.spark))
 
 
 def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
@@ -511,8 +557,8 @@ def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
 
 
 def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
-               root: tuple, target: tuple, tile_sink: Optional[str] = None
-               ) -> DataFrame:
+               root: tuple, target: tuple,
+               tile_sink: Optional[TaskSink] = None) -> DataFrame:
     """The cold get_tile pass of both SparkGeoJSONVT and
     CheckpointedPyramid: drill_descend_stage from ``root``'s retained
     leaf rows down to ``target``.  The rows may sit in one partition or
@@ -683,22 +729,6 @@ class SparkGeoJSONVT:
 
     def get_internal_tiles(self):
         return self.tiles
-
-
-def _fuse_wave_kernel(cw_kernel, group_kernel, key):
-    """Raw feature batches -> convert+wrap -> the (key, pdf) subtree
-    group kernel, all inside ONE mapInPandas invocation (the raw-gated
-    fuse build).  The group kernel sorts its rows itself, so batch order
-    is irrelevant; the group key's (z, x, y) never appear as columns."""
-
-    def run(batches):
-        pdfs = [p for p in cw_kernel(batches) if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        yield group_kernel(key, pdf)
-
-    return run
 
 
 def _render_group_to_features(grp: pd.DataFrame) -> list:

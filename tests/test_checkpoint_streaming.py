@@ -302,7 +302,45 @@ def test_streaming_replay_idempotent(spark, tmp_path):
     assert again == 200
 
 
-@pytest.mark.parametrize("corpus", CORPORA + ["empty_children"])
+def canon_rows(pdf):
+    """A table's rows, order-free and comparable (array cells as lists)."""
+    return sorted(
+        repr(tuple(v.tolist() if hasattr(v, "tolist") else v for v in r))
+        for r in pdf[sorted(pdf.columns)].itertuples(index=False)
+    )
+
+
+def crash_inside_level(out, s1):
+    """Roll a finished store back to a crash inside a level with leaves
+    and children: its pass wrote the staged tiles and leaves and the next
+    frontier, then the driver died before the publish and the manifest;
+    no later level ran.  A wider earlier attempt left one more
+    ``part-<high pid>`` file in the staging dir and in the frontier dir
+    (copies of real part files: reading them would duplicate rows)."""
+    lv = next(m["level"] for m in s1["manifests"][1:]
+              if m["n_children"] and m["n_leaf_feature_rows"])
+    os.makedirs(os.path.join(out, "_staging"), exist_ok=True)
+    for m in s1["manifests"][lv:]:
+        k = m["level"]
+        os.remove(os.path.join(out, "_manifests", f"level_{k}.json"))
+        for t in ("tiles", "leaves"):
+            fin = os.path.join(out, t, f"level=L{k}")
+            if k == lv:
+                os.rename(fin, os.path.join(out, "_staging", f"{t}_level_{k}"))
+            else:
+                shutil.rmtree(fin, ignore_errors=True)
+        if k > lv:
+            shutil.rmtree(os.path.join(out, "frontier", f"level_{k + 1}"),
+                          ignore_errors=True)
+    stg = os.path.join(out, "_staging", f"tiles_level_{lv}")
+    fdir = os.path.join(out, "frontier", f"level_{lv + 1}")
+    for d in (glob.glob(os.path.join(stg, "z=*"))[0], fdir):
+        part = sorted(glob.glob(os.path.join(d, "part-*.parquet")))[0]
+        shutil.copy(part, os.path.join(d, "part-09999-render.parquet"))
+
+
+@pytest.mark.parametrize("corpus",
+                         CORPORA + ["empty_children", "staged_level"])
 def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     """Kill-and-resume with NO reader-side dedupe: simulate both crash
     windows of the level commit protocol — (a) after publish, before
@@ -313,7 +351,13 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     ``empty_children``: the level before the last records only empty
     pending children (n_children == 0), so the resume takes the
     no-frontier branch; its manifests and every read_tile must equal
-    the uninterrupted build's."""
+    the uninterrupted build's.
+
+    ``staged_level`` (generated corpus): the crash falls inside a level
+    whose tasks already wrote its staged files and next frontier, with a
+    stale part file of a wider attempt in both (crash_inside_level); the
+    resume must equal the uninterrupted build in its tiles and leaves
+    rows, manifests and every read_tile."""
     import pyspark.sql.functions as F
 
     out = str(tmp_path / "pyr_xonce")
@@ -368,20 +412,31 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
             for k in keys
         }
 
+    def tables():
+        return [canon_rows(spark.read.parquet(os.path.join(out, t)).toPandas())
+                for t in ("tiles", "leaves")]
+
+    whole = corpus in ("empty_children", "staged_level")
     if corpus == "empty_children":
         m_prev = s1["manifests"][-2]
         assert m_prev["n_children"] == 0 and m_prev["pending_children"]
+    if whole:
         base_manifests, base_tiles = manifests(), tiles_by_key()
+        base_tables = tables()
 
-    # (a) crash after publish, before manifest: kill the LAST level's
-    # manifest but leave its published dir in place
-    last = s1["levels"] - 1
-    os.remove(os.path.join(out, "_manifests", f"level_{last}.json"))
-    # (b) plus an orphan staging dir from a killed write
-    stg = os.path.join(out, "_staging", f"tiles_level_{last}")
-    os.makedirs(stg, exist_ok=True)
-    with open(os.path.join(stg, "garbage.bin"), "wb") as fh:
-        fh.write(b"partial write")
+    stg = None
+    if corpus == "staged_level":
+        crash_inside_level(out, s1)
+    else:
+        # (a) crash after publish, before manifest: kill the LAST
+        # level's manifest but leave its published dir in place
+        last = s1["levels"] - 1
+        os.remove(os.path.join(out, "_manifests", f"level_{last}.json"))
+        # (b) plus an orphan staging dir from a killed write
+        stg = os.path.join(out, "_staging", f"tiles_level_{last}")
+        os.makedirs(stg, exist_ok=True)
+        with open(os.path.join(stg, "garbage.bin"), "wb") as fh:
+            fh.write(b"partial write")
 
     s2 = cp.run(feats, out)
     assert s2["levels"] == s1["levels"]
@@ -389,9 +444,10 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
     resumed = snapshot()
     assert_no_dupes(resumed)
     assert base.equals(resumed)
-    assert not os.path.exists(stg)
-    if corpus == "empty_children":
+    assert stg is None or not os.path.exists(stg)
+    if whole:
         assert manifests() == base_manifests
+        assert tables() == base_tables
         got = tiles_by_key()
         assert got.keys() == base_tiles.keys()
         for k, tile in base_tiles.items():
@@ -708,13 +764,15 @@ def test_store_routes_identical_tiles(spark, tmp_path, corpus):
 
 
 def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
-    """drill_descend_stage's in-kernel tile sink (tile_sink=<dir>) must
-    write EXACTLY the render rows the yield path returns, shaped by the
-    store's feature-row projection: same store schema, same row set,
-    none of the memoized root's rows (the one stored tile a drill
-    touches), and idempotent under re-execution (deterministic
-    filenames + atomic rename — a retried/duplicated task overwrites
-    with identical content)."""
+    """drill_descend_stage's in-kernel sink (tile_sink=TaskSink) must
+    write EXACTLY the rows the yield path returns: its render rows,
+    shaped by the store's feature-row projection, to the staged tiles
+    and its RS_LEAF rows to the staged leaves; its per-tile partials
+    must sum to the yield path's RS_CAGG partials and row counts; none
+    of the memoized root's rows (the one stored tile a drill touches);
+    and idempotent under re-execution (deterministic filenames + atomic
+    rename — a retried/duplicated task overwrites with identical
+    content)."""
     import glob
     import os
 
@@ -725,9 +783,9 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
         RS_CAGG,
         RS_LEAF,
         RS_RENDER,
+        TaskSink,
         drill_descend_stage,
     )
-    from geojson_vt_rs_spark.plans.checkpoint import _feature_rows
     from geojson_vt_rs_spark.plans.pyramid import TILED_COLS
 
     out = str(tmp_path / "sinkstore")
@@ -742,35 +800,51 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
     src = leaf.select(*TILED_COLS).repartition(4)
     root, target = (0, 0, 0), (7, 37, 48)  # the first generated metro
 
-    # yield path: render rows cross the boundary, shaped like the level
-    # render write (the sink tags its rows 'drill')
+    # yield path: render rows cross the boundary; shape them like the
+    # store's feature rows (the sink tags its rows 'drill')
     plain = drill_descend_stage(src, opts, root, target).persist()
-    want_tiles = (
-        _feature_rows(plain)
-        .withColumn("action", F.lit("drill"))
-        .toPandas()
-    )
-    plain_kinds = {
-        r["row_kind"]: r["n"]
-        for r in plain.groupBy("row_kind").agg(F.count("*").alias("n")).collect()
+    feature = (F.col("row_kind") == RS_RENDER) & (F.col("sub_idx") >= 0)
+    want_tiles = plain.filter(feature).select(
+        "z", "x", "y",
+        F.lit(None).cast("int").alias("feature_idx"),
+        "type", "kind", "geometry_json", "tags_json",
+        F.col("id_str").alias("tile_id_str"),
+        F.col("id_num").alias("tile_id_num"),
+        F.col("id_float").alias("tile_id_float"),
+        F.lit(None).cast("int").alias("tile_num_points"),
+        F.lit(None).cast("int").alias("tile_num_simplified"),
+        F.lit("drill").alias("action"),
+        "world_copy", "feature_seq", "slice_path", "sub_idx",
+    ).toPandas()
+    want_leaves = plain.filter(F.col("row_kind") == RS_LEAF).select(
+        *TILED_COLS).toPandas()
+    kind = F.col("row_kind")
+    want_partials = {
+        (r.z, r.x, r.y): (r.num_points, r.n_emitted, r.nf, r.n_leaf)
+        for r in plain.groupBy("z", "x", "y").agg(
+            F.sum(F.when(kind == RS_CAGG, F.col("num_points"))
+                  ).alias("num_points"),
+            F.sum(F.when(kind == RS_CAGG, F.col("n_emitted"))
+                  ).alias("n_emitted"),
+            F.sum(feature.cast("long")).alias("nf"),
+            F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
+        ).collect()
     }
     plain.unpersist()
 
-    # sink path
-    stg = str(tmp_path / "stg_tiles")
-    sunk = drill_descend_stage(src, opts, root, target, tile_sink=stg).persist()
-    sunk_kinds = {
-        r["row_kind"]: r["n"]
-        for r in sunk.groupBy("row_kind").agg(F.count("*").alias("n")).collect()
-    }
-    sunk.unpersist()
+    # sink path: only the per-tile partials come back
+    stg = TaskSink(str(tmp_path / "stg_tiles"), str(tmp_path / "stg_leaves"),
+                   action="drill")
+    sunk = drill_descend_stage(src, opts, root, target, tile_sink=stg)
+    got_partials: dict = {}
+    for r in sunk.collect():
+        assert r.sub_idx == 1
+        acc = got_partials.setdefault((r.z, r.x, r.y), [0, 0, 0, 0])
+        for i, v in enumerate((r.num_points, r.n_emitted, r.nf, r.n_leaf)):
+            acc[i] += v
+    assert {k: tuple(v) for k, v in got_partials.items()} == want_partials
 
-    # the sink output yields NO render rows; leaves/cagg identical
-    assert RS_RENDER not in sunk_kinds
-    assert sunk_kinds[RS_LEAF] == plain_kinds[RS_LEAF]
-    assert sunk_kinds[RS_CAGG] == plain_kinds[RS_CAGG]
-
-    got_tiles = spark.read.parquet(stg).toPandas()
+    got_tiles = spark.read.parquet(stg.tiles).toPandas()
     assert len(got_tiles) > 10
     cols = sorted(want_tiles.columns)
     assert sorted(got_tiles.columns) == cols
@@ -778,6 +852,10 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
     a = got_tiles[cols].sort_values(key, ignore_index=True)
     b = want_tiles[cols].sort_values(key, ignore_index=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=True)
+    got_leaves = spark.read.parquet(stg.leaves).toPandas()
+    assert len(want_leaves) > 10
+    assert sorted(got_leaves.columns) == sorted(want_leaves.columns)
+    assert canon_rows(got_leaves) == canon_rows(want_leaves)
     # root-only exclusion: the pass renders tiles below the root only,
     # down to the target
     tiles = set(map(tuple, got_tiles[["z", "x", "y"]].to_numpy().tolist()))
@@ -786,12 +864,18 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
 
     # idempotence: re-executing the pass overwrites the same files with
     # identical content (no duplicates, no leftover visible tmp files)
-    files1 = sorted(glob.glob(f"{stg}/z=*/part-*.parquet"))
+    def files():
+        return sorted(glob.glob(f"{stg.tiles}/z=*/*")
+                      + glob.glob(f"{stg.leaves}/z=*/*"))
+
+    files1 = files()
+    assert files1 and all("/part-" in f for f in files1)
     drill_descend_stage(
         src, opts, root, target, tile_sink=stg,
     ).write.format("noop").mode("overwrite").save()
-    files2 = sorted(glob.glob(f"{stg}/z=*/part-*.parquet"))
-    assert files1 == files2
-    again = spark.read.parquet(stg).toPandas()
+    assert files() == files1
+    again = spark.read.parquet(stg.tiles).toPandas()
     c = again[cols].sort_values(key, ignore_index=True)
     pd.testing.assert_frame_equal(c, b, check_dtype=True)
+    assert canon_rows(spark.read.parquet(stg.leaves).toPandas()) == \
+        canon_rows(want_leaves)
