@@ -310,40 +310,24 @@ def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
     return offs, tx, ty, keep
 
 
-# fused render+split output: one row stream discriminated by row_kind
+# the row stream a pass's kernel hands its _TaskWriter, discriminated by
+# row_kind: rendered tile features, child rows for the next level, and
+# retained-leaf source rows (drill_descend_stage and the fused subtree
+# kernel: rows of a tile left as-is, destined for the leaves store)
 RS_RENDER = 0
 RS_CHILD = 1
-# map-side partial child-point counts: one row per (child tile, batch)
-# carrying sum(num_points) in num_points — the driver's next-level
-# decision agg finishes these index-sized partials in pandas, so a
-# pyramid level needs NO separate Spark agg job (one wave per level)
-RS_CAGG = 2
-# retained-leaf source rows (drill_descend_stage and the fused subtree
-# kernel): rows of a tile left as-is, destined for the leaves store
-RS_LEAF = 3
+RS_LEAF = 2
 
 _RS_RENDER_ONLY = ["sub_idx", "type", "kind", "geometry_json", "tags_json",
                    "n_emitted"]
-RS_SCHEMA = T.StructType(
-    [T.StructField("row_kind", T.IntegerType(), False)]
-    + list(TILED_FEATURE_SCHEMA.fields)
-    + [
-        T.StructField("sub_idx", T.IntegerType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("geometry_json", T.StringType()),
-        T.StructField("tags_json", T.StringType()),
-        T.StructField("n_emitted", T.IntegerType()),
-    ]
-)
-RS_COLS = [f.name for f in RS_SCHEMA.fields]
+RS_COLS = ["row_kind", *TILED_COLS, *_RS_RENDER_ONLY]
 
-# a sink-mode pass (``tile_sink``: its tasks write the rows themselves)
-# returns only per-(task, tile) partials, told apart by sub_idx: NULL a
-# child partial (num_points, n_emitted = row count), -1 a parent partial
-# (the same, of an input tile), 0 a rendered tile's counters
-# (n_emitted = num_simplified, nf feature rows, n_leaf retained rows) and
-# 1 a multi-level pass's tile (the same plus its num_points)
+# every pass writes its rows from the tasks and returns only per-(task,
+# tile) partials, told apart by sub_idx: NULL a child partial
+# (num_points, n_emitted = row count), -1 a parent partial (the same, of
+# an input tile), 0 a rendered tile's counters (n_emitted =
+# num_simplified, nf feature rows, n_leaf retained rows) and 1 a
+# multi-level pass's tile (the same plus its num_points)
 PARTIAL_SCHEMA = T.StructType(
     [T.StructField(c, T.IntegerType()) for c in ("z", "x", "y", "sub_idx")]
     + [T.StructField(c, T.LongType())
@@ -352,13 +336,8 @@ PARTIAL_SCHEMA = T.StructType(
 PARTIAL_COLS = [f.name for f in PARTIAL_SCHEMA.fields]
 
 
-def pass_schema(tile_sink) -> T.StructType:
-    """Output schema of a pass with or without a task-side sink."""
-    return RS_SCHEMA if tile_sink is None else PARTIAL_SCHEMA
-
-
 class TaskSink(NamedTuple):
-    """Where the tasks of a sink-mode pass write (the filesystem contract
+    """Where the tasks of a pass write (the filesystem contract
     in plans/checkpoint.py's module docstring): rendered feature rows to
     ``tiles`` and retained leaf rows to ``leaves``, both partitioned by
     z, child rows to ``frontier``; feature rows record ``action``."""
@@ -392,7 +371,7 @@ def write_parquet(d: str, name: str, table) -> None:
 
 
 class _TaskWriter:
-    """The task side of a sink-mode pass: routes its RS rows to the
+    """The task side of a pass: routes its RS rows to the
     TaskSink's dirs (RS_RENDER features -> tiles, RS_LEAF -> leaves,
     RS_CHILD -> frontier), held as Arrow batches per (dir, z) and written
     by ``close`` as ONE file each, ``part-<partition>-<tag>.parquet``.
@@ -445,7 +424,7 @@ class _TaskWriter:
         rend = part.loc[kind == RS_RENDER]
         if len(rend):
             sub = rend["sub_idx"].to_numpy()
-            self._tally(rend, 0, rend["n_emitted"].fillna(0).to_numpy())
+            self._tally(rend, 0, pd.to_numeric(rend["n_emitted"]).fillna(0))
             feat = rend.loc[sub >= 0]
             if len(feat):
                 self._tally(feat, 1, np.ones(len(feat), dtype=np.int64))
@@ -728,33 +707,29 @@ def _rs_body(options: Options):
     return body
 
 
-def _rs_cagg_frame(cagg: dict, sub_idx=None, cols=RS_COLS) -> pd.DataFrame:
-    """(z,x,y) -> (num_points, row_count[, nf, n_leaf]) partials as
-    RS_CAGG rows (``cols=PARTIAL_COLS``: as a sink-mode pass's partials).
-    n_emitted doubles as the partial child ROW count so the driver can
-    finish n_children without a job.  ``sub_idx=-1`` marks PARENT
-    partials (the input tiles' own point sums, emitted by the optimistic
-    first wave) apart from the default child partials (sub_idx NULL)."""
+def _partials_frame(cagg: dict, sub_idx=None) -> pd.DataFrame:
+    """(z,x,y) -> (num_points, row_count[, nf, n_leaf]) partials as a
+    pass's PARTIAL_COLS rows.  n_emitted doubles as the partial child ROW
+    count so the driver can finish n_children without a job.
+    ``sub_idx=-1`` marks PARENT partials (the input tiles' own point
+    sums, emitted by the first wave) apart from the default child
+    partials (sub_idx NULL)."""
     keys = list(cagg)
     vals = [tuple(v) + (0, 0)[: 4 - len(v)] for v in cagg.values()]
-    d = {c: [None] * len(keys) for c in cols}
-    d.update(
+    return pd.DataFrame(dict(
         z=[k[0] for k in keys],
         x=[k[1] for k in keys],
         y=[k[2] for k in keys],
         sub_idx=sub_idx,
         num_points=[int(v[0]) for v in vals],
         n_emitted=[int(v[1]) for v in vals],
-    )
-    if "row_kind" in cols:
-        d["row_kind"] = RS_CAGG
-    else:
-        d.update(nf=[int(v[2]) for v in vals], n_leaf=[int(v[3]) for v in vals])
-    return pd.DataFrame(d, columns=cols)
+        nf=[int(v[2]) for v in vals],
+        n_leaf=[int(v[3]) for v in vals],
+    ), columns=PARTIAL_COLS)
 
 
 def render_split_stage(
-    df: DataFrame, options: Options, tile_sink: Optional[TaskSink] = None
+    df: DataFrame, options: Options, tile_sink: TaskSink
 ) -> DataFrame:
     """ONE Python pass per pyramid level: renders every row (RS_RENDER
     rows: sub_idx, type, kind, geometry/tags JSON, n_emitted per
@@ -769,68 +744,53 @@ def render_split_stage(
     with no per-feature Python; only straddling rows are clipped.
     Input must carry the driver's ``action`` column ('leaf'/'split').
 
-    ``tile_sink`` (the checkpointed store's levels) writes the level's
-    outputs from the tasks instead of returning them (_TaskWriter):
-    rendered features to the staged tiles, the input rows of 'leaf'
-    tiles to the staged leaves, the child rows to the next level's
-    frontier.  Only the partials come back (PARTIAL_SCHEMA): the child
-    partials and each rendered tile's counters, so collecting them is
-    the level's one Spark job."""
-    return df.mapInPandas(
-        _render_split_kernel(options, tile_sink=tile_sink),
-        schema=pass_schema(tile_sink),
-    )
+    The tasks write the level's outputs to ``tile_sink`` themselves
+    (_TaskWriter): rendered features to the staged tiles, the input rows
+    of 'leaf' tiles to the staged leaves, the child rows to the next
+    level's frontier.  Only the partials come back (PARTIAL_SCHEMA): the
+    child partials and each rendered tile's counters, so collecting them
+    is the level's one Spark job."""
+    return df.mapInPandas(_render_split_kernel(options, tile_sink),
+                          schema=PARTIAL_SCHEMA)
 
 
-def _render_split_kernel(options: Options, emit_parent_cagg: bool = False,
-                         tile_sink: Optional[TaskSink] = None):
+def _render_split_kernel(options: Options, tile_sink: TaskSink,
+                         emit_parent_cagg: bool = False):
     """The render/split pandas kernel (see render_split_stage) as a
     reusable generator factory — composable behind the convert+wrap
     kernel for the fused first-turn wave.  ``emit_parent_cagg=True``
     additionally emits per-batch partials of the INPUT tiles' own point
-    sums with sub_idx = -1: the optimistic first wave decides
-    leaf-vs-split AFTER rendering from these, so the first level needs no
-    separate decision agg job."""
-    cols = RS_COLS if tile_sink is None else PARTIAL_COLS
+    sums with sub_idx = -1: the first wave decides the root's action
+    AFTER rendering from these, so the first level needs no separate
+    decision agg job."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)
-        w = None if tile_sink is None else _TaskWriter(tile_sink, "render")
+        w = _TaskWriter(tile_sink, "render")
         for pdf in batches:
             if pdf.empty:
                 continue
             parts, cagg = body(pdf)
-            if w is not None:
-                leaf = (pdf["action"] == "leaf").to_numpy()
-                if leaf.any():
-                    w.leaves(pdf.loc[leaf])
-                for part in parts:
-                    w.put(part)
-                parts = []
+            leaf = (pdf["action"] == "leaf").to_numpy()
+            if leaf.any():
+                w.leaves(pdf.loc[leaf])
+            for part in parts:
+                w.put(part)
             if cagg:
-                parts.append(_rs_cagg_frame(cagg, cols=cols))
+                yield _partials_frame(cagg)
             if emit_parent_cagg:
                 g = pdf.groupby(["z", "x", "y"], sort=False)[
                     "num_points"
                 ].agg(["sum", "size"])
-                pc = {
+                yield _partials_frame({
                     k: (int(s), int(c))
                     for k, s, c in zip(
                         g.index, g["sum"].tolist(), g["size"].tolist()
                     )
-                }
-                parts.append(_rs_cagg_frame(pc, -1, cols))
-            # yield each part as its own Arrow batch: pd.concat of mixed
-            # all-NA object frames triggers an elementwise NA scan (~4s
-            # per 100k-row batch measured) that the separate batches skip
-            for part in parts:
-                if len(part):
-                    yield part[cols]
-        if w is not None:
-            counts = w.close()
-            if counts:
-                yield _rs_cagg_frame(
-                    {k: (0, *v) for k, v in counts.items()}, 0, cols)
+                }, -1)
+        counts = w.close()
+        if counts:
+            yield _partials_frame({k: (0, *v) for k, v in counts.items()}, 0)
 
     return kernel
 
@@ -851,37 +811,9 @@ def root_rows(batches: Iterator[pd.DataFrame], action: Optional[str] = None,
         yield pdf
 
 
-def convert_wrap_render_split_stage(
-    df: DataFrame,
-    tolerance: float,
-    generate_id: bool,
-    buffer: float,
-    line_metrics: bool,
-    options: Options,
-    tile_sink: Optional[TaskSink] = None,
-) -> DataFrame:
-    """The ENTIRE optimistic first turn as ONE Python pass: raw features
-    -> convert+wrap -> render root + clip children (+ parent RS_CAGG
-    partials).  Composing the two kernels inside one mapInPandas saves a
-    full-table Arrow round-trip at the pipeline head (consecutive
-    mapInPandas operators each pay JVM->worker->JVM serde even within a
-    stage), and the constant (z, x, y, action='split') columns the
-    decision join used to add are synthesized in-kernel — byte-identical
-    output to render_split_stage(frontier JOIN decisions) because the
-    optimistic decision table is the single row (root, 'split').
-    ``tile_sink`` as in render_split_stage."""
-    cw = _convert_wrap_kernel(tolerance, generate_id, buffer, line_metrics)
-    rs = _render_split_kernel(options, True, tile_sink)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from rs(root_rows(cw(batches), "split"))
-
-    return df.mapInPandas(kernel, schema=pass_schema(tile_sink))
-
-
 def drill_descend_stage(
     df: DataFrame, options: Options, root: tuple, target: tuple,
-    tile_sink: Optional[TaskSink] = None,
+    tile_sink: TaskSink,
 ) -> DataFrame:
     """The ENTIRE root-to-target drill descent as ONE feature-parallel
     mapInPandas pass (get_tile cold-miss path, lib.rs:184-223).
@@ -898,31 +830,22 @@ def drill_descend_stage(
     feature emissions (measured 116s vs this pass's one wave at 1M
     points).
 
-    Output row kinds: RS_RENDER (rendered tile features, with the
-    persisted order keys), RS_LEAF (retained source rows of leaf tiles),
-    RS_CAGG (per-tile (tnp, n_emitted) partials — num_points carries the
-    tile's source-point sum, n_emitted the rendered-emission sum — the
-    driver finishes stats rows from these without another job).  This is
-    the one row contract of a multi-level pass: the build's fused
-    subtrees (plans/pyramid.py _subtree_kernel) emit it too, so both
-    sinks decode one format.
+    Each task writes its rendered tile features (RS_RENDER rows, with the
+    persisted order keys) and the retained source rows of its leaf tiles
+    (RS_LEAF) straight into ``tile_sink``'s staged tiles / leaves as
+    store-schema parquet (_TaskWriter, as the level passes do); only one
+    partial per tile comes back (PARTIAL_SCHEMA, sub_idx 1: num_points
+    the tile's source-point sum, n_emitted its rendered-emission sum,
+    nf, n_leaf), and the driver finishes stats rows from these without
+    another job.  This is the one partial contract of a multi-level
+    pass: the build's fused subtrees (plans/pyramid.py _subtree_kernel)
+    return it too.
 
     ``root`` is the one memoized tile a drill touches (its nearest
     memoized ancestor, plans/pyramid.py find_parent): the pass re-splits
-    it but emits none of its render rows, so every RS_RENDER row belongs
-    to a new tile; its RS_CAGG partial still carries its point count
-    (drill_tiles reads it).
-
-    ``tile_sink`` (the checkpointed store) moves the RS_RENDER and RS_LEAF
-    rows OUT of the Arrow output entirely: each task writes them straight
-    into the staged tiles / leaves as store-schema parquet (_TaskWriter,
-    as the store's level passes do) and only one partial per tile comes
-    back (PARTIAL_SCHEMA, sub_idx 1: num_points, n_emitted, nf, n_leaf).
-    The render rows are ~85 % of the pass's output volume and only ever
-    existed to be parquet-written by a follow-up job: sinking them
-    in-kernel removes their Python->JVM boundary crossing, the JVM cache
-    copy, AND the separate write job (4M drill pass 19.7 s -> see
-    OPTIMIZATION_r06.md)."""
+    it but writes none of its render rows, so every written row belongs
+    to a new tile; its partial still carries its point count
+    (drill_tiles reads it)."""
     az = root[0]
     cz, cx, cy = target
     max_zoom = options.max_zoom
@@ -937,7 +860,7 @@ def drill_descend_stage(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)
-        w = None if tile_sink is None else _TaskWriter(tile_sink, "drill")
+        w = _TaskWriter(tile_sink, "drill")
         stats: dict = {}  # (z,x,y) -> [tnp_partial, ns_partial]
         for pdf in batches:
             if pdf.empty:
@@ -972,10 +895,8 @@ def drill_descend_stage(
                 # retained leaves out (target tile included; 'stop' tiles
                 # render but retain nothing, matching the level loop)
                 leaf_sel = (cur["action"] == "leaf").to_numpy()
-                if leaf_sel.any() and w is not None:
+                if leaf_sel.any():
                     w.leaves(cur.loc[leaf_sel])
-                elif leaf_sel.any():
-                    yield _rs_rows(cur.loc[leaf_sel], RS_LEAF)
                 parts, _cagg = body(cur)
                 nxt = []
                 for part in parts:
@@ -989,10 +910,7 @@ def drill_descend_stage(
                         for k, v in ns.items():
                             key = (int(k[0]), int(k[1]), int(k[2]))
                             stats.setdefault(key, [0, 0])[1] += int(v)
-                        if w is None:
-                            yield rend[RS_COLS]
-                        else:
-                            w.put(rend)
+                        w.put(rend)
                     ch = part[part["row_kind"] == RS_CHILD]
                     if len(ch):
                         nxt.append(ch[TILED_COLS])
@@ -1005,18 +923,14 @@ def drill_descend_stage(
                     cur = nxt[0].reset_index(drop=True)
                 else:
                     cur = pd.concat(nxt, ignore_index=True)
-        if w is None:
-            if stats:
-                yield _rs_cagg_frame(stats)
-            return
         counts = w.close()
         if stats:
-            yield _rs_cagg_frame({
+            yield _partials_frame({
                 k: (tnp, ns, *counts.get(k, (0, 0, 0))[1:])
                 for k, (tnp, ns) in stats.items()
-            }, 1, PARTIAL_COLS)
+            }, 1)
 
-    return df.mapInPandas(kernel, schema=pass_schema(tile_sink))
+    return df.mapInPandas(kernel, schema=PARTIAL_SCHEMA)
 
 
 def _emit_rows(

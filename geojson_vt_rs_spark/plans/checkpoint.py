@@ -33,6 +33,10 @@ so no file of an earlier attempt survives.  So ``out_dir`` must be ONE
 shared POSIX path: the same directory for the driver and every
 executor, with atomic rename within it.  Local mode and a shared POSIX
 mount satisfy this; an object store without atomic rename does not.
+The in-memory index (plans/pyramid.py SparkGeoJSONVT) builds and drills
+through this store in a ``tempfile.TemporaryDirectory`` on the driver:
+every session of this engine is ``local[N]`` (operators/session.py), so
+that driver-local directory is such a path.
 """
 
 from __future__ import annotations
@@ -198,8 +202,7 @@ class _StoreSink:
         self.tiles: dict = {}
         return TaskSink(self.c.stg_tiles, self.c.stg_leaves, fdir)
 
-    def level(self, level, step2=None, fuse=None, leaves=None,
-              children=False):
+    def level(self, level, step2=None, fuse=None):
         got = reduce(DataFrame.unionByName,
                      [p for p in (step2, fuse) if p is not None]).toPandas()
         own = (got["sub_idx"] >= 0).to_numpy()
@@ -506,12 +509,13 @@ class CheckpointedPyramid:
         """Target-directed descent from the ancestor's retained leaves:
         non-path tiles stop and retain (lib.rs:324-338), the path tile
         splits until the target — the whole descent is ONE feature-
-        parallel pass (plans/pyramid.py drill_pass), the one the
-        in-memory index's get_tile runs too.  The rendered tile features
-        and retained leaves sink to the staging parquet IN-KERNEL
-        (drill_descend_stage ``tile_sink``: idempotent per-task files) —
-        they never cross the Python->JVM boundary and need no write job;
-        collecting the per-tile partials is the drill's one job.
+        parallel pass (plans/pyramid.py drill_pass); the in-memory
+        index's get_tile runs it too, into a scratch commit.  The
+        rendered tile features and retained leaves sink to the staging
+        parquet IN-KERNEL (drill_descend_stage ``tile_sink``: idempotent
+        per-task files) — they never cross the Python->JVM boundary and
+        need no write job; collecting the per-tile partials is the
+        drill's one job.
         ``root`` is the only stored tile the pass touches, and it emits
         none of root's rows.  Stats rows are finished driver-side from
         the partials (_write_stats); a new tile with retained rows

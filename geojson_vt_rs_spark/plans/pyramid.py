@@ -10,11 +10,12 @@ same feature multiset (clip bands are a function of (z,x,y) only).
 ``run_levels`` is the one level loop.  Each turn decides every frontier
 tile with the pure ``decide`` (lib.rs:305-313) from its point count,
 renders and child-clips the non-fused tiles in one per-row pass
-(render_split_stage), runs small split subtrees whole inside one task
-(``fuse``), and hands the level's outputs to a sink: ``_IndexSink`` (the
-in-memory tile registry of SparkGeoJSONVT) or the staged parquet store
-(plans/checkpoint.py).  The loop itself moves only index-sized rows
-through the driver (decisions, per-tile partials).
+(render_split_stage), and runs small split subtrees whole inside one task
+(``fuse``).  Every pass writes its tiles, leaves and children from the
+tasks into the sink's staged parquet store (plans/checkpoint.py) and
+returns only per-tile partials, so the loop moves only index-sized rows
+through the driver (decisions, partials).  The in-memory SparkGeoJSONVT
+is that store, built into a scratch directory and loaded on the driver.
 
 "Retain source_features on leaves / clear on split parents"
 (lib.rs:311,324,335,430-433) becomes the leaf-features store; a get_tile
@@ -33,7 +34,8 @@ index_max_points splitting them further down; AQE coalesces the tail.
 from __future__ import annotations
 
 import json
-from concurrent.futures import ThreadPoolExecutor
+import os
+import tempfile
 from typing import Dict, Optional
 
 import pandas as pd
@@ -43,20 +45,17 @@ from pyspark.sql import functions as F
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
-    PARTIAL_COLS,
-    RS_CAGG,
-    RS_CHILD,
+    PARTIAL_SCHEMA,
     RS_COLS,
     RS_LEAF,
     RS_RENDER,
     TaskSink,
     _convert_wrap_kernel,
-    _rs_cagg_frame,
+    _partials_frame,
+    _render_split_kernel,
     _TaskWriter,
-    convert_wrap_render_split_stage,
     convert_wrap_stage,
     drill_descend_stage,
-    pass_schema,
     render_split_stage,
     root_rows,
 )
@@ -69,19 +68,13 @@ from geojson_vt_rs_spark.operators.schema import (
 
 TILED_COLS = [f.name for f in TILED_FEATURE_SCHEMA.fields]
 
-# render-pass columns the in-memory index collects, and the RS_CAGG
-# partial columns every sink hands back to the loop
-_REND_COLS = [
-    "row_kind", "z", "x", "y", "world_copy", "feature_seq", "slice_path",
-    "sub_idx", "type", "kind", "geometry_json", "tags_json", "id_str",
-    "id_num", "id_float", "n_emitted", "num_points",
-]
+# the partial columns the sink hands back to the loop
 CAGG_COLS = ["z", "x", "y", "num_points", "n_emitted", "sub_idx"]
 
 
 class SparkTile:
     """One memoized tile.  ``features`` (canonical tile-feature dicts)
-    is LAZY when built from collected render rows: the driver keeps the
+    is LAZY when loaded from stored feature rows: the driver keeps the
     raw rows and defers the per-row JSON parse to first access — a
     1M-point build touches millions of rows but a typical consumer reads
     a handful of tiles, so eager parsing was the dominant driver-side
@@ -152,18 +145,6 @@ def decide(options: Options, z: int, x: int, y: int, tnp: int) -> str:
     return "fuse" if tnp <= fuse_bound(options) else "split"
 
 
-def _frontier_parts(n_rows: int, spark: SparkSession) -> int:
-    """Partition count for a level frontier of known size: enough to use
-    every core, capped so late (small) levels stop paying per-task
-    scheduling + Python-worker round-trip overhead for 100-row tasks.
-    Applied with coalesce() — a NARROW merge of cached partitions, no
-    shuffle — so the partition count tracks the data as the pyramid
-    thins out (measured: 32-core 1M build 90s -> 65s when tiny levels
-    stop running 128-task jobs)."""
-    cores = spark.sparkContext.defaultParallelism
-    return max(1, min(2 * cores, int(n_rows // 4000) + 1))
-
-
 def _children(tiles) -> list:
     return [
         (z + 1, 2 * x + dx, 2 * y + dy)
@@ -173,20 +154,19 @@ def _children(tiles) -> list:
     ]
 
 
-def _subtree_kernel(options: Options, tile_sink: Optional[TaskSink] = None):
+def _subtree_kernel(options: Options, tile_sink: TaskSink):
     """mapInPandas kernel over TILED rows clustered by tile (a fused
     level's rows, repartitioned and sorted by (z, x, y), or the raw-gated
     wave's root rows): the core tiler's whole split recursion under each
-    tile, as the drill pass's rows (drill_descend_stage) per subtree
-    tile: RS_RENDER features whose order keys (0, i, '', 0) rank in the
-    emitter's order, the RS_LEAF retained source rows, and one RS_CAGG
-    row (num_points, n_emitted = num_simplified) — empty tiles included.
-    With ``tile_sink`` the tasks write the RS_RENDER and RS_LEAF rows
-    themselves and return one partial per tile (PARTIAL_SCHEMA,
-    sub_idx 1)."""
+    tile.  The tasks write every subtree tile's features (RS_RENDER rows
+    whose order keys (0, i, '', 0) rank in the emitter's order) and
+    retained source rows (RS_LEAF) to ``tile_sink``, and return one
+    partial per tile, empty tiles included (PARTIAL_SCHEMA, sub_idx 1:
+    num_points, n_emitted = num_simplified, nf, n_leaf): the drill
+    pass's contract (drill_descend_stage)."""
     order = ["world_copy", "feature_seq", "slice_path"]
 
-    def subtree(key, pieces) -> pd.DataFrame:
+    def subtree(key, pieces, w: _TaskWriter, tiles: dict) -> None:
         from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
 
         feats = [f for p in pieces for f in pdf_to_features(p[TILED_COLS[3:]])]
@@ -215,9 +195,8 @@ def _subtree_kernel(options: Options, tile_sink: Optional[TaskSink] = None):
                 ))
             for f in it.source_features:
                 rows.append(tile | dict(row_kind=RS_LEAF) | feature_to_row(f))
-            rows.append(tile | dict(row_kind=RS_CAGG, num_points=em.num_points,
-                                    n_emitted=em.num_simplified))
-        return pd.DataFrame(rows, columns=RS_COLS)
+            tiles[(em.z, em.x, em.y)] = (em.num_points, em.num_simplified)
+        w.put(pd.DataFrame(rows, columns=RS_COLS))
 
     def groups(batches):
         # (key, row slices) per tile; a tile's rows may span batches
@@ -233,30 +212,22 @@ def _subtree_kernel(options: Options, tile_sink: Optional[TaskSink] = None):
             yield key, pieces
 
     def run(batches):
-        if tile_sink is None:
-            for key, pieces in groups(batches):
-                yield subtree(key, pieces)
-            return
         w = _TaskWriter(tile_sink, "fuse")
         tiles: dict = {}
         for key, pieces in groups(batches):
-            rows = subtree(key, pieces)
-            w.put(rows)
-            for r in rows[rows["row_kind"] == RS_CAGG].itertuples(index=False):
-                tiles[(int(r.z), int(r.x), int(r.y))] = (r.num_points,
-                                                         r.n_emitted)
+            subtree(key, pieces, w, tiles)
         counts = w.close()
         if tiles:
-            yield _rs_cagg_frame({
+            yield _partials_frame({
                 k: (*v, *counts.get(k, (0, 0, 0))[1:])
                 for k, v in tiles.items()
-            }, 1, PARTIAL_COLS)
+            }, 1)
 
     return run
 
 
 def fused_stage(fr: DataFrame, options: Options,
-                tile_sink: Optional[TaskSink] = None) -> DataFrame:
+                tile_sink: TaskSink) -> DataFrame:
     """The 'fuse' tiles of a level (``fr`` rows with the decided action)
     as whole subtrees, one _subtree_kernel call per task over its rows
     clustered by tile."""
@@ -264,7 +235,7 @@ def fused_stage(fr: DataFrame, options: Options,
         fr.filter(F.col("action") == "fuse").drop("action")
         .repartition("z", "x", "y").sortWithinPartitions("z", "x", "y")
         .mapInPandas(_subtree_kernel(options, tile_sink),
-                     schema=pass_schema(tile_sink))
+                     schema=PARTIAL_SCHEMA)
     )
 
 
@@ -282,7 +253,7 @@ def run_levels(
 
     1. per-tile (num_points, rows) — the ONLY per-tile state the stop
        predicate needs (lib.rs:305-313) — finished driver-side from the
-       previous turn's RS_CAGG map-side partials (a resumed build: from
+       previous turn's map-side child partials (a resumed build: from
        its last manifest), so a level needs no decision agg job;
     2. ``decide`` per tile (index-sized, on the driver);
     3. rendering and child clipping run per ROW (render_split_stage) —
@@ -294,35 +265,33 @@ def run_levels(
     convert+wrap output before any rendering: raw points (``raw_npts``,
     one JVM sum when absent) <= fuse_bound route the whole build into
     one fused task (converted tnp <= 3*raw: wrap at most triples
-    dateline-straddling features); larger inputs render+split the root
-    OPTIMISTICALLY and finish its decision from parent partials emitted
-    in the same wave; in the (rare) case the root was not really a split
-    the level runs again as a leaf level over the converted rows.  A
-    resumed build passes the ``partials`` ((z, x, y, num_points, rows)
-    of its next level's tiles, empty when only empty children are left),
-    the previous level's ``pending`` children and ``level``.
+    dateline-straddling features); larger inputs render the root in one
+    wave and finish its decision from parent partials emitted in the
+    same wave.  A root that is a leaf by structure (index_max_zoom 0)
+    renders as a leaf; any other root renders+splits OPTIMISTICALLY, and
+    in the (rare) case it was not really a split the level runs again as
+    a leaf level over the converted rows.  A resumed build passes the
+    ``partials`` ((z, x, y, num_points, rows) of its next level's tiles,
+    empty when only empty children are left), the previous level's
+    ``pending`` children and ``level``.
 
     ``sink`` receives each level in this order:
-      begin(level) -> tile_sink
-          start the level; a TaskSink makes every pass of the level
-          write its outputs from the tasks and return only its partials
-          (PARTIAL_SCHEMA), None makes the passes return their rows
-          (RS_SCHEMA)
-      level(level, step2, fuse, leaves, children) -> (cagg, n_fused)
-          materialize the render pass ``step2`` (or None), the fused
-          subtrees ``fuse`` (or None: the drill pass's rows, one RS_CAGG
-          row per fused tile) and, without a tile_sink, the leaf tiles'
-          source rows ``leaves`` (TILED_COLS, or None); return the
-          render pass's RS_CAGG partials (CAGG_COLS; child partials are
-          needed only when ``children``; never the fused tiles' rows)
-          and the fused tile count
+      begin(level) -> TaskSink
+          start the level: every pass of the level writes its tiles,
+          leaves and children to the returned TaskSink from the tasks and
+          returns only its partials (PARTIAL_SCHEMA)
+      level(level, step2, fuse) -> (cagg, n_fused)
+          run the render pass ``step2`` and the fused subtrees ``fuse``
+          (either may be None) as the level's one Spark job; return the
+          render pass's child and parent partials (CAGG_COLS; never the
+          fused tiles') and the fused tile count
       commit(level, tiles, pending, partials)
           ``tiles``: (z, x, y, action, num_points, rows) of every
           non-fused tile, empty children first (action 'empty');
           ``partials``: the next level's (z, x, y, num_points, rows)
       frontier(level, n_rows) -> DataFrame
           the input rows (TILED_COLS) of ``level``, the next one: the
-          sink hands them back from where its last pass put them."""
+          sink reads them from where the last pass's tasks wrote them."""
     o = options
     first_wave = frontier = None
     if features_df is not None:
@@ -335,6 +304,7 @@ def run_levels(
             o.tile.buffer / o.tile.extent,
             o.tile.line_metrics,
         )
+        cw = _convert_wrap_kernel(*cw_args)
         if int(raw_npts or 0) <= fuse_bound(o):
             # raw-gated fuse: convert+wrap chained straight into the
             # subtree kernel in ONE mapInPandas over ONE coalesced input
@@ -343,11 +313,10 @@ def run_levels(
             # and frontier.coalesce(1) re-initialized the Python runner
             # once per upstream partition: 4 s of overhead for a 0.15 s
             # kernel on us-states)
-            ts = sink.begin(level)
-            cw, sub = _convert_wrap_kernel(*cw_args), _subtree_kernel(o, ts)
+            sub = _subtree_kernel(o, sink.begin(level))
             wave = features_df.coalesce(1).mapInPandas(
                 lambda batches: sub(root_rows(cw(batches))),
-                schema=pass_schema(ts),
+                schema=PARTIAL_SCHEMA,
             )
             n_fused = sink.level(level, fuse=wave)[1]
             # an empty or fully-dropped input still creates the root
@@ -358,17 +327,20 @@ def run_levels(
         frontier = convert_wrap_stage(features_df, *cw_args).select(
             F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
         )
-        # the fused convert+wrap+render+split plan is the optimistic
-        # first turn (one Arrow pass instead of two); `frontier` stays
-        # the mispredicted-leaf recovery source
-        first_wave = True
+        # the first turn is ONE Python pass over the raw input: convert+
+        # wrap chained into the render/split kernel with the root's
+        # (z, x, y, action) columns synthesized in-kernel (no decision
+        # join; two chained mapInPandas would each pay the JVM<->worker
+        # serde of the whole table); `frontier` stays the mispredicted-
+        # leaf recovery source
+        first_wave = "leaf" if o.index_max_zoom == 0 else "split"
     elif partials:
         frontier = sink.frontier(level, sum(p[4] for p in partials))
     pending = list(pending)
     while True:
         ts = sink.begin(level)
         if first_wave:
-            decisions = [(0, 0, 0, "split", None, None)]
+            decisions = [(0, 0, 0, first_wave, None, None)]
         else:
             decisions = [
                 (z, x, y, decide(o, z, x, y, tnp), tnp, rows)
@@ -386,41 +358,34 @@ def run_levels(
             return
 
         acts = {d[3] for d in decisions}
-        fr = fuse = leaves = None
+        fr = fuse = None
         if first_wave:
-            # the fused convert+wrap+render+split plan over the RAW input
-            # (one Arrow pass; no decision join on this turn)
-            step2 = convert_wrap_render_split_stage(
-                features_df, *cw_args, options=o, tile_sink=ts)
+            rs, act = _render_split_kernel(o, ts, True), first_wave
+            step2 = features_df.mapInPandas(
+                lambda batches: rs(root_rows(cw(batches), act)),
+                schema=PARTIAL_SCHEMA,
+            )
         else:
             ddf = decisions_df(spark, [d[:4] for d in decisions])
             fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            readers = (bool(acts - {"fuse"}) + ("fuse" in acts)
-                       + ("leaf" in acts and ts is None))
-            if readers >= 2:
-                # cache only when >= 2 of the level's passes read fr
+            if "fuse" in acts and acts - {"fuse"}:
+                # cache only when both of the level's passes read fr
                 # (single-reader levels would waste a copy: a 4M-point
                 # build OOM'd an 8g heap holding prev + frontier + fr +
                 # step2 at once)
                 fr = fr.persist()
             step2 = (
                 render_split_stage(fr.filter(F.col("action") != "fuse"), o,
-                                   tile_sink=ts)
+                                   ts)
                 if acts - {"fuse"}
                 else None
             )
             if "fuse" in acts:
                 fuse = fused_stage(fr, o, ts)
-            if "leaf" in acts and ts is None:
-                leaves = fr.filter(F.col("action") == "leaf").select(
-                    *TILED_COLS
-                )
-        split = [d[:3] for d in decisions if d[3] == "split"]
-        cagg = sink.level(level, step2, fuse, leaves, bool(split))[0]
+        cagg = sink.level(level, step2, fuse)[0]
         if first_wave:
-            first_wave = False
             # finish the deferred root decision from the wave's own
-            # parent partials (sub_idx == -1 RS_CAGG rows)
+            # parent partials (sub_idx == -1 rows)
             pm = (cagg["sub_idx"] == -1).to_numpy()
             root, cagg = cagg.loc[pm], cagg.loc[~pm]
             if root.empty:
@@ -430,14 +395,16 @@ def run_levels(
                 return
             tnp = int(root["num_points"].sum())
             rows = int(root["n_emitted"].sum())
-            if decide(o, 0, 0, 0, tnp) == "leaf":
+            act, first_wave = first_wave, None
+            if act == "split" and decide(o, 0, 0, 0, tnp) == "leaf":
                 # mispredicted: the root is really a leaf — run the level
                 # again, as a leaf level over the converted rows
                 partials = [(0, 0, 0, tnp, rows)]
                 continue
             # a 'fuse' root already rendered+split: its children run as a
             # real level (and fuse there)
-            decisions = [(0, 0, 0, "split", tnp, rows)]
+            decisions = [(0, 0, 0, act, tnp, rows)]
+        split = [d[:3] for d in decisions if d[3] == "split"]
         nxt = [
             (int(r.z), int(r.x), int(r.y), int(r.tnp), int(r.rows))
             for r in cagg.groupby(["z", "x", "y"], as_index=False).agg(
@@ -461,89 +428,6 @@ def run_levels(
             frontier = sink.frontier(level, sum(p[4] for p in nxt))
 
 
-class _IndexSink:
-    """run_levels sink of SparkGeoJSONVT: collects each level's render
-    rows, fused subtrees and leaf features to the driver (index-sized
-    outputs) and registers the tiles, their features parsed lazily; the
-    next level's frontier is the last render pass's child rows."""
-
-    def __init__(self, index: "SparkGeoJSONVT"):
-        self.index = index
-        self.prev = None  # the last render pass, cached
-
-    def begin(self, level):
-        self.rend = pd.DataFrame(columns=_REND_COLS)
-        self.fused = None
-        return None
-
-    def level(self, level, step2=None, fuse=None, leaves=None,
-              children=False):
-        if step2 is not None:
-            # the next frontier reads the pass again; localCheckpoint
-            # also truncates the per-level lineage: without it each
-            # level's logical plan embeds every previous level's and
-            # analysis cost compounds (measured 4x wall blowup by z5 on
-            # a no-fuse us-states build)
-            step2 = step2.localCheckpoint(eager=False)
-
-        # the collections are INDEPENDENT Spark actions -> concurrent
-        # jobs, so the level pays one job latency, not three; the RS_CAGG
-        # partials ride along in the render collection (no extra job)
-        def rend():
-            return step2.filter(
-                F.col("row_kind").isin(RS_RENDER, RS_CAGG)
-            ).select(*_REND_COLS).toPandas()
-
-        with ThreadPoolExecutor(3) as ex:
-            rf = ex.submit(rend) if step2 is not None else None
-            ff = ex.submit(fuse.toPandas) if fuse is not None else None
-            lf = ex.submit(self.leaves, leaves) if leaves is not None else None
-            merged = rf.result() if rf else self.rend
-            self.fused = ff.result() if ff else None
-            if lf:
-                lf.result()
-        # this level's outputs are materialized; the previous pass is no
-        # longer referenced
-        if self.prev is not None:
-            self.prev.unpersist()
-        self.prev = step2
-        is_cagg = (merged["row_kind"] == RS_CAGG).to_numpy()
-        self.rend = merged.loc[~is_cagg]
-        n_fused = 0
-        if self.fused is not None:
-            n_fused = int((self.fused["row_kind"] == RS_CAGG).sum())
-        return merged.loc[is_cagg, CAGG_COLS], n_fused
-
-    def leaves(self, df):
-        # leaf tiles retain their source features (lib.rs:311,324,335)
-        self.index._retain(df.toPandas())
-
-    def commit(self, level, tiles, pending, partials):
-        rend, fused = self.rend, self.fused
-        ns = rend.groupby(["z", "x", "y"], sort=False)["n_emitted"].sum()
-        self.index._add_pass(rend, [
-            (z, x, y, tnp, int(ns.get((z, x, y), 0)))
-            for z, x, y, _, tnp, _ in tiles
-        ])
-        if fused is not None:
-            self.index._add_pass(fused, [
-                (int(r.z), int(r.x), int(r.y), int(r.num_points),
-                 int(r.n_emitted))
-                for r in fused[fused["row_kind"] == RS_CAGG].itertuples(
-                    index=False)
-            ])
-        if not partials and self.prev is not None:
-            self.prev.unpersist()
-            self.prev = None
-
-    def frontier(self, level, n_rows):
-        # coalesced to a size-aware partition count (the row count is
-        # known from the partials)
-        return self.prev.filter(F.col("row_kind") == RS_CHILD).select(
-            *TILED_COLS
-        ).coalesce(_frontier_parts(n_rows, self.index.spark))
-
-
 def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
     """The nearest ancestor of (z, x, y) for which ``memoized(z, x, y)``
     holds, or None (lib.rs:229-245): the drill root of both get_tiles.
@@ -557,8 +441,7 @@ def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
 
 
 def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
-               root: tuple, target: tuple,
-               tile_sink: Optional[TaskSink] = None) -> DataFrame:
+               root: tuple, target: tuple, tile_sink: TaskSink) -> DataFrame:
     """The cold get_tile pass of both SparkGeoJSONVT and
     CheckpointedPyramid: drill_descend_stage from ``root``'s retained
     leaf rows down to ``target``.  The rows may sit in one partition or
@@ -574,7 +457,7 @@ def drill_tiles(partials: pd.DataFrame, root: tuple, target: tuple) -> list:
     """The tiles a drill pass creates, as (z, x, y, num_points,
     num_simplified): every tile the pass saw but ``root`` (the one
     memoized tile it touches, see find_parent), finished from its
-    RS_CAGG partials, plus the empty children of the split path tiles
+    partials, plus the empty children of the split path tiles
     (split_tile creates all four, lib.rs:344-428)."""
     agg: dict = {}
     for r in partials.itertuples(index=False):
@@ -597,6 +480,10 @@ class SparkGeoJSONVT:
 
     ``features_df`` must be a raw lon/lat features DataFrame
     (FEATURE_SCHEMA, see operators.pipeline.read_geojson_features).
+    The distributed index is a CheckpointedPyramid store built into a
+    scratch directory and loaded on the driver (``_load``); its drills
+    commit to a scratch directory the same way.  Each scratch directory
+    is removed before the call returns.
     """
 
     # inputs below this many raw points run the core tiler on the driver
@@ -628,8 +515,12 @@ class SparkGeoJSONVT:
         if prefer_local:
             self._init_local(features_df)
             return
-        run_levels(spark, self.options, _IndexSink(self),
-                   features_df=features_df, raw_npts=npts)
+        from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
+
+        self._store = CheckpointedPyramid(spark, self.options)
+        with tempfile.TemporaryDirectory() as d:
+            self._store.run(features_df, d, raw_npts=npts)
+            self._load(d)
 
     # ------------------------------------------------------------------
     def _init_local(self, features_df: DataFrame) -> None:
@@ -653,37 +544,33 @@ class SparkGeoJSONVT:
             )
 
     # ------------------------------------------------------------------
-    def _register(self, z: int, x: int, y: int, features, np_: int, ns: int,
-                  lazy=None):
-        tid = to_id(z, x, y)
-        if tid in self.tiles:
-            return
-        self.tiles[tid] = SparkTile(z, x, y, features, np_, ns, lazy=lazy)
-        self.stats[z] = self.stats.get(z, 0) + 1
-        self.total += 1
-
-    def _add_pass(self, rows: pd.DataFrame, tiles) -> None:
-        """Register ``tiles`` ((z, x, y, num_points, num_simplified)) of
-        one collected pass (RS_SCHEMA rows: a level's render rows, fused
-        subtrees or a drill): features from each tile's RS_RENDER rows,
-        parsed on first access; the RS_LEAF rows are retained."""
-        kind = rows["row_kind"].to_numpy()
-        groups = dict(list(
-            rows[kind == RS_RENDER].groupby(["z", "x", "y"], sort=False)))
-        for z, x, y, tnp, ns in tiles:
-            grp = groups.get((z, x, y))
-            self._register(
-                z, x, y, [] if grp is None else None, tnp, ns,
-                lazy=None if grp is None else (grp, _render_group_to_features),
-            )
-        self._retain(rows[kind == RS_LEAF])
-
-    def _retain(self, rows: pd.DataFrame) -> None:
-        """Source rows (TILED_COLS) -> the leaf-features store."""
-        for (z, x, y), grp in rows.groupby(["z", "x", "y"], sort=False):
-            self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                TILED_COLS
-            ].reset_index(drop=True)
+    def _load(self, d: str) -> None:
+        """Register what a store build or drill commit wrote under ``d``
+        (plans/checkpoint.py layout), read with pyarrow (index-sized):
+        one tile per stats row (feature_idx -1), with its feature rows as
+        the tile's features, parsed on first access; the ``leaves/`` rows
+        are retained."""
+        tiles = _read_table(os.path.join(d, "tiles"))
+        if tiles is not None:
+            feats = tiles[tiles["type"].notna().to_numpy()]
+            groups = dict(list(feats.groupby(["z", "x", "y"], sort=False)))
+            stats = tiles[(tiles["feature_idx"] == -1).to_numpy()]
+            for r in stats.itertuples(index=False):
+                z, x, y = int(r.z), int(r.x), int(r.y)
+                grp = groups.get((z, x, y))
+                self.tiles[to_id(z, x, y)] = SparkTile(
+                    z, x, y, [] if grp is None else None,
+                    int(r.tile_num_points), int(r.tile_num_simplified),
+                    lazy=None if grp is None else (grp, _tile_features),
+                )
+                self.stats[z] = self.stats.get(z, 0) + 1
+                self.total += 1
+        leaves = _read_table(os.path.join(d, "leaves"))
+        if leaves is not None:
+            for (z, x, y), grp in leaves.groupby(["z", "x", "y"], sort=False):
+                self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
+                    TILED_COLS
+                ].reset_index(drop=True)
 
     # ------------------------------------------------------------------
     def get_tile(self, z: int, x_: int, y: int) -> SparkTile:
@@ -710,31 +597,42 @@ class SparkGeoJSONVT:
         return self.tiles.get(tid, EMPTY_TILE)
 
     def _drill(self, leaf: pd.DataFrame, root: tuple, target: tuple) -> None:
-        """Cold get_tile: the drill pass from the nearest memoized
-        ancestor's retained features, collected once (index-sized: one
-        root-to-target path) and registered like a level — new tiles
-        from the RS_CAGG partials and render rows (the pass emits none
-        of the root's), retained features of the new leaf tiles."""
+        """Cold get_tile: the store's drill (CheckpointedPyramid._drill)
+        from the nearest memoized ancestor's retained features, committed
+        to a scratch directory and loaded like the build.  The pass
+        writes none of the root's rows; the root was split
+        (lib.rs:430-433), so it retains nothing any more."""
+        from geojson_vt_rs_spark.plans.checkpoint import _Commit
+
         frontier = create_feature_df(
             self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA
         )
-        rows = drill_pass(
-            self.spark, frontier, self.options, root, target
-        ).toPandas()
-        tiles = drill_tiles(rows[rows["row_kind"] == RS_CAGG], root, target)
-        # the ancestor was split (lib.rs:430-433); no other retained tile
-        # lies below it, so every RS_LEAF row belongs to a new tile
-        self.leaf_features.pop(to_id(*root), None)
-        self._add_pass(rows, tiles)
+        with tempfile.TemporaryDirectory() as d:
+            commit = _Commit(d, "drill", "drill")
+            self._store._drill(frontier, root, target, commit)
+            commit.publish()
+            self.leaf_features.pop(to_id(*root), None)
+            self._load(d)
 
     def get_internal_tiles(self):
         return self.tiles
 
 
-def _render_group_to_features(grp: pd.DataFrame) -> list:
-    """One tile's collected RS_RENDER rows -> canonical features in the
-    order-key order (the deferred half of _register's lazy payload)."""
-    sub = grp[grp["sub_idx"] >= 0].sort_values(
+def _read_table(path: str) -> Optional[pd.DataFrame]:
+    """A hive-partitioned store table (``level=*/z=*``) as one pandas
+    frame, or None when it was never written."""
+    import pyarrow.dataset as ds
+
+    if not os.path.isdir(path):
+        return None
+    return ds.dataset(path, format="parquet",
+                      partitioning="hive").to_table().to_pandas()
+
+
+def _tile_features(grp: pd.DataFrame) -> list:
+    """One tile's stored feature rows -> canonical features in
+    read_tile's order (the deferred half of a loaded SparkTile)."""
+    rows = grp.sort_values(
         ["world_copy", "feature_seq", "slice_path", "sub_idx"],
         kind="stable",
     )
@@ -744,9 +642,10 @@ def _render_group_to_features(grp: pd.DataFrame) -> list:
             kind=int(r.kind),
             geometry=json.loads(r.geometry_json),
             tags=None if r.tags_json is None else json.loads(r.tags_json),
-            id_str=r.id_str if isinstance(r.id_str, str) else None,
-            id_num=int(r.id_num) if pd.notna(r.id_num) else None,
-            id_float=float(r.id_float) if pd.notna(r.id_float) else None,
+            id_str=r.tile_id_str if isinstance(r.tile_id_str, str) else None,
+            id_num=int(r.tile_id_num) if pd.notna(r.tile_id_num) else None,
+            id_float=(float(r.tile_id_float) if pd.notna(r.tile_id_float)
+                      else None),
         )
-        for r in sub.itertuples(index=False)
+        for r in rows.itertuples(index=False)
     ]

@@ -763,13 +763,13 @@ def test_store_routes_identical_tiles(spark, tmp_path, corpus):
         assert ta.values.tolist() == tb.values.tolist(), (z, x, y)
 
 
-def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
-    """drill_descend_stage's in-kernel sink (tile_sink=TaskSink) must
-    write EXACTLY the rows the yield path returns: its render rows,
-    shaped by the store's feature-row projection, to the staged tiles
-    and its RS_LEAF rows to the staged leaves; its per-tile partials
-    must sum to the yield path's RS_CAGG partials and row counts; none
-    of the memoized root's rows (the one stored tile a drill touches);
+def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
+    """drill_descend_stage's tasks write the core tiler's drill: every
+    new tile's features, in the emitter's order, to the staged tiles;
+    the source features each new leaf tile retains to the staged
+    leaves; and per-tile partials equal to the core tiles' num_points /
+    num_simplified and to the written feature and leaf row counts.  None
+    of the memoized root's rows (the one stored tile a drill touches),
     and idempotent under re-execution (deterministic filenames + atomic
     rename — a retried/duplicated task overwrites with identical
     content)."""
@@ -777,16 +777,21 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
     import os
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
+    from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
     from geojson_vt_rs_spark.operators.pipeline import (
-        RS_CAGG,
-        RS_LEAF,
-        RS_RENDER,
         TaskSink,
         drill_descend_stage,
     )
+    from geojson_vt_rs_spark.operators.schema import pdf_to_features
     from geojson_vt_rs_spark.plans.pyramid import TILED_COLS
+    from test_route_parity import (
+        canon,
+        core_leaves,
+        core_tiles,
+        leaf_rows,
+    )
+    from test_route_parity import canon_rows as canon_features
 
     out = str(tmp_path / "sinkstore")
     feats = load_corpus(spark, "generated")
@@ -799,68 +804,53 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
     )
     src = leaf.select(*TILED_COLS).repartition(4)
     root, target = (0, 0, 0), (7, 37, 48)  # the first generated metro
+    pdf = feats.toPandas().sort_values("feature_seq", ignore_index=True)
+    core = CoreTiler(list(pdf_to_features(pdf)), opts)
+    core.get_tile(*target)
+    want = core_tiles(core)
 
-    # yield path: render rows cross the boundary; shape them like the
-    # store's feature rows (the sink tags its rows 'drill')
-    plain = drill_descend_stage(src, opts, root, target).persist()
-    feature = (F.col("row_kind") == RS_RENDER) & (F.col("sub_idx") >= 0)
-    want_tiles = plain.filter(feature).select(
-        "z", "x", "y",
-        F.lit(None).cast("int").alias("feature_idx"),
-        "type", "kind", "geometry_json", "tags_json",
-        F.col("id_str").alias("tile_id_str"),
-        F.col("id_num").alias("tile_id_num"),
-        F.col("id_float").alias("tile_id_float"),
-        F.lit(None).cast("int").alias("tile_num_points"),
-        F.lit(None).cast("int").alias("tile_num_simplified"),
-        F.lit("drill").alias("action"),
-        "world_copy", "feature_seq", "slice_path", "sub_idx",
-    ).toPandas()
-    want_leaves = plain.filter(F.col("row_kind") == RS_LEAF).select(
-        *TILED_COLS).toPandas()
-    kind = F.col("row_kind")
-    want_partials = {
-        (r.z, r.x, r.y): (r.num_points, r.n_emitted, r.nf, r.n_leaf)
-        for r in plain.groupBy("z", "x", "y").agg(
-            F.sum(F.when(kind == RS_CAGG, F.col("num_points"))
-                  ).alias("num_points"),
-            F.sum(F.when(kind == RS_CAGG, F.col("n_emitted"))
-                  ).alias("n_emitted"),
-            F.sum(feature.cast("long")).alias("nf"),
-            F.sum((kind == RS_LEAF).cast("long")).alias("n_leaf"),
-        ).collect()
-    }
-    plain.unpersist()
-
-    # sink path: only the per-tile partials come back
     stg = TaskSink(str(tmp_path / "stg_tiles"), str(tmp_path / "stg_leaves"),
                    action="drill")
-    sunk = drill_descend_stage(src, opts, root, target, tile_sink=stg)
-    got_partials: dict = {}
-    for r in sunk.collect():
+    partials: dict = {}
+    for r in drill_descend_stage(src, opts, root, target,
+                                 tile_sink=stg).collect():
         assert r.sub_idx == 1
-        acc = got_partials.setdefault((r.z, r.x, r.y), [0, 0, 0, 0])
+        acc = partials.setdefault((r.z, r.x, r.y), [0, 0, 0, 0])
         for i, v in enumerate((r.num_points, r.n_emitted, r.nf, r.n_leaf)):
             acc[i] += v
-    assert {k: tuple(v) for k, v in got_partials.items()} == want_partials
 
+    order = ["world_copy", "feature_seq", "slice_path", "sub_idx"]
     got_tiles = spark.read.parquet(stg.tiles).toPandas()
     assert len(got_tiles) > 10
-    cols = sorted(want_tiles.columns)
-    assert sorted(got_tiles.columns) == cols
-    key = ["z", "x", "y", "world_copy", "feature_seq", "slice_path", "sub_idx"]
-    a = got_tiles[cols].sort_values(key, ignore_index=True)
-    b = want_tiles[cols].sort_values(key, ignore_index=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=True)
-    got_leaves = spark.read.parquet(stg.leaves).toPandas()
-    assert len(want_leaves) > 10
-    assert sorted(got_leaves.columns) == sorted(want_leaves.columns)
-    assert canon_rows(got_leaves) == canon_rows(want_leaves)
+    assert (got_tiles["action"] == "drill").all()
+    assert got_tiles[["feature_idx", "tile_num_points",
+                      "tile_num_simplified"]].isna().all().all()
+    written = {
+        (int(z), int(x), int(y)): canon_features(grp)
+        for (z, x, y), grp in got_tiles.sort_values(order).groupby(
+            ["z", "x", "y"], sort=False)
+    }
     # root-only exclusion: the pass renders tiles below the root only,
     # down to the target
-    tiles = set(map(tuple, got_tiles[["z", "x", "y"]].to_numpy().tolist()))
-    assert root not in tiles and target in tiles
-    assert all(0 < t[0] <= target[0] for t in tiles)
+    assert root not in written and target in written
+    assert all(0 < t[0] <= target[0] for t in written)
+    got_leaves = spark.read.parquet(stg.leaves).toPandas()
+    assert sorted(got_leaves.columns) == sorted(TILED_COLS)
+    assert len(got_leaves) > 10
+    assert leaf_rows(got_leaves) == core_leaves(core)
+    n_leaf = {k: len(v) for k, v in core_leaves(core).items()}
+    em = want[root]
+    assert partials.pop(root) == [em.num_points, 0, 0, 0]
+    assert set(written) <= set(partials)
+    for key, (tnp, ns, nf, nl) in partials.items():
+        em = want[key]
+        assert (tnp, ns) == (em.num_points, em.num_simplified), key
+        assert written.get(key, []) == canon(em.features), key
+        assert (nf, nl) == (len(em.features), n_leaf.get(key, 0)), key
+    # the core tiles the pass never saw are the empty children of the
+    # split path tiles (drill_tiles adds them from the partials)
+    for key in set(want) - set(partials) - {root}:
+        assert want[key].num_points == 0 and not want[key].features
 
     # idempotence: re-executing the pass overwrites the same files with
     # identical content (no duplicates, no leftover visible tmp files)
@@ -874,8 +864,10 @@ def test_drill_tile_sink_matches_yield_path(spark, tmp_path):
         src, opts, root, target, tile_sink=stg,
     ).write.format("noop").mode("overwrite").save()
     assert files() == files1
+    key = ["z", "x", "y"] + order
     again = spark.read.parquet(stg.tiles).toPandas()
-    c = again[cols].sort_values(key, ignore_index=True)
-    pd.testing.assert_frame_equal(c, b, check_dtype=True)
+    pd.testing.assert_frame_equal(
+        again.sort_values(key, ignore_index=True),
+        got_tiles.sort_values(key, ignore_index=True), check_dtype=True)
     assert canon_rows(spark.read.parquet(stg.leaves).toPandas()) == \
-        canon_rows(want_leaves)
+        canon_rows(got_leaves)

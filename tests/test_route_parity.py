@@ -9,6 +9,8 @@ Runs without the reference fixtures: the corpus is
 three dense metros and a few antimeridian straddlers)."""
 
 import json
+import os
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -231,3 +233,75 @@ def test_drills_identical_tiles(spark, tmp_path, corpus, route):
     assert fresh._leaf_keys[out] == cp._leaf_keys[out]
     leaves = spark.read.parquet(f"{out}/leaves").toPandas()
     assert cp._leaf_keys[out] == set(leaf_rows(leaves))
+    # the drilled index retains the core tiler's leaf features; the
+    # store too (it also keeps its drill roots' rows)
+    want_leaves = core_leaves(core)
+    assert leaf_rows(pd.concat(idx.leaf_features.values())) == want_leaves
+    stored = leaf_rows(leaves)
+    assert all(stored[k] == v for k, v in want_leaves.items())
+
+
+def test_structural_leaf_root_renders_once(spark, tmp_path, corpus,
+                                           monkeypatch):
+    """index_max_zoom 0 with raw points above fuse_bound: the root is a
+    leaf by structure, so the first wave renders it as a leaf.  That wave
+    is the build's only pass (no second render of the root, no child
+    clip, no frontier), and the store and the index hold the core
+    tiler's root and leaf features."""
+    from geojson_vt_rs_spark.plans import pyramid
+
+    df, pdf = corpus
+    opts = Options(max_zoom=14, index_max_zoom=0, index_max_points=200,
+                   fuse_max_points=1)
+    calls = []
+    for name in ("render_split_stage", "fused_stage"):
+        def counted(*a, _real=getattr(pyramid, name), _name=name, **k):
+            calls.append(_name)
+            return _real(*a, **k)
+        monkeypatch.setattr(pyramid, name, counted)
+    out = str(tmp_path / "imz0")
+    cp = CheckpointedPyramid(spark, opts)
+    s = cp.run(df, out)
+    idx = SparkGeoJSONVT(spark, df, opts, prefer_local=False)
+    assert calls == []
+    assert s["levels"] == 1 and s["manifests"][0]["n_children"] == 0
+    assert not os.path.exists(f"{out}/frontier/level_1")
+
+    core = core_index(pdf, opts)
+    em = core_tiles(core)[(0, 0, 0)]
+    assert core.total == 1
+    root = ((em.num_points, em.num_simplified), canon(em.features))
+    assert store_tiles(spark, out) == {(0, 0, 0): root}
+    assert cp._tile_keys(out) == cp._leaf_keys[out] == {(0, 0, 0)}
+    t = idx.get_tile(0, 0, 0)
+    assert ((t.num_points, t.num_simplified), canon(t.features)) == root
+    assert idx.total == 1 and idx.stats == core.stats
+    leaves = spark.read.parquet(f"{out}/leaves").toPandas()
+    assert leaf_rows(leaves) == core_leaves(core)
+    assert leaf_rows(pd.concat(idx.leaf_features.values())) == leaf_rows(
+        leaves)
+    assert s["manifests"][0]["n_leaf_feature_rows"] == len(leaves)
+
+
+def test_index_leaves_no_scratch_dir(spark, tmp_path, corpus, monkeypatch):
+    """The distributed index builds and drills through store directories
+    made with tempfile, and removes each before the call returns."""
+    df, _ = corpus
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    made = []
+    real = tempfile.mkdtemp
+
+    def mkdtemp(*a, **k):
+        made.append(real(*a, **k))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    idx = SparkGeoJSONVT(spark, df, Options(**BASE), prefer_local=False)
+    assert made and not os.listdir(scratch)
+    n_made, n_tiles = len(made), idx.total
+    assert idx.get_tile(*DRILLS[0]).features
+    assert idx.total > n_tiles
+    assert len(made) > n_made and not os.listdir(scratch)
+    assert all(os.path.dirname(d) == str(scratch) for d in made)
