@@ -6,14 +6,17 @@ no per-row Python objects cross the boundary, and Catalyst sees
 bbox/num_points as plain columns for pruning.
 
 Scale notes (100 TB shape):
-  * convert/wrap/split are narrow per-row transforms — no shuffle; they
-    scale linearly with input splits.
-  * the only shuffle per pyramid level is the groupBy(z,x,y) for tile
-    emission, keyed by the same (z,x,y) the next split reuses; AQE
-    handles skewed (dense-metro) tiles, and hot tiles can additionally be
-    salted upstream (plans/pyramid.py).
-  * stop-condition evaluation is a tiny per-tile aggregate joined back
-    broadcast — never a driver collect of feature rows.
+  * convert/wrap/render/split are narrow per-row mapInPandas transforms
+    — no shuffle; they scale linearly with input splits.
+  * a pyramid level or drill is ONE such pass: its tasks write the
+    tiles, retained leaves and child rows themselves (_TaskWriter) and
+    return only per-tile partials, from which the driver decides the
+    next level (plans/checkpoint.py) — never a driver collect of
+    feature rows.
+  * a level's only exchange is fused_stage's repartition(z, x, y),
+    which clusters the rows of its bounded 'fuse' tiles for whole-
+    subtree tasks; the one-shot geojson_to_tile's emit_stage holds the
+    only groupBy(z, x, y).
 """
 
 from __future__ import annotations
@@ -310,17 +313,27 @@ def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
     return offs, tx, ty, keep
 
 
-# the row stream a pass's kernel hands its _TaskWriter, discriminated by
-# row_kind: rendered tile features, child rows for the next level, and
-# retained-leaf source rows (drill_descend_stage and the fused subtree
-# kernel: rows of a tile left as-is, destined for the leaves store)
-RS_RENDER = 0
-RS_CHILD = 1
-RS_LEAF = 2
+# a rendered feature row as a kernel hands it to _TaskWriter.features:
+# the tiles table's columns (TILE_STORE_SCHEMA) but for the ones the
+# writer fills (feature_idx, tile_num_points, tile_num_simplified, action)
+FEATURE_ROW_COLS = ["z", "x", "y", "world_copy", "feature_seq", "slice_path",
+                    "sub_idx", "type", "kind", "geometry_json", "tags_json",
+                    "tile_id_str", "tile_id_num", "tile_id_float"]
 
-_RS_RENDER_ONLY = ["sub_idx", "type", "kind", "geometry_json", "tags_json",
-                   "n_emitted"]
-RS_COLS = ["row_kind", *TILED_COLS, *_RS_RENDER_ONLY]
+
+def _tile_feature(tf: dict) -> dict:
+    """An emitted tile feature's FEATURE_ROW_COLS payload columns."""
+    return dict(
+        type=tf["type"],
+        kind=tf["kind"],
+        geometry_json=json.dumps(tf["geometry"], separators=(",", ":")),
+        tags_json=(None if tf["tags"] is None
+                   else json.dumps(tf["tags"], separators=(",", ":"))),
+        tile_id_str=tf["id_str"],
+        tile_id_num=tf["id_num"],
+        tile_id_float=tf["id_float"],
+    )
+
 
 # every pass writes its rows from the tasks and returns only per-(task,
 # tile) partials, told apart by sub_idx: NULL a child partial
@@ -371,18 +384,19 @@ def write_parquet(d: str, name: str, table) -> None:
 
 
 class _TaskWriter:
-    """The task side of a pass: routes its RS rows to the
-    TaskSink's dirs (RS_RENDER features -> tiles, RS_LEAF -> leaves,
-    RS_CHILD -> frontier), held as Arrow batches per (dir, z) and written
-    by ``close`` as ONE file each, ``part-<partition>-<tag>.parquet``.
-    The names are deterministic, so a retried or duplicated task rewrites
-    the same files with the same content.  Tallies per tile (ns, nf,
-    n_leaf) for the pass's partials."""
+    """The task side of a pass, one method per TaskSink destination:
+    ``features`` (rendered feature rows -> tiles), ``leaves`` (retained
+    source rows -> leaves) and ``children`` (child rows -> frontier).
+    Rows are held as Arrow batches per (dir, z) and written by ``close``
+    as ONE file each, ``part-<partition>-<tag>.parquet``.  The names are
+    deterministic, so a retried or duplicated task rewrites the same
+    files with the same content.  Tallies per tile (ns, nf, n_leaf) for
+    the pass's partials."""
 
     def __init__(self, sink: TaskSink, tag: str):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        self.sink, self.tag = sink, tag
+        self.out, self.tag = sink, tag
         self.tile_schema = z_part_schema(TILE_STORE_SCHEMA)
         self.leaf_schema = z_part_schema(TILED_FEATURE_SCHEMA)
         self.frontier_schema = to_arrow_schema(TILED_FEATURE_SCHEMA)
@@ -405,44 +419,37 @@ class _TaskWriter:
             self._put(os.path.join(root, f"z={int(zv)}"), schema,
                       sub[schema.names])
 
-    def _tally(self, rows: pd.DataFrame, i: int, vals) -> None:
-        g = pd.Series(np.asarray(vals)).groupby(
-            [rows["z"].to_numpy(), rows["x"].to_numpy(), rows["y"].to_numpy()],
-            sort=False,
-        ).sum()
+    def _tally(self, rows: pd.DataFrame, i: int) -> None:
+        g = rows.groupby(["z", "x", "y"], sort=False).size()
         for k, v in g.items():
             key = (int(k[0]), int(k[1]), int(k[2]))
             self.counts.setdefault(key, [0, 0, 0])[i] += int(v)
 
+    def features(self, frames: list, ns: dict) -> None:
+        """Rendered feature rows (FEATURE_ROW_COLS frames) -> tiles;
+        ``ns``: (z, x, y) -> num_simplified of the rendered tiles."""
+        for k, v in ns.items():
+            self.counts.setdefault(k, [0, 0, 0])[0] += v
+        for f in frames:
+            n = len(f)
+            if n:
+                self._tally(f, 1)
+                null = np.full(n, None, dtype=object)
+                self._by_z(self.out.tiles, self.tile_schema, f.assign(
+                    feature_idx=null, tile_num_points=null,
+                    tile_num_simplified=null,
+                    action=np.full(n, self.out.action, dtype=object),
+                ))
+
     def leaves(self, rows: pd.DataFrame) -> None:
         """Retained source rows (TILED_COLS and more) -> leaves."""
-        self._tally(rows, 2, np.ones(len(rows), dtype=np.int64))
-        self._by_z(self.sink.leaves, self.leaf_schema, rows)
+        self._tally(rows, 2)
+        self._by_z(self.out.leaves, self.leaf_schema, rows)
 
-    def put(self, part: pd.DataFrame) -> None:
-        kind = part["row_kind"].to_numpy()
-        rend = part.loc[kind == RS_RENDER]
-        if len(rend):
-            sub = rend["sub_idx"].to_numpy()
-            self._tally(rend, 0, pd.to_numeric(rend["n_emitted"]).fillna(0))
-            feat = rend.loc[sub >= 0]
-            if len(feat):
-                self._tally(feat, 1, np.ones(len(feat), dtype=np.int64))
-                n = len(feat)
-                self._by_z(self.sink.tiles, self.tile_schema, feat.assign(
-                    feature_idx=np.full(n, None, dtype=object),
-                    tile_id_str=feat["id_str"].to_numpy(),
-                    tile_id_num=feat["id_num"].to_numpy(),
-                    tile_id_float=feat["id_float"].to_numpy(),
-                    tile_num_points=np.full(n, None, dtype=object),
-                    tile_num_simplified=np.full(n, None, dtype=object),
-                    action=np.full(n, self.sink.action, dtype=object),
-                ))
-        if (kind == RS_LEAF).any():
-            self.leaves(part.loc[kind == RS_LEAF])
-        if (kind == RS_CHILD).any():
-            self._put(self.sink.frontier, self.frontier_schema,
-                      part.loc[kind == RS_CHILD, TILED_COLS])
+    def children(self, frames: list) -> None:
+        """Child rows (TILED_COLS frames) -> frontier."""
+        for f in frames:
+            self._put(self.out.frontier, self.frontier_schema, f)
 
     def close(self) -> dict:
         """Write every buffered file; returns the per-tile tallies."""
@@ -458,17 +465,17 @@ class _TaskWriter:
         return self.counts
 
 
-def _rs_rows(rows: pd.DataFrame, kind: int) -> pd.DataFrame:
-    """Source rows (TILED_COLS and more) as RS_COLS rows of ``kind``."""
-    out = rows[TILED_COLS].copy(deep=False)
-    out.insert(0, "row_kind", kind)
-    for c in _RS_RENDER_ONLY:
-        # explicit object-dtype nulls: keeps Arrow types clean and
-        # silences pandas' all-NA concat warning (np.full fills at C
-        # speed — a [None]*n list pays pandas' per-element listlike
-        # construction)
-        out[c] = pd.Series(np.full(len(out), None, dtype=object),
-                           index=out.index)
+def _tile_sums(frames: list) -> dict:
+    """(z, x, y) -> (num_points sum, row count) over the frames' rows:
+    a pass's child partials, or the parent partials of its input."""
+    out: dict = {}
+    for f in frames:
+        g = f.groupby(["z", "x", "y"], sort=False)["num_points"].agg(
+            ["sum", "size"])
+        for k, pts, cnt in zip(g.index, g["sum"].tolist(), g["size"].tolist()):
+            key = (int(k[0]), int(k[1]), int(k[2]))
+            old = out.get(key, (0, 0))
+            out[key] = (old[0] + int(pts), old[1] + int(cnt))
     return out
 
 
@@ -476,9 +483,10 @@ def _rs_body(options: Options):
     """Factory for the render+split PER-BATCH body shared by
     render_split_stage (one call per level) and drill_descend_stage (one
     call per level per batch, looped in-kernel).  Returns
-    ``body(pdf) -> (parts, cagg)``: ``parts`` is a list of RS_COLS
-    DataFrames (RS_RENDER / RS_CHILD rows), ``cagg`` the batch's child
-    (num_points, row_count) partials keyed by (z, x, y)."""
+    ``body(pdf) -> (feats, children, ns)``: the rendered feature rows
+    (FEATURE_ROW_COLS frames), the child rows of the 'split' rows
+    (TILED_COLS frames) and each rendered tile's num_simplified
+    ((z, x, y) -> int)."""
     buffer = options.tile.buffer
     extent = options.tile.extent
     tol = options.tile.tolerance
@@ -551,31 +559,23 @@ def _rs_body(options: Options):
             passthrough = is_split & trivial
             slow_split = is_split & ~trivial
 
-            parts: List[pd.DataFrame] = []
-            cagg: dict = {}  # (z,x,y) -> this batch's child point partial
+            feats: List[pd.DataFrame] = []
+            children: List[pd.DataFrame] = []
+            ns: dict = {}  # (z, x, y) -> num_simplified
             # pass-through children: pure pandas slicing
             for dx, xacc in ((0, xa0), (1, xa1)):
                 for dy, yacc in ((0, ya0), (1, ya1)):
                     sel = passthrough & xacc & yacc
-                    if not sel.any():
-                        continue
-                    sub = _rs_rows(pdf.loc[sel], RS_CHILD)
-                    sub["z"] = (z[sel] + 1).astype(sub["z"].dtype)
-                    sub["x"] = (x[sel] * 2 + dx).astype(sub["x"].dtype)
-                    sub["y"] = (y[sel] * 2 + dy).astype(sub["y"].dtype)
-                    parts.append(sub)
-                    g = sub.groupby(["z", "x", "y"], sort=False)[
-                        "num_points"
-                    ].agg(["sum", "size"])
-                    for k, pts, cnt in zip(
-                        g.index, g["sum"].tolist(), g["size"].tolist()
-                    ):
-                        old = cagg.get(k, (0, 0))
-                        cagg[k] = (old[0] + int(pts), old[1] + int(cnt))
+                    if sel.any():
+                        children.append(pdf.loc[sel, TILED_COLS].assign(
+                            z=(z[sel] + 1).astype(z.dtype),
+                            x=(x[sel] * 2 + dx).astype(x.dtype),
+                            y=(y[sel] * 2 + dy).astype(y.dtype),
+                        ))
 
-            # vectorized render of the single-coordinate Point rows
+            # vectorized render of the single-coordinate Point rows: one
+            # feature and one simplified point each
             if is_pt.any():
-                n_pt = int(is_pt.sum())
                 zp = z[is_pt].astype(np.int64)
                 z2p = np.ldexp(1.0, zp)
                 ext_f = float(extent)
@@ -587,11 +587,7 @@ def _rs_body(options: Options):
                 typ = _round_half_away(
                     (latv * z2p - y[is_pt].astype(np.float64)) * ext_f
                 ).astype(np.int64)
-                d = {
-                    c: np.full(n_pt, None, dtype=object) for c in RS_COLS
-                }
-                d.update(
-                    row_kind=RS_RENDER,
+                pts = pd.DataFrame(dict(
                     z=z[is_pt], x=x[is_pt], y=y[is_pt],
                     world_copy=wc[is_pt],
                     feature_seq=seq[is_pt],
@@ -607,12 +603,15 @@ def _rs_body(options: Options):
                         canon_tags(p)
                         for p in pdf["props_json"].to_numpy()[is_pt]
                     ],
-                    id_str=pdf["id_str"].to_numpy()[is_pt],
-                    id_num=pdf["id_num"].to_numpy()[is_pt],
-                    id_float=pdf["id_float"].to_numpy()[is_pt],
-                    n_emitted=1,
-                )
-                parts.append(pd.DataFrame(d, columns=RS_COLS))
+                    tile_id_str=pdf["id_str"].to_numpy()[is_pt],
+                    tile_id_num=pdf["id_num"].to_numpy()[is_pt],
+                    tile_id_float=pdf["id_float"].to_numpy()[is_pt],
+                ), columns=FEATURE_ROW_COLS)
+                feats.append(pts)
+                for k, v in pts.groupby(["z", "x", "y"], sort=False).size(
+                ).items():
+                    key = (int(k[0]), int(k[1]), int(k[2]))
+                    ns[key] = ns.get(key, 0) + int(v)
 
             # one per-feature pass over the REST: render + clip straddlers;
             # the whole batch's transform ran in ONE numpy pass upstream
@@ -623,7 +622,8 @@ def _rs_body(options: Options):
             z_np, x_np, y_np = z[~is_pt], x[~is_pt], y[~is_pt]
             wc_np, seq_np, sp_np = wc[~is_pt], seq[~is_pt], sp[~is_pt]
             slow_np = slow_split[~is_pt]
-            out: List[dict] = []
+            rend: List[dict] = []
+            ch: List[dict] = []
             for i, f in enumerate(pdf_to_features(pdf_np)):
                 zi, xi, yi = int(z_np[i]), int(x_np[i]), int(y_np[i])
                 z2 = float(1 << zi)
@@ -633,42 +633,15 @@ def _rs_body(options: Options):
                 em = TileEmitter(zi, xi, yi, extent, tolerance, lm)
                 a, b = offs[i], offs[i + 1]
                 em.add_feature(f, pre=(btx[a:b], bty[a:b], bkeep[a:b]))
-                base = dict.fromkeys(RS_COLS) | dict(
-                    row_kind=RS_RENDER, z=zi, x=xi, y=yi,
-                    world_copy=int(wc_np[i]), feature_seq=int(seq_np[i]),
-                    slice_path=sp_np[i],
-                )
-                if not em.features:
-                    if em.num_simplified:
-                        out.append(
-                            base | dict(sub_idx=-1, n_emitted=em.num_simplified)
-                        )
-                else:
-                    for si, tf in enumerate(em.features):
-                        out.append(
-                            base
-                            | dict(
-                                sub_idx=si,
-                                type=tf["type"],
-                                kind=tf["kind"],
-                                geometry_json=json.dumps(
-                                    tf["geometry"], separators=(",", ":")
-                                ),
-                                tags_json=(
-                                    None
-                                    if tf["tags"] is None
-                                    else json.dumps(
-                                        tf["tags"], separators=(",", ":")
-                                    )
-                                ),
-                                id_str=tf["id_str"],
-                                id_num=tf["id_num"],
-                                id_float=tf["id_float"],
-                                n_emitted=(
-                                    em.num_simplified if si == 0 else 0
-                                ),
-                            )
-                        )
+                if em.num_simplified:
+                    key = (zi, xi, yi)
+                    ns[key] = ns.get(key, 0) + em.num_simplified
+                for si, tf in enumerate(em.features):
+                    rend.append(dict(
+                        z=zi, x=xi, y=yi, world_copy=int(wc_np[i]),
+                        feature_seq=int(seq_np[i]), slice_path=sp_np[i],
+                        sub_idx=si,
+                    ) | _tile_feature(tf))
                 if slow_np[i]:
                     left = clip_feature(
                         f, 0, (xi - p) / z2, (xi + 0.5 + p) / z2, lm
@@ -687,35 +660,28 @@ def _rs_body(options: Options):
                             )
                             for dy, quarter in ((0, top), (1, bot)):
                                 for qf in quarter:
-                                    row = dict.fromkeys(RS_COLS)
-                                    row.update(feature_to_row(qf))
-                                    row["row_kind"] = RS_CHILD
-                                    row["z"] = zi + 1
-                                    row["x"] = xi * 2 + dx
-                                    row["y"] = yi * 2 + dy
-                                    out.append(row)
-                                    ck = (zi + 1, xi * 2 + dx, yi * 2 + dy)
-                                    old = cagg.get(ck, (0, 0))
-                                    cagg[ck] = (
-                                        old[0] + qf.num_points,
-                                        old[1] + 1,
-                                    )
-            if out:
-                parts.append(pd.DataFrame(out, columns=RS_COLS))
-            return parts, cagg
+                                    ch.append(dict(
+                                        z=zi + 1, x=xi * 2 + dx,
+                                        y=yi * 2 + dy,
+                                    ) | feature_to_row(qf))
+            if rend:
+                feats.append(pd.DataFrame(rend, columns=FEATURE_ROW_COLS))
+            if ch:
+                children.append(pd.DataFrame(ch, columns=TILED_COLS))
+            return feats, children, ns
 
     return body
 
 
-def _partials_frame(cagg: dict, sub_idx=None) -> pd.DataFrame:
+def _partials_frame(per_tile: dict, sub_idx=None) -> pd.DataFrame:
     """(z,x,y) -> (num_points, row_count[, nf, n_leaf]) partials as a
     pass's PARTIAL_COLS rows.  n_emitted doubles as the partial child ROW
     count so the driver can finish n_children without a job.
     ``sub_idx=-1`` marks PARENT partials (the input tiles' own point
     sums, emitted by the first wave) apart from the default child
     partials (sub_idx NULL)."""
-    keys = list(cagg)
-    vals = [tuple(v) + (0, 0)[: 4 - len(v)] for v in cagg.values()]
+    keys = list(per_tile)
+    vals = [tuple(v) + (0, 0)[: 4 - len(v)] for v in per_tile.values()]
     return pd.DataFrame(dict(
         z=[k[0] for k in keys],
         x=[k[1] for k in keys],
@@ -731,11 +697,9 @@ def _partials_frame(cagg: dict, sub_idx=None) -> pd.DataFrame:
 def render_split_stage(
     df: DataFrame, options: Options, tile_sink: TaskSink
 ) -> DataFrame:
-    """ONE Python pass per pyramid level: renders every row (RS_RENDER
-    rows: sub_idx, type, kind, geometry/tags JSON, n_emitted per
-    feature) and, for rows whose tile
-    the driver decided to split (action == 'split'), also emits the child
-    features (RS_CHILD rows) — the VtFeature is constructed once and
+    """ONE Python pass per pyramid level: renders every row and, for
+    rows whose tile the driver decided to split (action == 'split'), also
+    clips the child features — the VtFeature is constructed once and
     shared by both, and the level runs one Spark job instead of a render
     job plus a split job.
 
@@ -770,24 +734,16 @@ def _render_split_kernel(options: Options, tile_sink: TaskSink,
         for pdf in batches:
             if pdf.empty:
                 continue
-            parts, cagg = body(pdf)
             leaf = (pdf["action"] == "leaf").to_numpy()
             if leaf.any():
                 w.leaves(pdf.loc[leaf])
-            for part in parts:
-                w.put(part)
-            if cagg:
-                yield _partials_frame(cagg)
+            feats, children, ns = body(pdf)
+            w.features(feats, ns)
+            w.children(children)
+            if children:
+                yield _partials_frame(_tile_sums(children))
             if emit_parent_cagg:
-                g = pdf.groupby(["z", "x", "y"], sort=False)[
-                    "num_points"
-                ].agg(["sum", "size"])
-                yield _partials_frame({
-                    k: (int(s), int(c))
-                    for k, s, c in zip(
-                        g.index, g["sum"].tolist(), g["size"].tolist()
-                    )
-                }, -1)
+                yield _partials_frame(_tile_sums([pdf]), -1)
         counts = w.close()
         if counts:
             yield _partials_frame({k: (0, *v) for k, v in counts.items()}, 0)
@@ -830,10 +786,10 @@ def drill_descend_stage(
     feature emissions (measured 116s vs this pass's one wave at 1M
     points).
 
-    Each task writes its rendered tile features (RS_RENDER rows, with the
-    persisted order keys) and the retained source rows of its leaf tiles
-    (RS_LEAF) straight into ``tile_sink``'s staged tiles / leaves as
-    store-schema parquet (_TaskWriter, as the level passes do); only one
+    Each task writes its rendered tile features (with the persisted
+    order keys) and the retained source rows of its leaf tiles straight
+    into ``tile_sink``'s staged tiles / leaves as store-schema parquet
+    (_TaskWriter, as the level passes do); only one
     partial per tile comes back (PARTIAL_SCHEMA, sub_idx 1: num_points
     the tile's source-point sum, n_emitted its rendered-emission sum,
     nf, n_leaf), and the driver finishes stats rows from these without
@@ -861,10 +817,8 @@ def drill_descend_stage(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)
         w = _TaskWriter(tile_sink, "drill")
-        stats: dict = {}  # (z,x,y) -> [tnp_partial, ns_partial]
+        tnp: dict = {}  # (z, x, y) -> source-point partial
         for pdf in batches:
-            if pdf.empty:
-                continue
             cur = pdf
             while len(cur):
                 # the frontier holds at most 4 distinct tiles (the
@@ -887,47 +841,30 @@ def drill_descend_stage(
                     action[(zc == tz) & (xc == tx) & (yc == ty)] = act
                 cur = cur.reset_index(drop=True)
                 cur["action"] = action
-                # tnp partial per tile from its source rows
-                g = cur.groupby(["z", "x", "y"], sort=False)["num_points"].sum()
-                for k, v in g.items():
-                    key = (int(k[0]), int(k[1]), int(k[2]))
-                    stats.setdefault(key, [0, 0])[0] += int(v)
+                for k, (pts, _) in _tile_sums([cur]).items():
+                    tnp[k] = tnp.get(k, 0) + pts
                 # retained leaves out (target tile included; 'stop' tiles
                 # render but retain nothing, matching the level loop)
                 leaf_sel = (cur["action"] == "leaf").to_numpy()
                 if leaf_sel.any():
                     w.leaves(cur.loc[leaf_sel])
-                parts, _cagg = body(cur)
-                nxt = []
-                for part in parts:
-                    rend = part[part["row_kind"] == RS_RENDER]
-                    # the root keeps its memoized rows: emit none of its own
-                    if len(rend) and int(zc[0]) != az:
-                        # ns partial per tile from the render rows
-                        ns = rend.groupby(["z", "x", "y"], sort=False)[
-                            "n_emitted"
-                        ].sum()
-                        for k, v in ns.items():
-                            key = (int(k[0]), int(k[1]), int(k[2]))
-                            stats.setdefault(key, [0, 0])[1] += int(v)
-                        w.put(rend)
-                    ch = part[part["row_kind"] == RS_CHILD]
-                    if len(ch):
-                        nxt.append(ch[TILED_COLS])
-                # exactly one tile splits per level (the path tile), so
-                # nxt is nearly always a single frame — skip the concat
-                # (whose all-NA object scan costs ~0.2 s per 10^5 rows)
-                if not nxt:
+                feats, children, ns = body(cur)
+                # the root keeps its memoized rows: emit none of its own
+                if int(zc[0]) != az:
+                    w.features(feats, ns)
+                # the path tile's children, one frame per pass-through
+                # quadrant plus one of clipped straddlers: concat only
+                # when there are several
+                if not children:
                     cur = pd.DataFrame(columns=TILED_COLS)
-                elif len(nxt) == 1:
-                    cur = nxt[0].reset_index(drop=True)
+                elif len(children) == 1:
+                    cur = children[0].reset_index(drop=True)
                 else:
-                    cur = pd.concat(nxt, ignore_index=True)
+                    cur = pd.concat(children, ignore_index=True)
         counts = w.close()
-        if stats:
+        if tnp:
             yield _partials_frame({
-                k: (tnp, ns, *counts.get(k, (0, 0, 0))[1:])
-                for k, (tnp, ns) in stats.items()
+                k: (v, *counts.get(k, (0, 0, 0))) for k, v in tnp.items()
             }, 1)
 
     return df.mapInPandas(kernel, schema=PARTIAL_SCHEMA)

@@ -4,12 +4,13 @@ Two write paths, both idempotent-resume via per-partition JSON manifests
 carrying lineage + row-count metrics (north_rule: "checkpoints per-tile-
 partition progress with lineage + row-count metrics for resumability"):
 
-* CheckpointedPyramid — the distributed tile pyramid (plans/pyramid.py's
-  run_levels, with the staged parquet store as its sink) writing tiles /
-  leaf-features / next-level frontiers as parquet per level; a level's
-  manifest is written only after all its outputs land, so a killed job
-  resumes from the first level without a manifest, re-reading the last
-  persisted frontier (no recompute of completed levels).
+* CheckpointedPyramid — the distributed tile pyramid.  Its own level
+  loop (``_build``) drives plans/pyramid.py's rules and passes and
+  writes tiles / leaf-features / next-level frontiers as parquet per
+  level; a level's manifest is written only after all its outputs
+  land, so a killed job resumes from the first level without a
+  manifest, re-reading the last persisted frontier (no recompute of
+  completed levels).
 
 * checkpointed_mosaic — the raster mosaic sharded into hash buckets of
   cells; completed buckets are skipped on resume.
@@ -21,7 +22,8 @@ Filesystem contract.  Every commit is staged, then published by rename:
 the tasks of a level or drill pass write that commit's rows themselves —
 rendered features to ``<out_dir>/_staging/tiles_<commit>``, retained
 leaf rows to ``_staging/leaves_<commit>``, and a level's child rows to
-``frontier/level_<N+1>`` (operators/pipeline.py ``_TaskWriter``: one
+``frontier/level_<N+1>`` (operators/pipeline.py ``_TaskWriter``, one
+method per destination: ``features``, ``leaves``, ``children``; one
 pyarrow file per (task, pass, z) under a deterministic name, written to a
 dot-prefixed temp name and ``os.replace``d into place, so a retried task
 rewrites the same file).  The driver writes the commit's stats rows the
@@ -33,10 +35,11 @@ so no file of an earlier attempt survives.  So ``out_dir`` must be ONE
 shared POSIX path: the same directory for the driver and every
 executor, with atomic rename within it.  Local mode and a shared POSIX
 mount satisfy this; an object store without atomic rename does not.
-The in-memory index (plans/pyramid.py SparkGeoJSONVT) builds and drills
-through this store in a ``tempfile.TemporaryDirectory`` on the driver:
+The in-memory index (plans/pyramid.py SparkGeoJSONVT) is this store,
+built and drilled in a ``tempfile.TemporaryDirectory`` on the driver:
 every session of this engine is ``local[N]`` (operators/session.py), so
-that driver-local directory is such a path.
+that driver-local directory is such a path.  Only the writer (task
+side) and this module (driver side) know where a pass's rows go.
 """
 
 from __future__ import annotations
@@ -53,7 +56,13 @@ from pyspark.sql import functions as F
 
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.operators.pipeline import (
+    PARTIAL_SCHEMA,
     TaskSink,
+    _convert_wrap_kernel,
+    _render_split_kernel,
+    convert_wrap_stage,
+    render_split_stage,
+    root_rows,
     write_parquet,
     z_part_schema,
 )
@@ -62,11 +71,15 @@ from geojson_vt_rs_spark.operators.schema import (
     TILED_FEATURE_SCHEMA,
 )
 from geojson_vt_rs_spark.plans.pyramid import (
-    CAGG_COLS,
+    _children,
+    _subtree_kernel,
+    decide,
+    decisions_df,
     drill_pass,
     drill_tiles,
     find_parent,
-    run_levels,
+    fuse_bound,
+    fused_stage,
 )
 
 
@@ -179,80 +192,45 @@ class _Commit:
                 os.rename(stg, fin)
 
 
-class _StoreSink:
-    """run_levels sink of CheckpointedPyramid: every pass of a level
-    writes its rendered tile rows and leaf features to a ``_Commit`` and
-    its children to ``frontier/level_<N+1>`` (the next level's input and
-    the resume point) from the tasks; the driver collects the passes'
-    partials in the level's one Spark job, writes the stats rows, and
-    writes the level manifest after the publish."""
+def _collect(*passes) -> tuple:
+    """Run a level's passes (None: absent) as its one Spark job.
+    Returns the render pass's child and parent partials (sub_idx NULL /
+    -1) and, per tile the level rendered, (num_points, num_simplified,
+    nf, n_leaf, fused): its own partials summed over tasks."""
+    got = reduce(DataFrame.unionByName,
+                 [p for p in passes if p is not None]).toPandas()
+    own = (got["sub_idx"] >= 0).to_numpy()
+    per_tile = got.loc[own].groupby(["z", "x", "y"]).agg(
+        tnp=("num_points", "sum"), ns=("n_emitted", "sum"),
+        nf=("nf", "sum"), n_leaf=("n_leaf", "sum"),
+        fused=("sub_idx", "max"),
+    )
+    return got.loc[~own], {
+        (int(z), int(x), int(y)): tuple(int(v) for v in vals)
+        for (z, x, y), *vals in per_tile.itertuples()
+    }
 
-    def __init__(self, cp: "CheckpointedPyramid", out_dir: str):
-        self.cp = cp
-        self.out = out_dir
 
-    def _frontier_dir(self, level):
-        return os.path.join(self.out, "frontier", f"level_{level}")
+def _frontier_dir(out_dir: str, level: int) -> str:
+    return os.path.join(out_dir, "frontier", f"level_{level}")
 
-    def begin(self, level):
-        self.t0, self.tick0 = time.time(), cpu_ticks()
-        self.c = _Commit(self.out, f"level_{level}", f"L{level}")
-        fdir = self._frontier_dir(level + 1)
-        shutil.rmtree(fdir, ignore_errors=True)
-        self.tiles: dict = {}
-        return TaskSink(self.c.stg_tiles, self.c.stg_leaves, fdir)
 
-    def level(self, level, step2=None, fuse=None):
-        got = reduce(DataFrame.unionByName,
-                     [p for p in (step2, fuse) if p is not None]).toPandas()
-        own = (got["sub_idx"] >= 0).to_numpy()
-        per_tile = got.loc[own].groupby(["z", "x", "y"]).agg(
-            tnp=("num_points", "sum"), ns=("n_emitted", "sum"),
-            nf=("nf", "sum"), n_leaf=("n_leaf", "sum"),
-            fused=("sub_idx", "max"),
-        )
-        self.tiles = {
-            (int(z), int(x), int(y)): tuple(int(v) for v in vals)
-            for (z, x, y), *vals in per_tile.itertuples()
-        }
-        n_fused = sum(t[4] for t in self.tiles.values())
-        return got.loc[~own, CAGG_COLS], n_fused
+def _read_frontier(spark: SparkSession, out_dir: str, level: int) -> DataFrame:
+    """The input rows (TILED_COLS) of ``level``, where the previous
+    level's tasks wrote them."""
+    return spark.read.schema(TILED_FEATURE_SCHEMA).parquet(
+        _frontier_dir(out_dir, level))
 
-    def commit(self, level, tiles, pending, partials):
-        # per-tile stats rows: num_points from the decision partials,
-        # num_simplified from the render counters; the fused tiles' from
-        # their own partials (a tile without retained rows stopped at
-        # max zoom or holds no features)
-        stats = [
-            _stats_row(z, x, y, tnp, self.tiles.get((z, x, y), (0, 0))[1], a)
-            for z, x, y, a, tnp, _ in tiles
-        ] + [
-            _stats_row(*k, tnp, ns, "leaf" if n_leaf else "stop")
-            for k, (tnp, ns, _, n_leaf, fused) in self.tiles.items() if fused
-        ]
-        _write_stats(self.c.stg_tiles, stats)
-        self.c.publish()
-        self.cp._commit_manifest(
-            self.out,
-            f"level_{level}",
-            dict(
-                level=level,
-                n_tiles=len(stats),
-                n_tile_feature_rows=sum(t[2] for t in self.tiles.values()),
-                n_leaf_feature_rows=sum(t[3] for t in self.tiles.values()),
-                n_children=sum(p[4] for p in partials),
-                next_partials=[list(p) for p in partials],
-                pending_children=pending,
-                wall_sec=round(time.time() - self.t0, 3),
-                steal_frac=steal_frac(self.tick0, cpu_ticks()),
-            ),
-            self.c.fin_tiles,
-            self.c.fin_leaves,
-        )
 
-    def frontier(self, level, n_rows):
-        return self.cp.spark.read.schema(TILED_FEATURE_SCHEMA).parquet(
-            self._frontier_dir(level))
+def _start_level(out_dir: str, level: int) -> tuple:
+    """A level's ``_Commit``, the TaskSink every pass of the level writes
+    to (the frontier dir it writes cleared first) and its start clock
+    (wall, cpu_ticks)."""
+    clock = time.time(), cpu_ticks()
+    commit = _Commit(out_dir, f"level_{level}", f"L{level}")
+    fdir = _frontier_dir(out_dir, level + 1)
+    shutil.rmtree(fdir, ignore_errors=True)
+    return commit, TaskSink(commit.stg_tiles, commit.stg_leaves, fdir), clock
 
 
 class CheckpointedPyramid:
@@ -363,21 +341,17 @@ class CheckpointedPyramid:
         self, features_df: DataFrame, out_dir: str,
         raw_npts: Optional[int] = None,
     ) -> dict:
-        """Build the pyramid into ``out_dir`` with run_levels
-        (plans/pyramid.py), or resume it from the first level without a
-        manifest.  ``raw_npts`` (optional): the input's total RAW point
-        count — lets the fresh level-0 gate skip its one cheap JVM sum
-        over ``features_df``."""
-        spark = self.spark
+        """Build the pyramid into ``out_dir`` (``_build``), or resume it
+        from the first level without a manifest.  ``raw_npts``
+        (optional): the input's total RAW point count — lets the fresh
+        level-0 gate skip its one cheap JVM sum over ``features_df``."""
         os.makedirs(out_dir, exist_ok=True)
         _sweep_drill_orphans(out_dir)
-        sink = _StoreSink(self, out_dir)
         level = 0
         while self._get_manifest(out_dir, f"level_{level}") is not None:
             level += 1
         if level == 0:
-            run_levels(spark, self.options, sink, features_df=features_df,
-                       raw_npts=raw_npts)
+            self._build(out_dir, features_df, raw_npts)
             return self.summary(out_dir)
         m = self._get_manifest(out_dir, f"level_{level - 1}")
         pending = [tuple(c) for c in m.get("pending_children", [])]
@@ -387,10 +361,218 @@ class CheckpointedPyramid:
                              "lacks next_partials; rebuild the store")
         if partials or pending:
             # no children rows but pending ones: a turn records them
-            run_levels(spark, self.options, sink, partials=partials,
-                       pending=pending, level=level)
+            self._build(out_dir, partials=partials, pending=pending,
+                        level=level)
         return self.summary(out_dir)
 
+    def _build(
+        self,
+        out_dir: str,
+        features_df: Optional[DataFrame] = None,
+        raw_npts: Optional[int] = None,
+        partials=(),
+        pending=(),
+        level: int = 0,
+    ) -> None:
+        """The pyramid's level loop, decision-first, one level per turn:
+
+        1. per-tile (num_points, rows) — the ONLY per-tile state the stop
+           predicate needs (lib.rs:305-313) — finished driver-side from
+           the previous turn's map-side child partials (a resumed build:
+           from its last manifest), so a level needs no decision agg job;
+        2. ``decide`` per tile (index-sized, on the driver);
+        3. rendering and child clipping run per ROW (render_split_stage)
+           — a z0 root with millions of features stays fully parallel;
+           only bounded 'fuse' groups run whole subtrees (fused_stage).
+
+        Every pass of a level writes its tiles and leaves to the level's
+        ``_Commit`` and its children to ``frontier/level_<N+1>`` (the
+        next level's input and the resume point) from the tasks, and
+        returns only its partials: collecting them is the level's one
+        Spark job (``_start_level``, ``_collect``, ``_publish_level``).
+
+        A fresh build passes the raw ``features_df``; the FIRST level
+        then skips the decision agg, which would materialize the whole
+        convert+wrap output before any rendering: raw points
+        (``raw_npts``, one JVM sum when absent) <= fuse_bound route the
+        whole build into one fused task (converted tnp <= 3*raw: wrap at
+        most triples dateline-straddling features); larger inputs render
+        the root in one wave and finish its decision from parent
+        partials emitted in the same wave.  A root that is a leaf by
+        structure (index_max_zoom 0) renders as a leaf; any other root
+        renders+splits OPTIMISTICALLY, and in the (rare) case it was not
+        really a split the level runs again as a leaf level over the
+        converted rows.  A resumed build passes the ``partials`` ((z, x,
+        y, num_points, rows) of its next level's tiles, empty when only
+        empty children are left), the previous level's ``pending``
+        children and ``level``."""
+        o = self.options
+        first_wave = frontier = None
+        if features_df is not None:
+            if raw_npts is None:
+                raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
+            z2 = 1 << o.max_zoom
+            cw_args = (
+                (o.tile.tolerance / o.tile.extent) / z2,
+                o.generate_id,
+                o.tile.buffer / o.tile.extent,
+                o.tile.line_metrics,
+            )
+            cw = _convert_wrap_kernel(*cw_args)
+            if int(raw_npts or 0) <= fuse_bound(o):
+                # raw-gated fuse: convert+wrap chained straight into the
+                # subtree kernel in ONE mapInPandas over ONE coalesced
+                # input partition (one Python runner invocation; a grouped
+                # path pays a decisions broadcast, a cache build and a
+                # shuffle, and frontier.coalesce(1) re-initialized the
+                # Python runner once per upstream partition: 4 s of
+                # overhead for a 0.15 s kernel on us-states)
+                commit, ts, clock = _start_level(out_dir, level)
+                sub = _subtree_kernel(o, ts)
+                own = _collect(features_df.coalesce(1).mapInPandas(
+                    lambda batches: sub(root_rows(cw(batches))),
+                    schema=PARTIAL_SCHEMA,
+                ))[1]
+                # an empty or fully-dropped input still creates the root
+                # (lib.rs:265-295: insert precedes the early return)
+                root = [] if own else [(0, 0, 0, "empty", 0)]
+                self._publish_level(out_dir, level, commit, clock, root, own)
+                return
+            frontier = convert_wrap_stage(features_df, *cw_args).select(
+                F.lit(0).alias("z"), F.lit(0).alias("x"),
+                F.lit(0).alias("y"), "*"
+            )
+            # the first turn is ONE Python pass over the raw input:
+            # convert+wrap chained into the render/split kernel with the
+            # root's (z, x, y, action) columns synthesized in-kernel (no
+            # decision join; two chained mapInPandas would each pay the
+            # JVM<->worker serde of the whole table); `frontier` stays the
+            # mispredicted-leaf recovery source
+            first_wave = "leaf" if o.index_max_zoom == 0 else "split"
+        elif partials:
+            frontier = _read_frontier(self.spark, out_dir, level)
+        pending = list(pending)
+        while True:
+            commit, ts, clock = _start_level(out_dir, level)
+            if first_wave:
+                decisions = [(0, 0, 0, first_wave, None)]
+            else:
+                decisions = [
+                    (z, x, y, decide(o, z, x, y, tnp), tnp)
+                    for z, x, y, tnp, _ in partials
+                ]
+            seen = {d[:3] for d in decisions}
+            # children of the previous level's split parents that got no
+            # features -> empty tiles (lib.rs:344-428)
+            tiles = [
+                (z, x, y, "empty", 0) for z, x, y in pending
+                if (z, x, y) not in seen
+            ]
+            fr = None
+            own, split, nxt = {}, [], []
+            if decisions:
+                acts = {d[3] for d in decisions}
+                step2 = fuse = None
+                if first_wave:
+                    rs, act = _render_split_kernel(o, ts, True), first_wave
+                    step2 = features_df.mapInPandas(
+                        lambda batches: rs(root_rows(cw(batches), act)),
+                        schema=PARTIAL_SCHEMA,
+                    )
+                else:
+                    ddf = decisions_df(self.spark, [d[:4] for d in decisions])
+                    fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
+                    if "fuse" in acts and acts - {"fuse"}:
+                        # cache only when both of the level's passes read
+                        # fr (single-reader levels would waste a copy: a
+                        # 4M-point build OOM'd an 8g heap holding prev +
+                        # frontier + fr + step2 at once)
+                        fr = fr.persist()
+                    if acts - {"fuse"}:
+                        step2 = render_split_stage(
+                            fr.filter(F.col("action") != "fuse"), o, ts)
+                    if "fuse" in acts:
+                        fuse = fused_stage(fr, o, ts)
+                cagg, own = _collect(step2, fuse)
+                if first_wave:
+                    # finish the deferred root decision from the wave's
+                    # own parent partials (sub_idx == -1 rows)
+                    pm = (cagg["sub_idx"] == -1).to_numpy()
+                    root, cagg = cagg.loc[pm], cagg.loc[~pm]
+                    act, first_wave = first_wave, None
+                    tnp = int(root["num_points"].sum())
+                    if root.empty:
+                        # empty (or fully-dropped) input: the root tile
+                        # still exists (lib.rs:265-295)
+                        decisions = [(0, 0, 0, "empty", 0)]
+                    elif act == "split" and decide(o, 0, 0, 0, tnp) == "leaf":
+                        # mispredicted: the root is really a leaf — run
+                        # the level again, as a leaf level over the
+                        # converted rows (decide reads only num_points)
+                        partials = [(0, 0, 0, tnp, 0)]
+                        continue
+                    else:
+                        # a 'fuse' root already rendered+split: its
+                        # children run as a real level (and fuse there)
+                        decisions = [(0, 0, 0, act, tnp)]
+                split = [d[:3] for d in decisions if d[3] == "split"]
+                nxt = [
+                    (int(r.z), int(r.x), int(r.y), int(r.tnp), int(r.rows))
+                    for r in cagg.groupby(["z", "x", "y"], as_index=False)
+                    .agg(tnp=("num_points", "sum"), rows=("n_emitted", "sum"))
+                    .itertuples(index=False)
+                ] if split else []
+            pending = _children(split)
+            self._publish_level(
+                out_dir, level, commit, clock,
+                tiles + [d for d in decisions if d[3] != "fuse"],
+                own, pending, nxt,
+            )
+            if fr is not None:
+                fr.unpersist()
+            if not split:
+                return
+            level += 1
+            partials = nxt
+            if nxt:
+                frontier = _read_frontier(self.spark, out_dir, level)
+
+    def _publish_level(self, out_dir, level, commit, clock, tiles, own,
+                       pending=(), nxt=()) -> None:
+        """Finish a level: write its stats rows, publish its commit, then
+        write its manifest.  ``tiles``: (z, x, y, action, num_points) of
+        every non-fused tile, empty children first (action 'empty'), its
+        num_simplified from the render counters ``own`` (see
+        ``_collect``); the fused tiles' stats come from their own
+        partials (a tile without retained rows stopped at max zoom or
+        holds no features).  ``nxt``: the next level's (z, x, y,
+        num_points, rows)."""
+        stats = [
+            _stats_row(z, x, y, tnp, own.get((z, x, y), (0, 0))[1], a)
+            for z, x, y, a, tnp in tiles
+        ] + [
+            _stats_row(*k, tnp, ns, "leaf" if n_leaf else "stop")
+            for k, (tnp, ns, _, n_leaf, fused) in own.items() if fused
+        ]
+        _write_stats(commit.stg_tiles, stats)
+        commit.publish()
+        self._commit_manifest(
+            out_dir,
+            f"level_{level}",
+            dict(
+                level=level,
+                n_tiles=len(stats),
+                n_tile_feature_rows=sum(t[2] for t in own.values()),
+                n_leaf_feature_rows=sum(t[3] for t in own.values()),
+                n_children=sum(p[4] for p in nxt),
+                next_partials=[list(p) for p in nxt],
+                pending_children=list(pending),
+                wall_sec=round(time.time() - clock[0], 3),
+                steal_frac=steal_frac(clock[1], cpu_ticks()),
+            ),
+            commit.fin_tiles,
+            commit.fin_leaves,
+        )
 
     def summary(self, out_dir: str) -> dict:
         levels = []

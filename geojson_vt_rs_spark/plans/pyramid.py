@@ -7,15 +7,17 @@ Equivalence: the recursion's stop conditions are per-tile, so a
 breadth-first traversal visits the same tile set and every tile sees the
 same feature multiset (clip bands are a function of (z,x,y) only).
 
-``run_levels`` is the one level loop.  Each turn decides every frontier
-tile with the pure ``decide`` (lib.rs:305-313) from its point count,
-renders and child-clips the non-fused tiles in one per-row pass
-(render_split_stage), and runs small split subtrees whole inside one task
-(``fuse``).  Every pass writes its tiles, leaves and children from the
-tasks into the sink's staged parquet store (plans/checkpoint.py) and
-returns only per-tile partials, so the loop moves only index-sized rows
-through the driver (decisions, partials).  The in-memory SparkGeoJSONVT
-is that store, built into a scratch directory and loaded on the driver.
+This module holds the pyramid's pure rules (``decide``, ``fuse_bound``,
+``find_parent``, ``drill_tiles``) and passes (``decisions_df``,
+``fused_stage``, ``drill_pass``); the level loop that drives them is the
+store's build (plans/checkpoint.py ``CheckpointedPyramid``).  Each turn
+decides every frontier tile with ``decide`` (lib.rs:305-313) from its
+point count, renders and child-clips the non-fused tiles in one per-row
+pass (render_split_stage), and runs small split subtrees whole inside
+one task (``fused_stage``).  Every pass writes its tiles, leaves and
+children from the tasks and returns only per-tile partials.  The
+in-memory SparkGeoJSONVT is that store, built into a scratch directory
+and loaded on the driver.
 
 "Retain source_features on leaves / clear on split parents"
 (lib.rs:311,324,335,430-433) becomes the leaf-features store; a get_tile
@@ -45,19 +47,13 @@ from pyspark.sql import functions as F
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
+    FEATURE_ROW_COLS,
     PARTIAL_SCHEMA,
-    RS_COLS,
-    RS_LEAF,
-    RS_RENDER,
     TaskSink,
-    _convert_wrap_kernel,
     _partials_frame,
-    _render_split_kernel,
+    _tile_feature,
     _TaskWriter,
-    convert_wrap_stage,
     drill_descend_stage,
-    render_split_stage,
-    root_rows,
 )
 from geojson_vt_rs_spark.operators.schema import (
     TILED_FEATURE_SCHEMA,
@@ -67,9 +63,6 @@ from geojson_vt_rs_spark.operators.schema import (
 )
 
 TILED_COLS = [f.name for f in TILED_FEATURE_SCHEMA.fields]
-
-# the partial columns the sink hands back to the loop
-CAGG_COLS = ["z", "x", "y", "num_points", "n_emitted", "sub_idx"]
 
 
 class SparkTile:
@@ -158,45 +151,37 @@ def _subtree_kernel(options: Options, tile_sink: TaskSink):
     """mapInPandas kernel over TILED rows clustered by tile (a fused
     level's rows, repartitioned and sorted by (z, x, y), or the raw-gated
     wave's root rows): the core tiler's whole split recursion under each
-    tile.  The tasks write every subtree tile's features (RS_RENDER rows
-    whose order keys (0, i, '', 0) rank in the emitter's order) and
-    retained source rows (RS_LEAF) to ``tile_sink``, and return one
-    partial per tile, empty tiles included (PARTIAL_SCHEMA, sub_idx 1:
-    num_points, n_emitted = num_simplified, nf, n_leaf): the drill
-    pass's contract (drill_descend_stage)."""
+    tile.  The tasks write every subtree tile's features (order keys
+    (0, i, '', 0) rank in the emitter's order) and retained source rows
+    to ``tile_sink``, and return one partial per tile, empty tiles
+    included (PARTIAL_SCHEMA, sub_idx 1: num_points, n_emitted =
+    num_simplified, nf, n_leaf): the drill pass's contract
+    (drill_descend_stage)."""
     order = ["world_copy", "feature_seq", "slice_path"]
 
-    def subtree(key, pieces, w: _TaskWriter, tiles: dict) -> None:
+    def subtree(key, pieces, w: _TaskWriter, tnp: dict) -> None:
         from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
 
         feats = [f for p in pieces for f in pdf_to_features(p[TILED_COLS[3:]])]
         keys = pd.concat([p[order] for p in pieces], ignore_index=True)
         feats = [feats[i] for i in keys.sort_values(order, kind="stable").index]
-        rows: list = []
+        rend: list = []
+        leaves: list = []
+        ns: dict = {}
         for it in CoreTiler.subtree(feats, options, *key).tiles.values():
             em = it.emitter
-            tile = dict.fromkeys(RS_COLS) | dict(z=em.z, x=em.x, y=em.y)
-            for i, tf in enumerate(em.features):
-                rows.append(tile | dict(
-                    row_kind=RS_RENDER,
-                    world_copy=0, feature_seq=i, slice_path="", sub_idx=0,
-                    type=tf["type"],
-                    kind=tf["kind"],
-                    geometry_json=json.dumps(tf["geometry"],
-                                             separators=(",", ":")),
-                    tags_json=(
-                        None
-                        if tf["tags"] is None
-                        else json.dumps(tf["tags"], separators=(",", ":"))
-                    ),
-                    id_str=tf["id_str"],
-                    id_num=tf["id_num"],
-                    id_float=tf["id_float"],
-                ))
-            for f in it.source_features:
-                rows.append(tile | dict(row_kind=RS_LEAF) | feature_to_row(f))
-            tiles[(em.z, em.x, em.y)] = (em.num_points, em.num_simplified)
-        w.put(pd.DataFrame(rows, columns=RS_COLS))
+            tile = dict(z=em.z, x=em.x, y=em.y)
+            rend += [
+                tile | dict(world_copy=0, feature_seq=i, slice_path="",
+                            sub_idx=0) | _tile_feature(tf)
+                for i, tf in enumerate(em.features)
+            ]
+            leaves += [tile | feature_to_row(f) for f in it.source_features]
+            tnp[(em.z, em.x, em.y)] = em.num_points
+            ns[(em.z, em.x, em.y)] = em.num_simplified
+        w.features([pd.DataFrame(rend, columns=FEATURE_ROW_COLS)], ns)
+        if leaves:
+            w.leaves(pd.DataFrame(leaves, columns=TILED_COLS))
 
     def groups(batches):
         # (key, row slices) per tile; a tile's rows may span batches
@@ -213,14 +198,13 @@ def _subtree_kernel(options: Options, tile_sink: TaskSink):
 
     def run(batches):
         w = _TaskWriter(tile_sink, "fuse")
-        tiles: dict = {}
+        tnp: dict = {}
         for key, pieces in groups(batches):
-            subtree(key, pieces, w, tiles)
+            subtree(key, pieces, w, tnp)
         counts = w.close()
-        if tiles:
+        if tnp:
             yield _partials_frame({
-                k: (*v, *counts.get(k, (0, 0, 0))[1:])
-                for k, v in tiles.items()
+                k: (v, *counts.get(k, (0, 0, 0))) for k, v in tnp.items()
             }, 1)
 
     return run
@@ -237,195 +221,6 @@ def fused_stage(fr: DataFrame, options: Options,
         .mapInPandas(_subtree_kernel(options, tile_sink),
                      schema=PARTIAL_SCHEMA)
     )
-
-
-def run_levels(
-    spark: SparkSession,
-    options: Options,
-    sink,
-    features_df: Optional[DataFrame] = None,
-    raw_npts: Optional[int] = None,
-    partials=(),
-    pending=(),
-    level: int = 0,
-) -> None:
-    """The pyramid's level loop, decision-first, one level per turn:
-
-    1. per-tile (num_points, rows) — the ONLY per-tile state the stop
-       predicate needs (lib.rs:305-313) — finished driver-side from the
-       previous turn's map-side child partials (a resumed build: from
-       its last manifest), so a level needs no decision agg job;
-    2. ``decide`` per tile (index-sized, on the driver);
-    3. rendering and child clipping run per ROW (render_split_stage) —
-       a z0 root with millions of features stays fully parallel; only
-       bounded 'fuse' groups run whole subtrees (fused_stage).
-
-    A fresh build passes the raw ``features_df``; the FIRST level then
-    skips the decision agg, which would materialize the whole
-    convert+wrap output before any rendering: raw points (``raw_npts``,
-    one JVM sum when absent) <= fuse_bound route the whole build into
-    one fused task (converted tnp <= 3*raw: wrap at most triples
-    dateline-straddling features); larger inputs render the root in one
-    wave and finish its decision from parent partials emitted in the
-    same wave.  A root that is a leaf by structure (index_max_zoom 0)
-    renders as a leaf; any other root renders+splits OPTIMISTICALLY, and
-    in the (rare) case it was not really a split the level runs again as
-    a leaf level over the converted rows.  A resumed build passes the
-    ``partials`` ((z, x, y, num_points, rows) of its next level's tiles,
-    empty when only empty children are left), the previous level's
-    ``pending`` children and ``level``.
-
-    ``sink`` receives each level in this order:
-      begin(level) -> TaskSink
-          start the level: every pass of the level writes its tiles,
-          leaves and children to the returned TaskSink from the tasks and
-          returns only its partials (PARTIAL_SCHEMA)
-      level(level, step2, fuse) -> (cagg, n_fused)
-          run the render pass ``step2`` and the fused subtrees ``fuse``
-          (either may be None) as the level's one Spark job; return the
-          render pass's child and parent partials (CAGG_COLS; never the
-          fused tiles') and the fused tile count
-      commit(level, tiles, pending, partials)
-          ``tiles``: (z, x, y, action, num_points, rows) of every
-          non-fused tile, empty children first (action 'empty');
-          ``partials``: the next level's (z, x, y, num_points, rows)
-      frontier(level, n_rows) -> DataFrame
-          the input rows (TILED_COLS) of ``level``, the next one: the
-          sink reads them from where the last pass's tasks wrote them."""
-    o = options
-    first_wave = frontier = None
-    if features_df is not None:
-        if raw_npts is None:
-            raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
-        z2 = 1 << o.max_zoom
-        cw_args = (
-            (o.tile.tolerance / o.tile.extent) / z2,
-            o.generate_id,
-            o.tile.buffer / o.tile.extent,
-            o.tile.line_metrics,
-        )
-        cw = _convert_wrap_kernel(*cw_args)
-        if int(raw_npts or 0) <= fuse_bound(o):
-            # raw-gated fuse: convert+wrap chained straight into the
-            # subtree kernel in ONE mapInPandas over ONE coalesced input
-            # partition (one Python runner invocation; a grouped path
-            # pays a decisions broadcast, a cache build and a shuffle,
-            # and frontier.coalesce(1) re-initialized the Python runner
-            # once per upstream partition: 4 s of overhead for a 0.15 s
-            # kernel on us-states)
-            sub = _subtree_kernel(o, sink.begin(level))
-            wave = features_df.coalesce(1).mapInPandas(
-                lambda batches: sub(root_rows(cw(batches))),
-                schema=PARTIAL_SCHEMA,
-            )
-            n_fused = sink.level(level, fuse=wave)[1]
-            # an empty or fully-dropped input still creates the root
-            # (lib.rs:265-295: insert precedes the early return)
-            root = [] if n_fused else [(0, 0, 0, "empty", 0, 0)]
-            sink.commit(level, root, [], [])
-            return
-        frontier = convert_wrap_stage(features_df, *cw_args).select(
-            F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
-        )
-        # the first turn is ONE Python pass over the raw input: convert+
-        # wrap chained into the render/split kernel with the root's
-        # (z, x, y, action) columns synthesized in-kernel (no decision
-        # join; two chained mapInPandas would each pay the JVM<->worker
-        # serde of the whole table); `frontier` stays the mispredicted-
-        # leaf recovery source
-        first_wave = "leaf" if o.index_max_zoom == 0 else "split"
-    elif partials:
-        frontier = sink.frontier(level, sum(p[4] for p in partials))
-    pending = list(pending)
-    while True:
-        ts = sink.begin(level)
-        if first_wave:
-            decisions = [(0, 0, 0, first_wave, None, None)]
-        else:
-            decisions = [
-                (z, x, y, decide(o, z, x, y, tnp), tnp, rows)
-                for z, x, y, tnp, rows in partials
-            ]
-        seen = {d[:3] for d in decisions}
-        # children of the previous level's split parents that got no
-        # features -> empty tiles (lib.rs:344-428)
-        tiles = [
-            (z, x, y, "empty", 0, 0) for z, x, y in pending
-            if (z, x, y) not in seen
-        ]
-        if not decisions:
-            sink.commit(level, tiles, [], [])
-            return
-
-        acts = {d[3] for d in decisions}
-        fr = fuse = None
-        if first_wave:
-            rs, act = _render_split_kernel(o, ts, True), first_wave
-            step2 = features_df.mapInPandas(
-                lambda batches: rs(root_rows(cw(batches), act)),
-                schema=PARTIAL_SCHEMA,
-            )
-        else:
-            ddf = decisions_df(spark, [d[:4] for d in decisions])
-            fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            if "fuse" in acts and acts - {"fuse"}:
-                # cache only when both of the level's passes read fr
-                # (single-reader levels would waste a copy: a 4M-point
-                # build OOM'd an 8g heap holding prev + frontier + fr +
-                # step2 at once)
-                fr = fr.persist()
-            step2 = (
-                render_split_stage(fr.filter(F.col("action") != "fuse"), o,
-                                   ts)
-                if acts - {"fuse"}
-                else None
-            )
-            if "fuse" in acts:
-                fuse = fused_stage(fr, o, ts)
-        cagg = sink.level(level, step2, fuse)[0]
-        if first_wave:
-            # finish the deferred root decision from the wave's own
-            # parent partials (sub_idx == -1 rows)
-            pm = (cagg["sub_idx"] == -1).to_numpy()
-            root, cagg = cagg.loc[pm], cagg.loc[~pm]
-            if root.empty:
-                # empty (or fully-dropped) input: the root tile still
-                # exists (lib.rs:265-295)
-                sink.commit(level, [(0, 0, 0, "empty", 0, 0)], [], [])
-                return
-            tnp = int(root["num_points"].sum())
-            rows = int(root["n_emitted"].sum())
-            act, first_wave = first_wave, None
-            if act == "split" and decide(o, 0, 0, 0, tnp) == "leaf":
-                # mispredicted: the root is really a leaf — run the level
-                # again, as a leaf level over the converted rows
-                partials = [(0, 0, 0, tnp, rows)]
-                continue
-            # a 'fuse' root already rendered+split: its children run as a
-            # real level (and fuse there)
-            decisions = [(0, 0, 0, act, tnp, rows)]
-        split = [d[:3] for d in decisions if d[3] == "split"]
-        nxt = [
-            (int(r.z), int(r.x), int(r.y), int(r.tnp), int(r.rows))
-            for r in cagg.groupby(["z", "x", "y"], as_index=False).agg(
-                tnp=("num_points", "sum"), rows=("n_emitted", "sum")
-            ).itertuples(index=False)
-        ] if split else []
-        pending = _children(split)
-        sink.commit(
-            level,
-            tiles + [d for d in decisions if d[3] != "fuse"],
-            pending,
-            nxt,
-        )
-        if fr is not None:
-            fr.unpersist()
-        if not split:
-            return
-        level += 1
-        partials = nxt
-        if nxt:
-            frontier = sink.frontier(level, sum(p[4] for p in nxt))
 
 
 def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
@@ -534,14 +329,16 @@ class SparkGeoJSONVT:
         self._sync_local()
 
     def _sync_local(self) -> None:
+        # a core tile never changes once created (core/tiler.py _split):
+        # wrap only the new ones
         lt = self._local
         self.stats = dict(lt.stats)
         self.total = lt.total
         for tid, it in lt.tiles.items():
-            em = it.emitter
-            self.tiles[tid] = SparkTile(
-                em.z, em.x, em.y, em.features, em.num_points, em.num_simplified
-            )
+            if tid not in self.tiles:
+                em = it.emitter
+                self.tiles[tid] = SparkTile(em.z, em.x, em.y, em.features,
+                                            em.num_points, em.num_simplified)
 
     # ------------------------------------------------------------------
     def _load(self, d: str) -> None:

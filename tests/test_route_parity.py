@@ -247,18 +247,20 @@ def test_structural_leaf_root_renders_once(spark, tmp_path, corpus,
     leaf by structure, so the first wave renders it as a leaf.  That wave
     is the build's only pass (no second render of the root, no child
     clip, no frontier), and the store and the index hold the core
-    tiler's root and leaf features."""
-    from geojson_vt_rs_spark.plans import pyramid
+    tiler's root and leaf features.  The counters patch the names the
+    store's level loop calls; the split route is their positive control:
+    its levels below the root do call render_split_stage."""
+    from geojson_vt_rs_spark.plans import checkpoint
 
     df, pdf = corpus
     opts = Options(max_zoom=14, index_max_zoom=0, index_max_points=200,
                    fuse_max_points=1)
     calls = []
     for name in ("render_split_stage", "fused_stage"):
-        def counted(*a, _real=getattr(pyramid, name), _name=name, **k):
+        def counted(*a, _real=getattr(checkpoint, name), _name=name, **k):
             calls.append(_name)
             return _real(*a, **k)
-        monkeypatch.setattr(pyramid, name, counted)
+        monkeypatch.setattr(checkpoint, name, counted)
     out = str(tmp_path / "imz0")
     cp = CheckpointedPyramid(spark, opts)
     s = cp.run(df, out)
@@ -266,6 +268,9 @@ def test_structural_leaf_root_renders_once(spark, tmp_path, corpus,
     assert calls == []
     assert s["levels"] == 1 and s["manifests"][0]["n_children"] == 0
     assert not os.path.exists(f"{out}/frontier/level_1")
+    CheckpointedPyramid(spark, Options(**BASE, **ROUTES["split"])).run(
+        df, str(tmp_path / "split"))
+    assert "render_split_stage" in calls
 
     core = core_index(pdf, opts)
     em = core_tiles(core)[(0, 0, 0)]
@@ -305,3 +310,78 @@ def test_index_leaves_no_scratch_dir(spark, tmp_path, corpus, monkeypatch):
     assert idx.total > n_tiles
     assert len(made) > n_made and not os.listdir(scratch)
     assert all(os.path.dirname(d) == str(scratch) for d in made)
+
+
+def test_local_index_keeps_tile_objects(spark, corpus):
+    """prefer_local=True: a lookup wraps only the core tiles it has not
+    wrapped yet, so a memoized tile is the same object on every lookup,
+    and after drills the index's tiles, stats and total are the core
+    tiler's."""
+    df, pdf = corpus
+    opts = Options(**BASE)
+    idx = SparkGeoJSONVT(spark, df, opts, prefer_local=True)
+    core = core_index(pdf, opts)
+    root = idx.get_tile(0, 0, 0)
+    assert idx.get_tile(0, 0, 0) is root
+    n_tiles = idx.total
+    for key in (DRILLS[0], DRILLS[2]):
+        assert canon(idx.get_tile(*key).features) == canon(
+            core.get_tile(*key).features)
+    assert idx.total > n_tiles and idx.get_tile(0, 0, 0) is root
+    assert idx.stats == core.stats and idx.total == core.total
+    want = core_tiles(core)
+    got = {(t.z, t.x, t.y): t for t in idx.tiles.values()}
+    assert set(got) == set(want)
+    for key, em in want.items():
+        t = got[key]
+        assert (t.num_points, t.num_simplified) == (
+            em.num_points, em.num_simplified), key
+        assert canon(t.features) == canon(em.features), key
+
+
+# one-shot geojson_to_tile cases: (z, x, y), wrap_, clip_, line_metrics
+ONE_SHOT = {
+    "metro_z9": (tile_of(-74.0, 40.7, 9), False, True, False),
+    "root": ((0, 0, 0), False, True, False),
+    # feature 288 sits 1.8 degrees west of the antimeridian: only its
+    # wrapped copy reaches this tile's buffer
+    "antimeridian": ((1, 0, 0), True, True, False),
+    "no_clip": (tile_of(139.7, 35.7, 10), False, False, False),
+    "line_metrics": (tile_of(2.35, 48.85, 9), False, True, True),
+}
+
+
+@pytest.mark.parametrize("case", list(ONE_SHOT))
+def test_one_shot_matches_core(spark, corpus, case):
+    """The distributed one-shot geojson_to_tile_df renders the core
+    geojson_to_tile's tile: the same feature rows in feature_idx order
+    and the same stats row."""
+    from geojson_vt_rs_spark.config import TileOptions
+    from geojson_vt_rs_spark.core.tiler import geojson_to_tile
+    from geojson_vt_rs_spark.plans.one_shot import geojson_to_tile_df
+
+    df, pdf = corpus
+    (z, x, y), wrap_, clip_, lm = ONE_SHOT[case]
+    topts = TileOptions(line_metrics=lm)
+    em = geojson_to_tile(list(pdf_to_features(pdf)), z, x, y, topts,
+                         wrap_=wrap_, clip_=clip_)
+    rows = geojson_to_tile_df(spark, df, z, x, y, topts, wrap_=wrap_,
+                              clip_=clip_).toPandas()
+    st = rows[rows.feature_idx == -1]
+    assert len(st) == 1
+    assert (int(st.num_points.iloc[0]), int(st.num_simplified.iloc[0])) == (
+        em.num_points, em.num_simplified)
+    got = rows[rows.feature_idx >= 0].sort_values("feature_idx")
+    assert got.feature_idx.tolist() == list(range(len(got)))
+    assert len(got) > 0
+    assert [
+        (int(r.type), int(r.kind), r.geometry_json,
+         None if r.tags_json is None else json.loads(r.tags_json),
+         r.id_str if isinstance(r.id_str, str) else None,
+         int(r.id_num) if pd.notna(r.id_num) else None,
+         float(r.id_float) if pd.notna(r.id_float) else None)
+        for r in got.itertuples(index=False)
+    ] == canon(em.features)
+    if case == "antimeridian":
+        assert len(em.features) > len(geojson_to_tile(
+            list(pdf_to_features(pdf)), z, x, y, topts, clip_=clip_).features)
