@@ -1,9 +1,9 @@
-"""Spark stages of the tiling pipeline: convert, wrap, split, emit.
+"""Spark stages of the tiling pipeline: convert, wrap, render, split.
 
 Each stage is declared on DataFrames; geometry math runs in Arrow-batched
-pandas kernels (mapInPandas / applyInPandas) over the flat encoding —
-no per-row Python objects cross the boundary, and Catalyst sees
-bbox/num_points as plain columns for pruning.
+pandas kernels (mapInPandas) over the flat encoding — no per-row Python
+objects cross the boundary, and Catalyst sees bbox/num_points as plain
+columns for pruning.
 
 Scale notes (100 TB shape):
   * convert/wrap/render/split are narrow per-row mapInPandas transforms
@@ -15,8 +15,9 @@ Scale notes (100 TB shape):
     feature rows.
   * a level's only exchange is fused_stage's repartition(z, x, y),
     which clusters the rows of its bounded 'fuse' tiles for whole-
-    subtree tasks; the one-shot geojson_to_tile's emit_stage holds the
-    only groupBy(z, x, y).
+    subtree tasks; the one-shot geojson_to_tile_df (plans/one_shot.py)
+    composes these kernels in one pass and moves only its one tile's
+    rendered rows to a single finishing task.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from typing import Iterator, List, NamedTuple, Optional
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
@@ -37,7 +37,6 @@ from geojson_vt_rs_spark.core.tile import TileEmitter
 from geojson_vt_rs_spark.core.wrap import wrap as core_wrap
 from geojson_vt_rs_spark.operators.schema import (
     FEATURE_SCHEMA,
-    TILE_ROW_SCHEMA,
     TILE_STORE_SCHEMA,
     TILED_FEATURE_SCHEMA,
     create_feature_df,
@@ -64,64 +63,32 @@ def read_geojson_features(spark: SparkSession, path_or_text) -> DataFrame:
     return create_feature_df(spark, pdf, FEATURE_SCHEMA)
 
 
-def convert_stage(df: DataFrame, tolerance: float, generate_id: bool) -> DataFrame:
-    """Project + metrics + DP importance (convert.rs:148-176).
+def _convert_wrap_kernel(
+    tolerance: float, generate_id: bool, buffer: float, line_metrics: bool,
+    wrap: bool = True,
+):
+    """The convert [+ wrap] pandas kernel as a generator factory, chained
+    in front of a render kernel in the same mapInPandas pass (the level
+    loop's first wave, the one-shot geojson_to_tile_df), so the wide
+    feature arrays cross JVM<->Python once.
 
+    Convert is project + metrics + DP importance (convert.rs:148-176);
     generate_id uses feature_seq, the deterministic 0-based input order —
     identical to the reference's gen_id counter under any partitioning.
-    """
+    With ``wrap`` each feature then contributes its antimeridian clips
+    (wrap.rs:19-43) tagged world_copy 0/1/2: equivalent to the
+    reference's global left/right-empty shortcut, because when both are
+    empty the center clip is a per-feature trivial accept (proof in
+    core/wrap.py).
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for f in pdf_to_features(pdf):
-                if generate_id:
-                    f.id_str = None
-                    f.id_num = f.feature_seq
-                    f.id_float = None
-                c = convert_feature(f, tolerance)
-                if c is not None:
-                    out.append(feature_to_row(c))
-            yield pd.DataFrame(out, columns=FEATURE_COLS)
-
-    return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-def convert_wrap_stage(
-    df: DataFrame,
-    tolerance: float,
-    generate_id: bool,
-    buffer: float,
-    line_metrics: bool,
-) -> DataFrame:
-    """convert_stage + wrap_stage FUSED into one mapInPandas pass: both
-    are per-feature, so composing them in-kernel halves the Arrow
-    round-trips of the pipeline head (the wide feature arrays otherwise
-    cross JVM<->Python twice back-to-back).  Output is identical to
-    wrap_stage(convert_stage(df, ...), ...).
-
-    Columnar fast path (the z0 ingest wave was ~40 of 93s of the 8-core
-    1M-point build, ~80us/row of per-feature Python here): single-
-    coordinate Point rows project in ONE vectorized pass.  A point's
-    convert is just project_points (no metrics, no simplify — zs stay
-    0), and its wrap is a no-op whenever buffer < X < 1-buffer (the
-    left clip [-1-b, b] and right clip [1-b, 2+b] are then both empty,
-    so core_wrap returns the feature unchanged, world_copy included).
-    Antimeridian-buffer points and everything else take the per-feature
-    path; elementwise math is identical (same project_points call), so
-    goldens are unaffected."""
-    return df.mapInPandas(
-        _convert_wrap_kernel(tolerance, generate_id, buffer, line_metrics),
-        schema=FEATURE_SCHEMA,
-    )
-
-
-def _convert_wrap_kernel(
-    tolerance: float, generate_id: bool, buffer: float, line_metrics: bool
-):
-    """The convert+wrap pandas kernel (see convert_wrap_stage) as a
-    reusable generator factory — the first-turn wave fuses it in front of
-    the render/split kernel."""
+    Columnar fast path: single-coordinate Point rows project in ONE
+    vectorized pass.  A point's convert is just project_points (no
+    metrics, no simplify — zs stay 0), and its wrap is a no-op whenever
+    buffer < X < 1-buffer (the left clip [-1-b, b] and right clip
+    [1-b, 2+b] are then both empty, so core_wrap returns the feature
+    unchanged, world_copy included).  Antimeridian-buffer points and
+    everything else take the per-feature path; elementwise math is
+    identical (same project_points call), so goldens are unaffected."""
     from geojson_vt_rs_spark.core.geom import GEOM_POINT
     from geojson_vt_rs_spark.core.project import project_points
 
@@ -142,10 +109,11 @@ def _convert_wrap_kernel(
                     np.concatenate(list(pdf["xs"].to_numpy()[is_pt])),
                     np.concatenate(list(pdf["ys"].to_numpy()[is_pt])),
                 )
-                # strict inequalities: a point exactly ON the buffer
-                # boundary is clip-inclusion-sensitive -> per-feature path
+                # with wrap, strict inequalities: a point exactly ON the
+                # buffer boundary is clip-inclusion-sensitive -> per-
+                # feature path (without wrap every point stays here)
                 center_only = (X > buffer) & (X < 1.0 - buffer)
-                if not center_only.all():
+                if wrap and not center_only.all():
                     is_pt[np.flatnonzero(is_pt)[~center_only]] = False
                     X, Y = X[center_only], Y[center_only]
             if is_pt.any():
@@ -198,65 +166,12 @@ def _convert_wrap_kernel(
                     f.id_float = None
                 c = convert_feature(f, tolerance)
                 if c is not None:
-                    for g in core_wrap([c], buffer, line_metrics):
+                    for g in (core_wrap([c], buffer, line_metrics) if wrap
+                              else [c]):
                         out.append(feature_to_row(g))
             yield pd.DataFrame(out, columns=FEATURE_COLS)
 
     return kernel
-
-
-def wrap_stage(df: DataFrame, buffer: float, line_metrics: bool) -> DataFrame:
-    """Antimeridian wrap (wrap.rs:19-43) as a single narrow pass.
-
-    Per-feature independent: each feature contributes its left/center/
-    right clips tagged world_copy 0/1/2.  Equivalent to the reference's
-    global left/right-empty shortcut because when both are empty the
-    center clip is a per-feature trivial accept (proof in core/wrap.py).
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for f in pdf_to_features(pdf):
-                for g in core_wrap([f], buffer, line_metrics):
-                    out.append(feature_to_row(g))
-            yield pd.DataFrame(out, columns=FEATURE_COLS)
-
-    return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-def clip_xy_stage(
-    df: DataFrame,
-    x_band: tuple,
-    y_band: tuple,
-    line_metrics: bool,
-) -> DataFrame:
-    """One-shot x then y clip (geojson_to_tile path, lib.rs:112-131).
-
-    The bbox trivial-reject predicate is ALSO applied as a Catalyst
-    filter before the kernel so rejected features never reach Python.
-    """
-    xk1, xk2 = x_band
-    yk1, yk2 = y_band
-    pruned = df.filter(
-        ~(
-            (F.col("bbox_max_x") < F.lit(xk1))
-            | (F.col("bbox_min_x") >= F.lit(xk2))
-            | (F.col("bbox_max_y") < F.lit(yk1))
-            | (F.col("bbox_min_y") >= F.lit(yk2))
-        )
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for f in pdf_to_features(pdf):
-                for g in clip_feature(f, 0, xk1, xk2, line_metrics):
-                    for h in clip_feature(g, 1, yk1, yk2, line_metrics):
-                        out.append(feature_to_row(h))
-            yield pd.DataFrame(out, columns=FEATURE_COLS)
-
-    return pruned.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
 def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
@@ -751,17 +666,17 @@ def _render_split_kernel(options: Options, tile_sink: TaskSink,
     return kernel
 
 
-def root_rows(batches: Iterator[pd.DataFrame], action: Optional[str] = None,
-              ) -> Iterator[pd.DataFrame]:
-    """Converted feature batches as rows of the root tile: (z, x, y) =
-    (0, 0, 0) columns in front, plus the decided ``action`` if given."""
+def tile_rows(batches: Iterator[pd.DataFrame], key: tuple,
+              action: Optional[str] = None) -> Iterator[pd.DataFrame]:
+    """Converted feature batches as rows of the tile ``key``: its (z, x,
+    y) columns in front, plus the decided ``action`` if given."""
     for pdf in batches:
         n = len(pdf)
         if n == 0:
             continue
         pdf = pdf.copy(deep=False)
-        for i, c in enumerate("zxy"):
-            pdf.insert(i, c, np.zeros(n, dtype=np.int32))
+        for i, (c, v) in enumerate(zip("zxy", key)):
+            pdf.insert(i, c, np.full(n, v, dtype=np.int32))
         if action is not None:
             pdf["action"] = action
         yield pdf
@@ -868,82 +783,3 @@ def drill_descend_stage(
             }, 1)
 
     return df.mapInPandas(kernel, schema=PARTIAL_SCHEMA)
-
-
-def _emit_rows(
-    feats_pdf: pd.DataFrame,
-    z: int,
-    x: int,
-    y: int,
-    extent: int,
-    tolerance: float,
-    line_metrics: bool,
-) -> List[dict]:
-    """Render one tile group -> TILE_ROW_SCHEMA dicts (incl. stats row)."""
-    em = TileEmitter(z, x, y, extent, tolerance, line_metrics)
-    ordered = feats_pdf.sort_values(
-        ["world_copy", "feature_seq", "slice_path"], kind="stable"
-    )
-    for f in pdf_to_features(ordered):
-        em.add_feature(f)
-    rows = []
-    for idx, tf in enumerate(em.features):
-        rows.append(
-            dict(
-                z=z,
-                x=x,
-                y=y,
-                feature_idx=idx,
-                type=tf["type"],
-                kind=tf["kind"],
-                geometry_json=json.dumps(tf["geometry"], separators=(",", ":")),
-                tags_json=(
-                    None
-                    if tf["tags"] is None
-                    else json.dumps(tf["tags"], separators=(",", ":"))
-                ),
-                id_str=tf["id_str"],
-                id_num=tf["id_num"],
-                id_float=tf["id_float"],
-                num_points=em.num_points,
-                num_simplified=em.num_simplified,
-            )
-        )
-    rows.append(
-        dict(
-            z=z,
-            x=x,
-            y=y,
-            feature_idx=-1,
-            type=None,
-            kind=None,
-            geometry_json=None,
-            tags_json=None,
-            id_str=None,
-            id_num=None,
-            id_float=None,
-            num_points=em.num_points,
-            num_simplified=em.num_simplified,
-        )
-    )
-    return rows
-
-
-def emit_stage(df: DataFrame, options: Options) -> DataFrame:
-    """Render every (z,x,y) group into tile rows (tile.rs:43-101).
-
-    The groupBy shuffle is the pyramid's only exchange per level; its key
-    (z,x,y) is exactly the key of the downstream write partitioning.
-    """
-    extent = options.tile.extent
-    tol = options.tile.tolerance
-    max_zoom = options.max_zoom
-    lm = options.tile.line_metrics
-
-    def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        tolerance = 0.0 if z == max_zoom else tol / (float(1 << z) * extent)
-        rows = _emit_rows(pdf, z, x, y, extent, tolerance, lm)
-        return pd.DataFrame(rows, columns=[f.name for f in TILE_ROW_SCHEMA.fields])
-
-    return df.groupBy("z", "x", "y").applyInPandas(render, schema=TILE_ROW_SCHEMA)

@@ -60,9 +60,8 @@ from geojson_vt_rs_spark.operators.pipeline import (
     TaskSink,
     _convert_wrap_kernel,
     _render_split_kernel,
-    convert_wrap_stage,
     render_split_stage,
-    root_rows,
+    tile_rows,
     write_parquet,
     z_part_schema,
 )
@@ -401,8 +400,9 @@ class CheckpointedPyramid:
         partials emitted in the same wave.  A root that is a leaf by
         structure (index_max_zoom 0) renders as a leaf; any other root
         renders+splits OPTIMISTICALLY, and in the (rare) case it was not
-        really a split the level runs again as a leaf level over the
-        converted rows.  A resumed build passes the ``partials`` ((z, x,
+        really a split the first wave runs again with action 'leaf'
+        (its level's staged files and frontier cleared first, as for
+        every level).  A resumed build passes the ``partials`` ((z, x,
         y, num_points, rows) of its next level's tiles, empty when only
         empty children are left), the previous level's ``pending``
         children and ``level``."""
@@ -411,14 +411,11 @@ class CheckpointedPyramid:
         if features_df is not None:
             if raw_npts is None:
                 raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
-            z2 = 1 << o.max_zoom
-            cw_args = (
-                (o.tile.tolerance / o.tile.extent) / z2,
-                o.generate_id,
-                o.tile.buffer / o.tile.extent,
+            cw = _convert_wrap_kernel(
+                (o.tile.tolerance / o.tile.extent) / (1 << o.max_zoom),
+                o.generate_id, o.tile.buffer / o.tile.extent,
                 o.tile.line_metrics,
             )
-            cw = _convert_wrap_kernel(*cw_args)
             if int(raw_npts or 0) <= fuse_bound(o):
                 # raw-gated fuse: convert+wrap chained straight into the
                 # subtree kernel in ONE mapInPandas over ONE coalesced
@@ -430,7 +427,7 @@ class CheckpointedPyramid:
                 commit, ts, clock = _start_level(out_dir, level)
                 sub = _subtree_kernel(o, ts)
                 own = _collect(features_df.coalesce(1).mapInPandas(
-                    lambda batches: sub(root_rows(cw(batches))),
+                    lambda batches: sub(tile_rows(cw(batches), (0, 0, 0))),
                     schema=PARTIAL_SCHEMA,
                 ))[1]
                 # an empty or fully-dropped input still creates the root
@@ -438,16 +435,11 @@ class CheckpointedPyramid:
                 root = [] if own else [(0, 0, 0, "empty", 0)]
                 self._publish_level(out_dir, level, commit, clock, root, own)
                 return
-            frontier = convert_wrap_stage(features_df, *cw_args).select(
-                F.lit(0).alias("z"), F.lit(0).alias("x"),
-                F.lit(0).alias("y"), "*"
-            )
             # the first turn is ONE Python pass over the raw input:
             # convert+wrap chained into the render/split kernel with the
             # root's (z, x, y, action) columns synthesized in-kernel (no
             # decision join; two chained mapInPandas would each pay the
-            # JVM<->worker serde of the whole table); `frontier` stays the
-            # mispredicted-leaf recovery source
+            # JVM<->worker serde of the whole table)
             first_wave = "leaf" if o.index_max_zoom == 0 else "split"
         elif partials:
             frontier = _read_frontier(self.spark, out_dir, level)
@@ -476,7 +468,8 @@ class CheckpointedPyramid:
                 if first_wave:
                     rs, act = _render_split_kernel(o, ts, True), first_wave
                     step2 = features_df.mapInPandas(
-                        lambda batches: rs(root_rows(cw(batches), act)),
+                        lambda batches: rs(
+                            tile_rows(cw(batches), (0, 0, 0), act)),
                         schema=PARTIAL_SCHEMA,
                     )
                 else:
@@ -506,10 +499,10 @@ class CheckpointedPyramid:
                         # still exists (lib.rs:265-295)
                         decisions = [(0, 0, 0, "empty", 0)]
                     elif act == "split" and decide(o, 0, 0, 0, tnp) == "leaf":
-                        # mispredicted: the root is really a leaf — run
-                        # the level again, as a leaf level over the
-                        # converted rows (decide reads only num_points)
-                        partials = [(0, 0, 0, tnp, 0)]
+                        # mispredicted: the root is really a leaf (decide
+                        # reads only num_points) — run the first wave
+                        # again with action 'leaf'
+                        first_wave = "leaf"
                         continue
                     else:
                         # a 'fuse' root already rendered+split: its

@@ -348,6 +348,8 @@ ONE_SHOT = {
     "antimeridian": ((1, 0, 0), True, True, False),
     "no_clip": (tile_of(139.7, 35.7, 10), False, False, False),
     "line_metrics": (tile_of(2.35, 48.85, 9), False, True, True),
+    # south of every feature: no feature row, still one stats row
+    "empty": (DRILLS[2], False, True, False),
 }
 
 
@@ -355,7 +357,8 @@ ONE_SHOT = {
 def test_one_shot_matches_core(spark, corpus, case):
     """The distributed one-shot geojson_to_tile_df renders the core
     geojson_to_tile's tile: the same feature rows in feature_idx order
-    and the same stats row."""
+    and exactly one stats row with the same counts, also for a tile no
+    feature reaches."""
     from geojson_vt_rs_spark.config import TileOptions
     from geojson_vt_rs_spark.core.tiler import geojson_to_tile
     from geojson_vt_rs_spark.plans.one_shot import geojson_to_tile_df
@@ -373,7 +376,8 @@ def test_one_shot_matches_core(spark, corpus, case):
         em.num_points, em.num_simplified)
     got = rows[rows.feature_idx >= 0].sort_values("feature_idx")
     assert got.feature_idx.tolist() == list(range(len(got)))
-    assert len(got) > 0
+    assert len(got) == len(em.features)
+    assert (len(got) == 0) == (case == "empty")
     assert [
         (int(r.type), int(r.kind), r.geometry_json,
          None if r.tags_json is None else json.loads(r.tags_json),
@@ -385,3 +389,31 @@ def test_one_shot_matches_core(spark, corpus, case):
     if case == "antimeridian":
         assert len(em.features) > len(geojson_to_tile(
             list(pdf_to_features(pdf)), z, x, y, topts, clip_=clip_).features)
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason=(
+    "integer ids above 2**53 round through float64: features_to_pdf "
+    "builds id_num from ints mixed with None at ingest, and the kernels' "
+    "frames do the same when a batch also holds a null id"))
+def test_big_int_ids_exact(spark):
+    """Integer feature ids above 2**53 reach the distributed index's root
+    exactly as the core tiler emits them, compared as ints."""
+    from geojson_vt_rs_spark.operators.pipeline import read_geojson_features
+    from geojson_vt_rs_spark.sources.geojson import load_geojson
+
+    ids = [2**53 + 1, None, 2**60 + 3]
+    gj = json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "id": i, "properties": {"n": n},
+         "geometry": {"type": "Polygon", "coordinates": [[
+             [lon, 10], [lon + 5, 10], [lon + 5, 15], [lon, 15], [lon, 10]]]}}
+        for n, (i, lon) in enumerate(zip(ids, (-60, 0, 60)))
+    ]})
+    opts = Options(fuse_max_points=1)
+    want = [f["id_num"] for f in
+            CoreTiler(load_geojson(gj), opts).get_tile(0, 0, 0).features]
+    assert want == ids
+    idx = SparkGeoJSONVT(spark, read_geojson_features(spark, gj), opts,
+                         prefer_local=False)
+    got = [f["id_num"] for f in idx.get_tile(0, 0, 0).features]
+    assert all(v is None or type(v) is int for v in got)
+    assert got == want

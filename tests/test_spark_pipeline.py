@@ -3,6 +3,7 @@ byte-identical tiles to the reference fixtures (same goldens as the local
 suite, executed through DataFrame stages + Arrow kernels)."""
 
 import json
+import os
 
 import pytest
 
@@ -93,21 +94,32 @@ def test_spark_tile_corpus(spark, inp, exp, imz, imp, lm):
 
 def test_feature_schema_parquet_roundtrip(spark, tmp_path):
     """The flat feature encoding persists losslessly through parquet —
-    the property that makes leaf-feature checkpoints exact."""
+    the property that makes leaf-feature checkpoints exact.  Input: the
+    generated corpus (polygons, polylines, antimeridian straddlers)
+    through the pyramid's convert+wrap kernel."""
     import numpy as np
 
-    from geojson_vt_rs_spark.operators.pipeline import convert_stage
-    from geojson_vt_rs_spark.operators.schema import pdf_to_features
+    from geojson_vt_rs_spark.operators.pipeline import _convert_wrap_kernel
+    from geojson_vt_rs_spark.operators.schema import (
+        FEATURE_SCHEMA,
+        pdf_to_features,
+    )
+    from geojson_vt_rs_spark.sources.synth_features import generate_features
 
-    feats = read_geojson_features(spark, fixture_path("us-states.json"))
-    conv = convert_stage(feats, 1e-7, False)
+    feats = generate_features(spark, 300, partitions=4)
+    conv = feats.mapInPandas(
+        _convert_wrap_kernel(1e-7, False, 64 / 4096, False),
+        schema=FEATURE_SCHEMA,
+    )
     path = str(tmp_path / "feats")
     conv.write.parquet(path)
     back = spark.read.parquet(path)
 
-    a = conv.toPandas().sort_values("feature_seq", ignore_index=True)
-    b = back.toPandas().sort_values("feature_seq", ignore_index=True)
-    assert len(a) == len(b)
+    order = ["feature_seq", "world_copy", "slice_path"]
+    a = conv.toPandas().sort_values(order, ignore_index=True)
+    b = back.toPandas().sort_values(order, ignore_index=True)
+    assert len(a) == len(b) > 300
+    assert set(a.world_copy) == {0, 1, 2}
     for fa, fb in zip(pdf_to_features(a), pdf_to_features(b)):
         assert np.array_equal(fa.xs, fb.xs)
         assert np.array_equal(fa.ys, fb.ys)
@@ -204,8 +216,9 @@ def test_float_feature_ids(spark):
 
 
 def test_convert_wrap_point_fast_path_equivalence(spark):
-    """The fused convert+wrap stage's vectorized single-point path must
-    be byte-identical to the composed per-feature stages on a corpus
+    """The convert+wrap kernel (run through mapInPandas) with its
+    vectorized single-point path must be byte-identical to the core
+    convert + wrap on the driver (the path the goldens pin) on a corpus
     spanning the fast path (interior points), its exclusions
     (antimeridian-buffer points, poles, multipoints, lines, polygons),
     and both generate_id settings."""
@@ -218,14 +231,13 @@ def test_convert_wrap_point_fast_path_equivalence(spark):
         GEOM_POLYGON,
         make_feature,
     )
-    from geojson_vt_rs_spark.operators.pipeline import (
-        convert_stage,
-        convert_wrap_stage,
-        wrap_stage,
-    )
+    from geojson_vt_rs_spark.core.project import convert
+    from geojson_vt_rs_spark.core.wrap import wrap
+    from geojson_vt_rs_spark.operators.pipeline import _convert_wrap_kernel
     from geojson_vt_rs_spark.operators.schema import (
         FEATURE_SCHEMA,
         create_feature_df,
+        feature_to_row,
         features_to_pdf,
     )
 
@@ -300,19 +312,22 @@ def test_convert_wrap_point_fast_path_equivalence(spark):
         return out
 
     for gen_id in (False, True):
-        fused = canon(
-            convert_wrap_stage(df, tol, gen_id, buf, False).collect()
-        )
-        composed = canon(
-            wrap_stage(convert_stage(df, tol, gen_id), buf, False).collect()
-        )
-        assert fused == composed and len(fused) >= len(feats)
+        fused = canon(df.mapInPandas(
+            _convert_wrap_kernel(tol, gen_id, buf, False),
+            schema=FEATURE_SCHEMA,
+        ).collect())
+        core = canon([
+            feature_to_row(f)
+            for f in wrap(convert(feats, tol, gen_id), buf, False)
+        ])
+        assert fused == core and len(fused) > len(feats)
 
 
 def test_first_turn_modes_leaf_recovery_and_empty(spark, tmp_path):
     """The raw-gated first level: (a) optimistic split over a root that
-    is REALLY a leaf recovers exactly (render rows kept, leaf features
-    retained from the frontier, no children); (b) an empty input still
+    is REALLY a leaf recovers exactly by rerunning the first wave as a
+    leaf (the root's rows and leaf features, no children), in the index
+    and in the parquet store; (b) an empty input still
     registers the root through both the fuse-all and optimistic routes
     (lib.rs:265-295), in the index and in the parquet store."""
     from geojson_vt_rs_spark.plans.checkpoint import CheckpointedPyramid
@@ -354,6 +369,23 @@ def test_first_turn_modes_leaf_recovery_and_empty(spark, tmp_path):
     # local-path cross-check: identical z0 tile feature count
     idx_loc = SparkGeoJSONVT(spark, pts_df(5), o, prefer_local=True)
     assert len(idx_loc.get_tile(0, 0, 0).features) == 5
+
+    # the store's rerun of the first wave as a leaf: one tile, its 5
+    # leaves, no child rows of the mispredicted split, the index's root
+    cp = CheckpointedPyramid(spark, o)
+    out = str(tmp_path / "mispredicted")
+    assert cp.run(pts_df(5), out)["total_tiles"] == 1
+    assert cp._tile_keys(out) == cp._leaf_keys[out] == {(0, 0, 0)}
+    assert spark.read.parquet(f"{out}/leaves").count() == 5
+    level_1 = os.path.join(out, "frontier", "level_1")
+    assert not os.path.isdir(level_1) or not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(level_1) for f in fs)
+    rows = cp.read_tile(out, 0, 0, 0).toPandas()
+    assert [
+        (int(r.type), r.geometry_json, json.loads(r.tags_json))
+        for r in rows.itertuples(index=False)
+    ] == [(f["type"], json.dumps(f["geometry"], separators=(",", ":")),
+           f["tags"]) for f in t.features]
 
     # (b) empty input, fuse-all route (raw 0 <= default fuse_bound)
     empty = pts_df(0)
