@@ -933,8 +933,7 @@ def _sql_cosine_near_dup() -> str:
 
 
 def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows (the batch shape of the
-    streaming windowed agg in streaming/ingest.py)."""
+    """Tumbling 1-hour event-time windows per event type."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(

@@ -21,8 +21,6 @@ Layout:
               mercator math, text analysis) — JVM-side, no Python UDFs.
   plans/      high-level engine APIs: GeoJSONVT index, geojson_to_tile,
               spatial joins (PIP, kNN), raster mosaic pipeline.
-  streaming/  Structured Streaming ingest (foreachBatch into the same
-              kernels).
 """
 
 from geojson_vt_rs_spark.config import Options, TileOptions

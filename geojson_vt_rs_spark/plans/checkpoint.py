@@ -247,32 +247,13 @@ class CheckpointedPyramid:
     manifest is written last.  On resume, staging leftovers and published
     level dirs without a manifest are removed before the level recomputes
     (deterministic content), so readers never see duplicates and need no
-    dedupe.  With ``iceberg=True`` (pyiceberg required — absent in this
-    container) a real snapshot commit subsumes the JSON manifest as the
-    commit point (plans/iceberg_sink.py).  ``level`` is a string
-    partition column readers may ignore; ``z`` remains a partition
-    column so point lookups still prune.
+    dedupe.  ``level`` is a string partition column readers may ignore;
+    ``z`` remains a partition column so point lookups still prune.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        options: Optional[Options] = None,
-        iceberg: bool = False,
-        catalog_kwargs: Optional[dict] = None,
-    ):
-        """``iceberg=True`` layers real snapshot commits over the level
-        publishes (plans/iceberg_sink.py): files are still written
-        distributed + renamed into place, but the Iceberg snapshot is
-        the commit point and carries the manifest; the JSON manifest
-        becomes a read cache written after the commit.  Requires
-        pyiceberg (ImportError otherwise — absent in this container, so
-        the staged-rename protocol below is the tested default)."""
+    def __init__(self, spark: SparkSession, options: Optional[Options] = None):
         self.spark = spark
         self.options = options or Options()
-        self._iceberg = iceberg
-        self._catalog_kwargs = catalog_kwargs
-        self._sinks: dict = {}
         # per-store memo of the tile keys (the reference's in-memory tile
         # memo, lib.rs:145-150) and of the keys of the tiles that retain
         # leaf features: loaded together with ONE stats-row job
@@ -291,50 +272,11 @@ class CheckpointedPyramid:
         self._tile_dfs: dict = {}
         self._tile_dfs_cap = 256
 
-    def _sink(self, out_dir: str):
-        if not self._iceberg:
-            return None
-        if out_dir not in self._sinks:
-            from geojson_vt_rs_spark.plans.iceberg_sink import IcebergTileSink
-
-            self._sinks[out_dir] = IcebergTileSink(
-                out_dir, self._catalog_kwargs
-            )
-        return self._sinks[out_dir]
-
-    def _commit_manifest(
-        self, out_dir: str, name: str, payload: dict,
-        tiles_dir: str = "", leaves_dir: str = "",
-    ) -> None:
-        sink = self._sink(out_dir)
-        if sink is not None:
-            # snapshot commit FIRST (the commit point); JSON after (cache)
-            if leaves_dir and os.path.isdir(leaves_dir):
-                sink.commit_level(
-                    "leaves", leaves_dir, dict(payload, table="leaves")
-                )
-            sink.commit_level(
-                "tiles",
-                tiles_dir if os.path.isdir(tiles_dir) else "",
-                payload,
-            )
-        _write_manifest(out_dir, name, payload)
-        self._invalidate_memos(out_dir)  # tile set changed; reload lazily
-
     def _invalidate_memos(self, out_dir: str) -> None:
         self._keys.pop(out_dir, None)
         self._leaf_keys.pop(out_dir, None)
         for k in [k for k in self._tile_dfs if k[0] == out_dir]:
             self._tile_dfs.pop(k).unpersist()
-
-    def _get_manifest(self, out_dir: str, name: str) -> Optional[dict]:
-        m = _read_manifest(out_dir, name)
-        if m is None and self._iceberg and name.startswith("level_"):
-            sink = self._sink(out_dir)
-            m = sink.read_manifest("tiles", int(name.split("_")[1]))
-            if m is not None:
-                _write_manifest(out_dir, name, m)  # restore the cache
-        return m
 
     def run(
         self, features_df: DataFrame, out_dir: str,
@@ -347,12 +289,12 @@ class CheckpointedPyramid:
         os.makedirs(out_dir, exist_ok=True)
         _sweep_drill_orphans(out_dir)
         level = 0
-        while self._get_manifest(out_dir, f"level_{level}") is not None:
+        while _read_manifest(out_dir, f"level_{level}") is not None:
             level += 1
         if level == 0:
             self._build(out_dir, features_df, raw_npts)
             return self.summary(out_dir)
-        m = self._get_manifest(out_dir, f"level_{level - 1}")
+        m = _read_manifest(out_dir, f"level_{level - 1}")
         pending = [tuple(c) for c in m.get("pending_children", [])]
         partials = [tuple(p) for p in m.get("next_partials", [])]
         if m["n_children"] and not partials:
@@ -549,28 +491,23 @@ class CheckpointedPyramid:
         ]
         _write_stats(commit.stg_tiles, stats)
         commit.publish()
-        self._commit_manifest(
-            out_dir,
-            f"level_{level}",
-            dict(
-                level=level,
-                n_tiles=len(stats),
-                n_tile_feature_rows=sum(t[2] for t in own.values()),
-                n_leaf_feature_rows=sum(t[3] for t in own.values()),
-                n_children=sum(p[4] for p in nxt),
-                next_partials=[list(p) for p in nxt],
-                pending_children=list(pending),
-                wall_sec=round(time.time() - clock[0], 3),
-                steal_frac=steal_frac(clock[1], cpu_ticks()),
-            ),
-            commit.fin_tiles,
-            commit.fin_leaves,
-        )
+        _write_manifest(out_dir, f"level_{level}", dict(
+            level=level,
+            n_tiles=len(stats),
+            n_tile_feature_rows=sum(t[2] for t in own.values()),
+            n_leaf_feature_rows=sum(t[3] for t in own.values()),
+            n_children=sum(p[4] for p in nxt),
+            next_partials=[list(p) for p in nxt],
+            pending_children=list(pending),
+            wall_sec=round(time.time() - clock[0], 3),
+            steal_frac=steal_frac(clock[1], cpu_ticks()),
+        ))
+        self._invalidate_memos(out_dir)  # tile set changed; reload lazily
 
     def summary(self, out_dir: str) -> dict:
         levels = []
         i = 0
-        while (m := self._get_manifest(out_dir, f"level_{i}")) is not None:
+        while (m := _read_manifest(out_dir, f"level_{i}")) is not None:
             levels.append(m)
             i += 1
         return dict(

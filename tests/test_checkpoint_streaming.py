@@ -1,4 +1,5 @@
-"""Checkpointed pyramid / mosaic resumability + streaming ingest tests."""
+"""Checkpointed pyramid / mosaic resumability tests: the store's staged-
+rename + JSON-manifest commit protocol, resume, crash windows and drills."""
 
 import glob
 import json
@@ -160,61 +161,39 @@ def test_checkpointed_mosaic_resume(spark, tmp_path):
     imgs.unpersist()
 
 
-def test_streaming_cell_counts(spark, tmp_path):
-    from geojson_vt_rs_spark.plans.spatial import with_cells, with_footprints
-    from geojson_vt_rs_spark.sources.images import generate_images
-    from geojson_vt_rs_spark.streaming.ingest import stream_cell_counts
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    imgs = generate_images(spark, 300, 4)
-    imgs.write.parquet(src)
-
-    stream_cell_counts(spark, src, out, ckpt, zoom=5)
-
-    got = spark.read.parquet(out)
-    batch = (
-        with_cells(with_footprints(spark.read.parquet(src)), 5)
-        .groupBy("cx", "cy")
-        .count()
-    )
-    got_total = got.agg({"n": "sum"}).collect()[0][0]
-    assert got_total == 300
-    assert got.select("cx", "cy").distinct().count() == batch.count()
-
-
 def test_checkpointed_get_tile_drilldown(spark, tmp_path):
     """Parquet-store get_tile: memo hit, drill-down miss (creates and
     persists new tiles), and EMPTY result for feature-less regions —
-    golden-compared against the in-memory index."""
-    import json as _json
-
+    compared against the in-memory index on the generated corpus."""
     from geojson_vt_rs_spark.plans.pyramid import SparkGeoJSONVT
+    from test_route_parity import tile_of
 
     out = str(tmp_path / "pyr2")
-    feats = read_geojson_features(spark, "/root/reference/fixtures/us-states.json")
+    feats = load_corpus(spark, "generated")
     opts = Options()  # index_max_zoom=5, default stops at z0 leaf
     cp = CheckpointedPyramid(spark, opts)
     cp.run(feats, out)
 
     mem = SparkGeoJSONVT(spark, feats, opts)  # adaptive local reference
 
-    # drill-down miss -> must match the in-memory engine's tile exactly
+    # drill-down miss (the first generated metro) -> must match the
+    # in-memory engine's tile exactly
     got = cp.get_tile(out, 7, 37, 48).toPandas()
     want = mem.get_tile(7, 37, 48)
+    assert len(want.features) > 0
     assert len(got) == len(want.features)
     for i, tf in enumerate(want.features):
         row = got[got.feature_idx == i].iloc[0]
         assert row["type"] == tf["type"]
-        assert _json.loads(row["geometry_json"]) == tf["geometry"]
+        assert json.loads(row["geometry_json"]) == tf["geometry"]
 
-    # now a memo hit (persisted by the drill) — identical
+    # now a memo hit (persisted by the drill) — identical rows
+    assert (7, 37, 48) in cp._tile_keys(out)
     again = cp.get_tile(out, 7, 37, 48).toPandas()
-    assert len(again) == len(got)
+    assert again.equals(got)
 
-    # feature-less region -> empty tile
-    empty = cp.get_tile(out, 11, 800, 400).toPandas()
+    # feature-less region (south of every feature) -> empty tile
+    empty = cp.get_tile(out, *tile_of(-140.0, -82.0, 11)).toPandas()
     assert len(empty) == 0
 
 
@@ -275,31 +254,6 @@ def test_checkpointed_pyramid_golden_corpus(spark, tmp_path):
     # tiles absent from the fixture must be feature-less in the store
     for key in set(actual.keys()) - set(expected.keys()):
         assert actual[key] == [], key
-
-
-def test_streaming_replay_idempotent(spark, tmp_path):
-    """Simulated at-least-once replay: wiping the stream checkpoint makes
-    availableNow reprocess the whole backlog under the same epoch ids —
-    the per-epoch overwrite sink must leave totals unchanged (no
-    double-append)."""
-    import shutil
-
-    from geojson_vt_rs_spark.sources.images import generate_images
-    from geojson_vt_rs_spark.streaming.ingest import stream_cell_counts
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    generate_images(spark, 200, 4).write.parquet(src)
-
-    stream_cell_counts(spark, src, out, ckpt, zoom=5)
-    first = spark.read.parquet(out).agg({"n": "sum"}).collect()[0][0]
-    assert first == 200
-
-    shutil.rmtree(ckpt)  # lose the commit log -> full replay
-    stream_cell_counts(spark, src, out, ckpt, zoom=5)
-    again = spark.read.parquet(out).agg({"n": "sum"}).collect()[0][0]
-    assert again == 200
 
 
 def canon_rows(pdf):
@@ -454,126 +408,6 @@ def test_checkpointed_exactly_once_after_crash(spark, tmp_path, corpus):
             assert got[k].equals(tile), k
 
 
-def test_streaming_stateful_dedupe(spark, tmp_path):
-    """applyInPandasWithState dedupe: first occurrence per phash wins
-    across micro-batches AND across query restarts (state checkpointed);
-    replayed epochs stay exactly-once via the per-epoch overwrite sink."""
-    import pandas as pd
-
-    from geojson_vt_rs_spark.sources.images import generate_images
-    from geojson_vt_rs_spark.streaming.stateful import stream_dedupe_images
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    # two files -> two micro-batches (maxFilesPerTrigger=1) with
-    # overlapping phashes across them
-    generate_images(spark, 150, 2).write.parquet(src + "/f1")
-    spark.read.parquet(src + "/f1").write.mode("append").parquet(src)
-    stream_dedupe_images(spark, src, out, ckpt)
-    first = spark.read.parquet(out).toPandas()
-    want_phashes = {
-        r["phash"]
-        for r in generate_images(spark, 150, 2).select("phash").collect()
-    }
-    assert set(first["phash"]) == want_phashes
-    assert not first["phash"].duplicated().any()
-    # streaming dedupe keeps the FIRST-ARRIVED representative: each
-    # emitted image_id must belong to its phash group (batch order
-    # determines which member, so global-min is not guaranteed)
-    members = {}
-    for r in generate_images(spark, 150, 2).select(
-        "phash", "image_id"
-    ).collect():
-        members.setdefault(r["phash"], set()).add(r["image_id"])
-    for ph, iid in zip(first["phash"], first["image_id"]):
-        assert iid in members[ph]
-
-    # restart with MORE data: rows 0..149 repeat + 150..299 are new;
-    # only never-seen phashes may be emitted
-    g2 = generate_images(spark, 300, 2)
-    g2.write.mode("append").parquet(src)
-    stream_dedupe_images(spark, src, out, ckpt)
-    both = spark.read.parquet(out).toPandas()
-    assert not both["phash"].duplicated().any()
-    all_phashes = {r["phash"] for r in g2.select("phash").collect()}
-    assert set(both["phash"]) == all_phashes
-
-
-def test_streaming_watermarked_windows_drop_late(spark, tmp_path):
-    """Watermarked tumbling windows (append mode): a row arriving after
-    the watermark passed its window's end is DROPPED — the closed
-    window's count excludes it; an in-watermark straggler still counts."""
-    import datetime as dt
-
-    from geojson_vt_rs_spark.streaming.ingest import (
-        EVENT_SCHEMA,
-        stream_windowed_event_counts,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    def rows(*ts_hours):
-        base = dt.datetime(2026, 1, 1)
-        return [
-            (i, base + dt.timedelta(hours=h), 1, "click", 1.0, None)
-            for i, h in enumerate(ts_hours)
-        ]
-
-    # run 1: hours 0.5, 1.5, 5.0 -> watermark persists in the stream
-    # checkpoint as 5h - 1h = 4h, closing the [0,1) and [1,2) windows
-    spark.createDataFrame(rows(0.5, 1.5, 5.0), EVENT_SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    stream_windowed_event_counts(spark, src, out, ckpt)
-    got1 = {
-        r["win_start"].hour: r["n"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got1.get(0) == 1 and got1.get(1) == 1
-    assert 5 not in got1  # its window end is past the watermark
-
-    # run 2 (resumes the checkpointed watermark=4h): a LATE row for hour
-    # 0.7 (window closed -> DROPPED) and an in-watermark row for 4.5
-    spark.createDataFrame(rows(0.7, 4.5), EVENT_SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    stream_windowed_event_counts(spark, src, out, ckpt)
-    got2 = {
-        r["win_start"].hour: r["n"]
-        for r in spark.read.parquet(out).collect()
-    }
-    # closed windows unchanged: the late 0.7 row was dropped
-    assert got2.get(0) == 1
-    assert got2.get(1) == 1
-    # [4,5) and [5,6) still open (watermark stays 4h; 4.5 is buffered)
-    assert 4 not in got2 and 5 not in got2
-
-    # run 3 — the EXACT allowed-lateness boundary: with watermark=4h, a
-    # row at 3.5 falls in [3,4) whose end EQUALS the watermark -> the
-    # window is already finalized, the row is dropped (window.end <=
-    # watermark is the eviction predicate).  6.5 advances the watermark
-    # to 5.5, which closes [4,5) and emits the buffered 4.5 row; [5,6)
-    # (end 6 > 5.5) stays open.
-    spark.createDataFrame(rows(3.5, 6.5), EVENT_SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    stream_windowed_event_counts(spark, src, out, ckpt)
-    got3 = {
-        r["win_start"].hour: r["n"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert 3 not in got3  # boundary row dropped: end == watermark
-    assert got3.get(4) == 1  # straggler emitted once the window closed
-    assert 5 not in got3 and 6 not in got3  # still open
-    assert got3.get(0) == 1 and got3.get(1) == 1  # history untouched
-
-
 @pytest.mark.parametrize("corpus", CORPORA)
 def test_drilldown_crash_window_retry(spark, tmp_path, corpus):
     """get_tile drill-down commit protocol: simulate a crash AFTER the
@@ -604,87 +438,6 @@ def test_drilldown_crash_window_retry(spark, tmp_path, corpus):
     assert os.path.isdir(os.path.join(out, "tiles", "level=drill_7_37_48"))
     assert len(again) == len(want)
     assert not again.duplicated(subset=["feature_idx"]).any()
-
-
-def test_iceberg_sink_gating(spark, tmp_path):
-    """iceberg=True routes level commits through snapshot commits when
-    pyiceberg exists; without it the constructor path raises a clear
-    ImportError at first use and the default protocol is unaffected."""
-    from geojson_vt_rs_spark.plans.iceberg_sink import iceberg_available
-
-    out = str(tmp_path / "pyr_ib")
-    feats = read_geojson_features(
-        spark, "/root/reference/fixtures/us-states.json"
-    )
-    opts = Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
-    cp = CheckpointedPyramid(spark, opts, iceberg=True)
-    if not iceberg_available():
-        with pytest.raises(ImportError, match="pyiceberg"):
-            cp.run(feats, out)
-        # the default (rename+JSON) protocol is untouched by the flag
-        s = CheckpointedPyramid(spark, opts).run(feats, out)
-        assert s["total_tiles"] == 17
-        return
-    # with pyiceberg present: full roundtrip + snapshot-backed resume
-    s1 = cp.run(feats, out)
-    assert s1["total_tiles"] == 17
-    # wipe the JSON manifest cache; resume must re-derive it from the
-    # snapshot log and skip all committed levels
-    shutil.rmtree(os.path.join(out, "_manifests"))
-    s2 = cp.run(feats, out)
-    assert s2["total_tiles"] == s1["total_tiles"]
-
-
-@pytest.mark.parametrize("corpus", CORPORA)
-def test_iceberg_sink_snapshot_branch(spark, tmp_path, monkeypatch, corpus):
-    """Execute the SNAPSHOT-COMMIT branch of the Iceberg sink (absent
-    pyiceberg normally leaves it untested) against a faithful API double
-    whose catalog state is durable on disk: full run commits one
-    snapshot per level with the manifest in table properties; wiping the
-    JSON manifest cache must resume purely from the snapshot log; an
-    all-empty commit_level call (zero parquet files, no table yet) must
-    create the table from the engine schema instead of crashing."""
-    from geojson_vt_rs_spark.plans import iceberg_sink
-
-    if iceberg_sink.iceberg_available():
-        pytest.skip("real pyiceberg present; gating test covers it")
-    import fake_pyiceberg
-
-    fake_pyiceberg.install(monkeypatch)
-    assert iceberg_sink.iceberg_available()
-
-    out = str(tmp_path / "pyr_ibs")
-    feats = load_corpus(spark, corpus)
-    opts = Options(max_zoom=14, index_max_zoom=3, index_max_points=200)
-    cp = CheckpointedPyramid(spark, opts, iceberg=True)
-    s1 = cp.run(feats, out)
-    if corpus == "us_states":
-        assert s1["total_tiles"] == 17
-    else:
-        assert s1["total_tiles"] == core_total(spark, feats, opts)
-
-    # snapshots carry the level manifests in table properties
-    sink = cp._sink(out)
-    for lvl in range(s1["levels"]):
-        m = sink.read_manifest("tiles", lvl)
-        assert m is not None and m["level"] == lvl
-
-    # wipe the JSON manifest cache: resume must re-derive every level
-    # from the snapshot log (no recompute -> same totals, cache restored)
-    shutil.rmtree(os.path.join(out, "_manifests"))
-    s2 = CheckpointedPyramid(spark, opts, iceberg=True).run(feats, out)
-    assert s2["total_tiles"] == s1["total_tiles"]
-    assert s2["levels"] == s1["levels"]
-    assert os.path.isdir(os.path.join(out, "_manifests"))
-
-    # all-empty level commit on a fresh store: engine-schema fallback
-    from geojson_vt_rs_spark.plans.iceberg_sink import IcebergTileSink
-
-    empty_store = str(tmp_path / "pyr_ib_empty")
-    os.makedirs(empty_store)
-    sink2 = IcebergTileSink(empty_store)
-    sink2.commit_level("tiles", "", dict(level=0, n_tiles=0))
-    assert sink2.read_manifest("tiles", 0) == {"level": 0, "n_tiles": 0}
 
 
 @pytest.mark.parametrize("corpus", CORPORA)

@@ -5,10 +5,12 @@ the exact input is unreproducible; sources/synth_features.generate_points
 is the deterministic stand-in: N single-Point features (default 10^6),
 20% clustered on the benchmark's get_tile(12,1171,1566) target tile.
 
-Measures, per parallelism level (default local[8] vs local[32] — the
-same-job-two-cluster-sizes evidence rule):
+Measures, per parallelism level (local[CPUS//4] vs local[CPUS], CPUS =
+SPARK_GRAFT_CPUS or the host's CPU count — the same job at N and 4N
+cores):
   * LargeGeoJSONTileIndex  — distributed pyramid build wall + tiles
-    (Options::default() like the reference: imz=5, imp=100000)
+    (Options::default() like the reference: imz=5, imp=100000), plus
+    each level's wall and steal from its manifest
   * LargeGeoJSONGetTile    — get_tile(12,1171,1566): first call is a
     cold drill-down (Spark jobs); repeat calls are memo hits
 Steal%/run is recorded like tools/measure_scaling.py (this VM has
@@ -32,7 +34,8 @@ NS = [
         os.environ.get("SPARK_GRAFT_LARGE_N", "1000000,4000000"),
     ).split(",")
 ]
-CPU_LEVELS = (8, 32)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+CPU_LEVELS = (max(1, CPUS // 4), CPUS)
 
 
 def run_level(cpus: int, N: int) -> dict:
@@ -84,6 +87,8 @@ def run_level(cpus: int, N: int) -> dict:
         build_points_per_sec=round(N / build, 1),
         build_steal_pct=round(100 * steal_build, 1),
         tiles=s["total_tiles"],
+        level_walls=[m["wall_sec"] for m in s["manifests"]],
+        level_steals=[m["steal_frac"] for m in s["manifests"]],
         get_tile_cold_sec=round(cold, 3),
         get_tile_warm_sec=round(warm, 4),
         target_tile_features=int(n_feat),
