@@ -13,6 +13,11 @@ Scale notes (100 TB shape):
     return only per-tile partials, from which the driver decides the
     next level (plans/checkpoint.py) — never a driver collect of
     feature rows.
+  * a level after the first reads its input in the tasks too
+    (_frontier_reader, the writer's twin): the driver lists the
+    previous level's child files and packs them into tasks with Spark's
+    own file-scan arithmetic (pack_files), so frontier rows never cross
+    the JVM and the task count shrinks with the frontier.
   * a level's only exchange is fused_stage's repartition(z, x, y),
     which clusters the rows of its bounded 'fuse' tiles for whole-
     subtree tasks; the one-shot geojson_to_tile_df (plans/one_shot.py)
@@ -380,6 +385,83 @@ class _TaskWriter:
         return self.counts
 
 
+def frontier_files(d: str) -> list:
+    """(path, size) of the files a reader of the directory ``d`` sees,
+    sorted by path.  As in Spark's file index, names that start with
+    '.' or '_' are hidden: write_parquet's temp files among them.  A
+    missing ``d`` raises, as a Spark scan of it would."""
+    import os
+
+    return sorted(
+        (e.path, e.stat().st_size) for e in os.scandir(d)
+        if e.is_file() and not e.name.startswith((".", "_"))
+    )
+
+
+def pack_files(files: list, max_bytes: int, open_cost: int,
+               parallelism: int) -> list:
+    """``files`` ((path, size)) packed into task bins of paths the way
+    Spark's file scan packs whole files (FilePartition): each file costs
+    its size plus ``open_cost``, the cap is min(max_bytes, max(open_cost,
+    total cost / parallelism)), and the bins fill next-fit over the
+    files sorted by size, largest first (ties keep ``files``' order)."""
+    total = sum(size + open_cost for _, size in files)
+    cap = min(max_bytes, max(open_cost, total // max(parallelism, 1)))
+    bins, cur, used = [], [], 0
+    for path, size in sorted(files, key=lambda f: -f[1]):
+        if cur and used + size > cap:
+            bins.append(cur)
+            cur, used = [], 0
+        cur.append(path)
+        used += size + open_cost
+    if cur:
+        bins.append(cur)
+    return bins
+
+
+def _tile_key(z, x, y):
+    """One int64 per (z, x, y), scalar or array (z <= 24 < 2**5 and
+    x, y < 2**24 fit the 5 + 29 + 29 bits)."""
+    return ((np.asarray(z, np.int64) << 58) | (np.asarray(x, np.int64) << 29)
+            | np.asarray(y, np.int64))
+
+
+def _frontier_reader(bins: list, actions: dict, batch_size: int):
+    """The task side of a level's frontier read, _TaskWriter's twin: a
+    generator over the ``id`` batches of a spark.range with one row per
+    bin, yielding the rows of that bin's frontier files (TILED_COLS, in
+    Arrow batches of ``batch_size`` rows, the frames mapInPandas would
+    hand over) with the ``action`` of their tile from ``actions``
+    ((z, x, y) -> action).  Rows of tiles without an action (the
+    level's 'fuse' tiles) are dropped."""
+    keys = pd.Index(_tile_key(*np.array(list(actions), np.int64).reshape(
+        -1, 3).T))
+    acts = np.array(list(actions.values()), dtype=object)
+
+    def tag(pdf: pd.DataFrame) -> pd.DataFrame:
+        at = keys.get_indexer(_tile_key(
+            pdf["z"].to_numpy(), pdf["x"].to_numpy(), pdf["y"].to_numpy()))
+        keep = at >= 0
+        if not keep.all():
+            pdf = pdf.loc[keep].reset_index(drop=True)
+            at = at[keep]
+        pdf["action"] = acts[at]
+        return pdf
+
+    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow.parquet as pq
+
+        for ids in batches:
+            for i in ids["id"].tolist():
+                for path in bins[i]:
+                    with pq.ParquetFile(path) as pf:
+                        for rb in pf.iter_batches(batch_size=batch_size,
+                                                  columns=TILED_COLS):
+                            yield tag(rb.to_pandas())
+
+    return read
+
+
 def _tile_sums(frames: list) -> dict:
     """(z, x, y) -> (num_points sum, row count) over the frames' rows:
     a pass's child partials, or the parent partials of its input."""
@@ -610,10 +692,11 @@ def _partials_frame(per_tile: dict, sub_idx=None) -> pd.DataFrame:
 
 
 def render_split_stage(
-    df: DataFrame, options: Options, tile_sink: TaskSink
+    spark: SparkSession, frontier: str, actions: dict, options: Options,
+    tile_sink: TaskSink,
 ) -> DataFrame:
     """ONE Python pass per pyramid level: renders every row and, for
-    rows whose tile the driver decided to split (action == 'split'), also
+    rows whose tile the driver decided to split (action 'split'), also
     clips the child features — the VtFeature is constructed once and
     shared by both, and the level runs one Spark job instead of a render
     job plus a split job.
@@ -621,27 +704,40 @@ def render_split_stage(
     The split side has a columnar fast path: rows whose bbox makes every
     child band a trivial accept or reject pass through as pandas slices
     with no per-feature Python; only straddling rows are clipped.
-    Input must carry the driver's ``action`` column ('leaf'/'split').
 
-    The tasks write the level's outputs to ``tile_sink`` themselves
-    (_TaskWriter): rendered features to the staged tiles, the input rows
-    of 'leaf' tiles to the staged leaves, the child rows to the next
-    level's frontier.  Only the partials come back (PARTIAL_SCHEMA): the
-    child partials and each rendered tile's counters, so collecting them
-    is the level's one Spark job."""
-    return df.mapInPandas(_render_split_kernel(options, tile_sink),
-                          schema=PARTIAL_SCHEMA)
+    The rows are the level's ``frontier`` files, read by the tasks
+    themselves (_frontier_reader): the driver lists the files and packs
+    them into task bins with Spark's own file-scan confs (pack_files),
+    and each task tags its rows with their tile's action from
+    ``actions`` ((z, x, y) -> 'leaf' / 'split'; rows of other tiles are
+    dropped).  No frontier row crosses the JVM.  The tasks write the
+    level's outputs to ``tile_sink`` themselves (_TaskWriter): rendered
+    features to the staged tiles, the input rows of 'leaf' tiles to the
+    staged leaves, the child rows to the next level's frontier.  Only
+    the partials come back (PARTIAL_SCHEMA): the child partials and each
+    rendered tile's counters, so collecting them is the level's one
+    Spark job."""
+    # the session's SQLConf: the typed values Spark's own file scan
+    # reads, defaults and byte-size strings resolved
+    conf = spark._jsparkSession.sessionState().conf()
+    bins = pack_files(frontier_files(frontier), conf.filesMaxPartitionBytes(),
+                      conf.filesOpenCostInBytes(),
+                      spark.sparkContext.defaultParallelism)
+    read = _frontier_reader(bins, actions, conf.arrowMaxRecordsPerBatch())
+    rs = _render_split_kernel(options, tile_sink)
+    return spark.range(0, len(bins), 1, max(len(bins), 1)).mapInPandas(
+        lambda batches: rs(read(batches)), schema=PARTIAL_SCHEMA)
 
 
 def _render_split_kernel(options: Options, tile_sink: TaskSink,
                          emit_parent_cagg: bool = False):
     """The render/split pandas kernel (see render_split_stage) as a
-    reusable generator factory — composable behind the convert+wrap
-    kernel for the fused first-turn wave.  ``emit_parent_cagg=True``
-    additionally emits per-batch partials of the INPUT tiles' own point
-    sums with sub_idx = -1: the first wave decides the root's action
-    AFTER rendering from these, so the first level needs no separate
-    decision agg job."""
+    reusable generator factory — composed behind the frontier reader in
+    render_split_stage and behind the convert+wrap kernel for the fused
+    first-turn wave.  ``emit_parent_cagg=True`` additionally emits
+    per-batch partials of the INPUT tiles' own point sums with sub_idx =
+    -1: the first wave decides the root's action AFTER rendering from
+    these, so the first level needs no separate decision agg job."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)

@@ -31,10 +31,16 @@ same way (``_write_stats``), publishes the staged tables with one
 ``os.rename`` each (``_Commit``) and writes the manifest to a temp file
 it ``os.replace``s into place.  Before a level's pass runs, the driver
 removes that level's staging dirs and the frontier dir the pass writes,
-so no file of an earlier attempt survives.  So ``out_dir`` must be ONE
-shared POSIX path: the same directory for the driver and every
-executor, with atomic rename within it.  Local mode and a shared POSIX
-mount satisfy this; an object store without atomic rename does not.
+so no file of an earlier attempt survives.  The tasks also READ the
+store: a render/split level's tasks read the frontier files the
+previous level's tasks wrote (operators/pipeline.py ``frontier_files``
+lists them on the driver, ``_frontier_reader`` reads them in the task),
+and like Spark's file index the listing skips names that start with
+'.' or '_', so a temp file a killed writer left behind is never read.
+So ``out_dir`` must be ONE shared POSIX path: the same directory for
+the driver and every executor, with atomic rename within it.  Local
+mode and a shared POSIX mount satisfy this; an object store without
+atomic rename does not.
 The in-memory index (plans/pyramid.py SparkGeoJSONVT) is this store,
 built and drilled in a ``tempfile.TemporaryDirectory`` on the driver:
 every session of this engine is ``local[N]`` (operators/session.py), so
@@ -216,7 +222,9 @@ def _frontier_dir(out_dir: str, level: int) -> str:
 
 def _read_frontier(spark: SparkSession, out_dir: str, level: int) -> DataFrame:
     """The input rows (TILED_COLS) of ``level``, where the previous
-    level's tasks wrote them."""
+    level's tasks wrote them, as a JVM scan: the fused pass's input (its
+    shuffle clusters each 'fuse' tile's rows); the render pass's tasks
+    read the same files themselves."""
     return spark.read.schema(TILED_FEATURE_SCHEMA).parquet(
         _frontier_dir(out_dir, level))
 
@@ -331,6 +339,11 @@ class CheckpointedPyramid:
         next level's input and the resume point) from the tasks, and
         returns only its partials: collecting them is the level's one
         Spark job (``_start_level``, ``_collect``, ``_publish_level``).
+        The render pass of a later level reads ``frontier/level_<N>``
+        in its own tasks, its 'leaf' / 'split' actions in the task
+        closure, so no frontier row crosses the JVM; only a level with
+        'fuse' tiles scans its frontier in the JVM (``_read_frontier``),
+        joins the 'fuse' decisions and shuffles those rows by tile.
 
         A fresh build passes the raw ``features_df``; the FIRST level
         then skips the decision agg, which would materialize the whole
@@ -349,7 +362,7 @@ class CheckpointedPyramid:
         empty children are left), the previous level's ``pending``
         children and ``level``."""
         o = self.options
-        first_wave = frontier = None
+        first_wave = None
         if features_df is not None:
             if raw_npts is None:
                 raw_npts = features_df.agg(F.sum("num_points")).collect()[0][0]
@@ -383,8 +396,6 @@ class CheckpointedPyramid:
             # decision join; two chained mapInPandas would each pay the
             # JVM<->worker serde of the whole table)
             first_wave = "leaf" if o.index_max_zoom == 0 else "split"
-        elif partials:
-            frontier = _read_frontier(self.spark, out_dir, level)
         pending = list(pending)
         while True:
             commit, ts, clock = _start_level(out_dir, level)
@@ -402,10 +413,8 @@ class CheckpointedPyramid:
                 (z, x, y, "empty", 0) for z, x, y in pending
                 if (z, x, y) not in seen
             ]
-            fr = None
             own, split, nxt = {}, [], []
             if decisions:
-                acts = {d[3] for d in decisions}
                 step2 = fuse = None
                 if first_wave:
                     rs, act = _render_split_kernel(o, ts, True), first_wave
@@ -415,19 +424,21 @@ class CheckpointedPyramid:
                         schema=PARTIAL_SCHEMA,
                     )
                 else:
-                    ddf = decisions_df(self.spark, [d[:4] for d in decisions])
-                    fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-                    if "fuse" in acts and acts - {"fuse"}:
-                        # cache only when both of the level's passes read
-                        # fr (single-reader levels would waste a copy: a
-                        # 4M-point build OOM'd an 8g heap holding prev +
-                        # frontier + fr + step2 at once)
-                        fr = fr.persist()
-                    if acts - {"fuse"}:
+                    # the render pass's tasks read the frontier files
+                    # themselves; only 'fuse' rows go through the JVM,
+                    # whose shuffle clusters each fused tile's rows
+                    rest = {d[:3]: d[3] for d in decisions if d[3] != "fuse"}
+                    fused = [d[:4] for d in decisions if d[3] == "fuse"]
+                    if rest:
                         step2 = render_split_stage(
-                            fr.filter(F.col("action") != "fuse"), o, ts)
-                    if "fuse" in acts:
-                        fuse = fused_stage(fr, o, ts)
+                            self.spark, _frontier_dir(out_dir, level), rest,
+                            o, ts)
+                    if fused:
+                        fuse = fused_stage(
+                            _read_frontier(self.spark, out_dir, level).join(
+                                F.broadcast(decisions_df(self.spark, fused)),
+                                ["z", "x", "y"]),
+                            o, ts)
                 cagg, own = _collect(step2, fuse)
                 if first_wave:
                     # finish the deferred root decision from the wave's
@@ -463,14 +474,10 @@ class CheckpointedPyramid:
                 tiles + [d for d in decisions if d[3] != "fuse"],
                 own, pending, nxt,
             )
-            if fr is not None:
-                fr.unpersist()
             if not split:
                 return
             level += 1
             partials = nxt
-            if nxt:
-                frontier = _read_frontier(self.spark, out_dir, level)
 
     def _publish_level(self, out_dir, level, commit, clock, tiles, own,
                        pending=(), nxt=()) -> None:

@@ -13,11 +13,13 @@ This module holds the pyramid's pure rules (``decide``, ``fuse_bound``,
 store's build (plans/checkpoint.py ``CheckpointedPyramid``).  Each turn
 decides every frontier tile with ``decide`` (lib.rs:305-313) from its
 point count, renders and child-clips the non-fused tiles in one per-row
-pass (render_split_stage), and runs small split subtrees whole inside
-one task (``fused_stage``).  Every pass writes its tiles, leaves and
-children from the tasks and returns only per-tile partials.  The
-in-memory SparkGeoJSONVT is that store, built into a scratch directory
-and loaded on the driver.
+pass whose tasks read the frontier files themselves
+(render_split_stage), and runs small split subtrees whole inside one
+task (``fused_stage``, over the 'fuse' rows joined with
+``decisions_df`` and shuffled by tile).  Every pass writes its tiles,
+leaves and children from the tasks and returns only per-tile
+partials.  The in-memory SparkGeoJSONVT is that store, built into a
+scratch directory and loaded on the driver.
 
 "Retain source_features on leaves / clear on split parents"
 (lib.rs:311,324,335,430-433) becomes the leaf-features store; a get_tile
@@ -29,8 +31,10 @@ lookups), and every split parent spawns all four children (split_tile is
 called unconditionally), so feature-less children become empty tiles.
 
 At 100 TB: the frontier shrinks geometrically (features are partitioned
-into disjoint children); hot tiles (dense metros) are bounded by
-index_max_points splitting them further down; AQE coalesces the tail.
+into disjoint children), and the render pass packs the shrinking
+frontier's files into fewer tasks, as Spark's file scan would; hot
+tiles (dense metros) are bounded by index_max_points splitting them
+further down.
 """
 
 from __future__ import annotations
@@ -103,7 +107,10 @@ _VALUES_DDF_MAX = 4096
 
 
 def decisions_df(spark: SparkSession, decisions) -> DataFrame:
-    """(z, x, y, action) rows as a LocalRelation-backed DataFrame.
+    """(z, x, y, action) rows as a LocalRelation-backed DataFrame: a
+    level's 'fuse' decisions, broadcast-joined with its JVM frontier scan
+    for fused_stage (the render pass carries its actions in the task
+    closure instead).
 
     ``spark.createDataFrame(list)`` parallelizes into defaultParallelism
     slices, so BROADCASTING the index-sized decisions table ran a 32-task
@@ -212,11 +219,11 @@ def _subtree_kernel(options: Options, tile_sink: TaskSink):
 
 def fused_stage(fr: DataFrame, options: Options,
                 tile_sink: TaskSink) -> DataFrame:
-    """The 'fuse' tiles of a level (``fr`` rows with the decided action)
-    as whole subtrees, one _subtree_kernel call per task over its rows
-    clustered by tile."""
+    """The 'fuse' tiles of a level (``fr``: their rows, with the action
+    column of the decisions join) as whole subtrees, one _subtree_kernel
+    call per task over its rows clustered by tile."""
     return (
-        fr.filter(F.col("action") == "fuse").drop("action")
+        fr.drop("action")
         .repartition("z", "x", "y").sortWithinPartitions("z", "x", "y")
         .mapInPandas(_subtree_kernel(options, tile_sink),
                      schema=PARTIAL_SCHEMA)

@@ -166,3 +166,57 @@ def test_clip_points():
     xs2 = np.array([p[0] for p in POLYLINE2], dtype=np.float64)
     mask2 = (xs2 >= 10.0) & (xs2 <= 40.0)
     assert mask2.sum() == 0
+
+
+# Spark's file-scan defaults: spark.sql.files.maxPartitionBytes and
+# spark.sql.files.openCostInBytes
+MB = 1 << 20
+MAX_BYTES, OPEN_COST = 128 * MB, 4 * MB
+
+
+def test_frontier_listing_hides_dot_and_underscore_names(tmp_path):
+    """The level reader lists what Spark's file index lists: no names
+    starting with '.' (write_parquet's temp files) or '_', no dirs."""
+    import os
+
+    from geojson_vt_rs_spark.operators.pipeline import frontier_files
+
+    for name, size in [("part-00001-render.parquet", 10),
+                       (".part-00000-render.parquet.123.tmp", 50),
+                       ("_SUCCESS", 0),
+                       ("part-00000-render.parquet", 30)]:
+        (tmp_path / name).write_bytes(b"x" * size)
+    (tmp_path / "z=1").mkdir()
+    assert [(os.path.basename(p), s) for p, s in frontier_files(
+        str(tmp_path))] == [("part-00000-render.parquet", 30),
+                            ("part-00001-render.parquet", 10)]
+    with pytest.raises(FileNotFoundError):
+        frontier_files(str(tmp_path / "missing"))
+
+
+def test_pack_files_matches_spark_file_partitions():
+    """pack_files bins whole files like Spark's FilePartition: every file
+    in exactly one bin, the same bins for the same listing, one bin per
+    small file when there are as many files as cores, and Spark's bin
+    count for 64 files of about 0.5 MB on 4 cores: each costs 4.5 MB
+    against a cap of 64 * 4.5 / 4 = 72 MB, so 16 fill a bin."""
+    from geojson_vt_rs_spark.operators.pipeline import pack_files
+
+    small = [(f"f{i}", 1000 + i) for i in range(4)]
+    bins = pack_files(small, MAX_BYTES, OPEN_COST, 4)
+    assert sorted(map(len, bins)) == [1, 1, 1, 1]
+
+    files = [(f"part-{i:05d}", MB // 2 + (i * 7919) % 4096) for i in range(64)]
+    bins = pack_files(files, MAX_BYTES, OPEN_COST, 4)
+    assert sorted(p for b in bins for p in b) == sorted(p for p, _ in files)
+    assert len(bins) == 4 and all(len(b) == 16 for b in bins)
+    assert bins == pack_files(files, MAX_BYTES, OPEN_COST, 4)
+    # largest first: the first bin holds the 16 largest files
+    by_size = sorted(files, key=lambda f: -f[1])
+    assert bins[0] == [p for p, _ in by_size[:16]]
+    # the cap never exceeds maxPartitionBytes: 1000 such files on 4
+    # cores would cost 1125 MB a core, so a bin takes files while its
+    # cost so far plus the next size stays within 128 MB: 29 of them
+    many = [(f"g{i}", MB // 2) for i in range(1000)]
+    assert max(map(len, pack_files(many, MAX_BYTES, OPEN_COST, 4))) == 29
+    assert pack_files([], MAX_BYTES, OPEN_COST, 4) == []

@@ -288,6 +288,113 @@ def test_structural_leaf_root_renders_once(spark, tmp_path, corpus,
     assert s["manifests"][0]["n_leaf_feature_rows"] == len(leaves)
 
 
+def fuse_levels(core, opts):
+    """The levels of the store's loop that hold 'fuse' tiles, from the
+    core tiler's tiles: a level-z tile is in the loop's frontier when
+    every ancestor split (the first wave renders and splits any root it
+    does not keep as a leaf)."""
+    from geojson_vt_rs_spark.plans.pyramid import decide
+
+    act = {k: decide(opts, *k, em.num_points)
+           for k, em in core_tiles(core).items()}
+
+    def in_frontier(z, x, y):
+        while z > 0:
+            z, x, y = z - 1, x // 2, y // 2
+            if act[(z, x, y)] == "leaf" or (z and act[(z, x, y)] == "fuse"):
+                return False
+        return True
+
+    return sorted({k[0] for k, a in act.items()
+                   if k[0] and a == "fuse" and in_frontier(*k)})
+
+
+def test_render_levels_read_frontier_task_side(spark, tmp_path, corpus,
+                                               monkeypatch):
+    """Render/split levels read their frontier files in the tasks; only a
+    level that holds 'fuse' tiles scans its frontier through the JVM
+    (checkpoint._read_frontier), for its fused pass."""
+    from geojson_vt_rs_spark.plans import checkpoint
+
+    df, pdf = corpus
+    reads = []
+    real = checkpoint._read_frontier
+
+    def counted(spark, out_dir, level):
+        reads.append(level)
+        return real(spark, out_dir, level)
+
+    monkeypatch.setattr(checkpoint, "_read_frontier", counted)
+    for route in ("split", "fuse_groups"):
+        opts = Options(**BASE, **ROUTES[route])
+        reads.clear()
+        s = CheckpointedPyramid(spark, opts).run(df, str(tmp_path / route))
+        assert s["levels"] > 1
+        want = fuse_levels(core_index(pdf, opts), opts)
+        assert reads == want, route
+        assert bool(want) == (route == "fuse_groups")
+
+
+def store_rows(spark, out):
+    """(tiles, leaves) of a store as sorted row multisets, the ``level``
+    and ``z`` partition columns included."""
+    def cell(v):
+        if isinstance(v, np.ndarray):
+            return tuple(v.tolist())
+        return None if v is None or (isinstance(v, float) and np.isnan(v)) else v
+
+    def rows(table):
+        pdf = spark.read.parquet(f"{out}/{table}").toPandas()
+        cols = sorted(pdf.columns)
+        assert {"level", "z"} <= set(cols)
+        return sorted(repr(tuple(cell(v) for v in r))
+                      for r in pdf[cols].itertuples(index=False, name=None))
+
+    return rows("tiles"), rows("leaves")
+
+
+def store_manifests(out):
+    found = {}
+    for name in sorted(os.listdir(f"{out}/_manifests")):
+        with open(f"{out}/_manifests/{name}") as fh:
+            m = json.load(fh)
+        for k in ("wall_sec", "steal_frac"):
+            m.pop(k)
+        found[name] = m
+    return found
+
+
+def test_resume_skips_hidden_frontier_files(spark, tmp_path, corpus):
+    """A resumed build reads only the visible frontier files: with a
+    stale temp file of a killed writer (a copy of a real part file under
+    write_parquet's dot-prefixed temp name) in frontier/level_1 and the
+    manifests from level 1 on removed (the split route's last one), it
+    writes the uninterrupted build's tiles and leaves rows and
+    manifests, and every read_tile returns the uninterrupted tile."""
+    import glob
+    import shutil
+
+    df, _ = corpus
+    opts = Options(**BASE, **ROUTES["split"])
+    full, out = str(tmp_path / "full"), str(tmp_path / "resumed")
+    n = CheckpointedPyramid(spark, opts).run(df, full)["levels"]
+    CheckpointedPyramid(spark, opts).run(df, out)
+    assert n > 1
+    part = sorted(glob.glob(f"{out}/frontier/level_1/part-*"))[0]
+    shutil.copy(part, f"{out}/frontier/level_1/"
+                      ".part-00000-render.parquet.123.tmp")
+    for level in range(1, n):
+        os.remove(f"{out}/_manifests/level_{level}.json")
+    res = CheckpointedPyramid(spark, opts)
+    assert res.run(df, out)["levels"] == n
+    assert store_rows(spark, out) == store_rows(spark, full)
+    assert store_manifests(out) == store_manifests(full)
+    want = store_tiles(spark, full)
+    assert res._tile_keys(out) == set(want)
+    for key, (_, feats) in want.items():
+        assert read_tile(res, out, key) == feats, key
+
+
 def test_index_leaves_no_scratch_dir(spark, tmp_path, corpus, monkeypatch):
     """The distributed index builds and drills through store directories
     made with tempfile, and removes each before the call returns."""
