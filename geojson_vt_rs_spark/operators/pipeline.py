@@ -18,6 +18,11 @@ Scale notes (100 TB shape):
     previous level's child files and packs them into tasks with Spark's
     own file-scan arithmetic (pack_files), so frontier rows never cross
     the JVM and the task count shrinks with the frontier.
+  * a drill reads its input in the tasks as well (_root_reader): one
+    task per core reads the root's leaf files with a pushed x/y filter
+    and keeps every P-th row, so one root's rows spread over every core
+    with no exchange, at the price of every task reading the whole
+    root (a P-fold read of one leaf tile's rows).
   * a level's only exchange is fused_stage's repartition(z, x, y),
     which clusters the rows of its bounded 'fuse' tiles for whole-
     subtree tasks; the one-shot geojson_to_tile_df (plans/one_shot.py)
@@ -426,6 +431,39 @@ def _tile_key(z, x, y):
             | np.asarray(y, np.int64))
 
 
+def _root_reader(files: list, root: tuple, n_tasks: int, batch_size: int):
+    """The task side of a drill's input read: a generator over the
+    ``id`` batches of a spark.range with one row per task, yielding task
+    ``i``'s share of ``root``'s retained rows.  ``files`` are leaf files
+    of the root's z (no z column); each task reads them all with a
+    pushed x/y filter, inserts z and keeps rows i, i + n_tasks, ... of
+    their rows in ``files``' order (what a round-robin repartition deals
+    to partition i, without the exchange), in frames of ``batch_size``
+    rows (TILED_COLS)."""
+    rz, rx, ry = root
+
+    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        ids = [i for b in batches for i in b["id"].tolist()]
+        if not ids or not files:
+            return
+        rows = pa.concat_tables([
+            pq.read_table(p, columns=TILED_COLS[1:],
+                          filters=[("x", "==", rx), ("y", "==", ry)])
+            for p in files
+        ])
+        for i in ids:
+            mine = rows.take(np.arange(i, rows.num_rows, n_tasks))
+            for rb in mine.to_batches(max_chunksize=batch_size):
+                pdf = rb.to_pandas()
+                pdf.insert(0, "z", np.full(len(pdf), rz, dtype=np.int32))
+                yield pdf
+
+    return read
+
+
 def _frontier_reader(bins: list, actions: dict, batch_size: int):
     """The task side of a level's frontier read, _TaskWriter's twin: a
     generator over the ``id`` batches of a spark.range with one row per
@@ -478,7 +516,7 @@ def _tile_sums(frames: list) -> dict:
 
 def _rs_body(options: Options):
     """Factory for the render+split PER-BATCH body shared by
-    render_split_stage (one call per level) and drill_descend_stage (one
+    render_split_stage (one call per level) and _drill_kernel (one
     call per level per batch, looped in-kernel).  Returns
     ``body(pdf) -> (feats, children, ns)``: the rendered feature rows
     (FEATURE_ROW_COLS frames), the child rows of the 'split' rows
@@ -778,12 +816,12 @@ def tile_rows(batches: Iterator[pd.DataFrame], key: tuple,
         yield pdf
 
 
-def drill_descend_stage(
-    df: DataFrame, options: Options, root: tuple, target: tuple,
-    tile_sink: TaskSink,
-) -> DataFrame:
+def _drill_kernel(options: Options, root: tuple, target: tuple,
+                  tile_sink: TaskSink):
     """The ENTIRE root-to-target drill descent as ONE feature-parallel
-    mapInPandas pass (get_tile cold-miss path, lib.rs:184-223).
+    mapInPandas kernel (get_tile cold-miss path, lib.rs:184-223), fed
+    the root's retained leaf rows by _root_reader (plans/pyramid.py
+    drill_pass).
 
     Key property making this possible: unlike the build, a drill's
     per-tile decisions are purely STRUCTURAL — a tile stops at max_zoom,
@@ -878,4 +916,4 @@ def drill_descend_stage(
                 k: (v, *counts.get(k, (0, 0, 0))) for k, v in tnp.items()
             }, 1)
 
-    return df.mapInPandas(kernel, schema=PARTIAL_SCHEMA)
+    return kernel

@@ -147,13 +147,16 @@ def _np(v, dtype):
 
 
 def features_to_pdf(features: list, extra: Optional[dict] = None) -> pd.DataFrame:
-    """Column-wise assembly (dict-of-lists) — avoids per-cell boxing."""
+    """Column-wise assembly (dict-of-lists) — avoids per-cell boxing.
+    ``id_num`` is a nullable Int64 column: ints mixed with None would
+    make it float64 and round ids above 2**53."""
     names = [f.name for f in FEATURE_SCHEMA.fields]
     data: dict = {n: [] for n in names}
     for f in features:
         row = feature_to_row(f)
         for n in names:
             data[n].append(row[n])
+    data["id_num"] = pd.array(data["id_num"], dtype="Int64")
     cols = names
     if extra:
         n_rows = len(features)
@@ -203,8 +206,12 @@ def sanitize_pdf(pdf: pd.DataFrame, schema: Optional[T.StructType] = None) -> pd
         if col in _ARRAY_COLS or isinstance(dt, T.ArrayType):
             out[col] = [_cell_to_list(v) for v in out[col]]
         elif isinstance(dt, _INT_TYPES):
-            # pandas upcasts nullable ints to float64: NaN -> None, 5.0 -> 5
-            out[col] = [None if pd.isna(v) else int(v) for v in out[col]]
+            # pandas upcasts nullable ints to float64: NaN -> None, 5.0 -> 5;
+            # kept as object cells (a list of ints and None would go back
+            # to float64 and round values above 2**53, e.g. Int64 ids)
+            out[col] = pd.Series([None if pd.isna(v) else int(v)
+                                  for v in out[col]], index=out.index,
+                                 dtype=object)
         elif isinstance(dt, (T.DoubleType, T.FloatType)):
             # pandas uses NaN for null doubles; the engine never produces
             # NaN values, so NaN here always means NULL (e.g. id_float)

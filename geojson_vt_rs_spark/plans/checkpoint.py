@@ -31,12 +31,18 @@ same way (``_write_stats``), publishes the staged tables with one
 ``os.rename`` each (``_Commit``) and writes the manifest to a temp file
 it ``os.replace``s into place.  Before a level's pass runs, the driver
 removes that level's staging dirs and the frontier dir the pass writes,
-so no file of an earlier attempt survives.  The tasks also READ the
-store: a render/split level's tasks read the frontier files the
-previous level's tasks wrote (operators/pipeline.py ``frontier_files``
-lists them on the driver, ``_frontier_reader`` reads them in the task),
-and like Spark's file index the listing skips names that start with
-'.' or '_', so a temp file a killed writer left behind is never read.
+so no file of an earlier attempt survives.  The store also READS
+itself with pyarrow: a render/split level's tasks read the frontier
+files the previous level's tasks wrote (operators/pipeline.py
+``frontier_files`` lists them on the driver, ``_frontier_reader`` reads
+them in the task); a drill's tasks read its root's
+``leaves/level=*/z=<rz>`` files (``_root_reader``, listed after
+``_sweep_drill_orphans``); and the driver reads the stats files for the
+key memo (``_tile_keys``) and a tile's ``tiles/level=*/z=<z>`` files for
+``read_tile``.  Like Spark's file index, every listing skips names that
+start with '.' or '_', so a temp file a killed writer left behind is
+never read.  Only a level with 'fuse' tiles still scans its frontier in
+the JVM (``_read_frontier``).
 So ``out_dir`` must be ONE shared POSIX path: the same directory for
 the driver and every executor, with atomic rename within it.  Local
 mode and a shared POSIX mount satisfy this; an object store without
@@ -50,6 +56,7 @@ side) and this module (driver side) know where a pass's rows go.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -57,8 +64,10 @@ import time
 from functools import reduce
 from typing import Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.operators.pipeline import (
@@ -66,6 +75,7 @@ from geojson_vt_rs_spark.operators.pipeline import (
     TaskSink,
     _convert_wrap_kernel,
     _render_split_kernel,
+    frontier_files,
     render_split_stage,
     tile_rows,
     write_parquet,
@@ -216,6 +226,33 @@ def _collect(*passes) -> tuple:
     }
 
 
+# read_tile's order keys: a tile's rows rank in this order (feature_idx)
+_ORDER_KEYS = ("world_copy", "feature_seq", "slice_path", "sub_idx")
+
+# read_tile's rows: the tiles table's columns without the order keys,
+# feature_idx the non-null rank, then the level and z dir columns (the
+# columns and types a Spark scan of tiles/ plus a row_number had)
+TILE_DF_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, f.name != "feature_idx")
+     for f in TILE_STORE_SCHEMA.fields
+     if f.name != "z" and f.name not in _ORDER_KEYS]
+    + [T.StructField("level", T.StringType()),
+       T.StructField("z", T.IntegerType())]
+)
+
+
+def _z_dirs(out_dir: str, table: str, z: int) -> list:
+    """The ``<table>/level=*/z=<z>`` dirs of a store, sorted; like a
+    Spark scan, level dirs with hidden names ('.', '_') are skipped."""
+    root = os.path.join(out_dir, table)
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        d for e in os.listdir(root) if not e.startswith((".", "_"))
+        if os.path.isdir(d := os.path.join(root, e, f"z={z}"))
+    )
+
+
 def _frontier_dir(out_dir: str, level: int) -> str:
     return os.path.join(out_dir, "frontier", f"level_{level}")
 
@@ -244,8 +281,9 @@ class CheckpointedPyramid:
     """Distributed pyramid with per-level parquet checkpoints.
 
     Layout under ``out_dir``:
-      tiles/z=*/          rendered tile rows (partition-pruned get_tile)
-      leaves/z=*/         retained leaf source features (drill-down input)
+      tiles/level=*/z=*/  rendered tile rows, plus one stats.parquet of
+                          the commit's stats rows (read_tile reads one z)
+      leaves/level=*/z=*/ retained leaf source features (drill input)
       frontier/level_N/   the N-th level's input features (resume point)
       _manifests/level_N.json  lineage: row counts per kind, wall time
 
@@ -264,17 +302,17 @@ class CheckpointedPyramid:
         self.options = options or Options()
         # per-store memo of the tile keys (the reference's in-memory tile
         # memo, lib.rs:145-150) and of the keys of the tiles that retain
-        # leaf features: loaded together with ONE stats-row job
-        # (_tile_keys), extended by each drill of THIS object (a drill
+        # leaf features: loaded together from the stats files on the
+        # driver (_tile_keys), extended by each drill of THIS object (a drill
         # only adds tiles) and invalidated by each level commit.  Exists
         # purely to avoid re-scanning per lookup; external writers are
         # out of scope (same single-writer contract as the staged-rename
         # protocol).
         self._keys: dict = {}
         self._leaf_keys: dict = {}
-        # warm-lookup memo: (out_dir, z, x, y) -> persisted ranked tile DF
+        # warm-lookup memo: (out_dir, z, x, y) -> the tile's DataFrame
         # (the reference's warm get_tile is a dict hit, lib.rs:193-195;
-        # without this every repeat read pays the one-tile rank window).
+        # without this every repeat read re-reads and re-sorts the tile).
         # Bounded LRU; kept across drills (a drill never changes a
         # published tile), invalidated with _keys by each level commit.
         self._tile_dfs: dict = {}
@@ -284,7 +322,7 @@ class CheckpointedPyramid:
         self._keys.pop(out_dir, None)
         self._leaf_keys.pop(out_dir, None)
         for k in [k for k in self._tile_dfs if k[0] == out_dir]:
-            self._tile_dfs.pop(k).unpersist()
+            self._tile_dfs.pop(k)
 
     def run(
         self, features_df: DataFrame, out_dir: str,
@@ -525,16 +563,22 @@ class CheckpointedPyramid:
         )
 
     def read_tile(self, out_dir: str, z: int, x: int, y: int) -> DataFrame:
-        """Partition-pruned point lookup on the tiles table (get_tile
-        memo-hit path, lib.rs:193-195).  feature_idx is derived HERE from
-        the persisted deterministic order-key columns — the output is one
-        tile, so the rank window is a single tiny partition.  (Ranking at
-        write time would funnel the entire dataset through 1-4 tasks at
-        z0/z1 — the scale-killer removed in round 4.)  Repeat reads of
-        the same tile hit a persisted per-(z,x,y) memo (bounded LRU,
-        invalidated on publish) so the warm path pays no parquet scan or
-        rank job — the reference's warm get_tile dict hit."""
-        from pyspark.sql import Window
+        """Point lookup on the tiles table (get_tile memo-hit path,
+        lib.rs:193-195), read on the driver with pyarrow: the tile's
+        ``tiles/level=*/z=<z>`` files with a pushed x/y filter, stats
+        rows dropped.  feature_idx is derived HERE from the persisted
+        deterministic order keys, sorted in Arrow as Spark's ascending
+        order would (nulls first).  (Ranking at write time would funnel
+        the entire dataset through 1-4 tasks at z0/z1 — the scale-killer
+        removed in round 4.)  The result (TILE_DF_SCHEMA: the scan's
+        columns, ``level`` and ``z`` last) is handed to Spark as the
+        Arrow table, so the lookup runs no Spark job.  Repeat reads of
+        the same tile hit a per-(z,x,y) memo (bounded LRU, invalidated
+        on publish) — the reference's warm get_tile dict hit."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         key = (out_dir, z, x, y)
         cached = self._tile_dfs.get(key)
@@ -542,46 +586,56 @@ class CheckpointedPyramid:
             # refresh LRU position
             self._tile_dfs[key] = self._tile_dfs.pop(key)
             return cached
-        w = Window.partitionBy("z", "x", "y").orderBy(
-            "world_copy", "feature_seq", "slice_path", "sub_idx"
-        )
-        df = (
-            self.spark.read.parquet(os.path.join(out_dir, "tiles"))
-            .filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
-            .filter(F.col("type").isNotNull())
-            .withColumn("feature_idx", F.row_number().over(w) - 1)
-            .drop("world_copy", "feature_seq", "slice_path", "sub_idx")
-            .orderBy("feature_idx")
-            .persist()
-        )
+        found = pc.field("type").is_valid() & (pc.field("x") == x) & (
+            pc.field("y") == y)
+        parts = []
+        for d in _z_dirs(out_dir, "tiles", z):
+            level = pa.scalar(
+                os.path.basename(os.path.dirname(d))[len("level="):])
+            for path, _ in frontier_files(d):
+                t = pq.read_table(path, filters=found)
+                parts.append(t.append_column(
+                    "level", pa.repeat(level, t.num_rows)).append_column(
+                    "z", pa.repeat(pa.scalar(z, pa.int32()), t.num_rows)))
+        arrow_schema = to_arrow_schema(TILE_DF_SCHEMA)
+        if parts:
+            t = pa.concat_tables(parts).sort_by(
+                [(k, "ascending") for k in _ORDER_KEYS],
+                null_placement="at_start")
+            t = t.set_column(
+                t.schema.get_field_index("feature_idx"),
+                arrow_schema.field("feature_idx"),
+                pa.array(np.arange(t.num_rows, dtype=np.int32)),
+            ).select(arrow_schema.names)
+        else:
+            t = arrow_schema.empty_table()
+        df = self.spark.createDataFrame(t, TILE_DF_SCHEMA)
         while len(self._tile_dfs) >= self._tile_dfs_cap:
-            old = next(iter(self._tile_dfs))
-            self._tile_dfs.pop(old).unpersist()
+            self._tile_dfs.pop(next(iter(self._tile_dfs)))
         self._tile_dfs[key] = df
         return df
 
     def _tile_keys(self, out_dir: str) -> set:
-        """All existing tile keys, from the per-tile stats rows
-        (feature_idx == -1 — exactly one per tile) in ONE pushed-filter
-        scan that also loads ``_leaf_keys``, the tiles that retain leaf
-        features (action 'leaf'); cached until this object commits a
+        """All existing tile keys, from the per-tile stats rows (exactly
+        one per tile: the ``stats.parquet`` files that only
+        ``_write_stats`` writes), read on the driver with pyarrow — no
+        Spark job — together with ``_leaf_keys``, the tiles that retain
+        leaf features (action 'leaf'); cached until this object commits a
         level, extended by its drills."""
+        import pyarrow.parquet as pq
+
         keys = self._keys.get(out_dir)
         if keys is None:
-            tiles_root = os.path.join(out_dir, "tiles")
             keys, leaves = set(), set()
-            if os.path.isdir(tiles_root):
-                pdf = (
-                    self.spark.read.parquet(tiles_root)
-                    .filter(F.col("feature_idx") == -1)
-                    .select("z", "x", "y", "action")
-                    .toPandas()
-                )
-                for r in pdf.itertuples(index=False):
-                    key = (int(r.z), int(r.x), int(r.y))
-                    keys.add(key)
-                    if r.action == "leaf":
-                        leaves.add(key)
+            for path in sorted(glob.glob(os.path.join(
+                    out_dir, "tiles", "level=*", "z=*", "stats.parquet"))):
+                z = int(os.path.basename(os.path.dirname(path))[len("z="):])
+                t = pq.read_table(path, columns=["x", "y", "action"])
+                for x, y, a in zip(*(t.column(c).to_pylist()
+                                     for c in ("x", "y", "action"))):
+                    keys.add((z, x, y))
+                    if a == "leaf":
+                        leaves.add((z, x, y))
             self._keys[out_dir], self._leaf_keys[out_dir] = keys, leaves
         return keys
 
@@ -608,13 +662,13 @@ class CheckpointedPyramid:
 
         # drill DISTRIBUTED: tiles and leaves stream from the executors
         # straight into the staging dirs, committed like a level
-        rz, rx, ry = root
-        leaf = self.spark.read.parquet(os.path.join(out_dir, "leaves")).filter(
-            (F.col("z") == rz) & (F.col("x") == rx) & (F.col("y") == ry)
-        )
+        # its tasks read the root's leaf files themselves (listed after
+        # the orphan sweep above, hidden names skipped)
+        files = [p for d in _z_dirs(out_dir, "leaves", root[0])
+                 for p, _ in frontier_files(d)]
         tag = f"drill_{z}_{x}_{y}"
         commit = _Commit(out_dir, tag, tag)
-        tiles, leafy = self._drill(leaf, root, (z, x, y), commit)
+        tiles, leafy = self._drill(files, root, (z, x, y), commit)
         commit.publish()
         # the drill only added tiles below its root: extend the key
         # memos, keep the read_tile memo
@@ -623,15 +677,16 @@ class CheckpointedPyramid:
         return self.read_tile(out_dir, z, x, y)
 
     def _drill(
-        self, leaf: DataFrame, root: tuple, target: tuple, commit: _Commit,
+        self, files: list, root: tuple, target: tuple, commit: _Commit,
     ) -> tuple:
-        """Target-directed descent from the ancestor's retained leaves:
+        """Target-directed descent from the ancestor's retained leaves
+        (``files``: leaf files of the root's z, see drill_pass):
         non-path tiles stop and retain (lib.rs:324-338), the path tile
         splits until the target — the whole descent is ONE feature-
         parallel pass (plans/pyramid.py drill_pass); the in-memory
         index's get_tile runs it too, into a scratch commit.  The
         rendered tile features and retained leaves sink to the staging
-        parquet IN-KERNEL (drill_descend_stage ``tile_sink``: idempotent
+        parquet IN-KERNEL (_drill_kernel ``tile_sink``: idempotent
         per-task files) — they never cross the Python->JVM boundary and
         need no write job; collecting the per-tile partials is the
         drill's one job.
@@ -641,7 +696,7 @@ class CheckpointedPyramid:
         records action 'leaf', the rest 'drill'.  Returns the new tile
         keys and the set of those that are leaves."""
         partials = drill_pass(
-            self.spark, leaf, self.options, root, target,
+            self.spark, files, self.options, root, target,
             tile_sink=TaskSink(commit.stg_tiles, commit.stg_leaves,
                                action="drill"),
         ).toPandas()

@@ -57,11 +57,13 @@ from geojson_vt_rs_spark.operators.pipeline import (
     _partials_frame,
     _tile_feature,
     _TaskWriter,
-    drill_descend_stage,
+    _drill_kernel,
+    _root_reader,
+    write_parquet,
+    z_part_schema,
 )
 from geojson_vt_rs_spark.operators.schema import (
     TILED_FEATURE_SCHEMA,
-    create_feature_df,
     feature_to_row,
     pdf_to_features,
 )
@@ -139,7 +141,7 @@ def decide(options: Options, z: int, x: int, y: int, tnp: int) -> str:
     """A frontier tile's build action from its point count (lib.rs:
     305-313): 'leaf' (stop and retain), 'fuse' (split, with the whole
     subtree small enough for one task) or 'split'.  The drill's 'stop'
-    (max_zoom) and off-path leaves belong to drill_descend_stage."""
+    (max_zoom) and off-path leaves belong to the drill (_drill_kernel)."""
     if z == options.index_max_zoom or tnp <= options.index_max_points:
         return "leaf"
     return "fuse" if tnp <= fuse_bound(options) else "split"
@@ -163,7 +165,7 @@ def _subtree_kernel(options: Options, tile_sink: TaskSink):
     to ``tile_sink``, and return one partial per tile, empty tiles
     included (PARTIAL_SCHEMA, sub_idx 1: num_points, n_emitted =
     num_simplified, nf, n_leaf): the drill pass's contract
-    (drill_descend_stage)."""
+    (_drill_kernel)."""
     order = ["world_copy", "feature_seq", "slice_path"]
 
     def subtree(key, pieces, w: _TaskWriter, tnp: dict) -> None:
@@ -234,7 +236,10 @@ def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
     """The nearest ancestor of (z, x, y) for which ``memoized(z, x, y)``
     holds, or None (lib.rs:229-245): the drill root of both get_tiles.
     split_tile creates all four children of every tile it splits
-    (lib.rs:344-428), so no tile below that ancestor is memoized yet."""
+    (lib.rs:344-428), so no tile below that ancestor is memoized yet.
+    ``memoized`` is a set lookup in both: the index's tile dict, or the
+    store's key memo, which it loads from its stats files on the driver
+    (plans/checkpoint.py ``_tile_keys``), so no probe runs a Spark job."""
     while z != 0:
         z, x, y = z - 1, x // 2, y // 2
         if memoized(z, x, y):
@@ -242,17 +247,22 @@ def find_parent(z: int, x: int, y: int, memoized) -> Optional[tuple]:
     return None
 
 
-def drill_pass(spark: SparkSession, leaf_df: DataFrame, options: Options,
+def drill_pass(spark: SparkSession, files: list, options: Options,
                root: tuple, target: tuple, tile_sink: TaskSink) -> DataFrame:
     """The cold get_tile pass of both SparkGeoJSONVT and
-    CheckpointedPyramid: drill_descend_stage from ``root``'s retained
-    leaf rows down to ``target``.  The rows may sit in one partition or
-    parquet file; they are spread so the descent renders on every core."""
+    CheckpointedPyramid: _drill_kernel from ``root``'s retained leaf
+    rows down to ``target``, as one Spark job of defaultParallelism
+    tasks.  ``files``: parquet files of leaf rows of the root's z (the
+    store's ``leaves/level=*/z=<rz>`` files, or the index's one scratch
+    file), without the z column.  The tasks read them themselves
+    (_root_reader): each keeps every P-th of the root's rows, so the
+    descent renders on every core and no leaf row crosses the JVM."""
     par = spark.sparkContext.defaultParallelism
-    return drill_descend_stage(
-        leaf_df.select(*TILED_COLS).repartition(par), options, root,
-        target, tile_sink=tile_sink,
-    )
+    batch = spark._jsparkSession.sessionState().conf().arrowMaxRecordsPerBatch()
+    read = _root_reader(files, root, par, batch)
+    kernel = _drill_kernel(options, root, target, tile_sink)
+    return spark.range(0, par, 1, par).mapInPandas(
+        lambda batches: kernel(read(batches)), schema=PARTIAL_SCHEMA)
 
 
 def drill_tiles(partials: pd.DataFrame, root: tuple, target: tuple) -> list:
@@ -406,14 +416,18 @@ class SparkGeoJSONVT:
         to a scratch directory and loaded like the build.  The pass
         writes none of the root's rows; the root was split
         (lib.rs:430-433), so it retains nothing any more."""
+        import pyarrow as pa
+
         from geojson_vt_rs_spark.plans.checkpoint import _Commit
 
-        frontier = create_feature_df(
-            self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA
-        )
+        schema = z_part_schema(TILED_FEATURE_SCHEMA)
         with tempfile.TemporaryDirectory() as d:
+            # the root's rows as one leaf file: the store's drill input
+            write_parquet(d, "root.parquet", pa.Table.from_pandas(
+                leaf[schema.names], schema=schema, preserve_index=False))
             commit = _Commit(d, "drill", "drill")
-            self._store._drill(frontier, root, target, commit)
+            self._store._drill([os.path.join(d, "root.parquet")], root,
+                               target, commit)
             commit.publish()
             self.leaf_features.pop(to_id(*root), None)
             self._load(d)

@@ -517,7 +517,7 @@ def test_store_routes_identical_tiles(spark, tmp_path, corpus):
 
 
 def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
-    """drill_descend_stage's tasks write the core tiler's drill: every
+    """drill_pass's tasks write the core tiler's drill: every
     new tile's features, in the emitter's order, to the staged tiles;
     the source features each new leaf tile retains to the staged
     leaves; and per-tile partials equal to the core tiles' num_points /
@@ -532,12 +532,9 @@ def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
     import pandas as pd
 
     from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
-    from geojson_vt_rs_spark.operators.pipeline import (
-        TaskSink,
-        drill_descend_stage,
-    )
+    from geojson_vt_rs_spark.operators.pipeline import TaskSink
     from geojson_vt_rs_spark.operators.schema import pdf_to_features
-    from geojson_vt_rs_spark.plans.pyramid import TILED_COLS
+    from geojson_vt_rs_spark.plans.pyramid import TILED_COLS, drill_pass
     from test_route_parity import (
         canon,
         core_leaves,
@@ -552,10 +549,10 @@ def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
     cp = CheckpointedPyramid(spark, opts)
     cp.run(feats, out)
 
-    leaf = spark.read.parquet(os.path.join(out, "leaves")).filter(
-        "z = 0 and x = 0 and y = 0"
-    )
-    src = leaf.select(*TILED_COLS).repartition(4)
+    # the root's leaf files, as get_tile lists them
+    src = sorted(glob.glob(os.path.join(out, "leaves", "level=*", "z=0",
+                                        "part-*.parquet")))
+    assert src
     root, target = (0, 0, 0), (7, 37, 48)  # the first generated metro
     pdf = feats.toPandas().sort_values("feature_seq", ignore_index=True)
     core = CoreTiler(list(pdf_to_features(pdf)), opts)
@@ -565,8 +562,8 @@ def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
     stg = TaskSink(str(tmp_path / "stg_tiles"), str(tmp_path / "stg_leaves"),
                    action="drill")
     partials: dict = {}
-    for r in drill_descend_stage(src, opts, root, target,
-                                 tile_sink=stg).collect():
+    for r in drill_pass(spark, src, opts, root, target,
+                        tile_sink=stg).collect():
         assert r.sub_idx == 1
         acc = partials.setdefault((r.z, r.x, r.y), [0, 0, 0, 0])
         for i, v in enumerate((r.num_points, r.n_emitted, r.nf, r.n_leaf)):
@@ -613,8 +610,8 @@ def test_drill_tile_sink_matches_core_tiler(spark, tmp_path):
 
     files1 = files()
     assert files1 and all("/part-" in f for f in files1)
-    drill_descend_stage(
-        src, opts, root, target, tile_sink=stg,
+    drill_pass(
+        spark, src, opts, root, target, tile_sink=stg,
     ).write.format("noop").mode("overwrite").save()
     assert files() == files1
     key = ["z", "x", "y"] + order

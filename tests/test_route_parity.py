@@ -524,3 +524,186 @@ def test_big_int_ids_exact(spark):
     got = [f["id_num"] for f in idx.get_tile(0, 0, 0).features]
     assert all(v is None or type(v) is int for v in got)
     assert got == want
+
+
+def test_big_int_ids_survive_ingest(spark):
+    """Integer ids above 2**53 mixed with a null id leave features_to_pdf
+    as a nullable Int64 column and reach Spark exactly, through the
+    Arrow path of create_feature_df and through its sanitized path (the
+    one a session without Arrow takes)."""
+    from geojson_vt_rs_spark.operators.schema import (
+        FEATURE_SCHEMA,
+        create_feature_df,
+        features_to_pdf,
+    )
+    from geojson_vt_rs_spark.sources.geojson import load_geojson
+
+    ids = [2**53 + 1, None, 2**60 + 3]
+    gj = json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "id": i, "properties": {"n": n},
+         "geometry": {"type": "Point", "coordinates": [n, n]}}
+        for n, i in enumerate(ids)
+    ]})
+    pdf = features_to_pdf(load_geojson(gj))
+    assert str(pdf["id_num"].dtype) == "Int64"
+    assert [None if v is pd.NA else int(v) for v in pdf["id_num"]] == ids
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            rows = create_feature_df(spark, pdf, FEATURE_SCHEMA).collect()
+            assert [r.id_num for r in rows] == ids, arrow
+    finally:
+        spark.conf.set(key, prev)
+
+
+def rank_window(spark, out, key):
+    """read_tile's rows as a Spark scan of tiles/ ranked by a row_number
+    window over the four order keys: the DataFrame contract read_tile
+    keeps."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    z, x, y = key
+    order = ["world_copy", "feature_seq", "slice_path", "sub_idx"]
+    w = Window.partitionBy("z", "x", "y").orderBy(*order)
+    return (
+        spark.read.parquet(f"{out}/tiles")
+        .filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
+        .filter(F.col("type").isNotNull())
+        .withColumn("feature_idx", F.row_number().over(w) - 1)
+        .drop(*order)
+        .orderBy("feature_idx")
+    )
+
+
+def assert_tile_contract(spark, cp, out, key):
+    got, want = cp.read_tile(out, *key), rank_window(spark, out, key)
+    assert got.schema == want.schema, key
+    pd.testing.assert_frame_equal(got.toPandas(), want.toPandas())
+
+
+def test_read_tile_dataframe_contract(spark, tmp_path, corpus):
+    """read_tile returns the rank window's DataFrame: the same schema
+    (nullability included) and the same pandas frame, for a level tile,
+    a drilled tile and an empty tile of a generated store, and for a
+    hand-written tile whose order keys tie on every prefix and hold
+    nulls, its rows spread over two level dirs beside a stats row and a
+    neighbour tile's row."""
+    import itertools
+
+    import pyarrow as pa
+
+    from geojson_vt_rs_spark.operators.pipeline import (
+        write_parquet,
+        z_part_schema,
+    )
+    from geojson_vt_rs_spark.operators.schema import TILE_STORE_SCHEMA
+
+    df, _ = corpus
+    out = str(tmp_path / "store")
+    cp = CheckpointedPyramid(spark, Options(**BASE, **ROUTES["split"]))
+    cp.run(df, out)
+    store = store_tiles(spark, out)
+    fullest = max(store, key=lambda k: len(store[k][1]))
+    empty = min(k for k, (_, feats) in store.items() if not feats)
+    assert cp.get_tile(out, *DRILLS[0]).count() > 10
+    # DRILLS[2]: no such tile, no row
+    for key in (fullest, DRILLS[0], empty, DRILLS[2]):
+        assert_tile_contract(spark, cp, out, key)
+
+    # ties: every (world_copy, feature_seq, slice_path, sub_idx) of these
+    # values once, in a shuffled order, split over two level dirs
+    combos = list(itertools.product(
+        (None, 0, 1), (None, 5, 7), (None, "", "000001"), (None, 0, 2)))
+    np.random.default_rng(7).shuffle(combos)
+    schema = z_part_schema(TILE_STORE_SCHEMA)
+
+    def row(x, y, wc, fs, sp, si, fidx=None, typ=1):
+        r = dict.fromkeys(schema.names)
+        r.update(x=x, y=y, feature_idx=fidx, type=typ, kind=typ,
+                 geometry_json=repr((wc, fs, sp, si)), action="feature",
+                 world_copy=wc, feature_seq=fs, slice_path=sp, sub_idx=si)
+        return r
+
+    hand = str(tmp_path / "hand")
+    half = len(combos) // 2
+    for level, part in (("L0", combos[:half]), ("drill_5_1_2", combos[half:])):
+        rows = [row(1, 2, *c) for c in part] + [row(1, 3, 0, 1, "", 0)]
+        if level == "L0":
+            rows.append(row(1, 2, None, None, None, None, fidx=-1, typ=None))
+        write_parquet(f"{hand}/tiles/level={level}/z=5", "part-0.parquet",
+                      pa.Table.from_pylist(rows, schema=schema))
+    cp_hand = CheckpointedPyramid(spark, Options())
+    assert cp_hand.read_tile(hand, 5, 1, 2).count() == len(combos)
+    assert_tile_contract(spark, cp_hand, hand, (5, 1, 2))
+
+
+def test_cold_drill_runs_one_spark_job(spark, tmp_path, corpus):
+    """A cold get_tile runs exactly one Spark job (the drill pass) before
+    its caller collects, and loading the key memo runs none: the driver
+    reads the store's stats, leaf and tile files itself."""
+    import uuid
+
+    df, _ = corpus
+    opts = Options(**BASE, **ROUTES["split"])
+    out = str(tmp_path / "store")
+    CheckpointedPyramid(spark, opts).run(df, out)
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+
+    def job_ids(name, fn):
+        group = f"{name}-{tag}"
+        sc.setJobGroup(group, name)
+        try:
+            got = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, sc.statusTracker().getJobIdsForGroup(group)
+
+    keys, ids = job_ids(
+        "keys", lambda: CheckpointedPyramid(spark, opts)._tile_keys(out))
+    assert keys and ids == []
+    assert DRILLS[0] not in keys
+    # a new object: the drill loads its key memo too
+    tile, ids = job_ids(
+        "drill", lambda: CheckpointedPyramid(spark, opts).get_tile(
+            out, *DRILLS[0]))
+    assert len(ids) == 1
+    assert tile.count() > 10
+
+
+def test_drill_skips_stray_leaf_files(spark, tmp_path, corpus):
+    """A drill reads only the root's visible, committed leaf files: with
+    a stale dot-prefixed temp file (a copy of a real part file under
+    write_parquet's temp name) in the root's leaves/level=*/z=<rz> dir
+    and an orphan leaves/level=drill_* dir (a drill that died before its
+    tiles rename), the drilled store's tiles and leaves rows and the
+    target's read_tile equal a clean store's after the same drill, and
+    the orphan is gone."""
+    import glob
+    import shutil
+
+    from geojson_vt_rs_spark.plans.pyramid import find_parent
+
+    df, _ = corpus
+    opts = Options(**BASE, **ROUTES["split"])
+    clean, dirty = str(tmp_path / "clean"), str(tmp_path / "dirty")
+    CheckpointedPyramid(spark, opts).run(df, clean)
+    shutil.copytree(clean, dirty)
+    cp = CheckpointedPyramid(spark, opts)
+    keys = cp._tile_keys(dirty)
+    rz, rx, ry = find_parent(*DRILLS[0], lambda *k: k in keys)
+    assert (rz, rx, ry) in cp._leaf_keys[dirty]
+    zdir = sorted(glob.glob(f"{dirty}/leaves/level=*/z={rz}"))[0]
+    part = sorted(glob.glob(f"{zdir}/part-*"))[0]
+    shutil.copy(part, f"{zdir}/.{os.path.basename(part)}.123.tmp")
+    orphan = f"{dirty}/leaves/level=drill_{rz + 1}_{2 * rx}_{2 * ry}"
+    shutil.copytree(zdir, f"{orphan}/z={rz}")
+
+    want = CheckpointedPyramid(spark, opts).get_tile(clean, *DRILLS[0])
+    got = cp.get_tile(dirty, *DRILLS[0])
+    assert not os.path.exists(orphan)
+    assert store_rows(spark, dirty) == store_rows(spark, clean)
+    pd.testing.assert_frame_equal(got.toPandas(), want.toPandas())

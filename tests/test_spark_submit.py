@@ -26,6 +26,20 @@ def _make_zip(tmp_path) -> str:
     return zpath
 
 
+def _failure(res) -> str:
+    """The failed run's last Python traceback, then the tail of its
+    stderr.  spark-submit runs the Python driver with its stderr merged
+    into stdout, and Spark's log lines after it would push a traceback
+    out of a plain tail of stderr."""
+    tb = "(no Python traceback)"
+    for text in (res.stdout, res.stderr):
+        at = text.rfind("Traceback (most recent call last)")
+        if at >= 0:
+            tb = text[at:at + 6000]
+            break
+    return f"{tb}\n--- last 2000 chars of stderr ---\n{res.stderr[-2000:]}"
+
+
 @pytest.mark.slow
 def test_spark_submit_pipeline(tmp_path):
     spark_submit = shutil.which("spark-submit")
@@ -47,7 +61,7 @@ def test_spark_submit_pipeline(tmp_path):
         "--buckets", "4",
     ]
     res = subprocess.run(cmd, capture_output=True, text=True, timeout=480)
-    assert res.returncode == 0, res.stderr[-4000:]
+    assert res.returncode == 0, _failure(res)
     line = [l for l in res.stdout.splitlines() if l.startswith("{")][-1]
     m = json.loads(line)
     assert m["rows"] == 600
