@@ -283,8 +283,9 @@ def _nation_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-polygon spatial join, broadcast small side: image-like
     points vs per-nation rectangular footprints (the SQL-checkable shape
-    of the tile-polygon PIP; ray-cast refinement is pytest-verified in
-    tests/test_spatial.py against brute force)."""
+    of the tile-polygon PIP; the JVM ray-cast refinement is
+    pytest-verified in tests/test_graft.py against brute force and a
+    numpy ray-cast oracle)."""
     pts = _orders_points(spark, sf_dir)
     rects = _nation_rects(spark, sf_dir)
     j = pts.join(

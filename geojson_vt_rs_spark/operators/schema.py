@@ -214,8 +214,12 @@ def sanitize_pdf(pdf: pd.DataFrame, schema: Optional[T.StructType] = None) -> pd
                                  dtype=object)
         elif isinstance(dt, (T.DoubleType, T.FloatType)):
             # pandas uses NaN for null doubles; the engine never produces
-            # NaN values, so NaN here always means NULL (e.g. id_float)
-            out[col] = [None if pd.isna(v) else float(v) for v in out[col]]
+            # NaN values, so NaN here always means NULL (e.g. id_float);
+            # kept as object cells (a list of floats and None would go
+            # back to float64 NaN, which the verifier keeps as a value)
+            out[col] = pd.Series([None if pd.isna(v) else float(v)
+                                  for v in out[col]], index=out.index,
+                                 dtype=object)
         elif isinstance(dt, T.StringType):
             out[col] = [v if isinstance(v, str) else None for v in out[col]]
     return out

@@ -4,27 +4,32 @@ Pipeline (north_rule): image rows get deterministic geo-footprints
 (pure hash of image_id — no external data), are assigned hierarchical
 quad cells (the reference's own to_id scheme as the H3/S2-style index),
 point-in-polygon tested against clipped tile polygons (broadcast join +
-vectorized numpy ray-casting refine), kNN-matched to neighbor tiles
-(3x3 cell-neighborhood candidate explode + ranking window — pure column
-exprs, no Python), and mosaicked into z/x/y raster tiles.
+even-odd ray-casting filter — higher-order column exprs, no Python),
+kNN-matched to neighbor tiles (3x3 cell-neighborhood candidate explode +
+ranking window — pure column exprs, no Python), and mosaicked into z/x/y
+raster tiles (the one Python stage).
 
 Scale notes:
   * tile polygons are index-sized -> broadcast; the equi-join on (x, y)
-    plus each polygon's tile-extent bbox is the prune, in the JVM, so
-    ray-casting refines only pairs whose point lies in the polygon bbox.
+    plus each polygon's tile-extent bbox is the prune, so ray-casting
+    refines only pairs whose point lies in the polygon bbox, over the
+    segments of the point's horizontal band of the polygon.  A Python
+    refine would cost a stage of Python tasks whose fixed start-up cost
+    is far above the few thousand candidate pairs' work.
   * kNN never leaves the JVM: explode(9 cells) + broadcast join + window.
   * mosaic caps each tile at SLOTS images via a row_number window BEFORE
     the render — bounds per-tile memory under metro-cell skew (AQE
     skew-join handles the join side; the cap handles the render side).
-    The render is one mapInPandas over rows clustered by tile: one
-    Python call per Arrow batch, not one per tile.
+    The render is one mapInPandas over rows clustered by tile into
+    defaultParallelism partitions (one per core in local mode): one
+    Python call per Arrow batch, not one per tile, in one wave of tasks.
 """
 
 from __future__ import annotations
 
 import json
 import math
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -136,28 +141,49 @@ def tile_polygons_df(spark: SparkSession, index, zoom: int) -> DataFrame:
     return local_relation_df(spark, rows, schema)
 
 
-def ray_cast_inside(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
-    """Vectorized even-odd ray casting: for each point, odd crossing count
-    over all rings = inside (holes handled by parity).  Fully vectorized
-    (segments x points) — no per-segment Python loop; crossings per point
-    are XOR-folded via a parity sum."""
-    inside = np.zeros(len(px), dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        if len(r) < 3:
-            continue
-        x0 = r[:-1, 0][:, None]
-        y0 = r[:-1, 1][:, None]
-        x1 = r[1:, 0][:, None]
-        y1 = r[1:, 1][:, None]
-        # (n_seg, n_pts): segment straddles the point's horizontal ray
-        straddle = (y0 > py) != (y1 > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (py - y0) / (y1 - y0)
-            xcross = x0 + t * (x1 - x0)
-        crossings = (straddle & (px < xcross)).sum(axis=0)
-        inside ^= (crossings & 1).astype(bool)
-    return inside
+# Even-odd ray casting in the JVM: a point is inside when the segments
+# that straddle its horizontal ray cross it to the right of the point an
+# odd number of times (holes and multipolygon parts are handled by the
+# parity).  The broadcast side parses each polygon's rings once into
+# segments, skipping rings of fewer than 3 points, and splits them into
+# horizontal bands of extent / _PIP_BANDS units: `bands` holds, per band
+# of the polygon's bbox (from floor(miny / h)), the segments whose y range
+# meets the band.  A segment straddles ty only when
+# min(y0, y1) <= ty < max(y0, y1), and floor(y / h) is monotone, so the
+# band of the point holds every segment that can cross its ray: the
+# count is exact, and each pair loops over a band's segments, not the
+# whole polygon's (higher-order functions are not compiled to generated
+# code: each segment is an interpreted call).  The one-element array()
+# binds the parsed segments to a lambda variable, so they are parsed once
+# per polygon, not once per band.  Over local_relation_df's VALUES plan
+# the bands are built while the plan is optimized, on the driver, with
+# no job.
+_PIP_BANDS = 32
+_PIP_BAND_SEGMENTS = """
+transform(array(flatten(transform(
+  filter(from_json(rings_json, 'array<array<array<double>>>'),
+         r -> size(r) >= 3),
+  r -> transform(sequence(0, size(r) - 2), i -> named_struct(
+    'x0', r[i][0], 'y0', r[i][1], 'x1', r[i + 1][0], 'y1', r[i + 1][1],
+    'lo', floor(least(r[i][1], r[i + 1][1]) / {h}D),
+    'hi', floor(greatest(r[i][1], r[i + 1][1]) / {h}D)))))),
+  segs -> transform(sequence(floor(miny / {h}D), floor(maxy / {h}D)),
+    b -> filter(segs, s -> s.lo <= b AND b <= s.hi)))[0]
+"""
+# The crossings are counted only for a point inside the polygon's bbox,
+# which keeps the band index in range; the CASE is what runs that test
+# first (the optimizer may put the ray cast ahead of other join
+# predicates).  The crossing x is computed in the order
+# x0 + ((ty - y0) / (y1 - y0)) * (x1 - x0), and only on a straddling
+# segment: y1 != y0 there, so ANSI division never sees a zero divisor.
+_PIP_INSIDE = """
+CASE WHEN tx BETWEEN minx AND maxx AND ty BETWEEN miny AND maxy THEN
+  aggregate(bands[ty_band - floor(miny / {h}D)], 0, (n, s) -> n + CASE
+    WHEN (s.y0 > ty) != (s.y1 > ty) THEN IF(
+      tx < s.x0 + ((ty - s.y0) / (s.y1 - s.y0)) * (s.x1 - s.x0), 1, 0)
+    ELSE 0 END)
+ELSE 0 END % 2 = 1
+"""
 
 
 def pip_join(
@@ -166,64 +192,42 @@ def pip_join(
     zoom: int,
     extent: int = 4096,
 ) -> DataFrame:
-    """Broadcast equi-join on the cell plus the polygon bbox (prune) +
-    ray-cast refine.
+    """Broadcast equi-join on the cell, then the polygon bbox (prune) and
+    the ray-cast refine over the point's band, all in the JVM.
 
     Points are transformed to tile-local extent coords (tile.rs:351-357
     transform without rounding) so the test against the emitted integer
     polygons happens in the polygons' own space.  The bbox bounds are
     inclusive, so the prune drops only pairs the refine would reject: a
     point outside every ring's bbox crosses each closed ring an even
-    number of times.
+    number of times.  Output: (image_id, caption, cx, cy, feature_idx,
+    id_str), with the inputs' nullability (the engine's image and polygon
+    tables make all but id_str non-null).  Each DataFrame call costs an
+    analysis pass over the polygons' VALUES plan, so the steps are few.
     """
     z2 = float(1 << zoom)
+    h = extent / _PIP_BANDS
+    ty = (F.col("my") * z2 - F.col("cy")) * extent
     pts = images_pts.select(
         "image_id",
         "caption",
         "cx",
         "cy",
         ((F.col("mx") * z2 - F.col("cx")) * extent).alias("tx"),
-        ((F.col("my") * z2 - F.col("cy")) * extent).alias("ty"),
+        ty.alias("ty"),
+        F.floor(ty / h).alias("ty_band"),
     )
-    joined = pts.join(
-        F.broadcast(tile_polys),
-        (pts.cx == tile_polys.x)
-        & (pts.cy == tile_polys.y)
-        & pts.tx.between(tile_polys.minx, tile_polys.maxx)
-        & pts.ty.between(tile_polys.miny, tile_polys.maxy),
+    polys = tile_polys.select(
+        "x", "y", "feature_idx", "id_str", "minx", "maxx", "miny", "maxy",
+        F.expr(_PIP_BAND_SEGMENTS.format(h=h)).alias("bands"),
+    )
+    return pts.join(
+        F.broadcast(polys),
+        (pts.cx == polys.x)
+        & (pts.cy == polys.y)
+        & F.expr(_PIP_INSIDE.format(h=h)),
         "inner",
-    ).select("image_id", "caption", "cx", "cy", "tx", "ty", "feature_idx",
-             "rings_json", "id_str")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("caption", T.StringType()),
-            T.StructField("cx", T.LongType()),
-            T.StructField("cy", T.LongType()),
-            T.StructField("feature_idx", T.IntegerType()),
-            T.StructField("id_str", T.StringType()),
-        ]
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf["tx"].to_numpy()
-            py = pdf["ty"].to_numpy()
-            for rj, idx in pdf.groupby("rings_json").groups.items():
-                rings = cache.setdefault(rj, json.loads(rj))
-                ii = np.asarray(idx)
-                keep[ii] = ray_cast_inside(px[ii], py[ii], rings)
-            sub = pdf.loc[keep, ["image_id", "caption", "cx", "cy",
-                                 "feature_idx", "id_str"]]
-            yield sub
-
-    return joined.mapInPandas(refine, schema=out_schema)
+    ).select("image_id", "caption", "cx", "cy", "feature_idx", "id_str")
 
 
 # ------------------------------------------------------------------ kNN join
@@ -476,9 +480,17 @@ def mosaic_tiles(
             yield pd.DataFrame([render_tile(canvas, carry)], columns=out_cols)
 
     # one exchange clusters each tile's rows into one partition, in slot
-    # order; the kernel then renders a whole Arrow batch per Python call
+    # order; the kernel then renders a whole Arrow batch per Python call.
+    # One partition per core: the render runs in one wave of tasks (the
+    # survivor rows are bounded by occupied tiles * SLOTS, so the stage
+    # does not grow with the input), and AQE leaves an explicit count as
+    # is.  defaultParallelism is read when the plan is built, so this
+    # assumes local mode or a static set of executors: under dynamic
+    # allocation it can be small before executors register, and the
+    # count then stays small
+    n_render = images_pts.sparkSession.sparkContext.defaultParallelism
     return (
-        pre.repartition("cx", "cy")
+        pre.repartition(n_render, "cx", "cy")
         .sortWithinPartitions("cx", "cy", "slot")
         .mapInPandas(render, schema=MOSAIC_SCHEMA)
     )

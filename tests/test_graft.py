@@ -2,9 +2,13 @@
 PIP join vs brute force, kNN join, mosaic PSNR + caption byte-equality."""
 
 import json
+import math
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pip_oracle import ray_cast_inside
 
 from geojson_vt_rs_spark.sources.images import (
     compute_phash,
@@ -150,11 +154,7 @@ def poly_index(spark):
 
 
 def test_pip_join_vs_bruteforce(spark, images, poly_index):
-    from geojson_vt_rs_spark.plans.spatial import (
-        pip_join,
-        ray_cast_inside,
-        tile_polygons_df,
-    )
+    from geojson_vt_rs_spark.plans.spatial import pip_join, tile_polygons_df
 
     polys = tile_polygons_df(spark, poly_index, ZOOM)
     npolys = polys.count()
@@ -201,6 +201,140 @@ def test_pip_join_vs_bruteforce(spark, images, poly_index):
     # caption invariant: joined captions byte-equal the source formula
     for r in got.itertuples(index=False):
         assert r.caption == "caption for " + r.image_id
+
+
+# Ring vertices on a coarse grid make horizontal edges, shared vertex
+# heights and repeated vertices common; the wide draw reaches the tile
+# buffer.  Every coordinate is an integer, as in the emitted polygons.
+_coord = st.one_of(st.integers(0, 8).map(lambda g: 512 * g),
+                   st.integers(-64, 4160))
+_vertex = st.tuples(_coord, _coord)
+# a closed ring (a 2-point draw closes into the degenerate a-b-a) or a
+# short unclosed one of 1-2 points, which the ray cast skips
+_ring = st.one_of(
+    st.lists(_vertex, min_size=2, max_size=7).map(
+        lambda r: [list(p) for p in r + r[:1]]),
+    st.lists(_vertex, min_size=1, max_size=2).map(
+        lambda r: [list(p) for p in r]),
+)
+
+
+@st.composite
+def _holed(draw):
+    """An axis-aligned outer ring with one hole strictly inside it."""
+    x0, y0 = draw(st.integers(-64, 3000)), draw(st.integers(-64, 3000))
+    w, h = draw(st.integers(8, 1000)), draw(st.integers(8, 1000))
+    a, b = draw(st.integers(1, w // 2 - 1)), draw(st.integers(1, h // 2 - 1))
+
+    def box(x0, y0, x1, y1):
+        return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+    return [box(x0, y0, x0 + w, y0 + h),
+            box(x0 + a, y0 + b, x0 + w - a, y0 + h - b)]
+
+
+# one flat ring list per polygon, as tile_polygons_df stores it: holes,
+# multipolygon parts and degenerate rings all fold into one parity count
+_rings = st.one_of(st.lists(_ring, min_size=1, max_size=4), _holed())
+
+
+@given(st.lists(_rings, min_size=1, max_size=5),
+       st.lists(st.tuples(st.integers(-160, 8360), st.integers(-160, 8360)),
+                max_size=30),
+       st.lists(st.integers(-80, 4180), max_size=10))
+@settings(max_examples=20, deadline=None, derandomize=True)
+def test_pip_join_matches_ray_cast_oracle(spark, polys, free, xs):
+    """The JVM ray cast of pip_join keeps exactly the (point, polygon)
+    pairs of the numpy oracle: points on every vertex, at every vertex's
+    ray height and on edge midpoints (horizontal edges included), plus
+    free points at half-unit steps.  At z0 in tile (0, 0), tx = mx * 4096
+    exactly, so both sides test the same doubles."""
+    from geojson_vt_rs_spark.operators.schema import local_relation_df
+    from geojson_vt_rs_spark.plans.spatial import pip_join
+
+    verts = [tuple(p) for rings in polys for r in rings for p in r]
+    pts = set(verts)
+    pts |= {(x, vy) for x in xs for _, vy in verts}
+    pts |= {((a[0] + b[0]) / 2, (a[1] + b[1]) / 2)
+            for rings in polys for r in rings for a, b in zip(r, r[1:])}
+    pts |= {(x / 2, y / 2) for x, y in free}
+    pts = sorted(pts)
+    tx = np.array([p[0] for p in pts], dtype=np.float64)
+    ty = np.array([p[1] for p in pts], dtype=np.float64)
+    img = local_relation_df(
+        spark,
+        [(f"p{i}", f"caption for p{i}", 0, 0, x / 4096, y / 4096)
+         for i, (x, y) in enumerate(pts)],
+        "image_id string, caption string, cx long, cy long, "
+        "mx double, my double")
+    rows = []
+    for k, rings in enumerate(polys):
+        rx = [p[0] for r in rings for p in r]
+        ry = [p[1] for r in rings for p in r]
+        rows.append((0, 0, k, json.dumps(rings), f"s{k}", None,
+                     math.floor(min(rx)), math.ceil(max(rx)),
+                     math.floor(min(ry)), math.ceil(max(ry))))
+    tile_polys = local_relation_df(
+        spark, rows,
+        "x long, y long, feature_idx int, rings_json string, "
+        "id_str string, id_num long, "
+        "minx long, maxx long, miny long, maxy long")
+
+    got = {(r.image_id, r.feature_idx) for r in pip_join(
+        img, tile_polys, 0).collect()}
+    want = {(f"p{i}", k)
+            for k, rings in enumerate(polys)
+            for i in np.flatnonzero(ray_cast_inside(tx, ty, rings))}
+    assert got == want
+
+
+def _plan_nodes(df):
+    """The executed physical nodes of a run DataFrame, through AQE's final
+    plan and its query stages; a cached input's plan is not its scan's
+    child, so it stays out."""
+    todo, out = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        p = todo.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(p.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(p.plan())
+            continue
+        out.append(p)
+        kids = p.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_graft_python_stages(spark, images, poly_index):
+    """pip_join runs no Python: its executed plan holds no Python node.
+    The mosaic's render stage has one partition per core: its exchange
+    asks for defaultParallelism partitions, which AQE does not coalesce."""
+    from geojson_vt_rs_spark.plans.spatial import (
+        mosaic_tiles,
+        pip_join,
+        tile_polygons_df,
+    )
+
+    pip = pip_join(images, tile_polygons_df(spark, poly_index, ZOOM), ZOOM)
+    assert pip.count() > 0
+    names = {p.getClass().getSimpleName() for p in _plan_nodes(pip)}
+    assert "BroadcastHashJoinExec" in names, names
+    assert not {n for n in names if "Python" in n or "Pandas" in n
+                or "Arrow" in n}, names
+
+    n = spark.sparkContext.defaultParallelism
+    mos = mosaic_tiles(images, ZOOM)
+    assert mos.count() > 0
+    nodes = _plan_nodes(mos)
+    assert "MapInPandasExec" in {p.getClass().getSimpleName() for p in nodes}
+    by_num = [p.numPartitions() for p in nodes
+              if p.getClass().getSimpleName() == "ShuffleExchangeExec"
+              and p.shuffleOrigin().toString() == "REPARTITION_BY_NUM"]
+    assert by_num == [n]
+    assert mos.rdd.getNumPartitions() == n
 
 
 def test_knn_join(spark, images, poly_index):

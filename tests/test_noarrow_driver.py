@@ -55,3 +55,18 @@ def test_noarrow_driver_query_roundtrip(no_arrow):
 
     row = e.q_vt_total_us_states(no_arrow, "/root/testdata/sf0.001").collect()[0]
     assert (row.total_tiles, row.z7_features, row.z9_features) == (37, 6, 1)
+
+
+def test_noarrow_null_double_collects_none(no_arrow):
+    """A null double (e.g. FEATURE_SCHEMA's id_float) stays NULL through
+    create_feature_df's sanitized path: pandas holds it as NaN, which the
+    non-Arrow verifier would keep as a value."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from geojson_vt_rs_spark.operators.schema import create_feature_df
+
+    schema = T.StructType([T.StructField("a", T.DoubleType())])
+    rows = create_feature_df(
+        no_arrow, pd.DataFrame({"a": [1.5, None]}), schema).collect()
+    assert [r.a for r in rows] == [1.5, None]

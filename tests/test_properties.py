@@ -13,7 +13,7 @@ from geojson_vt_rs_spark.core.clip import clip_line_part, clip_ring_part
 from geojson_vt_rs_spark.core.project import project_points
 from geojson_vt_rs_spark.core.simplify import simplify
 from geojson_vt_rs_spark.core.tiler import to_id
-from geojson_vt_rs_spark.plans.spatial import ray_cast_inside
+from pip_oracle import ray_cast_inside
 
 coords = st.lists(
     st.tuples(
